@@ -1,56 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // wide plans (m06's 256-bit fingerprint select is >600 fields)
-      // otherwise emit a recurring SparkStringUtils "Truncated the
-      // string representation of a plan" WARN into the bench tail the
-      // driver captures
-      .config("spark.sql.debug.maxToStringFields", "2000")
-      // whole-stage-codegen compile cache (round 20 — guide §1.2
-      // per-task/per-query constant work): the default 100-entry
-      // cache thrashes under this suite's ~174 distinct queries ×
-      // several codegen units each, so every sweep recompiles every
-      // stage (janino compile is tens of ms per unit, off the data
-      // path but inside each query's wall). A long-lived production
-      // session serving a mixed query workload sizes this cache to
-      // its plan mix the same way; the entries are compiled classes,
-      // driver-memory-bounded, data-size-independent (env override:
-      // SPARK_GRAFT_CODEGEN_CACHE).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Opt-in cross-session snapshot reuse (OFF by default — the
-    // default bench measures every query's full computation): when
-    // SPARK_GRAFT_SNAPSHOT_WAREHOUSE names a directory, StageSnapshots
-    // commits stage tables (IVF index, PQ codebook, dup pairs/
-    // clusters) through the warehouse ledger, and a LATER bench/
-    // session pointing at the same directory adopts any committed
-    // snapshot whose data fingerprint matches instead of rebuilding —
-    // the real deployment delta (index build >> query cost) becomes
-    // measurable as run-1-cold vs run-2-warm. Defining queries still
-    // recompute by contract; only consumers adopt.
-    sys.env.get("SPARK_GRAFT_SNAPSHOT_WAREHOUSE").filter(_.nonEmpty)
-      .foreach(w => spark.conf.set("spark.graft.snapshotWarehouse", w))
-    // Session-wide conf, set once up front (NOT buried in the
-    // fingerprint block below — it shapes every read in this run):
-    // a TIMESTAMP(NANOS) parquet column loads as bigint rather than
-    // erroring, so both known generations of the events fixture are
-    // readable; Tables.normalizeEventsTs then branches on the loaded
-    // dtype. The fingerprint is therefore over the conf-shaped loaded
-    // schema — still distinct per fixture generation (bigint vs
-    // timestamp_ntz), which is the property the gate needs.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // the N of local[N], recorded in the detail file's env: anchors
+    // are only comparable between runs at the same N
+    val cores = Session.defaultCores
+    val spark = Session.local(cores)
     // Fixture fingerprint: md5 over every table's (name, loaded schema,
-    // row count). Rounds whose fingerprints differ ran on different
+    // row count). The schema is the one Session's nanosAsLong conf
+    // loads, still distinct per events fixture generation (bigint vs
+    // timestamp_ntz). Rounds whose fingerprints differ ran on different
     // data — their totals are NOT comparable (the round-7 lesson: the
     // events fixture changed shape under the suite and the regression
     // read as a perf cliff).
@@ -469,7 +428,7 @@ object Bench {
         lines.asScala.find(_.startsWith("MemAvailable:"))
           .map(_.split("\\s+")(1).toLong / 1024).getOrElse(-1L)
       } catch { case _: Throwable => -1L }
-      f"""{"load_avg":$load%.2f,"mem_available_mb":$freeMb,"cpus":${Runtime.getRuntime.availableProcessors}}"""
+      f"""{"load_avg":$load%.2f,"mem_available_mb":$freeMb,"cpus":$cores}"""
     }
     // Calibration stamp: cur = this host now, anchor = ratchet-down
     // best-ever (the divisor of the NEXT run's ratio), ratio + the

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Adversarial skew drill for d18's banded edit-distance join
@@ -41,15 +40,13 @@ object D18SkewDrill {
     val base = "/root/testdata/sf0.1"
     val scaled = s"/tmp/graft_scale_x$factor"
     val out = s"/tmp/graft_d18_skew_x${factor}_g$group"
-    // SPARK_GRAFT_DRILL_PARTITIONS: straggler-divisibility probe — a
+    // SPARK_GRAFT_DRILL_PARTITIONS overrides the shuffle partitions
+    // (default: one per core): straggler-divisibility probe — a
     // co-hashed-but-divisible load shrinks with more partitions, an
     // indivisible one (single hot key) does not
-    val nShuffle = sys.env.getOrElse("SPARK_GRAFT_DRILL_PARTITIONS", "32")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", nShuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
+    sys.env.get("SPARK_GRAFT_DRILL_PARTITIONS")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
 
     ScaleCheck.buildScaledTables(spark, base, scaled, factor,
       Some(Set("documents")), reuse = true)

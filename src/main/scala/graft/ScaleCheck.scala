@@ -120,12 +120,7 @@ object ScaleCheck {
     val reuse = args.lift(1).contains("reuse")
     val base = "/root/testdata/sf0.1"
     val out = s"/tmp/graft_scale_x$factor"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = Session.local()
 
     // SPARK_GRAFT_SCALE_TABLES=embeddings,documents restricts the N×
     // build to the tables the selected queries actually read — a

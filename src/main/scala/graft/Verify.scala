@@ -17,21 +17,15 @@ object Verify {
     * sys.exit — the failure contract is assertable from a spec
     * without killing the test JVM. */
   def run(args: Array[String]): Int = {
-    // args: sfDir outDir [comma-separated query subset — dev spot-checks]
+    // args: sfDir outDir [comma-separated query subset — dev spot-checks;
+    // the subset still gets its base-table dumps and resolved oracles]
     val (sfDir, outDir) = (args(0), args(1))
     val subset: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // only stop a session this main created: under a test harness the
-    // builder returns the suite's shared session, which must survive
+    // factory returns the suite's shared session, which must survive
     val preexisting = SparkSession.getDefaultSession.nonEmpty
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     // Base-table dump for the boatrace relational oracles: the DuckDB
     // SQL recomputes the join/agg over these (parse layer itself is

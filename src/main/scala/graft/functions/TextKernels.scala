@@ -285,7 +285,9 @@ object TextKernels {
     import spark.implicits._
     docs.selectExpr("doc_id", "text").as[(Long, String)]
       .flatMap { case (id, text) =>
-        val w = tokenize(text)
+        // a NULL text contributes no grams, like a doc under 8 tokens
+        // (the oracle's split of NULL yields no windows either)
+        val w = if (text == null) Array.empty[String] else tokenize(text)
         if (w.length < 8) Iterator.empty
         else {
           val md = java.security.MessageDigest.getInstance("MD5")

@@ -270,7 +270,6 @@ object DedupQueries {
     * cos_sim ≥ 0.4), unordered — shared by d09 and the semantic-dedup
     * composition (d15). */
   private def ivfNearDupPairs(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftExtensions.register(s) // native dot_long
     val n = quantized(s, d)
     val a = n.select(col("vec_id").as("id_a"), col("label"),
       col("r").as("ra"), col("nn").as("na"))
@@ -278,7 +277,7 @@ object DedupQueries {
       col("r").as("rb"), col("nn").as("nb"))
     a.join(c, col("label") === col("lc") && col("id_a") < col("id_b"))
       .withColumn("cos_sim", cosine(
-        call_function("dot_long", col("ra"), col("rb")),
+        graft.plans.DotLong.col(col("ra"), col("rb")),
         col("na"), col("nb")))
       .filter(col("cos_sim") >= 0.4)
       .select(col("id_a"), col("id_b"),

@@ -1,8 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlShims.{column, expression}
 
 import graft.functions.TextKernels
 import graft.sources.Tables
@@ -1395,25 +1398,28 @@ object RelationalQueries {
         |                    WHERE c_mktsegment = 'BUILDING')
         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin) {
       (s, d) =>
-        graft.plans.GraftExtensions.register(s)
         val keys = Tables.customer(s, d)
           .filter(col("c_mktsegment") === "BUILDING")
           .select("c_custkey")
         // Build with Spark's own BloomFilterAggregate (distributed
         // partial/merge agg — no driver-side key scan) over xxhash64'd
-        // keys, the same construction InjectRuntimeFilter plants. The
-        // serialized filter is one binary row; bloom_filter_agg over 0
-        // rows evals to null ⇒ the semi join is empty ⇒ prefilter
-        // degenerates to false — same identity, no crash.
+        // keys, the same construction InjectRuntimeFilter plants (Spark
+        // gives neither bloom expression a SQL name, so both are built
+        // as Columns directly). The serialized filter is one binary row;
+        // the aggregate over 0 rows evals to null ⇒ the semi join is
+        // empty ⇒ prefilter degenerates to false — same identity, no
+        // crash.
         val bloomBin = Option(
-          keys.agg(expr(
-            "bloom_filter_agg(xxhash64(c_custkey), 131072L, 1048576L)"))
+          keys.agg(column(new BloomFilterAggregate(
+              expression(xxhash64(col("c_custkey"))),
+              expression(lit(131072L)), expression(lit(1048576L)))
+            .toAggregateExpression()))
             .head.getAs[Array[Byte]](0))
         // Probe via the codegen'd BloomFilterMightContain expression —
         // stays inside whole-stage codegen, unlike a Scala UDF.
         val prefilter = bloomBin
-          .map(b => call_function("might_contain", lit(b),
-            xxhash64(col("o_custkey"))))
+          .map(b => column(BloomFilterMightContain(expression(lit(b)),
+            expression(xxhash64(col("o_custkey"))))))
           .getOrElse(lit(false))
         Tables.orders(s, d)
           .filter(prefilter)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextKernels
 import graft.sources.Tables
 import DedupQueries.{cosine, dotL, quantized, quantizedSql}
-import graft.plans.GraftExtensions
+import graft.plans.DotLong
 
 /** Similarity search over the `embeddings` table (64-dim float
   * vectors): brute-force cosine top-k as the exact baseline, plus the
@@ -46,7 +46,6 @@ object SimilarityQueries {
   private def knnGraph(s: org.apache.spark.sql.SparkSession,
       d: String,
       flt: Column = lit(true)): org.apache.spark.sql.DataFrame = {
-    GraftExtensions.register(s) // native codegen dot_long
     val n = quantized(s, d).filter(flt)
     val a = n.select(col("vec_id"), col("r").as("ra"),
       col("nn").as("nna"), col("label"))
@@ -57,7 +56,7 @@ object SimilarityQueries {
     a.join(c, col("label") === col("labelc") &&
         col("neighbor_id") =!= col("vec_id"))
       .select(col("vec_id"), col("neighbor_id"),
-        cosine(call_function("dot_long", col("ra"), col("rc")),
+        cosine(DotLong.col(col("ra"), col("rc")),
           col("nna"), col("nnc")).as("cos_sim"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 3)
@@ -859,7 +858,6 @@ object SimilarityQueries {
     QueryDef(
       "v02_ann_lsh_bucket",
       v02Sql) { (s, d) =>
-      GraftExtensions.register(s) // native codegen dot_long (plans.DotLong)
       // DEFINES its result snapshot for the recall job (v06)
       StageSnapshots.define(s, d, "v02_ann_lsh_bucket") {
         val n = quantized(s, d)
@@ -879,7 +877,7 @@ object SimilarityQueries {
         q.join(c, Seq("bucket"))
           .filter(col("neighbor_id") =!= col("query_id"))
           .select(col("query_id"), col("neighbor_id"),
-            cosine(call_function("dot_long", col("rq"), col("rc")),
+            cosine(DotLong.col(col("rq"), col("rc")),
               col("nnq"), col("nnc")).as("cos_sim"))
           .withColumn("rank", row_number().over(w))
           .filter(col("rank") <= 3)
@@ -895,7 +893,6 @@ object SimilarityQueries {
     QueryDef(
       "v03_ann_ivf_cell",
       v03Sql) { (s, d) =>
-      GraftExtensions.register(s) // native codegen dot_long (plans.DotLong)
       // DEFINES its result snapshot for the recall job (v06)
       StageSnapshots.define(s, d, "v03_ann_ivf_cell") {
         val n = quantized(s, d)
@@ -906,7 +903,7 @@ object SimilarityQueries {
           .select(col("vec_id").as("query_id"), col("r").as("rq"),
             col("nn").as("nnq"))
         val wProbe = Window.partitionBy("query_id").orderBy(
-          (call_function("dot_long", col("rq"), col("c")).cast("double") /
+          (DotLong.col(col("rq"), col("c")).cast("double") /
             sqrt(col("nnq").cast("double") * col("cn"))).desc, col("label"))
         val probe = broadcast(q).crossJoin(broadcast(cent))
           .withColumn("rn", row_number().over(wProbe))
@@ -919,7 +916,7 @@ object SimilarityQueries {
         broadcast(probe).join(c, Seq("label"))
           .filter(col("neighbor_id") =!= col("query_id"))
           .select(col("query_id"), col("label"), col("neighbor_id"),
-            cosine(call_function("dot_long", col("rq"), col("rc")),
+            cosine(DotLong.col(col("rq"), col("rc")),
               col("nnq"), col("nnc")).as("cos_sim"))
           .withColumn("rank", row_number().over(w))
           .filter(col("rank") <= 3)
@@ -979,7 +976,6 @@ object SimilarityQueries {
     QueryDef(
       "v05_ann_ivf_multiprobe",
       v05Sql) { (s, d) =>
-      GraftExtensions.register(s)
       // DEFINES its result snapshot for the recall job (v06)
       StageSnapshots.define(s, d, "v05_ann_ivf_multiprobe") {
         val n = quantized(s, d)
@@ -988,7 +984,7 @@ object SimilarityQueries {
           .select(col("vec_id").as("query_id"), col("r").as("rq"),
             col("nn").as("nnq"))
         val wProbe = Window.partitionBy("query_id").orderBy(
-          (call_function("dot_long", col("rq"), col("c")).cast("double") /
+          (DotLong.col(col("rq"), col("c")).cast("double") /
             sqrt(col("nnq").cast("double") * col("cn"))).desc, col("label"))
         val probe = broadcast(q).crossJoin(broadcast(cent))
           .withColumn("rn", row_number().over(wProbe))
@@ -1001,7 +997,7 @@ object SimilarityQueries {
         broadcast(probe).join(c, Seq("label"))
           .filter(col("neighbor_id") =!= col("query_id"))
           .select(col("query_id"), col("neighbor_id"),
-            cosine(call_function("dot_long", col("rq"), col("rc")),
+            cosine(DotLong.col(col("rq"), col("rc")),
               col("nnq"), col("nnc")).as("cos_sim"))
           .withColumn("rank", row_number().over(w))
           .filter(col("rank") <= 3)
@@ -1027,14 +1023,13 @@ object SimilarityQueries {
     QueryDef(
       "v12_filtered_ann",
       v12Sql) { (s, d) =>
-      GraftExtensions.register(s)
       val n = quantized(s, d)
       val cent = centDf(n)
       val q = n.filter(col("vec_id") < Q)
         .select(col("vec_id").as("query_id"), col("r").as("rq"),
           col("nn").as("nnq"))
       val wProbe = Window.partitionBy("query_id").orderBy(
-        (call_function("dot_long", col("rq"), col("c")).cast("double") /
+        (DotLong.col(col("rq"), col("c")).cast("double") /
           sqrt(col("nnq").cast("double") * col("cn"))).desc, col("label"))
       val probe = broadcast(q).crossJoin(broadcast(cent))
         .withColumn("rn", row_number().over(wProbe))
@@ -1050,7 +1045,7 @@ object SimilarityQueries {
       broadcast(probe).join(c, Seq("label"))
         .filter(col("neighbor_id") =!= col("query_id"))
         .select(col("query_id"), col("neighbor_id"),
-          cosine(call_function("dot_long", col("rq"), col("rc")),
+          cosine(DotLong.col(col("rq"), col("rc")),
             col("nnq"), col("nnc")).as("cos_sim"))
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 3)
@@ -1325,7 +1320,6 @@ object SimilarityQueries {
     QueryDef(
       "v11_ivfpq_search",
       v11Sql) { (s, d) =>
-      GraftExtensions.register(s) // native codegen dot_long for the probe
       import s.implicits._
       // DEFINES its result snapshot for the recall job (v06)
       StageSnapshots.define(s, d, "v11_ivfpq_search") {
@@ -1338,7 +1332,7 @@ object SimilarityQueries {
       // by cosine, ties to the smaller label
       val cent = centDf(n)
       val wProbe = Window.partitionBy("query_id").orderBy(
-        (call_function("dot_long", col("rq"), col("c")).cast("double") /
+        (DotLong.col(col("rq"), col("c")).cast("double") /
           sqrt(col("nnq").cast("double") * col("cn"))).desc, col("label"))
       val probe = broadcast(n.filter(col("vec_id") < Q)
           .select(col("vec_id").as("query_id"), col("r").as("rq"),
@@ -1453,14 +1447,13 @@ object SimilarityQueries {
          |SELECT CAST(h.p AS INT) AS nprobe, n_candidates, hits, total,
          |       (hits * 10000 // total) / 10000.0 AS recall
          |FROM h JOIN cnd USING (p) ORDER BY nprobe""".stripMargin) { (s, d) =>
-      GraftExtensions.register(s)
       val n = quantized(s, d)
       val cent = centDf(n)
       val q = n.filter(col("vec_id") < Q)
         .select(col("vec_id").as("query_id"), col("r").as("rq"),
           col("nn").as("nnq"))
       val wProbe = Window.partitionBy("query_id").orderBy(
-        (call_function("dot_long", col("rq"), col("c")).cast("double") /
+        (DotLong.col(col("rq"), col("c")).cast("double") /
           sqrt(col("nnq").cast("double") * col("cn"))).desc, col("label"))
       val probe = broadcast(q).crossJoin(broadcast(cent))
         .withColumn("rn", row_number().over(wProbe))
@@ -1472,7 +1465,7 @@ object SimilarityQueries {
       val cand = broadcast(probe).join(c, Seq("label"))
         .filter(col("neighbor_id") =!= col("query_id"))
         .select(col("query_id"), col("neighbor_id"), col("rn"),
-          cosine(call_function("dot_long", col("rq"), col("rc")),
+          cosine(DotLong.col(col("rq"), col("rc")),
             col("nnq"), col("nnc")).as("cos_sim"))
       // PERSISTED (round 21 — §1.2): `lev` feeds BOTH the per-level
       // top-3 window and the per-level candidate counts; as a lazy
@@ -1843,7 +1836,6 @@ object SimilarityQueries {
         |             ORDER BY cos_sim DESC, neighbor_id) AS INT) AS rank
         |  FROM cs) t
         |WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-      GraftExtensions.register(s) // native codegen dot_long (plans.DotLong)
       val n = quantized(s, d)
       val bucket = TextKernels.mdBucket(col("vec_id"), 10)
       val q = n.filter(bucket === 0)
@@ -1856,7 +1848,7 @@ object SimilarityQueries {
         .orderBy(col("cos_sim").desc, col("neighbor_id"))
       q.join(c, Seq("label"))
         .select(col("query_id"), col("neighbor_id"),
-          cosine(call_function("dot_long", col("rq"), col("rc")),
+          cosine(DotLong.col(col("rq"), col("rc")),
             col("nnq"), col("nnc")).as("cos_sim"))
         .withColumn("rank", row_number().over(w).cast("int"))
         .filter(col("rank") <= 3)
@@ -2257,7 +2249,6 @@ object SimilarityQueries {
       cache: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
         df => graft.PersistRegistry.cached(df))
       : org.apache.spark.sql.DataFrame = {
-    GraftExtensions.register(s)
     val gdc = cache(gd.select("vec_id", "neighbor_id"))
     val del = cache(delIn)
     // pruned: both endpoints survive
@@ -2299,7 +2290,7 @@ object SimilarityQueries {
       .select("u", "w").distinct()
       .join(a, "u").join(b, "w")
       .select(col("u"), col("w"),
-        cosine(call_function("dot_long", col("ru"), col("rw")),
+        cosine(DotLong.col(col("ru"), col("rw")),
           col("nnu"), col("nnw")).as("cos_sim"))
       .withColumn("rn", row_number().over(wnd))
       .filter(col("rn") <= 3)

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 
 /** Measures the cross-session snapshot-reuse delta (the warehouse
   * ledger's deployment win: index build ≫ query cost) without the
@@ -30,12 +29,7 @@ object SnapshotBench {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val wh = java.nio.file.Files
       .createTempDirectory("graft-snapbench-wh-").toString
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = graft.Session.local()
 
     val definers = Seq("d02_minhash_lsh", "d09_ivf_neardup", "v09_pq_encode",
       "v13_knn_graph",

@@ -369,16 +369,16 @@ object TextQueries {
         |       nfc_normalize(t) <> t AS changed,
         |       md5(nfc_normalize(t)) AS sig
         |FROM aug ORDER BY doc_id""".stripMargin) { (s, d) =>
-      graft.plans.GraftExtensions.register(s)
       val planted = concat(substring(col("text"), 1, 40),
         lit(" cafe\u0301 u\u0308ber"))
+      val norm = graft.plans.NfcNormalize.col(col("t"))
       Tables.documents(s, d)
         .select(col("doc_id"), planted.as("t"))
         .select(col("doc_id"),
           length(col("t")).as("raw_len"),
-          expr("length(nfc_norm(t))").as("norm_len"),
-          expr("nfc_norm(t) <> t").as("changed"),
-          expr("md5(nfc_norm(t))").as("sig"))
+          length(norm).as("norm_len"),
+          (norm =!= col("t")).as("changed"),
+          md5(norm).as("sig"))
         .orderBy("doc_id")
     },
 

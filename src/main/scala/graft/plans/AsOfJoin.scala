@@ -255,16 +255,6 @@ case class BroadcastAsOfJoinExec(
 /** User-facing API. */
 object AsOfJoin {
 
-  /** Register the planner strategy + optimizer rule on a live session
-    * (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val exp = GraftSqlShims.experimental(spark)
-    if (!exp.extraStrategies.contains(AsOfJoinStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ AsOfJoinStrategy
-    if (!exp.extraOptimizations.contains(PushFilterThroughAsOfJoin))
-      exp.extraOptimizations = exp.extraOptimizations :+ PushFilterThroughAsOfJoin
-  }
-
   /** As-of join: every `left` row, plus the columns of the latest
     * `right` row with the same key and `rightTsCol <= leftTsCol`.
     * `joinType` "left" (default) null-extends unmatched left rows;
@@ -284,7 +274,9 @@ object AsOfJoin {
       s"asofJoin supports left|inner, got $joinType")
     require(Set("auto", "merge", "broadcast")(strategy),
       s"asofJoin strategy must be auto|merge|broadcast, got $strategy")
-    register(spark)
+    // the plan node needs the strategy, and a session this engine
+    // did not build (graft.Session) has not installed it yet
+    GraftExtensions.register(spark)
     val lp = GraftSqlShims.analyzedPlan(left)
     val rp = GraftSqlShims.analyzedPlan(right)
     def attr(p: LogicalPlan, name: String): Attribute =

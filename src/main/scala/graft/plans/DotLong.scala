@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.GraftSqlShims
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Native Catalyst expression: exact Long dot product of two
@@ -65,60 +64,9 @@ case class DotLong(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Engine extensions: injectable via
-  * `spark.sql.extensions=graft.plans.GraftExtensions`, or registered
-  * on an existing session with `GraftExtensions.register` (the round
-  * driver builds the session itself, so queries self-register). */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    GraftExtensions.descriptors.foreach(ext.injectFunction)
-}
-
-object GraftExtensions {
-  private[plans] val dotLongDescriptor = (
-    FunctionIdentifier("dot_long"),
-    new ExpressionInfo(classOf[DotLong].getName, "dot_long"),
-    (children: Seq[Expression]) => DotLong(children(0), children(1)): Expression)
-
-  // Spark ships BloomFilterAggregate/BloomFilterMightContain for its
-  // runtime row-level filtering but does not register them in any
-  // public function registry (the optimizer constructs them directly).
-  // Exposing them here keeps a hand-built bloom prefilter fully
-  // codegen'd — the probe is the same expression InjectRuntimeFilter
-  // would plant, instead of a per-row Scala UDF.
-  private[plans] val bloomAggDescriptor = (
-    FunctionIdentifier("bloom_filter_agg"),
-    new ExpressionInfo(
-      classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-      "bloom_filter_agg"),
-    (children: Seq[Expression]) => (children match {
-      case Seq(c) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c)
-      case Seq(c, est) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c, est)
-      case Seq(c, est, bits) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(c, est, bits)
-    }): Expression)
-
-  private[plans] val mightContainDescriptor = (
-    FunctionIdentifier("might_contain"),
-    new ExpressionInfo(
-      classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-      "might_contain"),
-    (children: Seq[Expression]) =>
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        children(0), children(1)): Expression)
-
-  private[plans] def descriptors = Seq(
-    dotLongDescriptor, NfcNormalize.descriptor,
-    bloomAggDescriptor, mightContainDescriptor)
-
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    descriptors.foreach { d =>
-      if (!registry.functionExists(d._1))
-        registry.registerFunction(d._1, d._2, d._3)
-    }
-  }
+object DotLong {
+  /** `dot_long(a, b)` as a Column, without a function-registry lookup. */
+  def col(a: Column, b: Column): Column =
+    GraftSqlShims.column(DotLong(GraftSqlShims.expression(a),
+      GraftSqlShims.expression(b)))
 }

@@ -2,10 +2,11 @@ package graft.plans
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.GraftSqlShims
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -65,8 +66,7 @@ object NfcNormalize {
     else UTF8String.fromString(Normalizer.normalize(str, Normalizer.Form.NFC))
   }
 
-  private[plans] val descriptor = (
-    FunctionIdentifier("nfc_norm"),
-    new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_norm"),
-    (children: Seq[Expression]) => NfcNormalize(children.head): Expression)
+  /** `nfc_norm(c)` as a Column, without a function-registry lookup. */
+  def col(c: Column): Column =
+    GraftSqlShims.column(NfcNormalize(GraftSqlShims.expression(c)))
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale measurement for the STREAMING index-maintenance path —
@@ -49,12 +48,7 @@ object StreamMaintenanceScale {
     val factor = args.headOption.map(_.toInt).getOrElse(25)
     val base = "/root/testdata/sf0.1"
     val scaled = s"/tmp/graft_scale_x$factor"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = graft.Session.local()
 
     // the streaming path reads embeddings only — reuse ScaleCheck's
     // N× copy when present, build just that table otherwise

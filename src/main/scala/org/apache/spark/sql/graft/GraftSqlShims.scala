@@ -1,8 +1,9 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
-import org.apache.spark.sql.{DataFrame, ExperimentalMethods, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, ExperimentalMethods, SparkSession}
 
 /** Minimal package-private-access shims (the standard extension-library
   * pattern: a tiny object inside `org.apache.spark.sql.*` so library
@@ -15,6 +16,15 @@ object GraftSqlShims {
   /** DataFrame from a custom logical plan (analyzer runs eagerly). */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Column around a Catalyst expression: the engine's own
+    * expressions plug into the DataFrame API with no function-registry
+    * lookup, so they work in any session. */
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  /** The expression behind a Column (unresolved until analysis), to
+    * pass as a child to `column`'s expression. */
+  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
   /** The analyzed logical plan behind a DataFrame. */
   def analyzedPlan(df: DataFrame): LogicalPlan =

@@ -8,7 +8,8 @@ import graft.sources.Tables
   * meet empty dates, empty partitions, and filters that match nothing.
   * Every testdata-driven query must plan and execute over a 0-row
   * corpus (correct schemas, no data) without throwing — an operator
-  * that crashes on empty input is a paged on-call engineer.
+  * that crashes on empty input is a paged on-call engineer. A NULL
+  * text is the row-level form of the same case: an empty doc.
   */
 class EmptyInputSpec extends AnyFunSuite {
   import TestSpark._
@@ -37,5 +38,16 @@ class EmptyInputSpec extends AnyFunSuite {
       }
     assert(failures.isEmpty,
       failures.map { case (n, e) => s"$n: $e" }.mkString("\n"))
+  }
+
+  test("gram8Counts: a NULL-text doc contributes no grams") {
+    import org.apache.spark.sql.functions._
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+    val nullDoc = docs.agg((max(col("doc_id")) + 1).as("doc_id"))
+      .withColumn("text", lit(null).cast("string"))
+    val kernel = graft.functions.TextKernels.gram8Counts _
+    val want = kernel(spark, docs).collect().toSet
+    assert(want.nonEmpty)
+    assert(kernel(spark, docs.unionByName(nullDoc)).collect().toSet === want)
   }
 }

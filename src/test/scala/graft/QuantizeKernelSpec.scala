@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,11 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class QuantizeKernelSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("quantize-kernel-spec").getOrCreate()
+  private lazy val spark = TestSpark.spark
 
   private def exprForm(emb: org.apache.spark.sql.DataFrame) = emb
     .select(col("vec_id"), col("label"),

@@ -6,13 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.RelationalQueries
 
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
   val sf: String = "/root/testdata/sf0.001"
 }
 

@@ -7,8 +7,8 @@ import graft.TestSpark
 class NfcNormalizeSpec extends AnyFunSuite {
   import TestSpark.spark
 
+  // the SQL name is installed by graft.Session, which built TestSpark
   test("nfc_norm composes decomposed sequences (SQL surface)") {
-    GraftExtensions.register(spark)
     // inputs decomposed (e+U+0301, u+U+0308); expected precomposed
     val r = spark.sql(
       "SELECT nfc_norm('café'), length(nfc_norm('über'))").collect()
@@ -17,7 +17,6 @@ class NfcNormalizeSpec extends AnyFunSuite {
   }
 
   test("nfc_norm matches java.text.Normalizer on adversarial strings") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     import org.apache.spark.sql.functions._
     // decomposed, precomposed, stacked combining marks, Hangul jamo
@@ -25,30 +24,28 @@ class NfcNormalizeSpec extends AnyFunSuite {
     val cases = Seq("café", "café", "ä́b",
       "각", "plain ascii", "", "ééé")
     val got = cases.toDF("s")
-      .select(call_function("nfc_norm", col("s"))).as[String].collect()
+      .select(NfcNormalize.col(col("s"))).as[String].collect()
     val want = cases.map(
       java.text.Normalizer.normalize(_, java.text.Normalizer.Form.NFC))
     assert(got.toSeq === want)
   }
 
   test("nfc_norm stays inside whole-stage codegen on parquet input") {
-    GraftExtensions.register(spark)
+    import org.apache.spark.sql.functions.col
     val df = graft.sources.Tables.documents(spark, TestSpark.sf)
-      .selectExpr("doc_id", "nfc_norm(text) AS t")
+      .select(col("doc_id"), NfcNormalize.col(col("text")).as("t"))
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("*(1)"), s"expected codegen stage marker in:\n$plan")
   }
 
   test("already-normalized input returns the identical string") {
-    GraftExtensions.register(spark)
     val r = spark.sql("SELECT nfc_norm('abc') = 'abc', nfc_norm(NULL)").collect()
     assert(r.head.getBoolean(0))
     assert(r.head.isNullAt(1))
   }
 
   test("non-string input is rejected at analysis") {
-    GraftExtensions.register(spark)
     assertThrows[org.apache.spark.sql.AnalysisException](
       spark.sql("SELECT nfc_norm(42)").collect())
   }
