@@ -1,5 +1,20 @@
 package graft
+
+import org.apache.spark.sql.SparkSession
+
 object Bench {
+
+  /** Seconds of one run of query `name` over `sfDir` into the noop
+    * sink, which forces FULL evaluation — count() would let Catalyst
+    * prune projections and eliminate the final sort, timing a
+    * different query than the one declared. */
+  def timed(spark: SparkSession, name: String, sfDir: String): Double = {
+    val t0 = System.nanoTime()
+    SparkEntry.queries(name)(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // the N of local[N], recorded in the detail file's env: anchors
@@ -28,48 +43,24 @@ object Bench {
     // still inside each measurement.
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     // best-of-2 per query: one JVM run has several-hundred-ms noise
-    // from GC/JIT; the min is the stable engine cost. The noop sink
-    // forces FULL evaluation — count() would let Catalyst prune
-    // projections and eliminate the final sort, timing a different
-    // query than the one declared.
+    // from GC/JIT; the min is the stable engine cost.
     val errors = scala.collection.mutable.ListBuffer.empty[String]
-    // Shuffle accounting: bytes written to shuffle during each query's
-    // window (stage-completion listener). Shuffle volume is the number
-    // that predicts cost at 1000x better than local wall time does.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          shuffleBytes.addAndGet(
-            sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      })
     // A failed attempt contributes NO timing: mixing time-to-failure
     // into min/total would silently deflate the headline number while
     // the query sits in the errors list.
+    //
+    // Shuffle accounting: bytes each query's first run wrote to
+    // shuffle, from the Ledger (exact, by job group). Shuffle volume is
+    // the number that predicts cost at 1000x better than local wall
+    // time does.
     val shuffles = scala.collection.mutable.Map.empty[String, Double]
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+    val results = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
       val times = (1 to 2).flatMap { i =>
-        val t0 = System.nanoTime()
-        val s0 = shuffleBytes.get()
         try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          // capture the time BEFORE the listener-drain sleep below
-          // (round-20 measurement-bug fix, declared in
-          // OPTIMIZATION_r20.md: the old order put the 300 ms sleep
-          // inside run 1's timed window — the best-of-2 min usually
-          // hid it, but any query whose run 2 was >0.3 s slower
-          // stamped an inflated number)
-          val dt = (System.nanoTime() - t0) / 1e9
-          if (i == 1) {
-            // listener events are async; give the bus a beat so the
-            // volume lands in this query's window (approximate by
-            // design — the signal is magnitude, not the last byte).
-            // 300 ms: stage-completed events were observed lagging
-            // >50 ms behind multi-stage jobs. Outside the timed window.
-            Thread.sleep(300)
-            shuffles(name) = (shuffleBytes.get() - s0) / 1e6
-          }
+          // the timed window ends before the Ledger drains the bus
+          val (dt, cost) =
+            Ledger.measure(spark, name)(timed(spark, name, sfDir))
+          if (i == 1) shuffles(name) = cost.shuffleWriteMb
           Some(dt)
         } catch { case e: Throwable =>
           errors += name
@@ -107,42 +98,33 @@ object Bench {
     // they ratchet down only, so sub-threshold drift can no longer
     // compound across runs unchecked (round 10: m06 2.90 -> 6.01 s
     // in five < 2x steps, zero trips). Prefer the "baselines" field;
-    // fall back to "queries" for pre-round-11 detail files.
-    val prevQueries: Map[String, Double] =
-      try {
-        val p = java.nio.file.Paths.get(detailPath)
-        if (java.nio.file.Files.exists(p)) {
-          import org.json4s._
-          val prev = org.json4s.jackson.JsonMethods.parse(
-            java.nio.file.Files.readString(p))
-          val prevFp = (prev \ "fixture_fp") match {
-            case JString(fp) => fp
-            case _ => ""
-          }
-          def times(field: String): Map[String, Double] =
-            (prev \ field) match {
-              case JObject(fields) => fields.collect {
-                case (k, JDouble(v)) => k -> v
-                case (k, JInt(v)) => k -> v.toDouble
-              }.toMap
-              case _ => Map.empty[String, Double]
-            }
-          if (prevFp == fixtureFp) {
-            val b = times("baselines")
-            if (b.nonEmpty) b else times("queries")
-          }
-          else {
-            System.err.println(s"[bench] prior detail fixture_fp " +
-              s"$prevFp != $fixtureFp — regression gate skipped " +
-              "(different fixture, deltas not comparable)")
-            Map.empty[String, Double]
-          }
-        } else Map.empty[String, Double]
-      } catch { case e: Throwable =>
+    // fall back to "queries" for pre-round-11 detail files. Anchors
+    // stamped at another core count are neither gated against nor
+    // ratcheted (BenchGate.priorAnchors).
+    val priorJson: Option[String] =
+      try Some(java.nio.file.Paths.get(detailPath))
+        .filter(java.nio.file.Files.exists(_))
+        .map(java.nio.file.Files.readString)
+      catch { case e: Throwable =>
         System.err.println(s"[bench] prior detail unreadable, " +
           s"regression gate skipped: ${e.getMessage}")
-        Map.empty[String, Double]
+        None
       }
+    val prior = priorJson.fold[BenchGate.Prior](BenchGate.Fresh) { j =>
+      try {
+        val (pr, note) = BenchGate.priorAnchors(j, fixtureFp, cores)
+        note.foreach(System.err.println)
+        pr
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] prior detail unparsable, " +
+          s"regression gate skipped: ${e.getMessage}")
+        BenchGate.Fresh
+      }
+    }
+    val prevQueries = prior match {
+      case BenchGate.Gate(b) => b
+      case _ => Map.empty[String, Double]
+    }
     // Host calibration (round-13 verdict 4): a fixed CPU-bound probe
     // — no I/O, no Spark — whose ratio to ITS ratchet-down anchor
     // scales the suite-drift trip (BenchGate.effectiveDriftMax), so a
@@ -152,20 +134,8 @@ object Bench {
     // (query time moves, probe time doesn't) still trips unscaled.
     // The anchor is fixture-independent (pure CPU) and read even when
     // the fixture fingerprint gate skipped the query baselines.
-    val prevCalibAnchor: Option[Double] =
-      try {
-        val p = java.nio.file.Paths.get(detailPath)
-        if (java.nio.file.Files.exists(p)) {
-          import org.json4s._
-          (org.json4s.jackson.JsonMethods.parse(
-            java.nio.file.Files.readString(p)) \ "calibration" \
-            "anchor_sec") match {
-            case JDouble(v) => Some(v)
-            case JInt(v) => Some(v.toDouble)
-            case _ => None
-          }
-        } else None
-      } catch { case _: Throwable => None }
+    val prevCalibAnchor: Option[Double] = priorJson.flatMap(j =>
+      scala.util.Try(BenchGate.calibrationAnchor(j)).toOption.flatten)
     val (calibSec, _) = BenchGate.calibrationProbe()
     val calibAnchor =
       prevCalibAnchor.map(math.min(_, calibSec)).getOrElse(calibSec)
@@ -185,14 +155,10 @@ object Bench {
     // cost" convention); the per-pass totals are recorded in the
     // artifact as intra-run spread evidence.
     def fullSweep(): Map[String, Double] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filterNot { case (n, _) => errors.contains(n) }
-        .flatMap { case (name, fn) =>
-          val t0 = System.nanoTime()
-          val t = try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            Some((System.nanoTime() - t0) / 1e9)
-          } catch { case _: Throwable => None } // keep sweep-A's time
+      SparkEntry.queries.keys.toSeq.sorted.filterNot(errors.contains)
+        .flatMap { name =>
+          // a failure keeps sweep A's time
+          val t = scala.util.Try(timed(spark, name, sfDir)).toOption
           PersistRegistry.release()
           t.map(name -> _)
         }.toMap
@@ -279,12 +245,7 @@ object Bench {
     merged.toSeq.sortBy(_._1).foreach { case (name, cur) =>
       prevQueries.get(name).foreach { prev =>
         if (regressed(prev, cur)) {
-          val t0 = System.nanoTime()
-          val re = try {
-            SparkEntry.queries(name)(spark, sfDir)
-              .write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          } catch { case _: Throwable => cur }
+          val re = scala.util.Try(timed(spark, name, sfDir)).getOrElse(cur)
           PersistRegistry.release()
           remeasured += ((name, cur, re))
           confirmed(name) = math.min(cur, re)
@@ -387,18 +348,23 @@ object Bench {
     //                 acceptance re-anchors, red carries forward —
     //                 the r7 "degraded run stamped as truth" and the
     //                 r10 "sub-threshold drift compounds" failure
-    //                 modes both die here).
-    val nextBaselines =
-      if (driftAccepted)
-        // attributed trips are KNOWN load-spiked readings — a
-        // suite-level acceptance must not re-anchor them at the
-        // inflated time (they carry the prior anchor like any
-        // unaccepted trip)
-        BenchGate.driftAcceptedBaselines(prevQueries, finalTimes,
+    //                 modes both die here), stamped with the core
+    //                 count they were measured at ("baselines_cpus").
+    val (nextBaselines, baselinesCpus) = prior match {
+      case BenchGate.Frozen(b, c) => (b, c)
+      // attributed trips are KNOWN load-spiked readings — a
+      // suite-level acceptance must not re-anchor them at the
+      // inflated time (they carry the prior anchor like any
+      // unaccepted trip)
+      case _ if driftAccepted =>
+        (BenchGate.driftAcceptedBaselines(prevQueries, finalTimes,
           errors.distinct.toSet,
-          (regressions ++ attributed).map(_._1).toSet)
-      else BenchGate.nextBaselines(prevQueries, finalTimes,
-        acceptNames & acceptedRegs.map(_._1).toSet, errors.distinct.toSet)
+          (regressions ++ attributed).map(_._1).toSet), cores)
+      case _ =>
+        (BenchGate.nextBaselines(prevQueries, finalTimes,
+          acceptNames & acceptedRegs.map(_._1).toSet,
+          errors.distinct.toSet), cores)
+    }
     val bqs = finalTimes.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.4f" }
       .mkString("{", ",", "}")
@@ -437,7 +403,7 @@ object Bench {
     val calibJson =
       f"""{"cur_sec":$calibSec%.4f,"anchor_sec":$calibAnchor%.4f,"ratio":$calibRatio%.4f,"effective_drift_max":$driftMax%.4f}"""
     val detail =
-      f"""{"metric":"bench_detail","sf":"$sfDir","fixture_fp":"$fixtureFp","total_sec":$total%.3f,"n_queries":${results.size},"mean_per_query":$mean%.4f,"queries":$bqs,"baselines":$blJson,"pass_totals":$passJson,"suite_drift":$driftJson,"shuffle_mb":$shJson,"errors":$errJson,"regressions":$regJson,"accepted_regressions":$accJson,"attributed_regressions":$attrJson,"unused_accept_names":$unusedJson,"remeasured":$remJson,"env":$envJson,"calibration":$calibJson}"""
+      f"""{"metric":"bench_detail","sf":"$sfDir","fixture_fp":"$fixtureFp","total_sec":$total%.3f,"n_queries":${results.size},"mean_per_query":$mean%.4f,"queries":$bqs,"baselines":$blJson,"baselines_cpus":$baselinesCpus,"pass_totals":$passJson,"suite_drift":$driftJson,"shuffle_mb":$shJson,"errors":$errJson,"regressions":$regJson,"accepted_regressions":$accJson,"attributed_regressions":$attrJson,"unused_accept_names":$unusedJson,"remeasured":$remJson,"env":$envJson,"calibration":$calibJson}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(detailPath), detail + "\n")
     catch { case e: Throwable =>

@@ -17,6 +17,63 @@ package graft
   */
 object BenchGate {
 
+  /** What a prior detail file's anchors allow this run. */
+  sealed trait Prior
+  /** Gate against and ratchet these (none: no file, another fixture). */
+  final case class Gate(baselines: Map[String, Double]) extends Prior
+  /** Anchors stamped at another core count, whose wall times are not
+    * comparable: no gate, no ratchet, written back unchanged. */
+  final case class Frozen(baselines: Map[String, Double], cpus: Int)
+      extends Prior
+  val Fresh: Prior = Gate(Map.empty)
+
+  private def num(v: org.json4s.JValue): Option[Double] = v match {
+    case org.json4s.JDouble(d) => Some(d)
+    case org.json4s.JInt(i) => Some(i.toDouble)
+    case _ => None
+  }
+
+  /** Reads a prior detail file's anchors ("baselines", falling back to
+    * "queries" for pre-round-11 files) for a run on `fixtureFp` at
+    * `cpus` cores, with the note to print when the gate is skipped.
+    * The anchors' core count is "baselines_cpus", else "env.cpus".
+    * Another fixture's anchors are not anchors at all, so the fixture
+    * is checked first. */
+  def priorAnchors(detailJson: String, fixtureFp: String, cpus: Int)
+      : (Prior, Option[String]) = {
+    import org.json4s._
+    val prev = org.json4s.jackson.JsonMethods.parse(detailJson)
+    def times(field: String): Map[String, Double] = prev \ field match {
+      case JObject(fs) => fs.flatMap { case (k, v) => num(v).map(k -> _) }.toMap
+      case _ => Map.empty
+    }
+    val anchors = Some(times("baselines")).filter(_.nonEmpty)
+      .getOrElse(times("queries"))
+    val prevFp = prev \ "fixture_fp" match {
+      case JString(fp) => fp
+      case _ => ""
+    }
+    val anchorCpus = num(prev \ "baselines_cpus")
+      .orElse(num(prev \ "env" \ "cpus")).map(_.toInt)
+    if (prevFp != fixtureFp)
+      (Fresh, Some(s"[bench] prior detail fixture_fp $prevFp != " +
+        s"$fixtureFp — regression gate skipped (different fixture, " +
+        "deltas not comparable)"))
+    else anchorCpus.filter(_ != cpus) match {
+      case Some(c) =>
+        (Frozen(anchors, c), Some(s"[bench] ANCHORS NOT RATCHETED: the " +
+          s"prior detail's anchors were measured at $c cores, this run " +
+          s"at $cpus — regression and drift gates skipped, anchors " +
+          "carried unchanged"))
+      case None => (Gate(anchors), None)
+    }
+  }
+
+  /** The calibration probe's anchor in a prior detail file. */
+  def calibrationAnchor(detailJson: String): Option[Double] =
+    num(org.json4s.jackson.JsonMethods.parse(detailJson) \ "calibration" \
+      "anchor_sec")
+
   /** Per-query trip rule (unchanged since round 9): BOTH >2x AND
     * >0.5 s slower than the anchored baseline — the dual threshold
     * keeps the gate quiet on sub-second GC/JIT noise and loud on

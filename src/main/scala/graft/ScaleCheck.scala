@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Parquet
+
 /** Empirical scale check: build an N× copy of the sf0.1 corpus
   * (key-shifted unions, so join cardinalities per copy are preserved
   * and no artificial hot keys appear), run headline queries at 1× and
@@ -43,7 +45,7 @@ object ScaleCheck {
          if tableSubset.forall(_.contains(t))
          if !(reuse &&
            new java.io.File(s"$out/$t.parquet/_SUCCESS").exists())) {
-      val src = spark.read.parquet(s"$base/$t.parquet")
+      val src = Parquet.read(spark, s"$base/$t.parquet")
       val scaled =
         if (keys.isEmpty) src
         else (0 until factor).map { i =>
@@ -264,14 +266,6 @@ object ScaleCheck {
     val queries = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(if (factor >= 50) heavySuite else fullSuite)
-    // Shuffle-volume accounting alongside wall time: wall clock in a
-    // shared JVM carries GC/JIT/page-cache noise (observed up to ±2×
-    // between sessions at multi-GB working sets); shuffle bytes are a
-    // STRUCTURAL property of the plan + data and reproduce exactly.
-    // A family whose shuffle volume scales ≈ data ratio while wall
-    // time scales below it is parallelism absorbing the growth — the
-    // healthy signature. Shuffle volume growing ABOVE the data ratio
-    // is the true super-linearity alarm, immune to timing noise.
     // ---- boatrace audit scale path (round 14; round-13 verdict:
     // a05/a06 had no 25×/100× rows). The audits read the parsed
     // fixture corpus, not the sf dir, so the N× copy replicates the
@@ -293,7 +287,7 @@ object ScaleCheck {
       graft.operators.BoatraceQueries
         .dumpBaseTables(spark, s"$out/boatrace_x1")
       for (t <- Seq("env", "result", "odds", "schedule")) {
-        val src = spark.read.parquet(s"$bt1/$t")
+        val src = Parquet.read(spark, s"$bt1/$t")
         (0 until factor).map { i =>
           if (i == 0) src
           else src.withColumn("レースID",
@@ -303,38 +297,29 @@ object ScaleCheck {
       }
     }
 
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          shuffleBytes.addAndGet(
-            sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      })
+    // Shuffle-volume accounting alongside wall time: wall clock in a
+    // shared JVM carries GC/JIT/page-cache noise (observed up to ±2×
+    // between sessions at multi-GB working sets); shuffle bytes are a
+    // STRUCTURAL property of the plan + data and reproduce exactly.
+    // A family whose shuffle volume scales ≈ data ratio while wall
+    // time scales below it is parallelism absorbing the growth — the
+    // healthy signature. Shuffle volume growing ABOVE the data ratio
+    // is the true super-linearity alarm, immune to timing noise.
     def run(name: String, dir: String): (Double, Double) = {
       // boatrace audits ignore the sf dir — route them at the 1×/N×
       // replicated parsed tables instead (see the build above)
       if (name.contains("boatrace"))
         spark.conf.set("spark.graft.boatraceBaseDir",
           if (dir == base) bt1 else btN)
-      var shMb = 0.0
-      val times = (1 to 2).map { i =>
-        val t0 = System.nanoTime()
-        val s0 = shuffleBytes.get()
-        SparkEntry.queries(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        // listener events lag behind job completion — a multi-stage
-        // query at 100x can deliver stage-completed events hundreds of
-        // ms late; settle properly before reading (outside the timed
-        // window, so wall numbers are unaffected)
-        if (i == 1) { Thread.sleep(1000); shMb = (shuffleBytes.get() - s0) / 1e6 }
+      val runs = (1 to 2).map { _ =>
+        val (dt, cost) =
+          Ledger.measure(spark, name)(Bench.timed(spark, name, dir))
         // release tracked persisted intermediates (d02's signature set
         // at 100x is GBs — leaking it would tax every later timing)
         PersistRegistry.release()
-        dt
+        (dt, cost.shuffleWriteMb)
       }
-      (times.min, shMb)
+      (runs.map(_._1).min, runs.head._2)
     }
     // Run identifier stamped on every JSON row (round-12 advice): the
     // committed artifact APPENDS across chunked invocations, so

@@ -69,10 +69,7 @@ object Tool {
   private def profile(spark: SparkSession, sfDir: String,
       names: Seq[String]): Unit =
     for (n <- names; i <- 1 to 2) {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(n)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      println(f"PROF $n run$i ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      println(f"PROF $n run$i ${Bench.timed(spark, n, sfDir)}%.2f s")
       PersistRegistry.release()
     }
 
@@ -115,29 +112,19 @@ object Tool {
 
   private def planDump(spark: SparkSession, name: String,
       dirs: Seq[String]): Unit = {
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          shuffleBytes.addAndGet(
-            sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      })
     for (dir <- dirs) {
       val df = SparkEntry.queries(name)(spark, dir)
-      val s0 = shuffleBytes.get()
       // execute df's OWN QueryExecution: df.count()/noop-write build a
       // DERIVED execution, leaving df.queryExecution.executedPlan the
       // static pre-AQE guess (isFinalPlan=false) — the exact
       // non-evidence this tool must never print. toRdd is the executed
       // plan's RDD, so counting it finalizes adaptive re-planning in
       // THIS QueryExecution without materializing rows on the driver.
-      val nRows = df.queryExecution.toRdd.count()
-      Thread.sleep(1000) // listener events lag job completion
-      val shMb = (shuffleBytes.get() - s0) / 1e6
+      val (nRows, cost) =
+        Ledger.measure(spark, name)(df.queryExecution.toRdd.count())
       PersistRegistry.release()
       println(s"==== PLANDUMP $name @ $dir rows=$nRows " +
-        f"shuffleMB=$shMb%.2f ====")
+        f"shuffleMB=${cost.shuffleWriteMb}%.2f ====")
       val plan = df.queryExecution.executedPlan.toString
       require(!plan.contains("isFinalPlan=false"),
         "executed plan still carries isFinalPlan=false — the dump " +

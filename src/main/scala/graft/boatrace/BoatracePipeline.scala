@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.sources.Parquet
+
 /** Spark-native form of the reference's per-date ETL
   * (/root/reference/main.py:240-267), re-architected for distributed
   * execution (SURVEY §3.1-3.3):
@@ -186,7 +188,7 @@ object BoatracePipeline {
       "race" -> race).foreach { case (name, df) =>
       df.write.mode("overwrite").partitionBy("date")
         .parquet(s"$warehouseDir/$name")
-      spark.read.parquet(s"$warehouseDir/$name").createOrReplaceTempView(name)
+      Parquet.read(spark, s"$warehouseDir/$name").createOrReplaceTempView(name)
     }
   }
 }

@@ -320,11 +320,14 @@ object TextKernels {
       .toDF("gram", "doc_id", "c")
   }
 
-  /** docs(doc_id, text) → (doc_id, s, sig: k minhashes). */
+  /** docs(doc_id, text) → (doc_id, s, sig: k minhashes). A NULL text
+    * yields no row: the oracle's split of NULL has no shingles to
+    * hash, so its signature is NULL and matches no band. */
   def minhashSignatures(spark: SparkSession, docs: DataFrame,
       k: Int): DataFrame = {
     import spark.implicits._
-    docs.selectExpr("doc_id", "text").as[(Long, String)]
+    docs.selectExpr("doc_id", "text").where("text IS NOT NULL")
+      .as[(Long, String)]
       .map { case (id, text) =>
         val s = shingles3(tokenize(text))
         val hv = s.map(VectorKernels.md5Hex8)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.boatrace.BoatracePipeline
+import graft.sources.Parquet
 
 /** Driver-visible entry points for the boatrace parity pipeline. These
   * ignore the testdata sfDir (they read the reference's own CP932
@@ -42,7 +43,7 @@ object BoatraceQueries {
     // golden fixtures, as always.
     val overrideDir = s.conf.get("spark.graft.boatraceBaseDir", "")
     if (overrideDir.nonEmpty) {
-      def rd(t: String) = s.read.parquet(s"$overrideDir/$t")
+      def rd(t: String) = Parquet.read(s, s"$overrideDir/$t")
       (rd("env"), rd("result"), rd("odds"), rd("schedule"))
     } else {
       val parsed = parsedCache.computeIfAbsent(s,

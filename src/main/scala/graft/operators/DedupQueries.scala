@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextKernels.{mdBucket, mdBucketSql, mdHash32Sql, mdHash60Sql}
-import graft.sources.Tables
+import graft.sources.{Parquet, Tables}
 
 /** Deduplication operators over `documents` / `embeddings` — the
   * training-data-pipeline surface: exact (hash-groupBy), MinHash+LSH,
@@ -363,7 +363,7 @@ object DedupQueries {
         |WHERE jacc >= 0.5 ORDER BY doc_a, doc_b""".stripMargin) { (s, d) =>
       // d02 DEFINES the pairs table: always recompute + rewrite the
       // snapshot downstream stages (d08/d10) consume
-      s.read.parquet(
+      Parquet.read(s,
           materialize(s, d, "dup-pairs")(confirmedMinhashPairs(s, d)))
         .orderBy("doc_a", "doc_b")
     },
@@ -412,7 +412,7 @@ object DedupQueries {
       // pipeline-stage contract as d02/d08/d10): always recompute +
       // rewrite the snapshot; the audit (d13) consumes it instead of
       // re-running the whole inverted-index chain.
-      s.read.parquet(
+      Parquet.read(s,
           materialize(s, d, "ngram-pairs")(ngramJaccardPairs(s, d)))
         .orderBy("doc_a", "doc_b")
     },
@@ -461,7 +461,7 @@ object DedupQueries {
         |WHERE cos_sim >= 0.4 ORDER BY id_a, id_b""".stripMargin) { (s, d) =>
       // d09 DEFINES the IVF-edge table: always recompute + rewrite the
       // snapshot its semantic-dedup consumer (d15) reads
-      s.read.parquet(
+      Parquet.read(s,
           materialize(s, d, "ivf-pairs")(ivfNearDupPairs(s, d)))
         .orderBy("id_a", "id_b")
     },
@@ -487,7 +487,7 @@ object DedupQueries {
         |ORDER BY doc_a, doc_b""".stripMargin) { (s, d) =>
       // d07 DEFINES the simhash-pairs table (round 20): always
       // recompute + rewrite; the audit (d13) consumes it.
-      s.read.parquet(
+      Parquet.read(s,
           materialize(s, d, "simhash-pairs")(simhashNeardupPairs(s, d)))
         .orderBy("doc_a", "doc_b")
     },
@@ -514,7 +514,7 @@ object DedupQueries {
         |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a)
         |SELECT a AS doc_id, least(a, min(b)) AS cluster_id
         |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin) { (s, d) =>
-      s.read.parquet(materialize(s, d, "dup-clusters")(dupClusters(s, d)))
+      Parquet.read(s, materialize(s, d, "dup-clusters")(dupClusters(s, d)))
         .orderBy("doc_id")
     },
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextKernels
-import graft.sources.Tables
+import graft.sources.{Parquet, Tables}
 import DedupQueries.{cosine, dotL, quantized, quantizedSql}
 import graft.plans.DotLong
 
@@ -1386,7 +1386,7 @@ object SimilarityQueries {
          |WHERE rank <= 3 ORDER BY vec_id, rank""".stripMargin) { (s, d) =>
       // v13 DEFINES the knn-graph table: always recompute + rewrite
       // the snapshot its centrality consumer (v18) reads
-      s.read.parquet(
+      Parquet.read(s,
           StageSnapshots.materialize(s, d, "knn-graph")(knnGraph(s, d)))
         .orderBy("vec_id", "rank")
     },
@@ -2469,12 +2469,12 @@ object SimilarityQueries {
   }
 
   /** Drop the resident stream corpus for `d` (remove + unpersist) —
-    * for bench/verify queries that drive REAL epochs (v28,
-    * SnapshotBench's serving block): the residency is a long-lived
-    * maintainer's shape, but a harness query must not leave a
-    * corpus-sized persisted plan that later BATCH entries (whose
-    * contract is full recomputation) would silently read from
-    * memory, nor tax every subsequent query's storage pool. */
+    * for bench/verify queries that drive REAL epochs (v28): the
+    * residency is a long-lived maintainer's shape, but a harness
+    * query must not leave a corpus-sized persisted plan that later
+    * BATCH entries (whose contract is full recomputation) would
+    * silently read from memory, nor tax every subsequent query's
+    * storage pool. */
   private[graft] def releaseStreamCorpus(
       s: org.apache.spark.sql.SparkSession, d: String): Unit =
     Option(streamCorpusCache.remove(

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Parquet
+
 /** Pipeline-stage snapshots: intermediate TABLES shared between query
   * stages (the dedup chain's confirmed pairs → clusters; the ANN
   * searches' result sets the recall job measures), materialized once
@@ -75,58 +77,19 @@ private[operators] object StageSnapshots {
   /** Metadata-only fingerprint of the input data dir: md5 over every
     * file's (relative path, size, mtime), sorted. Cheap (no data
     * read), and any ingest/compaction/regeneration of the corpus
-    * changes it — the staleness guard for cross-session reuse.
-    *
-    * SCHEME-ADDRESSED dirs route through the Hadoop FileSystem
-    * (round-20 review): the java.nio walk silently yields ZERO files
-    * for `s3a://…`-shaped paths — every store-addressed corpus then
-    * fingerprints as the same empty hash, and a CHANGED corpus would
-    * be adopted as fresh (the stale-index reuse this fingerprint
-    * exists to make structurally impossible). Same split as
-    * SnapshotTable's data plane; object-store modification times are
-    * upload times, MORE stable than local mtimes. */
+    * changes it — the staleness guard for cross-session reuse. The
+    * listing goes through the Hadoop FileSystem (Parquet.fileStats),
+    * so a scheme-addressed corpus (`s3a://…`) is seen too: a walk that
+    * saw zero files there would give every store corpus the same empty
+    * hash and adopt a stale index for a CHANGED corpus. */
   private[graft] def dataFingerprint(d: String): String = {
-    val lines: Seq[String] =
-      if (d.matches("^[A-Za-z][A-Za-z0-9+.\\-]*:/.*")) {
-        val p = new org.apache.hadoop.fs.Path(d)
-        val fs = p.getFileSystem(SparkSession.getActiveSession
-          .orElse(SparkSession.getDefaultSession)
-          .map(_.sessionState.newHadoopConf())
-          .getOrElse(new org.apache.hadoop.conf.Configuration()))
-        if (!fs.exists(p)) Seq.empty
-        else {
-          val rootQ = fs.makeQualified(p).toString.stripSuffix("/")
-          val it = fs.listFiles(p, true)
-          val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-          while (it.hasNext) {
-            val st = it.next()
-            if (st.isFile) {
-              val rel = st.getPath.toString
-                .stripPrefix(rootQ).stripPrefix("/")
-              buf += s"$rel|${st.getLen}|${st.getModificationTime}"
-            }
-          }
-          buf.toSeq
-        }
-      } else {
-        val root = java.nio.file.Paths.get(d)
-        if (!java.nio.file.Files.isDirectory(root)) Seq.empty[String]
-        else {
-          val s = java.nio.file.Files.walk(root)
-          try {
-            val it = s.iterator()
-            val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-            while (it.hasNext) {
-              val p = it.next()
-              if (java.nio.file.Files.isRegularFile(p))
-                buf += s"${root.relativize(p)}|${java.nio.file.Files.size(p)}|" +
-                  s"${java.nio.file.Files.getLastModifiedTime(p).toMillis}"
-            }
-            buf.toSeq
-          } finally s.close()
-        }
-      }
-    md5hex(lines.sorted.mkString("\n"))
+    val conf = SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession)
+      .map(_.sessionState.newHadoopConf())
+      .getOrElse(new org.apache.hadoop.conf.Configuration())
+    val p = new org.apache.hadoop.fs.Path(d)
+    md5hex((if (p.getFileSystem(conf).exists(p)) Parquet.fileStats(conf, d)
+      else Nil).mkString("\n"))
   }
 
   // fingerprints are stable for a session's lifetime (the same
@@ -229,7 +192,7 @@ private[operators] object StageSnapshots {
   /** Read-back of a fresh materialization — for DEFINING queries. */
   def define(s: SparkSession, d: String, what: String)(
       build: => DataFrame): DataFrame =
-    s.read.parquet(materialize(s, d, what)(build))
+    Parquet.read(s, materialize(s, d, what)(build))
 
   /** Read the `what` snapshot, computing it first if absent — for
     * CONSUMING queries. No computeIfAbsent: the materializer itself
@@ -268,6 +231,6 @@ private[operators] object StageSnapshots {
           case None => materialize(s, d, what)(build)
         }
       }
-    s.read.parquet(path)
+    Parquet.read(s, path)
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.PersistRegistry
 import graft.operators.SimilarityQueries
+import graft.sources.Parquet
 import graft.warehouse.SnapshotTable
 
 /** ONE live graph-ANN index maintained by BOTH streaming verbs
@@ -451,7 +452,7 @@ object LifecycleIndex {
     String, (String, Array[(Long, Array[Long])])]()
 
   /** Drop cache entries whose index no longer exists — the bench's
-    * throwaway per-sweep indexes (v28, SnapshotBench) otherwise leave
+    * throwaway per-sweep indexes (v28's) otherwise leave
     * one dead nlist-row entry each for the life of the application,
     * the same unbounded-growth class the round-14 version-keyed fix
     * removed (round-15 advice low 3). Keys are `<appId>|<indexDir>`;
@@ -544,7 +545,7 @@ object LifecycleIndex {
 
   /** Drop THIS index's serving-cache entries (centroid table +
     * persisted corpus) — for harnesses that delete a throwaway
-    * index's directory mid-application (v28, SnapshotBench). The
+    * index's directory mid-application (v28). The
     * state-change sweep would reclaim both at the next materialize,
     * but a bench must not carry a dead index's persisted corpus
     * blocks into unrelated queries' measurements while waiting for
@@ -932,7 +933,7 @@ object LifecycleIndex {
     // the delta alone would let a fold resurrect dead vectors into
     // the centroid/seed corpus (the spec-caught round-14 bug)
     val nRaw = retiredPin.map { case (_, files) =>
-        nAll.join(spark.read.parquet(files: _*)
+        nAll.join(Parquet.read(spark, files: _*)
           .select("vec_id").distinct(),
         Seq("vec_id"), "left_anti")
       }
@@ -1337,7 +1338,7 @@ object LifecycleIndex {
       // — every missing-file shape here means "the diff base is
       // gone", which the full path decides fresh from live state
       try {
-        val delta = projIns(spark.read.parquet(deltaFiles: _*))
+        val delta = projIns(Parquet.read(spark, deltaFiles: _*))
         val deltaSym = delta.unionByName(
           delta.select(col("neighbor_id").as("vec_id"),
             col("vec_id").as("neighbor_id"))).distinct()
@@ -1347,7 +1348,7 @@ object LifecycleIndex {
         // with the delta (both its endpoints are delta endpoints), so
         // a broadcast-semi filter makes this ONE scan of the previous
         // snapshot with no big-side shuffle
-        val prevServing = spark.read.parquet(prevServingFiles: _*)
+        val prevServing = Parquet.read(spark, prevServingFiles: _*)
           .select(col("vec_id"), col("neighbor_id"))
         val oldTouched = prevServing
           .join(broadcast(touched), Seq("vec_id"), "left_semi")
@@ -1532,7 +1533,7 @@ object LifecycleIndex {
     def servingScan(files: Seq[String]): DataFrame = {
       if (files.isEmpty) throw new IllegalArgumentException(
         s"serving version of $sTab has no files")
-      spark.read.parquet(files: _*)
+      Parquet.read(spark, files: _*)
     }
     val gd = (try servingScan(svFiles)
       catch {

@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
+import graft.sources.Parquet
+
 /** Scale measurement for the STREAMING index-maintenance path —
   * the write-amplification evidence behind the round-14 redesign
   * (round-13 verdict: a delete epoch republished O(|E|) edges per
@@ -62,27 +64,19 @@ object StreamMaintenanceScale {
     // corpus vector table with pushed filters; pushdown prunes by
     // row-group statistics, but random vec_ids hit most row groups,
     // so each hop READS corpus-proportional parquet. Recording bytes
-    // READ per step makes that term visible: if the wall residual
-    // tracks input_read_mb while index_write_mb stays batch-sized,
-    // the growth is the walk's inherent read cost over the bigger
-    // base — scan-shaped (embarrassingly parallel on a cluster),
-    // never a shuffle or a write.
-    val inputBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit =
-          inputBytes.addAndGet(
-            sc.stageInfo.taskMetrics.inputMetrics.bytesRead)
-      })
+    // READ per step (the Ledger's input bytes) makes that term
+    // visible: if the wall residual tracks input_read_mb while
+    // index_write_mb stays batch-sized, the growth is the walk's
+    // inherent read cost over the bigger base — scan-shaped
+    // (embarrassingly parallel on a cluster), never a shuffle or a
+    // write.
     val rows = scala.collection.mutable.ListBuffer.empty[String]
     val runTag = f"x$factor-${System.currentTimeMillis() / 1000}%d"
     for ((f, d) <- Seq(1 -> base, factor -> scaled)) {
       val wh = Files.createTempDirectory(s"graft-smsc-wh-x$f-").toString
       spark.conf.set("spark.graft.snapshotWarehouse", wh)
       val idx = Files.createTempDirectory(s"graft-smsc-idx-x$f-").toString
-      val emb = spark.read.parquet(s"$d/embeddings.parquet")
+      val emb = Parquet.read(spark, s"$d/embeddings.parquet")
       // the copy-0-pinned fixtures: constant batch sizes while the
       // searched corpus grows N× — the production arrival shape
       val insBatch = emb.filter(pmod(col("vec_id"), lit(89)) === 0 &&
@@ -122,20 +116,18 @@ object StreamMaintenanceScale {
       def step(name: String, extra: => String = "")(
           body: => Unit): Unit = {
         val m0 = dirMb(idx)
-        val i0 = inputBytes.get()
         val f0 = fsBytesRead()
-        val t0 = System.nanoTime()
-        body
-        val sec = (System.nanoTime() - t0) / 1e9
+        val (sec, cost) = graft.Ledger.measure(spark, name) {
+          val t0 = System.nanoTime()
+          body
+          (System.nanoTime() - t0) / 1e9
+        }
         // `extra` reads live post-step state (ctl counters, the
         // resident corpus-cache bytes) — evaluate BEFORE the release
         // below drops the cached blocks it measures
         val ex = extra
         graft.PersistRegistry.release()
-        // listener events lag job completion — settle OUTSIDE the
-        // timed window before reading the input counter
-        Thread.sleep(1000)
-        val inMb = (inputBytes.get() - i0) / 1e6
+        val inMb = cost.inputMb
         val fsMb = (fsBytesRead() - f0) / 1e6
         val mb = dirMb(idx) - m0
         println(f"STREAMSCALE x$f $name%-14s $sec%8.2f s  " +
@@ -197,9 +189,6 @@ object StreamMaintenanceScale {
       // trend is visible round-over-round without a spec run —
       // attributed PER INDEX via the round-18 keyed counters, so
       // concurrent-table noise cannot pollute the row
-      var ctl0 = 0L
-      var ret0 = 0L
-      var es0 = 0L
       // corpus_cache_mb (round-18 verdict 5): resident bytes of THIS
       // index's cached serving corpus after the step — the datum the
       // corpusCacheMax LRU bound should be sized from. step()
@@ -213,30 +202,27 @@ object StreamMaintenanceScale {
       // early_stops (round-19 advice 3): serveResolve early stops —
       // one per state-change miss is designed behavior; repeated
       // stops for one state would be the cross-process interleaving
-      // verTagOlder's doc accepts (spurious full rematerializes)
-      def servingExtra: String =
-        f""","ctl_reads":${LifecycleIndex.controlPlaneReadsFor(idx) -
-          ctl0}%d,"retries":${LifecycleIndex.searchRetriesFor(idx) -
-          ret0}%d,"corpus_cache_mb":$corpusCacheMb%.1f,""" +
-        f""""early_stops":${LifecycleIndex.resolveEarlyStopsFor(idx) -
-          es0}%d,""" +
-        f""""serve_mode":"${LifecycleIndex.lastServeModeFor(idx)}""""
-      ctl0 = LifecycleIndex.controlPlaneReadsFor(idx)
-      ret0 = LifecycleIndex.searchRetriesFor(idx)
-      es0 = LifecycleIndex.resolveEarlyStopsFor(idx)
-      step("search_cold", servingExtra) {
-        LifecycleIndex.search(spark, d, idx, queries)
-          .write.format("noop").mode("overwrite").save()
+      // verTagOlder's doc accepts (spurious full rematerializes).
+      // One search of the index as a step, its row carrying the
+      // step's serving counters, then its phase rows.
+      def serve(name: String, phases: Boolean = true): Unit = {
+        val ctl0 = LifecycleIndex.controlPlaneReadsFor(idx)
+        val ret0 = LifecycleIndex.searchRetriesFor(idx)
+        val es0 = LifecycleIndex.resolveEarlyStopsFor(idx)
+        step(name,
+          f""","ctl_reads":${LifecycleIndex.controlPlaneReadsFor(idx) -
+            ctl0}%d,"retries":${LifecycleIndex.searchRetriesFor(idx) -
+            ret0}%d,"corpus_cache_mb":$corpusCacheMb%.1f,""" +
+          f""""early_stops":${LifecycleIndex.resolveEarlyStopsFor(idx) -
+            es0}%d,""" +
+          f""""serve_mode":"${LifecycleIndex.lastServeModeFor(idx)}"""") {
+          LifecycleIndex.search(spark, d, idx, queries)
+            .write.format("noop").mode("overwrite").save()
+        }
+        if (phases) phaseRows(name)
       }
-      phaseRows("search_cold")
-      ctl0 = LifecycleIndex.controlPlaneReadsFor(idx)
-      ret0 = LifecycleIndex.searchRetriesFor(idx)
-      es0 = LifecycleIndex.resolveEarlyStopsFor(idx)
-      step("search_warm", servingExtra) {
-        LifecycleIndex.search(spark, d, idx, queries)
-          .write.format("noop").mode("overwrite").save()
-      }
-      phaseRows("search_warm")
+      serve("search_cold")
+      serve("search_warm")
       step("fold") {
         LifecycleIndex.foldTombstones(spark, d, idx)
       }
@@ -254,27 +240,13 @@ object StreamMaintenanceScale {
       // and its serve_materialize phase row is the number the full
       // rewrite used to dominate. serve_mode in the row proves which
       // path ran.
-      ctl0 = LifecycleIndex.controlPlaneReadsFor(idx)
-      ret0 = LifecycleIndex.searchRetriesFor(idx)
-      es0 = LifecycleIndex.resolveEarlyStopsFor(idx)
-      step("search_post_fold", servingExtra) {
-        LifecycleIndex.search(spark, d, idx, queries)
-          .write.format("noop").mode("overwrite").save()
-      }
-      phaseRows("search_post_fold")
+      serve("search_post_fold")
       val insBatch4 = insBatch
         .withColumn("vec_id", col("vec_id") + 5000000000L)
       step("insert_epoch_delta", f""","batch_rows":$nIns""") {
         StreamingGraphInsert.insertEpoch(spark, insBatch4, d, idx, 2L)
       }
-      ctl0 = LifecycleIndex.controlPlaneReadsFor(idx)
-      ret0 = LifecycleIndex.searchRetriesFor(idx)
-      es0 = LifecycleIndex.resolveEarlyStopsFor(idx)
-      step("search_delta", servingExtra) {
-        LifecycleIndex.search(spark, d, idx, queries)
-          .write.format("noop").mode("overwrite").save()
-      }
-      phaseRows("search_delta")
+      serve("search_delta")
 
       // round-20 byte-budget eviction drill (round-19 verdict 2):
       // bound the corpus cache in MB just under the resident set and
@@ -313,13 +285,7 @@ object StreamMaintenanceScale {
             .write.format("noop").mode("overwrite").save()
         }
         spark.conf.set("spark.graft.serving.corpusCacheMaxMb", "4096")
-        ctl0 = LifecycleIndex.controlPlaneReadsFor(idx)
-        ret0 = LifecycleIndex.searchRetriesFor(idx)
-        es0 = LifecycleIndex.resolveEarlyStopsFor(idx)
-        step("search_refill", servingExtra) {
-          LifecycleIndex.search(spark, d, idx, queries)
-            .write.format("noop").mode("overwrite").save()
-        }
+        serve("search_refill", phases = false)
         LifecycleIndex.releaseIndexCaches(spark, idx2)
       }
     }

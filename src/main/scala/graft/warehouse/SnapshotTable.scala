@@ -6,6 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Parquet
+
 import CommitBackends.{str, utf8}
 
 /** Minimal snapshot-versioned table on plain Parquet — the storage
@@ -792,7 +794,7 @@ object SnapshotTable {
       throw new IllegalArgumentException(s"no committed version in $dir"))
     if (files.isEmpty)
       throw new IllegalArgumentException(s"version $v of $dir has no files")
-    spark.read.parquet(files: _*)
+    Parquet.read(spark, files: _*)
   }
 
   def versions(dir: String): Seq[Int] =

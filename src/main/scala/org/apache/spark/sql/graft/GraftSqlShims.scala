@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
@@ -33,6 +34,10 @@ object GraftSqlShims {
   /** Session hook for extra planner strategies / optimizer rules. */
   def experimental(spark: SparkSession): ExperimentalMethods =
     spark.asInstanceOf[classic.SparkSession].experimental
+
+  /** Blocks until the listener bus has delivered every event posted
+    * so far (the bus is private[spark]); graft.Ledger reads after it. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
   /** Resident (memory bytes, disk bytes) of the cached columnar
     * buffers behind `df`, or None when the plan is not cached or its

@@ -179,4 +179,32 @@ class BenchGateSpec extends AnyFunSuite {
     val (_, sum2) = BenchGate.calibrationProbe(1000000L)
     assert(sum === sum2, "the probe must compute a fixed function")
   }
+
+  test("anchors stamped at another core count are neither gated " +
+      "against nor ratcheted, and the refusal is loud") {
+    val at32 = """{"fixture_fp":"fp","baselines":{"q":1.0},""" +
+      """"queries":{"q":1.1},"env":{"cpus":32}}"""
+    val (frozen, note) = BenchGate.priorAnchors(at32, "fp", 8)
+    assert(frozen === BenchGate.Frozen(Map("q" -> 1.0), 32))
+    assert(note.exists(n => n.contains("NOT RATCHETED") &&
+      n.contains("32 cores") && n.contains("at 8")), note)
+    assert(BenchGate.priorAnchors(at32, "fp", 32) ===
+      ((BenchGate.Gate(Map("q" -> 1.0)), None)))
+    // a frozen run writes the anchors back with their own core count,
+    // which then wins over the writing run's env.cpus
+    val carried = """{"fixture_fp":"fp","baselines":{"q":1.0},""" +
+      """"baselines_cpus":32,"env":{"cpus":8}}"""
+    assert(BenchGate.priorAnchors(carried, "fp", 32)._1 ===
+      BenchGate.Gate(Map("q" -> 1.0)))
+    assert(BenchGate.priorAnchors(carried, "fp", 8)._1 ===
+      BenchGate.Frozen(Map("q" -> 1.0), 32))
+    // another fixture's anchors are skipped before the core check
+    val (other, otherNote) = BenchGate.priorAnchors(at32, "fp2", 8)
+    assert(other === BenchGate.Fresh)
+    assert(otherNote.exists(_.contains("fixture_fp")))
+    // pre-round-11 files: "queries" stands in for "baselines"
+    assert(BenchGate.priorAnchors(
+      """{"fixture_fp":"fp","queries":{"q":2}}""", "fp", 4)._1 ===
+      BenchGate.Gate(Map("q" -> 2.0)))
+  }
 }

@@ -50,4 +50,23 @@ class EmptyInputSpec extends AnyFunSuite {
     assert(want.nonEmpty)
     assert(kernel(spark, docs.unionByName(nullDoc)).collect().toSet === want)
   }
+
+  test("minhashSignatures: a NULL-text doc gives no signature and the " +
+      "same d02 rows as the docs alone") {
+    import org.apache.spark.sql.functions._
+    val docs = Tables.documents(spark, sf)
+    val nullDoc = docs.agg((max(col("doc_id")) + 1).as("doc_id"))
+      .withColumn("text", lit(null).cast("string"))
+    val withNull = docs.unionByName(nullDoc, allowMissingColumns = true)
+    val sigs = graft.functions.TextKernels.minhashSignatures(spark, _, 8)
+    assert(sigs(withNull).count() === sigs(docs).count())
+    val dir = java.nio.file.Files.createTempDirectory("sf_nulltext")
+    withNull.write.parquet(s"$dir/documents.parquet")
+    val d02 = SparkEntry.queries("d02_minhash_lsh")
+    val want = d02(spark, sf).collect().toSeq
+    PersistRegistry.release()
+    val got = d02(spark, dir.toString).collect().toSeq
+    PersistRegistry.release()
+    assert(got === want)
+  }
 }

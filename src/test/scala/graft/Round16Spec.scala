@@ -189,8 +189,8 @@ class Round16Spec extends AnyFunSuite {
     import spark.implicits._
     // 300 docs sharing the 3-token boilerplate prefix + equal-length
     // unique 4th tokens — one (m, i, seg) band of 300 for the
-    // boilerplate segments, the exact adversary D18SkewDrill plants
-    // at 50x scale
+    // boilerplate segments, the adversary the retired d18 skew drill
+    // planted at 50x scale
     val planted = (0 until 300).map { i =>
       val tok = f"u$i%07d"
       (1000L + i, s"terms of service $tok trailing words here")
@@ -263,7 +263,7 @@ class Round16Spec extends AnyFunSuite {
         SimilarityQueries.insertFreeBaseGraph(spark, sf))
       idx
     }
-    // two throwaway sweeps (what v28/SnapshotBench leave behind)
+    // two throwaway sweeps (what v28 leaves behind)
     val dead = (1 to 2).map { _ =>
       val idx = freshIndex()
       LifecycleIndex.search(spark, sf, idx, searchQueries).count()

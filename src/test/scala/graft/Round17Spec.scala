@@ -70,8 +70,8 @@ class Round17Spec extends AnyFunSuite {
     assert(warm1 === warm1g,
       s"a warm search read control planes outside its own index " +
       s"(index: $warm1, process: $warm1g)")
-    // grow the cache: two more served indexes (what v28/SnapshotBench
-    // sweeps leave behind) — round 16 paid up to 4 liveness reads per
+    // grow the cache: two more served indexes (what v28's sweeps
+    // leave behind) — round 16 paid up to 4 liveness reads per
     // cached entry per search, so this would have RAISED the warm cost
     Seq(freshIndex(), freshIndex()).foreach { idx =>
       LifecycleIndex.search(spark, sf, idx, searchQueries).count()
