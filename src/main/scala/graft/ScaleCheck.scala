@@ -275,7 +275,8 @@ object ScaleCheck {
     // are disjoint (the same disjoint-copies discipline as the
     // synthetic tables' key shift). The audits are pointed at the
     // copies via spark.graft.boatraceBaseDir.
-    val boatraceSel = queries.exists(_.contains("boatrace"))
+    val boatraceSel =
+      queries.exists(graft.operators.BoatraceQueries.names)
     val bt1 = s"$out/boatrace_x1/boatrace_base"
     val btN = s"$out/boatrace_x$factor"
     // reuse requires EVERY table's _SUCCESS marker (review-caught:
@@ -308,7 +309,7 @@ object ScaleCheck {
     def run(name: String, dir: String): (Double, Double) = {
       // boatrace audits ignore the sf dir — route them at the 1×/N×
       // replicated parsed tables instead (see the build above)
-      if (name.contains("boatrace"))
+      if (graft.operators.BoatraceQueries.names(name))
         spark.conf.set("spark.graft.boatraceBaseDir",
           if (dir == base) bt1 else btN)
       val runs = (1 to 2).map { _ =>

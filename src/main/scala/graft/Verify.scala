@@ -34,9 +34,8 @@ object Verify {
     // file-not-found rows instead of one self-explanatory failure.
     // subset runs dump the base tables too when any selected query's
     // oracle reads them (boatrace relational ops + the a05/a06 audits)
-    val needsBoatraceDump = subset.forall(_.exists(n =>
-      n.startsWith("boatrace") || n.startsWith("a05_") ||
-        n.startsWith("a06_")))
+    val needsBoatraceDump =
+      subset.forall(_.exists(graft.operators.BoatraceQueries.names))
     try if (needsBoatraceDump)
       graft.operators.BoatraceQueries.dumpBaseTables(spark, outDir)
     catch { case e: Throwable =>

@@ -14,13 +14,11 @@ import org.apache.spark.sql.functions._
   */
 object BoatraceDb {
 
-  /** Build (or rebuild) the warehouse from extracted TXT or raw LZH
-    * archives and register the five tables as views. */
-  def open(spark: SparkSession, srcDir: String, warehouseDir: String,
-      fromLzh: Boolean = false): Unit = {
-    val parsed =
-      if (fromLzh) BoatracePipeline.parseLzhDir(spark, srcDir)
-      else BoatracePipeline.parseDir(spark, srcDir)
+  /** Build (or rebuild) the warehouse from extracted TXT files or raw
+    * LZH archives (each file's extension decides) and register the
+    * five tables as views. */
+  def open(spark: SparkSession, srcDir: String, warehouseDir: String): Unit = {
+    val parsed = BoatracePipeline.parseDir(spark, srcDir)
     try BoatracePipeline.writeWarehouse(spark, parsed, warehouseDir)
     finally parsed.unpersist()
   }

@@ -1,10 +1,12 @@
 package graft.boatrace
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.sources.Parquet
+import graft.sources.{Lha, Parquet}
 
 /** Spark-native form of the reference's per-date ETL
   * (/root/reference/main.py:240-267), re-architected for distributed
@@ -41,52 +43,50 @@ object BoatracePipeline {
       odds: Seq[OddsRow],
       schedules: Seq[ScheduleRow])
 
-  /** Distributed parse of a directory of official K/B TXT files. The
+  /** How one official file becomes parsed rows — the one decode+parse
+    * step every reader (batch, streaming) goes through. A `.lzh` path
+    * is an archive (SURVEY §2.1 S3): its entries are decoded by
+    * graft.sources.Lha, a pure JVM lh5 decoder, CRLF-normalized (the
+    * parser's verified form is LF) and parsed each under its own
+    * name. Any other path is one extracted K/B TXT file parsed under
+    * its own name. The date always comes from the official file name.
+    * A failure names `path`, so a corrupt file in a directory of
+    * hundreds is found from the job's error alone. */
+  def decodeParse(path: String, bytes: Array[Byte]): Seq[ParsedFile] =
+    try {
+      val files =
+        if (path.toLowerCase.endsWith(".lzh"))
+          Lha.extract(bytes).map(e => e.name -> Lha.normalizeNewlines(e.data))
+        else Seq(path.substring(path.lastIndexOf('/') + 1) -> bytes)
+      files.map { case (name, data) =>
+        val date = KbParser.dateFromFileName(name)
+        val t = KbParser.parseBytes(date, data)
+        ParsedFile(date, t.results, t.envs, t.odds, t.schedules)
+      }
+    } catch {
+      case NonFatal(e) =>
+        throw new java.io.IOException(s"boatrace file $path: ${e.getMessage}", e)
+    }
+
+  /** Distributed parse of a directory of official K/B files — extracted
+    * TXT and raw `.lzh` archives alike (`glob` selects, e.g.
+    * "[KB]2020-08-*.lzh"); archive bytes never touch the driver. The
     * returned dataset is persisted (parse once, consume four times);
     * call `unpersist()` on it when the four tables have been written.
     */
-  def parseDir(spark: SparkSession, txtDir: String): Dataset[ParsedFile] = {
+  def parseDir(spark: SparkSession, dir: String,
+      glob: String = "*.{TXT,lzh}"): Dataset[ParsedFile] = {
     import spark.implicits._
     spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.TXT")
-      .load(txtDir)
+      .option("pathGlobFilter", glob)
+      .load(dir)
       .select("path", "content")
       .as[(String, Array[Byte])]
       // binaryFile packs many small files into one input split
       // (maxPartitionBytes), which would serialize the whole parse
       // into a single task; spread files across the cluster first.
       .repartition(spark.sparkContext.defaultParallelism)
-      .map { case (path, bytes) =>
-        val name = path.substring(path.lastIndexOf('/') + 1)
-        val date = KbParser.dateFromFileName(name)
-        val t = KbParser.parseBytes(date, bytes)
-        ParsedFile(date, t.results, t.envs, t.odds, t.schedules)
-      }
-      .persist(StorageLevel.MEMORY_AND_DISK)
-  }
-
-  /** Same as parseDir but starting from the raw downloaded `.lzh`
-    * archives (SURVEY §2.1 S3): decompress (graft.sources.Lha, a pure
-    * JVM lh5 decoder) and parse inside one executor-side flatMap —
-    * archive bytes never touch the driver. `pathGlobFilter` selects
-    * e.g. "[KB]2020-08-*.lzh". */
-  def parseLzhDir(spark: SparkSession, lzhDir: String,
-      glob: String = "*.lzh"): Dataset[ParsedFile] = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .load(lzhDir)
-      .select("path", "content")
-      .as[(String, Array[Byte])]
-      .repartition(spark.sparkContext.defaultParallelism)
-      .flatMap { case (_, bytes) =>
-        graft.sources.Lha.extract(bytes).map { e =>
-          val date = KbParser.dateFromFileName(e.name)
-          // archives carry CRLF; the parser's verified form is LF
-          val t = KbParser.parseBytes(date, graft.sources.Lha.normalizeNewlines(e.data))
-          ParsedFile(date, t.results, t.envs, t.odds, t.schedules)
-        }
-      }
+      .flatMap { case (path, bytes) => decodeParse(path, bytes) }
       .persist(StorageLevel.MEMORY_AND_DISK)
   }
 
@@ -157,18 +157,6 @@ object BoatracePipeline {
       .withColumn("当地2率", col("当地2率").cast("double"))
       .withColumn("モーター2率", col("モーター2率").cast("double"))
       .withColumn("ボート2率", col("ボート2率").cast("double"))
-
-  /** End-to-end: parse txtDir, write the five tables as
-    * date-partitioned Parquet under warehouseDir, register temp views
-    * (the read_db.py query surface), and return the typed race table.
-    */
-  def buildWarehouse(spark: SparkSession, txtDir: String,
-      warehouseDir: String): DataFrame = {
-    val parsed = parseDir(spark, txtDir)
-    try writeWarehouse(spark, parsed, warehouseDir)
-    finally parsed.unpersist()
-    spark.table("race")
-  }
 
   /** Write the five tables of an already-parsed corpus as
     * date-partitioned Parquet and register them as views. */

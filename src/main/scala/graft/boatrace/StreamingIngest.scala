@@ -39,7 +39,7 @@ import graft.warehouse.SnapshotTable
   * then. Work per epoch is O(batch + touched dates), never O(history).
   *
   * Scale: parse runs as a map over executor-distributed archive bytes
-  * (same kernel as BoatracePipeline.parseLzhDir); the only driver
+  * (BoatracePipeline.decodeParse, as in the batch build); the only driver
   * materialization is the touched DATE list (2 archives/date/day — a
   * daily feed is a handful of strings). At 100 TB of history the
   * per-epoch cost is unchanged: the snapshot scans below are pruned to
@@ -106,14 +106,8 @@ object StreamingIngest {
     val ledger = Some(prefix + batchId)
     val parsed = batch.select("path", "content")
       .as[(String, Array[Byte])]
-      .flatMap { case (_, bytes) =>
-        graft.sources.Lha.extract(bytes).map { e =>
-          val date = KbParser.dateFromFileName(e.name)
-          val t = KbParser.parseBytes(date,
-            graft.sources.Lha.normalizeNewlines(e.data))
-          BoatracePipeline.ParsedFile(date, t.results, t.envs, t.odds,
-            t.schedules)
-        }
+      .flatMap { case (path, bytes) =>
+        BoatracePipeline.decodeParse(path, bytes)
       }
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {

@@ -350,12 +350,11 @@ object BoatraceQueries {
     },
 
     // R5: the reference's `レースID LIKE '2020-08-28%'` (read_db.py:19)
-    // through the DSv2 connector — the prefix predicate reaches
-    // SupportsPushDownFilters and prunes FILES at planning time, so a
-    // one-date query decodes 2 of the 62 corpus files instead of
-    // parsing everything and filtering after (the file-granularity
-    // form of partition pruning; the warehouse layout's date
-    // partitions give the same property post-ETL).
+    // as file selection: the date is in the official file names, so a
+    // one-date query decodes that date's K and B files (2 of the 62
+    // corpus files) instead of parsing everything and filtering after
+    // (the file-granularity form of partition pruning; the warehouse
+    // layout's date partitions give the same property post-ETL).
     // Oracle = the reference's committed golden table CSV for the
     // queried date (engine-independent: that CSV IS the reference's
     // own env⋈result⋈schedule join output for 2020-08-28).
@@ -366,12 +365,12 @@ object BoatraceQueries {
         |FROM read_csv('/root/reference/table/2020-08-28.csv',
         |  header=true, all_varchar=true)
         |ORDER BY "レースID", "順位"""".stripMargin) { (s, _) =>
-      def t(name: String) = s.read.format("boatrace")
-        .option("table", name).load(txtDir)
-        .filter(col("レースID").startsWith("2020-08-28"))
-      BoatracePipeline.typedRace(
-        BoatracePipeline.raceTable(t("env"), t("result"), t("schedule")))
-        .filter(col("date") === lit("2020-08-28").cast("date"))
+      val parsed = graft.PersistRegistry.track(
+        BoatracePipeline.parseDir(s, txtDir, "[KB]200828.TXT"))
+      BoatracePipeline.typedRace(BoatracePipeline.raceTable(
+          BoatracePipeline.envDf(s, parsed),
+          BoatracePipeline.resultDf(s, parsed),
+          BoatracePipeline.scheduleDf(s, parsed)))
         .select("レースID", "順位", "選手登番", "艇番", "展示")
         .orderBy("レースID", "順位")
     },
@@ -482,4 +481,9 @@ object BoatraceQueries {
         .orderBy("edge")
     },
   )
+
+  /** The queries that read the boatrace corpus instead of the sf dir —
+    * the one test for "corpus query" (Verify's base-table dump,
+    * ScaleCheck's replicated tables, EmptyInputSpec's skip). */
+  lazy val names: Set[String] = all.map(_.name).toSet
 }

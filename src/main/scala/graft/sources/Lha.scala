@@ -17,7 +17,8 @@ object Lha {
 
   final case class Entry(name: String, data: Array[Byte])
 
-  /** All entries of an archive. Fails fast on unsupported methods. */
+  /** All entries of an archive. Fails fast on unsupported methods and
+    * on an entry whose CRC-16 does not match its header. */
   def extract(archive: Array[Byte]): Seq[Entry] = {
     val out = Seq.newBuilder[Entry]
     var pos = 0
@@ -30,40 +31,34 @@ object Lha {
       val packed = le32(pos + 7)
       val orig = le32(pos + 11)
       val level = archive(pos + 20) & 0xff
-      level match {
-        case 0 =>
-          val nameLen = archive(pos + 21) & 0xff
-          val name = new String(archive, pos + 22, nameLen, "ASCII")
-          val hdrCrc = (archive(pos + 22 + nameLen) & 0xff) |
-            ((archive(pos + 23 + nameLen) & 0xff) << 8)
-          val dataStart = pos + 2 + headSize
-          val data = decode(method, archive, dataStart, packed.toInt, orig.toInt)
-          val crc = crc16(data)
-          if (crc != hdrCrc)
-            throw new java.io.IOException(
-              f"$name: CRC mismatch (got $crc%04x, header $hdrCrc%04x)")
-          out += Entry(name, data)
-          pos = dataStart + packed.toInt
-        case 1 =>
-          val nameLen = archive(pos + 21) & 0xff
-          val name = new String(archive, pos + 22, nameLen, "ASCII")
+      if (level > 1)
+        throw new UnsupportedOperationException(s"LZH header level $level")
+      def le16(o: Int): Int = (archive(o) & 0xff) | ((archive(o + 1) & 0xff) << 8)
+      // levels 0 and 1 share the layout up to the name and its CRC
+      val nameLen = archive(pos + 21) & 0xff
+      val name = new String(archive, pos + 22, nameLen, "ASCII")
+      val hdrCrc = le16(pos + 22 + nameLen)
+      val (dataStart, dataLen) =
+        if (level == 0) (pos + 2 + headSize, packed.toInt)
+        else {
           // skip extension headers; `packed` includes their bytes
           var extTotal = 0
           var extOff = pos + 2 + headSize
-          var extSize = (archive(extOff - 2) & 0xff) | ((archive(extOff - 1) & 0xff) << 8)
+          var extSize = le16(extOff - 2)
           while (extSize != 0) {
             extTotal += extSize
             extOff += extSize
-            extSize = (archive(extOff - 2) & 0xff) | ((archive(extOff - 1) & 0xff) << 8)
+            extSize = le16(extOff - 2)
           }
-          val dataStart = extOff
-          val dataLen = packed.toInt - extTotal
-          val data = decode(method, archive, dataStart, dataLen, orig.toInt)
-          out += Entry(name, data)
-          pos = dataStart + dataLen
-        case l =>
-          throw new UnsupportedOperationException(s"LZH header level $l")
-      }
+          (extOff, packed.toInt - extTotal)
+        }
+      val data = decode(method, archive, dataStart, dataLen, orig.toInt)
+      val crc = crc16(data)
+      if (crc != hdrCrc)
+        throw new java.io.IOException(
+          f"$name: CRC mismatch (got $crc%04x, header $hdrCrc%04x)")
+      out += Entry(name, data)
+      pos = dataStart + dataLen
     }
     out.result()
   }

@@ -26,10 +26,9 @@ class EmptyInputSpec extends AnyFunSuite {
   }
 
   test("every testdata query executes over a 0-row corpus") {
-    // boatrace_* read the reference corpus and ignore the sf dir
-    val skip = Set("boatrace")
+    // the corpus queries read the boatrace corpus and ignore the sf dir
     val failures = SparkEntry.defs
-      .filterNot(q => skip.exists(q.name.startsWith))
+      .filterNot(q => graft.operators.BoatraceQueries.names(q.name))
       .flatMap { q =>
         val r = try { q.run(spark, emptyDir).count(); None }
         catch { case e: Throwable => Some(q.name -> e.toString.take(200)) }

@@ -7,9 +7,10 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps the engine's shared mechanisms single: one metrics listener
-  * (graft.Ledger), no settle sleeps in the measuring harnesses, and one
-  * parquet reader (graft.sources.Parquet). Reads `src/main/scala` from
-  * the project directory the tests run in. */
+  * (graft.Ledger), no settle sleeps in the measuring harnesses, one
+  * parquet reader (graft.sources.Parquet) and one decode+parse step for
+  * the boatrace files (BoatracePipeline.decodeParse). Reads `src/main`
+  * from the project directory the tests run in. */
 class StructureSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -45,5 +46,22 @@ class StructureSpec extends AnyFunSuite {
     val read = """\.read\s*\.parquet\(""".r
     assert(offenders(Set("graft/sources/Parquet.scala"))(
       s => read.findFirstIn(s).nonEmpty) === Nil)
+  }
+
+  test("Lha.extract and KbParser.parseBytes are called once each, in " +
+      "BoatracePipeline.decodeParse's file") {
+    for (call <- Seq("Lha.extract(", "KbParser.parseBytes(")) {
+      val sites = sources.toSeq.sorted.flatMap { case (p, s) =>
+        Seq.fill(s.split(java.util.regex.Pattern.quote(call), -1).length - 1)(p)
+      }
+      assert(sites === Seq("graft/boatrace/BoatracePipeline.scala"), call)
+    }
+  }
+
+  test("no format(\"boatrace\") reader and no DataSourceRegister service file") {
+    val fmt = """format\(\s*"boatrace"\s*\)""".r
+    assert(offenders(Set.empty)(s => fmt.findFirstIn(s).nonEmpty) === Nil)
+    assert(!Files.exists(Paths.get("src/main/resources/META-INF/services/" +
+      "org.apache.spark.sql.sources.DataSourceRegister")))
   }
 }

@@ -49,7 +49,7 @@ class BoatraceDbSpec extends AnyFunSuite {
     // archives -> decode -> parse -> join -> partitioned warehouse ->
     // interactive queries
     val dir = java.nio.file.Files.createTempDirectory("boatrace_year").toString
-    BoatraceDb.open(spark, "/root/reference/lzh", dir, fromLzh = true)
+    BoatraceDb.open(spark, "/root/reference/lzh", dir)
     val race = spark.table("race")
     val total = race.count()
     assert(total > 300000, s"full-year race rows: $total")
@@ -73,7 +73,7 @@ class BoatraceDbSpec extends AnyFunSuite {
     for (f <- Seq("K2020-08-28.lzh", "B2020-08-28.lzh"))
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"/root/reference/lzh/$f"), tmp.resolve(f))
-    BoatraceDb.open(spark, tmp.toString, dir, fromLzh = true)
+    BoatraceDb.open(spark, tmp.toString, dir)
     assert(BoatraceDb.racesOn(spark, "2020-08-28").count() > 0)
     // rebuild the txt warehouse for other tests (views were replaced)
     BoatraceDb.open(spark, "/root/reference/txt",

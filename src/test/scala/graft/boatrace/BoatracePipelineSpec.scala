@@ -100,7 +100,7 @@ class BoatracePipelineSpec extends AnyFunSuite {
 
   test("warehouse date filter prunes partitions (the R5 LIKE-prefix upgrade)") {
     val wh = java.nio.file.Files.createTempDirectory("boatrace_wh").toString
-    BoatracePipeline.buildWarehouse(spark, "/root/reference/txt", wh)
+    BoatraceDb.open(spark, "/root/reference/txt", wh)
     val q = spark.table("race")
       .filter(org.apache.spark.sql.functions.col("date") === "2020-08-28")
     assert(q.count() > 0)
@@ -189,7 +189,7 @@ class SeptemberGoldenSpec extends AnyFunSuite {
   private val ref = "/root/reference"
   private val septDates: Seq[String] = (1 to 30).map(d => f"2020-09-$d%02d")
 
-  private lazy val parsed = BoatracePipeline.parseLzhDir(
+  private lazy val parsed = BoatracePipeline.parseDir(
     spark, s"$ref/lzh", "[KB]2020-09-*.lzh")
   private lazy val files: Seq[BoatracePipeline.ParsedFile] =
     parsed.collect().toSeq
@@ -254,15 +254,15 @@ class SeptemberGoldenSpec extends AnyFunSuite {
 class LzhPipelineSpec extends AnyFunSuite {
   import TestSpark.spark
 
-  test("parseLzhDir over August archives equals parseDir over txt") {
+  test("parseDir over August archives equals parseDir over txt") {
     val fromTxt = BoatracePipeline.parseDir(spark, "/root/reference/txt")
-    val fromLzh = BoatracePipeline.parseLzhDir(
+    val fromArchives = BoatracePipeline.parseDir(
       spark, "/root/reference/lzh", "[KB]2020-08-*.lzh")
     try {
       // two files per date (K and B) — key on (date, kind)
       def key(p: BoatracePipeline.ParsedFile) = (p.date, p.schedules.nonEmpty)
       val a = fromTxt.collect().sortBy(key)
-      val b = fromLzh.collect().sortBy(key)
+      val b = fromArchives.collect().sortBy(key)
       assert(a.map(key).toSeq === b.map(key).toSeq, "same (date, kind) files")
       a.zip(b).foreach { case (x, y) =>
         val d = x.date
@@ -273,7 +273,7 @@ class LzhPipelineSpec extends AnyFunSuite {
       }
     } finally {
       fromTxt.unpersist()
-      fromLzh.unpersist()
+      fromArchives.unpersist()
     }
   }
 

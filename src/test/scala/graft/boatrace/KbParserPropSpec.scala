@@ -4,9 +4,12 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.boatrace.BoatraceCorpus._
+
 /** Property-based parser tests (SURVEY §5 test plan item 2):
-  * generators produce synthetic K-file sections in the official
-  * fixed format; invariants verified on every sample:
+  * generators produce synthetic K-file sections, rendered in the
+  * official fixed format by BoatraceCorpus; invariants verified on
+  * every sample:
   *   - one env row per race, venue threaded from the section header;
   *   - result rows = exactly the finisher lines (S0/F/L-style
   *     non-finishers silently dropped);
@@ -38,16 +41,6 @@ class KbParserPropSpec extends AnyFunSuite {
 
   private val date = "2020-08-15"
 
-  final case class RaceSpec(
-      finisherRanks: List[Int], // distinct ranks 1..6 (>=1)
-      nonFinishers: Int, // S0-style lines, must be dropped
-      voidRace: Boolean, // レース不成立
-      missingFukusho2: Boolean,
-      payouts: Vector[Int]) // 10 payout values (used unless void)
-
-  final case class SectionSpec(
-      venue: String, name: String, races: List[RaceSpec])
-
   private val genRace: Gen[RaceSpec] = for {
     nFin <- Gen.choose(1, 6)
     ranks = (1 to nFin).toList
@@ -66,54 +59,7 @@ class KbParserPropSpec extends AnyFunSuite {
   private val genFile: Gen[List[SectionSpec]] =
     Gen.nonEmptyListOf(genSection).map(_.take(3))
 
-  /** Render sections in the official K-file layout. */
-  private def render(sections: List[SectionSpec]): Array[String] = {
-    val sb = Vector.newBuilder[String]
-    for (s <- sections) {
-      sb += " " * 28 + "＊＊＊　競走成績　＊＊＊\n"
-      sb += "\n"
-      sb += " " * 10 + s.name + "\n"
-      sb += "\n"
-      sb += "　　　ボートレース" + s.venue + "\n"
-      for ((r, idx) <- s.races.zipWithIndex) {
-        val rn = idx + 1
-        sb += f"   $rn%2dR       一　般　　　                 H1800m  晴　  風  西　　 2m  波　  1cm\n"
-        sb += "  着 艇 登番 　選　手　名　　ﾓｰﾀｰ ﾎﾞｰﾄ 展示 進入 ｽﾀｰﾄﾀｲﾐﾝｸ ﾚｰｽﾀｲﾑ\n"
-        sb += "-" * 79 + "\n"
-        for (rank <- r.finisherRanks)
-          sb += f"  0$rank%d  $rank%d ${3000 + rank * 111}%04d 選　手　　名　前 32   55  6.9$rank%d   1    0.15     1.58.8\n"
-        for (j <- 1 to r.nonFinishers)
-          sb += f"  S0  $j%d ${4000 + j}%04d 失　格　　選　手 72   16  6.95   3    0.10      .  . \n"
-        sb += "\n"
-        if (r.voidRace) {
-          sb += "        レース不成立\n"
-        } else {
-          val p = r.payouts
-          sb += f"        単勝     1          ${p(0)}%d  \n"
-          sb += (if (r.missingFukusho2)
-            f"        複勝     1          ${p(1)}%d  \n"
-          else
-            f"        複勝     1          ${p(1)}%d  6         ${p(2)}%d  \n")
-          sb += f"        ２連単   1-6       ${p(3)}%d  人気     9 \n"
-          sb += f"        ２連複   1-6       ${p(4)}%d  人気     9 \n"
-          sb += f"        拡連複   1-6       ${p(5)}%d  人気     9 \n"
-          sb += f"                 1-2       ${p(6)}%d  人気     5 \n"
-          sb += f"                 2-6       ${p(7)}%d  人気    13 \n"
-          sb += f"        ３連単   1-6-2     ${p(8)}%d  人気    45 \n"
-          sb += f"        ３連複   1-2-6     ${p(9)}%d  人気    11 \n"
-        }
-        sb += "\n"
-      }
-    }
-    sb.result().toArray
-  }
-
   // ---- B-file (番組表 / schedule) generator ----------------------
-
-  final case class EntrySpec(lane: Int, regNo: Int, age: Int,
-      weight: Int, clazz: String, rates: Vector[Int]) // 6 rate fields ×100
-
-  final case class BRaceSpec(entries: List[EntrySpec])
 
   private val genEntry: Gen[Int => EntrySpec] = for {
     regNo <- Gen.choose(2000, 5999)
@@ -128,37 +74,12 @@ class KbParserPropSpec extends AnyFunSuite {
     mk <- Gen.containerOfN[List, Int => EntrySpec](n, genEntry)
   } yield BRaceSpec(mk.zipWithIndex.map { case (f, i) => f(i + 1) })
 
-  private val genBFile: Gen[List[(String, String, List[BRaceSpec])]] =
+  private val genBFile: Gen[List[BSection]] =
     Gen.nonEmptyListOf(for {
       venue <- Gen.oneOf("大　村", "戸田", "びわこ")
       name <- Gen.oneOf("テスト競走", "記念レース")
       races <- Gen.nonEmptyListOf(genBRace).map(_.take(12))
     } yield (venue, name, races)).map(_.take(3))
-
-  private def renderB(
-      sections: List[(String, String, List[BRaceSpec])]): Array[String] = {
-    def r2(x: Int) = f"${x / 100}%d.${x % 100}%02d"
-    val sb = Vector.newBuilder[String]
-    for ((venue, name, races) <- sections) {
-      sb += " " * 28 + "＊＊＊　番組表　＊＊＊\n"
-      sb += "\n"
-      sb += " " * 10 + name + "\n"
-      sb += "\n"
-      sb += "　　　ボートレース" + venue + "\n"
-      for ((race, idx) <- races.zipWithIndex) {
-        sb += f"　${idx + 1}%dＲ  一　般　　　          Ｈ１８００ｍ  電話投票締切予定１４：３９\n"
-        sb += "-" * 79 + "\n"
-        for (e <- race.entries)
-          sb += (f"${e.lane}%d ${e.regNo}%04d" + "選　手　名" +
-            f"${e.age}%02d" + "東京" + f"${e.weight}%02d${e.clazz}%s " +
-            f"${r2(e.rates(0))}%5s ${r2(e.rates(1))}%5s ${r2(e.rates(2))}%5s " +
-            f"${r2(e.rates(3))}%5s 32 ${r2(e.rates(4))}%5s 55 ${r2(e.rates(5))}%5s " +
-            "6 444 6      5\n")
-        sb += "\n"
-      }
-    }
-    sb.result().toArray
-  }
 
   test("parser invariants hold on arbitrary synthetic B files") {
     forAll(genBFile) { sections =>
@@ -195,7 +116,7 @@ class KbParserPropSpec extends AnyFunSuite {
 
   test("parser invariants hold on arbitrary synthetic K files") {
     forAll(genFile) { sections =>
-      val t = KbParser.parse(date, render(sections))
+      val t = KbParser.parse(date, renderK(sections))
       val allRaces = sections.flatMap(s => s.races.map(s -> _))
 
       // env: one row per race, venue threaded from the section state

@@ -61,7 +61,7 @@ class StreamingIngestSpec extends AnyFunSuite {
     val streamed = StreamingIngest.table(spark, wh, "race")
 
     // batch reference build over the same four archives
-    val parsed = BoatracePipeline.parseLzhDir(spark, in)
+    val parsed = BoatracePipeline.parseDir(spark, in)
     val batch = BoatracePipeline.typedRace(BoatracePipeline.raceTable(
       BoatracePipeline.envDf(spark, parsed),
       BoatracePipeline.resultDf(spark, parsed),
@@ -74,7 +74,7 @@ class StreamingIngestSpec extends AnyFunSuite {
     // base tables converged too (one spot check)
     assert(SnapshotTable.read(spark, s"$wh/odds").count() ===
       BoatracePipeline.oddsDf(spark,
-        BoatracePipeline.parseLzhDir(spark, in)).count())
+        BoatracePipeline.parseDir(spark, in)).count())
   }
 
   test("restart from checkpoint: earlier archives are not re-ingested") {
@@ -99,7 +99,7 @@ class StreamingIngestSpec extends AnyFunSuite {
     assert(env.filter(org.apache.spark.sql.functions.col("date") ===
       java.sql.Date.valueOf("2020-08-04")).count() === envAfter1)
     // and the final warehouse equals the batch build over both dates
-    val parsed = BoatracePipeline.parseLzhDir(spark, in)
+    val parsed = BoatracePipeline.parseDir(spark, in)
     try {
       val batch = BoatracePipeline.typedRace(BoatracePipeline.raceTable(
         BoatracePipeline.envDf(spark, parsed),

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Differential golden test for the lh5 decoder: every August-2020
   * archive in the reference corpus must decompress to exactly the
-  * bytes of its committed extracted TXT. */
+  * bytes of its committed extracted TXT. Generated `-lh0-` archives
+  * check the header levels and the CRC without that corpus. */
 class LhaSpec extends AnyFunSuite {
 
   private val lzhDir = Paths.get("/root/reference/lzh")
@@ -37,6 +38,34 @@ class LhaSpec extends AnyFunSuite {
       }
     }
     assert(checked === 62)
+  }
+
+  /** Two CRLF text entries (one CP932) plus arbitrary binary bytes. */
+  private val entries: Seq[(String, Array[Byte])] = Seq(
+    "K200827.TXT" -> LzhWriter.crlf(
+      "＊＊＊　競走成績　＊＊＊\n  01  1 3111\n".getBytes("windows-31j")),
+    "B200827.TXT" -> LzhWriter.crlf("a\nb\n".getBytes("ASCII")),
+    "bin" -> Array.tabulate[Byte](300)(i => (i * 7).toByte))
+
+  test("generated -lh0- archives round-trip with level-0 and level-1 headers") {
+    for (level <- Seq(0, 1)) {
+      val got = Lha.extract(LzhWriter.archive(level, entries))
+      assert(got.map(_.name) === entries.map(_._1), s"level $level")
+      got.zip(entries).foreach { case (e, (n, data)) =>
+        assert(java.util.Arrays.equals(e.data, data), s"level $level $n")
+      }
+    }
+  }
+
+  test("a wrong CRC raises an IOException naming the entry, at either " +
+      "header level") {
+    for (level <- Seq(0, 1)) {
+      val archive = LzhWriter.archive(level, entries)
+      // the last entry's data ends right before the end-of-archive byte
+      archive(archive.length - 2) = (archive(archive.length - 2) ^ 0x10).toByte
+      val e = intercept[java.io.IOException](Lha.extract(archive))
+      assert(e.getMessage.contains("bin: CRC mismatch"), s"level $level")
+    }
   }
 
   test("decoder rejects unknown methods instead of corrupting output") {
