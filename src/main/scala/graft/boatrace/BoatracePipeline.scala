@@ -158,22 +158,27 @@ object BoatracePipeline {
       .withColumn("モーター2率", col("モーター2率").cast("double"))
       .withColumn("ボート2率", col("ボート2率").cast("double"))
 
+  /** The four base tables of a parsed corpus by name (env, result,
+    * odds, schedule), each with the `date` partition column split out
+    * of レースID — the one definition the batch warehouse and the
+    * streaming ingest both write. */
+  def datedTables(spark: SparkSession,
+      parsed: Dataset[ParsedFile]): Seq[(String, DataFrame)] =
+    Seq("env" -> envDf(spark, parsed), "result" -> resultDf(spark, parsed),
+      "odds" -> oddsDf(spark, parsed),
+      "schedule" -> scheduleDf(spark, parsed)).map { case (name, df) =>
+      name -> df.withColumn("date", to_date(substring(col("レースID"), 1, 10)))
+    }
+
   /** Write the five tables of an already-parsed corpus as
     * date-partitioned Parquet and register them as views. */
   def writeWarehouse(spark: SparkSession, parsed: Dataset[ParsedFile],
       warehouseDir: String): Unit = {
-    val env = envDf(spark, parsed)
-    val result = resultDf(spark, parsed)
-    val odds = oddsDf(spark, parsed)
-    val schedule = scheduleDf(spark, parsed)
-    val race = typedRace(raceTable(env, result, schedule))
-
-    def withDate(df: DataFrame): DataFrame =
-      df.withColumn("date", to_date(substring(col("レースID"), 1, 10)))
-
-    Seq("env" -> withDate(env), "result" -> withDate(result),
-      "odds" -> withDate(odds), "schedule" -> withDate(schedule),
-      "race" -> race).foreach { case (name, df) =>
+    val base = datedTables(spark, parsed)
+    val undated = base.toMap.view.mapValues(_.drop("date"))
+    val race = typedRace(
+      raceTable(undated("env"), undated("result"), undated("schedule")))
+    (base :+ ("race" -> race)).foreach { case (name, df) =>
       df.write.mode("overwrite").partitionBy("date")
         .parquet(s"$warehouseDir/$name")
       Parquet.read(spark, s"$warehouseDir/$name").createOrReplaceTempView(name)

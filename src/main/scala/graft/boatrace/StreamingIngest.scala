@@ -47,9 +47,6 @@ import graft.warehouse.SnapshotTable
   */
 object StreamingIngest {
 
-  /** Table subdirectories under the warehouse root. */
-  private val baseTables = Seq("env", "result", "odds", "schedule")
-
   /** Start the ingest stream over `lzhDir`. Caller owns the returned
     * query (processAllAvailable/stop). Restarting with the same
     * checkpoint resumes exactly where the last run left off.
@@ -115,14 +112,7 @@ object StreamingIngest {
       // a few archives); it drives partition pruning below
       val dates = parsed.map(_.date).distinct().collect().sorted
       if (dates.nonEmpty) {
-        def withDate(df: DataFrame): DataFrame =
-          df.withColumn("date", to_date(substring(col("レースID"), 1, 10)))
-        val tables = Map(
-          "env" -> withDate(BoatracePipeline.envDf(spark, parsed)),
-          "result" -> withDate(BoatracePipeline.resultDf(spark, parsed)),
-          "odds" -> withDate(BoatracePipeline.oddsDf(spark, parsed)),
-          "schedule" -> withDate(BoatracePipeline.scheduleDf(spark, parsed)))
-        for (t <- baseTables) {
+        for ((t, df) <- BoatracePipeline.datedTables(spark, parsed)) {
           val dir = s"$warehouseDir/$t"
           // exactly-once against the per-version LEDGER, not just the
           // CURRENT pointer (round 20, the rule every streaming sink
@@ -136,8 +126,8 @@ object StreamingIngest {
           // files would make the snapshot unreadable, and skipping a
           // no-op loses nothing under retry.
           if (!SnapshotTable.newestLedgerId(dir, prefix)
-              .exists(_ >= batchId) && !tables(t).isEmpty)
-            SnapshotTable.append(spark, tables(t), dir, ledger)
+              .exists(_ >= batchId) && !df.isEmpty)
+            SnapshotTable.append(spark, df, dir, ledger)
         }
         rebuildRaceDates(spark, warehouseDir, dates, ledger, batchId,
           prefix)

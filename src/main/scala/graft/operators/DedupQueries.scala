@@ -1167,8 +1167,8 @@ object DedupQueries {
       // (seg row, probe row) pair of a key meets in exactly one
       // bucket, so candidates, verification, and the oracle match are
       // unchanged. Healthy corpora detect ZERO hot keys and take the
-      // plain-join branch — same plan as before the lever, AQE free
-      // to coalesce.
+      // unsalted join (still pinned on k in the shuffled regime — see
+      // below).
       //
       // REGIME GUARD (review round 2 — executed-plan evidence): the
       // reducer-skew straggler only EXISTS in the shuffled-join
@@ -1188,8 +1188,7 @@ object DedupQueries {
       // wide distinct shuffle; counting raw ROWS over-fires on
       // window-duplicate substrings — distinct DOCS is the band size
       // that matters, and HLL error only moves the threshold a few
-      // percent). Disable for A/B drills via
-      // spark.graft.d18.saltHotBands=false.
+      // percent).
       // via the PASSED session's conf, like every other d18 knob
       // (round-17 advice: the thread-local SQLConf.get can belong to
       // a different active session when the query is constructed off
@@ -1227,9 +1226,7 @@ object DedupQueries {
       // the probe-side replication factor deployment-sized).
       val perTaskPairs = math.max(1L, pairT / 8)
       val hotBands: Map[Long, Int] =
-        if (broadcastable ||
-            !s.conf.getOption("spark.graft.d18.saltHotBands")
-              .forall(_.toBoolean)) Map.empty
+        if (broadcastable) Map.empty
         else {
           import s.implicits._
           // bounded driver intake: Σ nseg·nsub is corpus-linear per
@@ -1265,8 +1262,6 @@ object DedupQueries {
       // spark.sql.shuffle.partitions the genuine parallelism knob a
       // deployment sizes to its cluster. Broadcastable corpora never
       // reach this branch.
-      val lever = s.conf.getOption("spark.graft.d18.saltHotBands")
-        .forall(_.toBoolean)
       val nPartPin =
         s.conf.get("spark.sql.shuffle.partitions").toInt
       // Trade-off noted with the pin (round-17 advice): an explicit
@@ -1278,7 +1273,7 @@ object DedupQueries {
       // re-fusing Levenshtein-dense byte-light partitions) costs more
       // than a missed late broadcast (measured: max task 12.9 s
       // planner-owned vs 4.4 s pinned at 50×).
-      val joined = if (broadcastable || !lever) {
+      val joined = if (broadcastable) {
         seg.join(probe, Seq("k"))
       } else if (hotBands.isEmpty) {
         seg.repartition(nPartPin, col("k"))

@@ -555,8 +555,8 @@ object LifecycleIndex {
     centsCache.remove(k)
     Option(corpusCache.remove(k))
       .foreach(e => unpersistUnlessShared(e._2, k))
-    // per-index observability + backend bookkeeping (sticky conf
-    // resolution, per-dir read counters) go with the index
+    // per-index observability + the backend's per-dir read counters
+    // go with the index
     retriesPerIndex.remove(indexDir)
     phasesPerIndex.remove(indexDir)
     serveModePerIndex.remove(indexDir)
@@ -649,7 +649,6 @@ object LifecycleIndex {
         // consistent by the same pinning argument, and a second
         // straddle means fold turnover outpaces the serve (page the
         // operator, exactly like the double vacuum race).
-        searchRetries.incrementAndGet()
         retriesPerIndex.computeIfAbsent(indexDir,
           _ => new java.util.concurrent.atomic.AtomicLong(0))
           .incrementAndGet()
@@ -662,12 +661,6 @@ object LifecycleIndex {
           s"${Option(e.getMessage).getOrElse("").take(200)}")
         searchAttempt(spark, d, indexDir, queries, maxQ)
     }
-
-  /** Count of serving-race retries [[search]] absorbed — a vacuum
-    * eating pinned files mid-walk OR a fold straddling the version
-    * capture (round 19); the stderr mirror names which. Process-wide;
-    * per-index attribution via [[searchRetriesFor]]. */
-  val searchRetries = new java.util.concurrent.atomic.AtomicLong(0)
 
   // PER-INDEX observability (round-17 verdict 3): a process serving
   // many indexes — the deployment the corpus LRU cache exists for —
@@ -706,13 +699,24 @@ object LifecycleIndex {
   def resolveEarlyStopsFor(indexDir: String): Long =
     Option(earlyStopsPerIndex.get(indexDir)).map(_.get()).getOrElse(0L)
 
-  /** Serving-race retries (vacuum race or fold straddle) [[search]]
-    * absorbed FOR this index. */
+  /** Serving-race retries [[search]] absorbed FOR this index — a
+    * vacuum eating pinned files mid-walk OR a fold straddling the
+    * version capture (round 19); the stderr mirror names which. */
   def searchRetriesFor(indexDir: String): Long =
     Option(retriesPerIndex.get(indexDir)).map(_.get()).getOrElse(0L)
 
-  /** Per-phase wall seconds of this index's last [[search]] attempt
-    * (see [[lastSearchPhases]] for the emitted order). */
+  /** Wall seconds per phase of this index's LAST [[search]] attempt
+    * — the serving read-path latency budget (round-17 stretch 7),
+    * stamped per factor by StreamMaintenanceScale so the next serving
+    * optimization is chosen from a measured breakdown. Emitted
+    * order: `intake` (ONE limit-bounded quantize+collect — the
+    * separate count job is gone), `centroid_cache` (the pinned
+    * version capture plus the coordinator table, recomputed over the
+    * not-yet-persisted plan only on a retired-state change),
+    * `version_resolve` (corpus pin + LRU bound + serving-tag
+    * match), `serve_materialize` (nonzero only on a state-change
+    * miss), `serving_read` (manifest + plan), then the walk's own
+    * phases (SimilarityQueries.lastWalkPhases). */
   def lastSearchPhasesFor(indexDir: String): Seq[(String, Double)] =
     Option(phasesPerIndex.get(indexDir)).getOrElse(Seq.empty)
 
@@ -764,45 +768,18 @@ object LifecycleIndex {
       }
   }
 
-  /** Wall seconds per phase of the LAST [[search]] attempt — the
-    * serving read-path latency budget (round-17 stretch 7), stamped
-    * per factor by StreamMaintenanceScale so the next serving
-    * optimization is chosen from a measured breakdown. Emitted
-    * order: `intake` (ONE limit-bounded quantize+collect — the
-    * separate count job is gone), `centroid_cache` (the pinned
-    * version capture plus the coordinator table, recomputed over the
-    * not-yet-persisted plan only on a retired-state change),
-    * `version_resolve` (corpus pin + LRU bound + serving-tag
-    * match), `serve_materialize` (nonzero only on a state-change
-    * miss), `serving_read` (manifest + plan), then the walk's own
-    * phases (SimilarityQueries.lastWalkPhases). */
-  val lastSearchPhases = new java.util.concurrent.atomic.AtomicReference[
-    Seq[(String, Double)]](Seq.empty)
-
-  /** How the LAST [[search]] obtained its serving snapshot —
-    * "adopt" (warm: the committed state matched), "delta" (state
-    * change applied incrementally onto the previous snapshot) or
-    * "full" (complete rewrite). Observability for the incremental
-    * serve-materialize specs and SCALE_STREAM stamps. PROCESS-GLOBAL
-    * convenience alias; in a multi-index process use
-    * [[lastServeModeFor]] — a concurrent index's materialize clobbers
-    * this one (round-18 advice), exactly like the other per-index
-    * observability that moved off globals. */
-  val lastServeMode =
-    new java.util.concurrent.atomic.AtomicReference[String]("")
-
   private val serveModePerIndex = new java.util.concurrent.ConcurrentHashMap[
     String, String]()
 
   /** How the last [[search]] OF THIS INDEX obtained its serving
-    * snapshot — the attribution-safe form of [[lastServeMode]],
-    * keyed like the per-index phase/read budgets and dropped with
-    * them. */
+    * snapshot — "adopt" (warm: the committed state matched), "delta"
+    * (state change applied incrementally onto the previous snapshot)
+    * or "full" (complete rewrite). Keyed like the per-index
+    * phase/read budgets and dropped with them. */
   def lastServeModeFor(indexDir: String): String =
     Option(serveModePerIndex.get(indexDir)).getOrElse("")
 
   private def setServeMode(indexDir: String, mode: String): Unit = {
-    lastServeMode.set(mode)
     serveModePerIndex.put(indexDir, mode)
     ()
   }
@@ -1182,7 +1159,7 @@ object LifecycleIndex {
     // vec_id appears in the delta (one broadcast-semi-filtered SCAN
     // of the previous snapshot — no shuffle of the big side), and
     // the commit APPENDS the delta files onto the previous version's
-    // manifest (SnapshotTable.appendFrom, pinned CAS): the full
+    // manifest (SnapshotTable.appendFromKnown, pinned CAS): the full
     // symmetrize+distinct shuffle AND the full O(|graph|) rewrite —
     // the two data-sized terms of serve_materialize — are replaced
     // by epoch-sized work plus one read pass. Every guard failure
@@ -1191,8 +1168,6 @@ object LifecycleIndex {
     // rewrite below; row-identity of the two paths is spec-pinned
     // (Round18Spec).
     def deltaMaterialize(): Option[(Int, Seq[String])] = {
-      if (spark.conf.get("spark.graft.serving.deltaMaterialize",
-          "true") != "true") return None
       val vIc = vI.getOrElse(return None)
       // the resolve above already read CURRENT (version + inline
       // meta) — reuse it instead of re-reading both (round-19
@@ -1289,14 +1264,8 @@ object LifecycleIndex {
       if (deltaFiles.isEmpty || deltaFiles.size > 256) return None
       // bound manifest fragmentation: after enough delta appends the
       // serving file list grows one epoch's files per state — let the
-      // full rewrite act as the compaction. Guarded parse (round-18
-      // advice): a malformed conf value degrades to the default
-      // instead of throwing out of every state-change serve.
-      val compactAt =
-        try spark.conf
-          .get("spark.graft.serving.deltaCompactAt", "64").toInt
-        catch { case _: NumberFormatException => 64 }
-      if (prevServingFiles.size >= compactAt) return None
+      // full rewrite act as the compaction
+      if (prevServingFiles.size >= 64) return None
       // BYTE bound on the delta (round-18 advice medium): the file
       // COUNT bound above says nothing about rows — one insert epoch
       // can write 256 arbitrarily large files, and the broadcast of
@@ -1559,7 +1528,6 @@ object LifecycleIndex {
     // identical plan held by a live cache entry keeps its blocks.
     if (!corpusFromCache) unpersistUnlessShared(nRaw, "")
     val allPhases = phases.toSeq ++ SimilarityQueries.lastWalkPhases.get()
-    lastSearchPhases.set(allPhases)
     phasesPerIndex.put(indexDir, allPhases)
     res
   }
@@ -1777,16 +1745,13 @@ object LifecycleIndex {
       // unchanged: every fold forced a spurious corpus-sized refill
       // + centroid re-aggregation on the next search (measured
       // 0.94 s of search_post_fold's 2.7 s at factor 1). A
-      // few-files table gains nothing from compaction; past the
-      // threshold (one file per delete epoch since the last fold)
+      // few-files table gains nothing from compaction; from 8 files
+      // on (one file per delete epoch since the last fold)
       // the rewrite is real hygiene and the refill is amortized.
       val nFiles =
         try SnapshotTable.dataFiles(rTab, v).size
         catch { case _: java.nio.file.NoSuchFileException => 0 }
-      val compactAt =
-        try spark.conf.get("spark.graft.retiredCompactAt", "8").toInt
-        catch { case _: NumberFormatException => 8 }
-      if (nFiles >= compactAt) {
+      if (nFiles >= 8) {
         try SnapshotTable.overwriteFrom(spark,
           SnapshotTable.read(spark, rTab, v).distinct().repartition(1),
           rTab, Some(v), Some("retired-compaction"))

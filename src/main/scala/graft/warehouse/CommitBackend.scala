@@ -266,18 +266,12 @@ object CommitBackends {
     total
   }
 
-  /** Drop per-dir bookkeeping for a dropped table tree: the sticky
-    * conf-keyed backend resolution (round-17 verdict: never evicted —
-    * a long-lived process opening many conf-keyed temp tables
-    * accumulated one entry per dir) and the per-dir read counters
-    * above. Callers that delete a table's directory (bench sweeps,
-    * index drops) release here; a live table re-resolves and re-counts
-    * on its next touch. */
+  /** Drop the per-dir read counters above for a dropped table tree.
+    * Callers that delete a table's directory (bench sweeps, index
+    * drops) release here; a live table re-counts on its next touch. */
   def releaseDir(dirPrefix: String): Unit = {
-    def under(d: String): Boolean =
-      d == dirPrefix || d.startsWith(dirPrefix + "/")
-    confSticky.keySet.removeIf(d => under(d))
-    perDirReads.keySet.removeIf(d => under(d))
+    perDirReads.keySet.removeIf(d =>
+      d == dirPrefix || d.startsWith(dirPrefix + "/"))
     ()
   }
 
@@ -326,90 +320,15 @@ object CommitBackends {
     ()
   }
 
-  // Named backends for CONF-KEYED selection (round-17 verdict 4): a
-  // deployment switches backends with session configuration alone —
-  //   spark.graft.commitBackend         = <name>  (required to opt in)
-  //   spark.graft.commitBackend.prefix  = <dir prefix>  (optional —
-  //     scope the named backend to one warehouse root; unset = all)
-  // Shipped names: "local-fs" and "object-store-sim" (one shared
-  // instance per process — all tables selected into it see one
-  // store). A production S3/GCS backend registers its name at
-  // bootstrap via registerNamed and is then selected by conf only.
-  // An UNKNOWN name fails loudly at table open: silently falling back
-  // to the local FS on a typo would run a cluster's commit protocol
-  // on the wrong primitive set.
-  private val named =
-    new java.util.concurrent.ConcurrentHashMap[String, CommitBackend]()
-  named.put("local-fs", localFs)
-
-  def registerNamed(name: String, backend: CommitBackend): Unit = {
-    named.put(name, backend)
-    ()
-  }
-
-  private def namedBackend(name: String): CommitBackend =
-    named.computeIfAbsent(name, n =>
-      if (n == "object-store-sim") new ObjectStoreSimBackend
-      else throw new IllegalArgumentException(
-        s"unknown commit backend '$n' (spark.graft.commitBackend) — " +
-        s"shipped: local-fs, object-store-sim; register others via " +
-        "CommitBackends.registerNamed at bootstrap"))
-
-  // STICKY per-dir resolution (round-17 review — the same
-  // thread-local-session hazard this round fixed in d18's knob
-  // reads): the conf lives on the caller's session, but forDir can
-  // later be called from a thread with NO active session (a utility
-  // pool, a maintenance timer), where getActiveSession is None and
-  // the process-default session may be an unconfigured one — the
-  // same table would silently resolve to the local FS mid-protocol:
-  // split-brain on one table's control plane. The FIRST resolution
-  // made with a session visible is therefore cached per dir and wins
-  // for the table's lifetime in this process; sessionless calls use
-  // the cached decision. Entries are added ONLY when the conf key is
-  // set (a deployment opt-in — the default local-FS path caches
-  // nothing, so test/bench churn through temp tables adds no state).
-  private val confSticky =
-    new java.util.concurrent.ConcurrentHashMap[String, CommitBackend]()
-
-  private def confBackend(dir: String): Option[CommitBackend] = {
-    val cached = confSticky.get(dir)
-    if (cached != null) return Some(cached)
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .flatMap { sp =>
-        sp.conf.getOption("spark.graft.commitBackend").filter { _ =>
-          sp.conf.getOption("spark.graft.commitBackend.prefix")
-            .forall(dir.startsWith)
-        }.map { name =>
-          val b = namedBackend(name)
-          confSticky.putIfAbsent(dir, b)
-          confSticky.get(dir)
-        }
-      }
-  }
-
-  /** Sticky conf-resolution entries under a prefix — observability
-    * for the releaseDir eviction spec. */
-  private[warehouse] def confStickyCount(dirPrefix: String): Int = {
-    var n = 0
-    confSticky.forEach { (d, _) =>
-      if (d == dirPrefix || d.startsWith(dirPrefix + "/")) n += 1
-    }
-    n
-  }
-
-  /** Resolution order: code-registered dir-prefix override (longest
-    * match — the spec seam), then the session-conf selection, then
-    * the local-FS default (byte-identical to pre-trait behavior). */
+  /** The longest registered dir-prefix override, else the local-FS
+    * default (byte-identical to pre-trait behavior). */
   def forDir(dir: String): CommitBackend = {
     var best: Option[(String, CommitBackend)] = None
     overrides.forEach { (p, b) =>
       if (dir.startsWith(p) &&
           best.forall(_._1.length < p.length)) best = Some((p, b))
     }
-    best.map(_._2)
-      .orElse(confBackend(dir))
-      .getOrElse(localFs)
+    best.map(_._2).getOrElse(localFs)
   }
 
   private[warehouse] def utf8(s: String): Array[Byte] =

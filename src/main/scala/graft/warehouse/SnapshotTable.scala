@@ -181,30 +181,8 @@ object SnapshotTable {
       else scala.util.Try(m.stripPrefix(prefix).trim.toLong).toOption
     })
 
-  /** Highest committed version whose meta equals `meta` and whose
-    * manifest is still retained (not vacuumed) — for callers that
-    * cache content-addressed by a tag and must PIN their read to the
-    * version they matched (LifecycleIndex.search's serving table): a
-    * concurrent writer can advance CURRENT between the match and the
-    * read, and `vacuum(keepVersions)` can then delete the matched
-    * version's files; resolving by meta and reading that exact
-    * version makes the miss explicit (None) instead of a torn view. */
-  def versionWithMeta(dir: String, meta: String): Option[Int] =
-    currentVersion(dir).flatMap { cur =>
-      // vacuum retains a CONTIGUOUS suffix of manifests (and every
-      // .meta file — the exactly-once ledger), so stop at the first
-      // missing manifest instead of scanning metaOf down to version
-      // 0: on a long-lived index that scan is thousands of file
-      // reads per cache miss for versions that could never be read
-      // anyway (review-caught)
-      (cur to 0 by -1).iterator
-        .takeWhile(v => be(dir).exists(manifestPath(dir, v)))
-        .find(v => metaOf(dir, v).contains(meta))
-    }
-
   /** What [[serveResolve]] learned in one pass: the CURRENT version
-    * and its meta, the matched version (same retained-manifest
-    * contract as [[versionWithMeta]]), and every manifest's file list
+    * and its meta, the matched version, and every manifest's file list
     * it had to read along the way — so the caller's subsequent read /
     * diff / vacuum can reuse them instead of re-issuing the same
     * control-plane GETs (round-19: the delta-serve path re-read the
@@ -214,9 +192,20 @@ object SnapshotTable {
       curMeta: Option[String], matched: Option[Int],
       manifests: Map[Int, Seq[String]])
 
-  /** One-pass serving resolve — [[versionWithMeta]] fused with the
-    * reads its serving caller does around it. Two structural savings
-    * over the exists+metaOf scan:
+  /** One-pass serving resolve: the highest committed version whose
+    * meta matches `target` and whose manifest is still retained (not
+    * vacuumed), fused with the reads its serving caller does around
+    * it. The caller caches content-addressed by a tag and must PIN
+    * its read to the version it matched (LifecycleIndex.search's
+    * serving table): a concurrent writer can advance CURRENT between
+    * the match and the read, and `vacuum(keepVersions)` can then
+    * delete the matched version's files; resolving by meta and
+    * reading that exact version makes the miss explicit (None)
+    * instead of a torn view. Vacuum retains a CONTIGUOUS suffix of
+    * manifests (and every .meta file — the exactly-once ledger), so
+    * the scan stops at the first missing manifest instead of probing
+    * down to version 0. Two structural savings over a plain
+    * exists+metaOf scan:
     *   - the CURRENT pointer's line CARRIES the commit meta inline
     *     (see [[currentMeta]]), so the common warm adopt — CURRENT
     *     matches `target` — resolves in ONE control read plus the
@@ -226,9 +215,8 @@ object SnapshotTable {
     *     scanned meta STRICTLY OLDER than the target proves no deeper
     *     version can match, so a state-change miss stops after the
     *     CURRENT read instead of probing manifest+meta down the whole
-    *     retained suffix. A `false`-always predicate reproduces
-    *     versionWithMeta's scan exactly (same retained-manifest
-    *     guard: the scan still stops at the first missing manifest).
+    *     retained suffix. The default `false`-always predicate scans
+    *     the whole retained suffix.
     * Manifests are read with content (readIfExists, not exists), so
     * every probe's bytes are returned rather than discarded. */
   def serveResolve(dir: String, target: String,
@@ -689,31 +677,19 @@ object SnapshotTable {
 
   /** Append PINNED to a parent version (the append analog of
     * [[overwriteFrom]]'s optimistic CAS): new version = exactly
-    * `expectedCurrent`'s live files + the new ones, claimed at
-    * expected+1 and NEVER retried — for callers whose appended rows
-    * were DERIVED from the parent version's content (the serving
-    * table's incremental materialize: the delta is correct only
-    * relative to the version it was diffed against). An interleaved
-    * commit throws IllegalStateException with nothing clobbered;
-    * the caller re-derives (typically falling back to a full
-    * overwrite). */
-  def appendFrom(spark: SparkSession, df: DataFrame, dir: String,
-      expectedCurrent: Int, meta: Option[String] = None): Int = {
-    val prev = manifestFiles(dir, expectedCurrent)
-    commit(dir, prev ++ writeData(df, dir), meta,
-      retryOnCollision = false,
-      pinnedVersion = Some(expectedCurrent + 1))
-  }
-
-  /** [[appendFrom]] when the caller ALREADY HOLDS the parent
-    * version's file list (read in the same derivation, e.g. via
-    * [[serveResolve]]) — skips the parent-manifest re-read, one
-    * control GET per state change on the serving hot path. The
-    * stale-parent contract is unchanged: it is enforced by the pinned
-    * CAS itself (the claim of expected+1 fails loudly on an
-    * interleaved commit, and the vacated-slot + pinned-stale checks
-    * cover an expired slot), not by the manifest read this variant
-    * elides. Returns (version, its full file list) so the caller's
+    * `prevFiles` (`expectedCurrent`'s live files, which the caller
+    * ALREADY HOLDS — read in the same derivation, e.g. via
+    * [[serveResolve]] — so no parent-manifest re-read) + the new
+    * ones, claimed at expected+1 and NEVER retried. For callers whose
+    * appended rows were DERIVED from the parent version's content
+    * (the serving table's incremental materialize: the delta is
+    * correct only relative to the version it was diffed against).
+    * The stale-parent contract is enforced by the pinned CAS itself:
+    * an interleaved commit throws IllegalStateException with nothing
+    * clobbered (the claim of expected+1 fails loudly, and the
+    * vacated-slot + pinned-stale checks cover an expired slot); the
+    * caller re-derives (typically falling back to a full overwrite).
+    * Returns (version, its full file list) so the caller's
     * subsequent read and retention sweep need no manifest read
     * either. */
   def appendFromKnown(spark: SparkSession, df: DataFrame, dir: String,

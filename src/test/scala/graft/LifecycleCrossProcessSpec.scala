@@ -242,7 +242,7 @@ class LifecycleCrossProcessSpec extends AnyFunSuite {
     // itself is produced by the REAL second process; the seam only
     // widens this attempt's pin-to-walk window so the test need not
     // gamble on timing.
-    val retriesBefore = LifecycleIndex.searchRetries.get()
+    val retriesBefore = LifecycleIndex.searchRetriesFor(idx)
     val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
     @volatile var waitSucceeded = false
     val sTab = LifecycleIndex.servingTab(idx)
@@ -300,7 +300,7 @@ class LifecycleCrossProcessSpec extends AnyFunSuite {
       s"the drained state $finalTag was never verified " +
       s"(known: ${expectedByTag.keys})")
     if (waitSucceeded)
-      assert(LifecycleIndex.searchRetries.get() > retriesBefore,
+      assert(LifecycleIndex.searchRetriesFor(idx) > retriesBefore,
         "the child's sweep deleted the pinned serving version but the " +
         "retry-once never fired — the race was not absorbed")
     PersistRegistry.release()

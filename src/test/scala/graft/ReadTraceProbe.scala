@@ -31,7 +31,7 @@ object ReadTraceProbe {
       CommitBackends.readProbe = p => buf.synchronized { buf += p; () }
       try body finally CommitBackends.readProbe = null
       println(s"== $tag: ${buf.size} reads " +
-        s"(mode=${LifecycleIndex.lastServeMode.get()})")
+        s"(mode=${LifecycleIndex.lastServeModeFor(idx)})")
       buf.foreach(p => println("   " + p.stripPrefix(idx)))
     }
 

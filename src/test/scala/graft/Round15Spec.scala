@@ -136,19 +136,20 @@ class Round15Spec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSeq === Seq(9L))
   }
 
-  test("versionWithMeta resolves the committed version carrying a " +
+  test("serveResolve resolves the committed version carrying a " +
       "tag and skips vacuumed manifests") {
     import spark.implicits._
     val tab = tmp("graft-vwm-") + "/t"
     SnapshotTable.overwrite(spark, Seq(1L).toDF("x"), tab, Some("a"))
     SnapshotTable.overwrite(spark, Seq(2L).toDF("x"), tab, Some("b"))
-    assert(SnapshotTable.versionWithMeta(tab, "a") === Some(0))
-    assert(SnapshotTable.versionWithMeta(tab, "b") === Some(1))
-    assert(SnapshotTable.versionWithMeta(tab, "zzz") === None)
+    def matched(meta: String) = SnapshotTable.serveResolve(tab, meta).matched
+    assert(matched("a") === Some(0))
+    assert(matched("b") === Some(1))
+    assert(matched("zzz") === None)
     SnapshotTable.vacuum(tab, keepVersions = 1)
     // v0's manifest is gone; its .meta survives (the exactly-once
     // ledger) — the resolver must treat it as unreadable
-    assert(SnapshotTable.versionWithMeta(tab, "a") === None,
+    assert(matched("a") === None,
       "a vacuumed version must resolve as a miss, not a torn read")
   }
 

@@ -206,23 +206,29 @@ class Round16Spec extends AnyFunSuite {
     // shuffled regime, and lower the pair-product threshold so this
     // SMALL corpus's 300² = 90k-pair band actually exercises the
     // salt path, exactly like the 50x drill's 4M-pair band does at
-    // the default threshold
-    def run(salt: Boolean) = {
+    // the default threshold. The unsalted reference runs at the
+    // default threshold (10^6 pairs), which the band does not reach.
+    // Returns (rows, whether the plan carries the salt).
+    def run(pairThreshold: Option[String]) = {
       val bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.graft.d18.saltPairThreshold", "10000")
-      spark.conf.set("spark.graft.d18.saltHotBands", salt.toString)
-      try SparkEntry.queries("d18_editdistance_neardup")(spark, dir)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-        .toSeq.sorted
-      finally {
-        spark.conf.set("spark.graft.d18.saltHotBands", "true")
+      pairThreshold.foreach(
+        spark.conf.set("spark.graft.d18.saltPairThreshold", _))
+      try {
+        val df = SparkEntry.queries("d18_editdistance_neardup")(spark, dir)
+        (df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+          .toSeq.sorted,
+          df.queryExecution.executedPlan.toString.contains("__salt"))
+      } finally {
         spark.conf.unset("spark.graft.d18.saltPairThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bc)
       }
     }
-    val salted = run(salt = true)
-    val unsalted = run(salt = false)
+    val (salted, saltedPlan) = run(Some("10000"))
+    val (unsalted, unsaltedPlan) = run(None)
+    assert(saltedPlan, "the planted band must engage the salt split")
+    assert(!unsaltedPlan,
+      "the default threshold must leave the spec band unsalted")
     assert(salted === unsalted,
       "the salt lever must not change the output")
     // brute force over the planted corpus

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SimilarityQueries
 import graft.streaming.LifecycleIndex
-import graft.warehouse.{CommitBackends, SnapshotTable}
+import graft.warehouse.{CommitBackends, ObjectStoreSimBackend, SnapshotTable}
 
 /** Round-17 items:
   *   - verdict 2: the serving cache's liveness sweep left the
@@ -123,14 +123,10 @@ class Round17Spec extends AnyFunSuite {
         .toSeq.sorted
     }
     val objRoot = tmp("graft-r17-objidx-")
-    spark.conf.set("spark.graft.commitBackend", "object-store-sim")
-    spark.conf.set("spark.graft.commitBackend.prefix", objRoot)
+    CommitBackends.register(objRoot, new ObjectStoreSimBackend)
     val objRows =
       try drive(objRoot + "/idx")
-      finally {
-        spark.conf.unset("spark.graft.commitBackend")
-        spark.conf.unset("spark.graft.commitBackend.prefix")
-      }
+      finally CommitBackends.unregister(objRoot)
     import scala.jdk.CollectionConverters._
     val versionsDirsOnDisk = Files.walk(Paths.get(objRoot))
       .iterator().asScala
@@ -192,17 +188,15 @@ class Round17Spec extends AnyFunSuite {
   }
 
   // ---------------------------------------------------------------
-  // verdict 4: conf-keyed commit-backend selection
+  // verdict 4: commit-backend selection by registered dir prefix
   // ---------------------------------------------------------------
 
-  test("commit-backend selection is CONF-KEYED: a table under the " +
-      "configured prefix opens on the object-store backend (zero " +
-      "control files on local disk), one outside it stays local-FS, " +
-      "and an unknown backend name fails loudly — no code change") {
+  test("commit-backend selection is PREFIX-ROUTED: a table under a " +
+      "registered prefix opens on the object-store backend (zero " +
+      "control files on local disk), one outside it stays local-FS") {
     import spark.implicits._
     val root = tmp("graft-r17-confbe-")
-    spark.conf.set("spark.graft.commitBackend", "object-store-sim")
-    spark.conf.set("spark.graft.commitBackend.prefix", root)
+    CommitBackends.register(root, new ObjectStoreSimBackend)
     try {
       val tab = root + "/t"
       SnapshotTable.overwrite(spark, Seq(1L).toDF("x"), tab, Some("e0"))
@@ -210,24 +204,13 @@ class Round17Spec extends AnyFunSuite {
       assert(SnapshotTable.read(spark, tab).count() === 2L)
       assert(SnapshotTable.committedMetas(tab) === Seq("e0", "e1"))
       assert(!Files.exists(Paths.get(tab, "_versions")),
-        "the configured prefix must route the ENTIRE control plane " +
+        "the registered prefix must route the ENTIRE control plane " +
         "through the object-store backend — no _versions/ on disk")
       // outside the prefix: the local-FS default, untouched
       val other = tmp("graft-r17-confbe-other-") + "/t"
       SnapshotTable.overwrite(spark, Seq(9L).toDF("x"), other)
       assert(Files.exists(Paths.get(other, "_versions", "CURRENT")))
-      // a typo'd backend name must never silently fall back to the
-      // local FS (the commit protocol would run on the wrong
-      // primitive set): loud at table open
-      spark.conf.set("spark.graft.commitBackend", "not-a-backend")
-      val e = intercept[IllegalArgumentException] {
-        SnapshotTable.overwrite(spark, Seq(3L).toDF("x"), root + "/t2")
-      }
-      assert(e.getMessage.contains("not-a-backend"))
-    } finally {
-      spark.conf.unset("spark.graft.commitBackend")
-      spark.conf.unset("spark.graft.commitBackend.prefix")
-    }
+    } finally CommitBackends.unregister(root)
   }
 
   test("a vacuum whose keep-manifest vanished mid-read (a newer " +

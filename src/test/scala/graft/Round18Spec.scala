@@ -198,26 +198,25 @@ class Round18Spec extends AnyFunSuite {
       "search rows identical to a full-rewrite twin, across two " +
       "consecutive delta states; a delete epoch falls back to the " +
       "full path (monotonicity gone)") {
-    val a = freshIndex() // delta path (default on)
-    val b = freshIndex() // forced full-rewrite twin
+    val a = freshIndex() // delta path
     LifecycleIndex.search(spark, sf, a, searchQueries).count()
-    assert(LifecycleIndex.lastServeMode.get() === "full",
+    assert(LifecycleIndex.lastServeModeFor(a) === "full",
       "a cold first serve has no previous snapshot to delta onto")
-    LifecycleIndex.search(spark, sf, b, searchQueries).count()
     for (ep <- 0 to 1) {
       StreamingGraphInsert.insertEpoch(spark, insBatch(ep), sf, a,
         ep.toLong)
-      StreamingGraphInsert.insertEpoch(spark, insBatch(ep), sf, b,
-        ep.toLong)
       val rowsA = searchRows(
         LifecycleIndex.search(spark, sf, a, searchQueries))
-      assert(LifecycleIndex.lastServeMode.get() === "delta",
+      assert(LifecycleIndex.lastServeModeFor(a) === "delta",
         s"epoch $ep: expected the incremental path")
-      spark.conf.set("spark.graft.serving.deltaMaterialize", "false")
+      // the full-rewrite reference: a twin bootstrapped fresh with the
+      // same epochs — its first serve is cold, so always full
+      val b = freshIndex()
+      (0 to ep).foreach(e => StreamingGraphInsert.insertEpoch(spark,
+        insBatch(e), sf, b, e.toLong))
       val rowsB =
-        try searchRows(LifecycleIndex.search(spark, sf, b, searchQueries))
-        finally spark.conf.unset("spark.graft.serving.deltaMaterialize")
-      assert(LifecycleIndex.lastServeMode.get() === "full")
+        searchRows(LifecycleIndex.search(spark, sf, b, searchQueries))
+      assert(LifecycleIndex.lastServeModeFor(b) === "full")
       assert(servingRows(a) === servingRows(b),
         s"epoch $ep: delta-applied serving content diverged from the " +
         "full rewrite (multiset compare — duplicates count)")
@@ -230,27 +229,28 @@ class Round18Spec extends AnyFunSuite {
       val curFiles = SnapshotTable.dataFiles(sTab, cur).toSet
       assert(prevFiles.subsetOf(curFiles),
         "the delta state must reuse the previous snapshot's files")
+      LifecycleIndex.releaseIndexCaches(spark, b)
     }
     // a delete epoch breaks set-monotonicity — the guard must decline
     StreamingGraphDelete.deleteEpoch(spark,
       emb.filter(col("vec_id") === 3L).select("vec_id"), sf, a, 0L)
     LifecycleIndex.search(spark, sf, a, searchQueries).count()
-    assert(LifecycleIndex.lastServeMode.get() === "full",
+    assert(LifecycleIndex.lastServeModeFor(a) === "full",
       "pending tombstones must force the full rewrite")
     LifecycleIndex.releaseIndexCaches(spark, a)
-    LifecycleIndex.releaseIndexCaches(spark, b)
     PersistRegistry.release()
   }
 
-  test("appendFrom is a PINNED append: the new version extends " +
+  test("appendFromKnown is a PINNED append: the new version extends " +
       "exactly the parent's manifest, and deriving from a stale " +
       "parent throws with nothing clobbered") {
     import spark.implicits._
     val tab = tmp("graft-r18-appendfrom-") + "/t"
     SnapshotTable.overwrite(spark, Seq(1L).toDF("x"), tab) // v0
     val v0Files = SnapshotTable.dataFiles(tab, 0).toSet
-    val v1 = SnapshotTable.appendFrom(spark, Seq(2L).toDF("x"), tab,
-      expectedCurrent = 0, Some("delta1"))
+    val (v1, _) = SnapshotTable.appendFromKnown(spark, Seq(2L).toDF("x"),
+      tab, expectedCurrent = 0, SnapshotTable.dataFiles(tab, 0),
+      Some("delta1"))
     assert(v1 === 1)
     assert(v0Files.subsetOf(SnapshotTable.dataFiles(tab, 1).toSet),
       "the appended version must reuse the parent's files")
@@ -260,8 +260,9 @@ class Round18Spec extends AnyFunSuite {
     // committing it would silently drop v2's rows (a lost update)
     SnapshotTable.overwrite(spark, Seq(9L).toDF("x"), tab) // v2
     intercept[IllegalStateException] {
-      SnapshotTable.appendFrom(spark, Seq(3L).toDF("x"), tab,
-        expectedCurrent = 1, Some("stale"))
+      SnapshotTable.appendFromKnown(spark, Seq(3L).toDF("x"), tab,
+        expectedCurrent = 1, SnapshotTable.dataFiles(tab, 1),
+        Some("stale"))
     }
     assert(SnapshotTable.currentVersionOf(tab) === Some(2))
     assert(SnapshotTable.read(spark, tab)
@@ -304,7 +305,7 @@ class Round18Spec extends AnyFunSuite {
     assert(LifecycleIndex.lastSearchPhasesFor(b).nonEmpty)
     assert(LifecycleIndex.searchRetriesFor(a) === 0L &&
       LifecycleIndex.searchRetriesFor(b) === 0L)
-    // release drops the per-index bookkeeping (counters, sticky conf)
+    // release drops the per-index bookkeeping (counters)
     LifecycleIndex.releaseIndexCaches(spark, a)
     assert(LifecycleIndex.controlPlaneReadsFor(a) === 0L)
     assert(LifecycleIndex.lastSearchPhasesFor(a).isEmpty)

@@ -24,8 +24,7 @@ import graft.warehouse.{CommitBackends, ObjectStoreSimBackend, SnapshotTable}
   *     and salted/unsalted outputs must be identical;
   *   - round-18 advice: the delta serve falls back to the full
   *     rewrite on an over-byte-budget epoch instead of planning a
-  *     doomed broadcast, tolerates a malformed deltaCompactAt, and
-  *     serve-mode observability is per-index.
+  *     doomed broadcast, and serve-mode observability is per-index.
   */
 class Round19Spec extends AnyFunSuite {
   import TestSpark._
@@ -114,8 +113,6 @@ class Round19Spec extends AnyFunSuite {
     assert(LifecycleIndex.lastServeModeFor(b) === "full")
     assert(LifecycleIndex.lastServeModeFor(a) === "adopt",
       "index b's materialize clobbered index a's serve mode")
-    // the process-global alias reflects the LAST serve, as documented
-    assert(LifecycleIndex.lastServeMode.get() === "full")
     LifecycleIndex.releaseIndexCaches(spark, a)
     assert(LifecycleIndex.lastServeModeFor(a) === "")
     LifecycleIndex.releaseIndexCaches(spark, b)
@@ -123,8 +120,7 @@ class Round19Spec extends AnyFunSuite {
   }
 
   test("an insert epoch past the delta BYTE budget falls back to the " +
-      "full rewrite (never a doomed broadcast plan), and a malformed " +
-      "deltaCompactAt degrades to its default instead of throwing") {
+      "full rewrite (never a doomed broadcast plan)") {
     val a = freshIndex()
     LifecycleIndex.search(spark, sf, a, searchQueries).count() // cold
     StreamingGraphInsert.insertEpoch(spark, insBatch(0), sf, a, 0L)
@@ -136,17 +132,6 @@ class Round19Spec extends AnyFunSuite {
         "an over-budget epoch must take the full rewrite")
       assert(rows.nonEmpty)
     } finally spark.conf.unset("spark.graft.serving.deltaMaxBytes")
-    // malformed compact-at conf: the serve must still succeed (the
-    // parse degrades to the default; round-18 advice low)
-    StreamingGraphInsert.insertEpoch(spark, insBatch(1), sf, a, 1L)
-    spark.conf.set("spark.graft.serving.deltaCompactAt", "not-a-number")
-    try {
-      val rows = searchRows(
-        LifecycleIndex.search(spark, sf, a, searchQueries))
-      assert(rows.nonEmpty)
-      assert(Set("delta", "full")
-        .contains(LifecycleIndex.lastServeModeFor(a)))
-    } finally spark.conf.unset("spark.graft.serving.deltaCompactAt")
     LifecycleIndex.releaseIndexCaches(spark, a)
     PersistRegistry.release()
   }
@@ -284,7 +269,9 @@ class Round19Spec extends AnyFunSuite {
         "fails, the adaptive per-band salt regressed (the 1e8-pair " +
         "drill's 556s->73s lever)")
       val saltedRows = rows()
-      spark.conf.set("spark.graft.d18.saltHotBands", "false")
+      // the unsalted reference: the default threshold (10^6 pairs),
+      // which no spec band reaches
+      spark.conf.unset("spark.graft.d18.saltPairThreshold")
       val unsalted = SparkEntry
         .queries("d18_editdistance_neardup")(spark, dir)
       assert(!unsalted.queryExecution.executedPlan.toString
@@ -296,7 +283,6 @@ class Round19Spec extends AnyFunSuite {
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevB)
       spark.conf.unset("spark.graft.d18.saltPairThreshold")
-      spark.conf.unset("spark.graft.d18.saltHotBands")
       PersistRegistry.release()
     }
   }

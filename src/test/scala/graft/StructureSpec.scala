@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps the engine's shared mechanisms single: one metrics listener
   * (graft.Ledger), no settle sleeps in the measuring harnesses, one
-  * parquet reader (graft.sources.Parquet) and one decode+parse step for
-  * the boatrace files (BoatracePipeline.decodeParse). Reads `src/main`
+  * parquet reader (graft.sources.Parquet), one decode+parse step for
+  * the boatrace files (BoatracePipeline.decodeParse) and a fixed set of
+  * session keys. Reads `src/main`
   * from the project directory the tests run in. */
 class StructureSpec extends AnyFunSuite {
 
@@ -63,5 +64,18 @@ class StructureSpec extends AnyFunSuite {
     assert(offenders(Set.empty)(s => fmt.findFirstIn(s).nonEmpty) === Nil)
     assert(!Files.exists(Paths.get("src/main/resources/META-INF/services/" +
       "org.apache.spark.sql.sources.DataSourceRegister")))
+  }
+
+  test("src/main reads exactly nine spark.graft.* session keys, and " +
+      "commit backends are chosen only by registered dir prefix") {
+    val key = "\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"".r
+    val keys = sources.values
+      .flatMap(s => key.findAllMatchIn(s).map(_.group(1))).toSet
+    assert(keys === Set("snapshotWarehouse", "boatraceBaseDir",
+      "serving.corpusCacheMax", "serving.corpusCacheMaxMb",
+      "serving.vacuumGraceMs", "serving.deltaMaxBytes",
+      "stream.corpusCacheMax", "stream.corpusCacheMaxMb",
+      "d18.saltPairThreshold").map("spark.graft." + _))
+    assert(offenders(Set.empty)(_.contains("registerNamed")) === Nil)
   }
 }

@@ -255,7 +255,7 @@ class CommitBackendSpec extends AnyFunSuite {
       assert(SnapshotTable.read(spark, tab).count() === 3L)
       assert(SnapshotTable.read(spark, tab, 0).count() === 2L,
         "time travel must work through the backend")
-      assert(SnapshotTable.versionWithMeta(tab, "a") === Some(0))
+      assert(SnapshotTable.serveResolve(tab, "a").matched === Some(0))
       assert(SnapshotTable.currentMeta(tab) === Some("b"))
       assert(SnapshotTable.committedMetas(tab) === Seq("a", "b"))
       val upd = SnapshotTable.upsert(spark, Seq(3L).toDF("x"), tab,
@@ -263,7 +263,7 @@ class CommitBackendSpec extends AnyFunSuite {
       assert(upd === 2)
       assert(SnapshotTable.read(spark, tab).count() === 3L)
       SnapshotTable.vacuum(tab, keepVersions = 1)
-      assert(SnapshotTable.versionWithMeta(tab, "a") === None,
+      assert(SnapshotTable.serveResolve(tab, "a").matched === None,
         "a vacuumed version must resolve as a miss")
       assert(SnapshotTable.committedMetas(tab) === Seq("a", "b", "c"),
         "the meta ledger must survive vacuum")
@@ -277,31 +277,25 @@ class CommitBackendSpec extends AnyFunSuite {
     } finally CommitBackends.unregister(root)
   }
 
-  test("releaseDir evicts a dropped table tree's STICKY conf-keyed " +
-      "backend resolution (round-17 stretch: a long-lived process " +
-      "opening many conf-keyed temp tables accumulated one entry per " +
-      "dir forever)") {
+  test("releaseDir drops the per-dir read counters of a dropped " +
+      "table tree and only that tree's (a long-lived process opening " +
+      "many temp tables must not keep one counter per dir forever)") {
     import spark.implicits._
-    val root = tmp("graft-conf-evict-")
-    spark.conf.set("spark.graft.commitBackend", "object-store-sim")
-    spark.conf.set("spark.graft.commitBackend.prefix", root)
-    try {
-      SnapshotTable.overwrite(spark, Seq(1L).toDF("x"), s"$root/t1")
-      SnapshotTable.overwrite(spark, Seq(2L).toDF("x"), s"$root/t2")
-      assert(CommitBackends.confStickyCount(root) === 2,
-        "conf-keyed opens must pin one sticky resolution per dir")
-      CommitBackends.releaseDir(s"$root/t1")
-      assert(CommitBackends.confStickyCount(root) === 1,
-        "releaseDir must evict exactly the dropped tree's entries")
-      // the surviving table still resolves through its sticky entry
-      SnapshotTable.append(spark, Seq(3L).toDF("x"), s"$root/t2")
-      assert(SnapshotTable.read(spark, s"$root/t2").count() === 2L)
-      CommitBackends.releaseDir(root)
-      assert(CommitBackends.confStickyCount(root) === 0)
-    } finally {
-      spark.conf.unset("spark.graft.commitBackend")
-      spark.conf.unset("spark.graft.commitBackend.prefix")
-    }
+    val root = tmp("graft-release-dir-")
+    SnapshotTable.overwrite(spark, Seq(1L).toDF("x"), s"$root/t1")
+    SnapshotTable.overwrite(spark, Seq(2L).toDF("x"), s"$root/t2")
+    Seq("t1", "t2").foreach(t =>
+      assert(SnapshotTable.read(spark, s"$root/$t").count() === 1L))
+    assert(CommitBackends.controlPlaneReadsFor(s"$root/t1") > 0)
+    val t2Reads = CommitBackends.controlPlaneReadsFor(s"$root/t2")
+    assert(t2Reads > 0)
+    CommitBackends.releaseDir(s"$root/t1")
+    assert(CommitBackends.controlPlaneReadsFor(s"$root/t1") === 0L,
+      "releaseDir must drop the dropped tree's counters")
+    assert(CommitBackends.controlPlaneReadsFor(s"$root/t2") === t2Reads,
+      "releaseDir must leave a sibling tree's counters alone")
+    CommitBackends.releaseDir(root)
+    assert(CommitBackends.controlPlaneReadsFor(root) === 0L)
   }
 
   // ---------------------------------------------------------------

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     meta resolves a match in one control read; `noMatchBelow`
   *     stops a miss immediately; the fallback scan still matches
   *     below CURRENT and still stops at the first missing manifest
-  *     (versionWithMeta's retained-suffix contract); `acceptMeta`
+  *     (the retained-suffix contract); `acceptMeta`
   *     generalizes equality to prefix matching.
   *   - [[SnapshotTable.appendFromKnown]]: eliding the parent-manifest
   *     read does NOT weaken the stale-parent contract — a stale
