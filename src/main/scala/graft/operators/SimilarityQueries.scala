@@ -2216,6 +2216,15 @@ object SimilarityQueries {
     deleteRepairCore(s, gd, del, quantized(s, d))
   }
 
+  /** Bounds of the coordinator-side delete repair, checked on
+    * `limit(bound + 1)` collects so no over-bound state reaches the
+    * driver. The delete-set cap sits 10× above the auto-fold policy
+    * (LifecycleIndex.DefaultFoldAt plus one StreamingGraphDelete
+    * epoch, 12,288 tombstones), because the fold repairs through the
+    * same rule; edges use the walk's per-node hub bound. */
+  private[graft] val RepairMaxDeletes = 1 << 17
+  private[graft] val HubEdgeBound = 512
+
   /** The prune + local-repair rule itself, decoupled from WHERE the
     * graph and the delete set come from: v23 passes the committed
     * full-graph snapshot and its fixture batch; the STREAMING delete
@@ -2225,92 +2234,133 @@ object SimilarityQueries {
     * of how arrivals were micro-batched (the per-source repair top-3
     * is a global rule over the whole delete set, so it must be
     * recomputed against the cumulative set, never unioned
-    * per-wave). All joins below are keyed and distributed; nothing
-    * collects.
+    * per-wave).
     *
-    * Round 21 (guide §1.2 — stop re-running shared subtrees): the
-    * graph was consumed FOUR times (prune, both inc directions, the
-    * existing-edge base), the delete set FIVE times (for v23/v27 each
-    * evaluation re-ran the quantize kernel over the corpus), and
-    * `inc` THREE times (both self-join legs + srcs — each paying its
-    * distinct shuffle and two graph joins again). Each is now
-    * persisted once via `cache` (default: PersistRegistry.cached,
-    * released by the harness per query; the serving/fold paths pass
-    * their own collector and unpersist right after their action so a
-    * long-lived process never leaks). The repair's vector lookups
-    * read ONE corpus pass narrowed to the repair-source set instead
-    * of two full corpus joins. Same rows everywhere — persist and
-    * semi-narrowing change evaluation count, never content. */
+    * The repair's inputs are bounded by the delete set D: O(|D|·deg)
+    * incident edges and O(|D|·deg²) candidate pairs, with |D| held
+    * down by the fold policy. So the repair runs on the coordinator,
+    * as the walk does, in three bounded collects: D itself, the
+    * edges incident to D, and one fused job with the survivors'
+    * vectors and out-edges. Each survivor ranks its candidates (the
+    * other surviving neighbours of a deleted node it neighboured) by
+    * quantized cosine in Spark's exact order — descending, NaN first,
+    * NULL last, −0.0 = 0.0, ties to the smaller id — keeps the top 3
+    * and drops those already in the graph. The result is the graph
+    * with every edge incident to D pruned (a null-safe NOT IN on both
+    * endpoints, so NULL ids survive as under an anti join) plus the
+    * repairs as a local relation. Nothing is persisted. A state past
+    * a bound fails naming it; folding the index empties D. Assumes
+    * `vecs` is keyed by vec_id, as the quantized corpus is. */
   private[graft] def deleteRepairCore(
       s: org.apache.spark.sql.SparkSession,
       gd: org.apache.spark.sql.DataFrame,
       delIn: org.apache.spark.sql.DataFrame,
-      vecs: org.apache.spark.sql.DataFrame,
-      cache: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-        df => graft.PersistRegistry.cached(df))
+      vecs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val gdc = cache(gd.select("vec_id", "neighbor_id"))
-    val del = cache(delIn)
-    // pruned: both endpoints survive
-    val pruned = gdc
-      .join(del.withColumnRenamed("del_id", "vec_id"), Seq("vec_id"),
-        "left_anti")
-      .join(del.withColumnRenamed("del_id", "neighbor_id"),
-        Seq("neighbor_id"), "left_anti")
-      .select("vec_id", "neighbor_id")
-    // each deleted node's SURVIVING neighbors, over both directions
-    val inc = cache(gdc.join(del.withColumnRenamed("del_id", "vec_id"),
-        Seq("vec_id"))
-      .select(col("vec_id").as("del_id"), col("neighbor_id").as("node"))
-      .unionByName(
-        gdc.join(del.withColumnRenamed("del_id", "neighbor_id"),
-            Seq("neighbor_id"))
-          .select(col("neighbor_id").as("del_id"),
-            col("vec_id").as("node")))
-      .join(del.withColumnRenamed("del_id", "node"), Seq("node"),
-        "left_anti")
-      .distinct())
-    val srcs = inc.select(col("node").as("vec_id")).distinct()
-    // repair candidates: ordered survivor pairs sharing a deleted
-    // neighbor, ranked per source by true cosine. Vector lookups go
-    // through ONE corpus pass narrowed map-side to the repair-source
-    // set (srcs ⊇ every u and w below, so the semi filter drops no
-    // join match), then both join legs read the persisted narrow set.
-    val nodeVecs = cache(vecs.join(broadcast(srcs), Seq("vec_id"),
-      "left_semi").select("vec_id", "r", "nn"))
-    val a = nodeVecs.select(col("vec_id").as("u"), col("r").as("ru"),
-      col("nn").as("nnu"))
-    val b = nodeVecs.select(col("vec_id").as("w"), col("r").as("rw"),
-      col("nn").as("nnw"))
-    val wnd = Window.partitionBy("u")
-      .orderBy(col("cos_sim").desc, col("w"))
-    val repairs = inc.select(col("del_id"), col("node").as("u"))
-      .join(inc.select(col("del_id"), col("node").as("w")), Seq("del_id"))
-      .filter(col("u") =!= col("w"))
-      .select("u", "w").distinct()
-      .join(a, "u").join(b, "w")
-      .select(col("u"), col("w"),
-        cosine(DotLong.col(col("ru"), col("rw")),
-          col("nnu"), col("nnw")).as("cos_sim"))
-      .withColumn("rn", row_number().over(wnd))
-      .filter(col("rn") <= 3)
-      .select(col("u").as("vec_id"), col("w").as("neighbor_id"))
-    // SET semantics: a top-3 repair candidate that is ALREADY a live
-    // edge (u was a neighbor of both the deleted node and w) is a
-    // no-op — drop it, so the maintained table is duplicate-free and
-    // a fold's re-materialization is row-identical to the read-time
-    // derivation (round 14; the duplicates were invisible to the
-    // search, which symmetrize-distincts, but made the fold
-    // observably collapse multiplicity). Ranking is untouched — the
-    // anti join runs AFTER the top-3, preserving the exact edge SET
-    // of the pre-round-14 rule. Scale: gd is narrowed map-side by a
-    // broadcast semi join on the repair-source set (O(|D|·deg) ids,
-    // bounded by the fold policy) before the anti join, so the read
-    // path shuffles repair-neighborhood edges only, never O(|E|).
-    val existing = gdc.join(broadcast(srcs), Seq("vec_id"), "left_semi")
-    val freshRepairs = repairs.join(existing,
-      Seq("vec_id", "neighbor_id"), "left_anti")
-    pruned.unionByName(freshRepairs)
+    import s.implicits._
+    def bounded(n: Long, bound: Long, what: String): Unit =
+      if (n > bound) throw new IllegalStateException(
+        s"delete repair: $what exceeds its bound of $bound — fold the " +
+          "index (LifecycleIndex.foldTombstones) to empty the delete set")
+    val g = gd.select("vec_id", "neighbor_id")
+    val delRows = delIn.select("del_id").limit(RepairMaxDeletes + 1)
+      .as[Option[Long]].collect()
+    bounded(delRows.length, RepairMaxDeletes, "the delete set")
+    val del = delRows.iterator.flatten.toSet
+    if (del.isEmpty) return g
+    val incBound = del.size * HubEdgeBound
+    val incRows = g.filter(col("vec_id").isInCollection(del) ||
+        col("neighbor_id").isInCollection(del))
+      .limit(incBound + 1).as[(Option[Long], Option[Long])].collect()
+    bounded(incRows.length, incBound,
+      s"the edges incident to ${del.size} deleted ids")
+    // each deleted node's SURVIVING neighbours, over both directions
+    val inc = scala.collection.mutable.HashMap
+      .empty[Long, scala.collection.mutable.Set[Long]]
+    def link(dl: Long, node: Long): Unit =
+      if (!del(node)) inc.getOrElseUpdate(dl,
+        scala.collection.mutable.HashSet.empty[Long]) += node
+    incRows.foreach {
+      case (Some(a), Some(b)) =>
+        if (del(a)) link(a, b)
+        if (del(b)) link(b, a)
+      case _ => // a NULL endpoint pairs with nothing
+    }
+    val prune = (c: Column) => c.isNull || !c.isInCollection(del)
+    val pruned = g.filter(prune(col("vec_id")) && prune(col("neighbor_id")))
+    val srcs = inc.valuesIterator.flatten.toSet
+    if (srcs.isEmpty) return pruned
+    // the survivors' vectors and out-edges in one job, the shape of
+    // the walk's fetchVecsAndEdges
+    val fetchBound = math.min(srcs.size.toLong * (1 + HubEdgeBound),
+      Int.MaxValue - 1L).toInt
+    val fetched = vecs.filter(col("vec_id").isInCollection(srcs))
+      .select(col("vec_id"), lit(false).as("edge"), col("r"), col("nn"),
+        lit(null).cast("bigint").as("nbr"))
+      .unionByName(g.filter(col("vec_id").isInCollection(srcs))
+        .select(col("vec_id"), lit(true).as("edge"),
+          lit(null).cast("array<bigint>").as("r"),
+          lit(null).cast("bigint").as("nn"), col("neighbor_id").as("nbr")))
+      .limit(fetchBound + 1)
+      .as[(Long, Boolean, Option[Array[Long]], Option[Long], Option[Long])]
+      .collect()
+    bounded(fetched.length, fetchBound,
+      s"the vectors and out-edges of ${srcs.size} repair sources")
+    val (edgeRows, vecRows) = fetched.partition(_._2)
+    val vecOf = vecRows.groupMap(_._1)(v => (v._3, v._4))
+    val noVec = Array.empty[(Option[Array[Long]], Option[Long])]
+    val outEdges = edgeRows.iterator.flatMap(e => e._5.map(e._1 -> _)).toSet
+    // cos_sim as the plan computes it: DotLong's wrapping sum over the
+    // shorter array, then dot / sqrt(nnu · nnw) with Spark's division
+    // (a zero divisor is NULL, or DIVIDE_BY_ZERO under ANSI)
+    val ansi = s.conf.get("spark.sql.ansi.enabled").toBoolean
+    def cos(ru: Option[Array[Long]], nnu: Option[Long],
+        rw: Option[Array[Long]], nnw: Option[Long]): Option[Double] =
+      (nnu, nnw) match {
+        case (Some(a), Some(b)) =>
+          val den = math.sqrt(a.toDouble * b.toDouble)
+          if (den == 0.0 && !ansi) None
+          else (ru, rw) match {
+            case (Some(x), Some(y)) =>
+              if (den == 0.0) throw org.apache.spark.sql.graft.GraftSqlShims
+                .divideByZeroError()
+              var dot = 0L
+              var i = 0
+              val n = math.min(x.length, y.length)
+              while (i < n) { dot += x(i) * y(i); i += 1 }
+              Some(dot.toDouble / den)
+            case _ => None
+          }
+        case _ => None
+      }
+    // ORDER BY cos_sim DESC (NULLS LAST), w
+    def before(a: (Option[Double], Long), b: (Option[Double], Long))
+        : Boolean = {
+      val c = (a._1, b._1) match {
+        case (Some(x), Some(y)) =>
+          -org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+            .compareDoubles(x, y)
+        case (None, None) => 0
+        case (None, _) => 1
+        case _ => -1
+      }
+      if (c != 0) c < 0 else a._2 < b._2
+    }
+    val cands = scala.collection.mutable.HashMap
+      .empty[Long, scala.collection.mutable.Set[Long]]
+    inc.valuesIterator.foreach(ns => ns.foreach(u =>
+      cands.getOrElseUpdate(u, scala.collection.mutable.HashSet.empty[Long])
+        ++= ns.iterator.filter(_ != u)))
+    val repairs = cands.iterator.flatMap { case (u, ws) =>
+      val scored = for {
+        w <- ws.toArray
+        (ru, nnu) <- vecOf.getOrElse(u, noVec)
+        (rw, nnw) <- vecOf.getOrElse(w, noVec)
+      } yield (cos(ru, nnu, rw, nnw), w)
+      scored.sortWith(before).iterator.take(3)
+        .map(c => (u, c._2)).filterNot(outEdges)
+    }.toSeq
+    pruned.unionByName(repairs.toDF("vec_id", "neighbor_id"))
   }
 
   // v23 search-walk knobs, recorded like v20/v22's.
@@ -2519,9 +2569,9 @@ object SimilarityQueries {
     * stream row-identical to the one-shot batch delete. `baseGd`
     * overrides the base graph after a tombstone FOLD (the folded
     * edge table replaces the fixture snapshot as the prune target);
-    * None = the committed full-corpus graph. Fully distributed:
-    * anti joins for the prune, a keyed self-join + per-source window
-    * for the repair; no driver materialization at any batch size. */
+    * None = the committed full-corpus graph. The prune is a
+    * distributed filter; the repair runs on the coordinator within
+    * deleteRepairCore's bounds. */
   private[graft] def streamDeleteEdges(
       s: org.apache.spark.sql.SparkSession, d: String,
       del: org.apache.spark.sql.DataFrame,
@@ -2969,7 +3019,7 @@ object SimilarityQueries {
       // prefetched) used to reach the driver unguarded — the same
       // cap·512 budget here makes a pathological hub loud at the
       // first collect that touches it instead of silently resident
-      require(pairs.length <= srcs.size * 512,
+      require(pairs.length <= srcs.size * HubEdgeBound,
         "graph hub exceeded the per-fetch edge bound")
       val bySrc = pairs.groupBy(_._1)
       srcs.foreach(sr =>
@@ -2998,7 +3048,7 @@ object SimilarityQueries {
       // among them was collected in full, silently, and the
       // consume-time guard never saw it (prefetch-only edges feed a
       // LATER hop's cache hit)
-      require(eRows.length <= math.max(edgeSrcs.size, 1) * 512,
+      require(eRows.length <= math.max(edgeSrcs.size, 1) * HubEdgeBound,
         "graph hub exceeded the per-fetch edge bound (prefetch)")
       vRows.foreach(r => vecCache(r._1) = (r._2.get, r._3.get))
       vecIds.foreach(i => if (!vecCache.contains(i)) vecAbsent += i)
@@ -3047,7 +3097,7 @@ object SimilarityQueries {
         // (truncation would silently diverge from the oracle's walk).
         // Same quantity as the joined form counted: corpus-surviving
         // edges of this hop's beam.
-        require(ed.length <= beamNodes.size * 512,
+        require(ed.length <= beamNodes.size * HubEdgeBound,
           "graph hub exceeded the per-hop edge bound")
         val bySrc = ed.groupBy(_._1)
         closed = closed.map { case (q, e) => q -> (e ++ beams(q)) }

@@ -17,6 +17,12 @@ object Lha {
 
   final case class Entry(name: String, data: Array[Byte])
 
+  /** Cap on an `-lh5-` entry's declared original size, checked before
+    * the output is allocated: a day file is ~150 KB, and a corrupt
+    * size field must not allocate up to 4 GiB. (`-lh0-` needs no cap:
+    * its original size must equal the stored data length.) */
+  private[sources] val MaxEntryBytes = 16 << 20
+
   /** All entries of an archive. Fails fast on unsupported methods and
     * on an entry whose CRC-16 does not match its header. */
   def extract(archive: Array[Byte]): Seq[Entry] = {
@@ -52,6 +58,14 @@ object Lha {
           }
           (extOff, packed.toInt - extTotal)
         }
+      def corrupt(why: String) = new java.io.IOException(s"$name: $why")
+      if (dataLen < 0 || dataStart.toLong + dataLen > archive.length)
+        throw corrupt(s"$dataLen data bytes run past the archive's end")
+      if (method == "-lh0-" && orig != dataLen)
+        throw corrupt(s"stored entry declares $orig bytes but holds $dataLen")
+      if (method == "-lh5-" && orig > MaxEntryBytes)
+        throw corrupt(
+          s"declared size $orig exceeds the $MaxEntryBytes-byte entry cap")
       val data = decode(method, archive, dataStart, dataLen, orig.toInt)
       val crc = crc16(data)
       if (crc != hdrCrc)

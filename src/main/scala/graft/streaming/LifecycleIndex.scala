@@ -362,9 +362,10 @@ object LifecycleIndex {
     else None
 
   /** READ-TIME RESOLUTION: the maintained graph, derived from the
-    * committed sets (see class doc). All distributed — anti joins
-    * for the prune, a keyed self-join + per-source window for the
-    * repair; nothing collects at any index size. */
+    * committed sets (see class doc). The prune is a distributed
+    * filter; the repair is bounded coordinator work over the
+    * tombstones' neighbourhoods (SimilarityQueries.deleteRepairCore),
+    * so the call collects O(|tombstones|·deg) rows before it returns. */
   def maintainedEdges(spark: SparkSession, d: String,
       indexDir: String): DataFrame = {
     val (vB, vI, vD) = consistentCapture(indexDir)
@@ -373,65 +374,26 @@ object LifecycleIndex {
 
   /** [[maintainedEdges]] with every table read PINNED to a version —
     * the serving path and the fold derive from a consistent snapshot
-    * of the index regardless of concurrent epoch commits.
-    *
-    * `cache` is the repair rule's persist hook (round 21 — see
-    * deleteRepairCore): the default routes through PersistRegistry
-    * (harness-released, right for the public read-resolve verbs);
-    * the serving materialize and the fold pass a COLLECTOR and
-    * unpersist right after their own action, so a long-lived
-    * process's state changes never leak tracked cache blocks. */
+    * of the index regardless of concurrent epoch commits. */
   private def maintainedAt(spark: SparkSession, d: String,
       indexDir: String, vB: Option[Int], vI: Option[Int],
-      vD: Option[Int],
-      cache: DataFrame => DataFrame =
-        df => graft.PersistRegistry.cached(df)): DataFrame = {
+      vD: Option[Int]): DataFrame = {
     val cut = foldCutAt(indexDir, vB)
     maintainedFrom(spark, d, baseEdgesAt(spark, d, indexDir, vB, vI),
       insertEdgesAt(spark, indexDir, vI, cut),
-      tombstonesAt(spark, indexDir, vD, cut), cache)
+      tombstonesAt(spark, indexDir, vD, cut))
   }
 
-  /** A deleteRepairCore persist hook that records what it persisted
-    * into `buf` for the caller to unpersist after its consuming
-    * action. LAZY fills, unlike PersistRegistry.cached's measured
-    * eager default: the serving materialize and the fold consume the
-    * whole repair plan in ONE overwrite job, so an eager count() per
-    * cached subtree added a driver job each (4 jobs ≈ half of the
-    * factor-1 serve_materialize wall, round-21 sub-phase stamp)
-    * while the lazy fill costs at worst one concurrent-branch
-    * double-compute of a bounded subtree inside the single job. */
-  private def collectingCache(
-      buf: scala.collection.mutable.Buffer[DataFrame])
-      : DataFrame => DataFrame = df => {
-    if (df.storageLevel ==
-        org.apache.spark.storage.StorageLevel.NONE) {
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      buf += df
-    }
-    df
-  }
-
+  /** The live graph (base plus inserts), pruned and repaired against
+    * the tombstones when there are any. A folded index keeps a
+    * committed-but-EMPTY tombstone delta; the repair's delete-set
+    * collect finds it empty and returns the live graph untouched. */
   private def maintainedFrom(spark: SparkSession, d: String,
       base: DataFrame, ins: Option[DataFrame],
-      del: Option[DataFrame],
-      cache: DataFrame => DataFrame =
-        df => graft.PersistRegistry.cached(df)): DataFrame = {
+      del: Option[DataFrame]): DataFrame = {
     val live = ins.map(base.unionByName(_)).getOrElse(base)
-    del match {
-      case None => live
-      // a folded index keeps a committed-but-EMPTY tombstone delta;
-      // prune+repair over an empty delete set is an expensive no-op
-      // (it would still scan the corpus for quantized vectors), so a
-      // post-fold read short-circuits to the live graph. The check is
-      // one small job over a 0-row delta — metadata-cheap, and it cut
-      // the measured post-fold resolve from 8.4 s to the bare base
-      // read at 25× (StreamMaintenanceScale)
-      case Some(dl) if dl.isEmpty => live
-      case Some(dl) =>
-        SimilarityQueries.deleteRepairCore(spark, live, dl,
-          graft.operators.DedupQueries.quantized(spark, d), cache)
-    }
+    del.fold(live)(dl => SimilarityQueries.deleteRepairCore(spark, live, dl,
+      graft.operators.DedupQueries.quantized(spark, d)))
   }
 
   /** Knobs (H, B) recorded by the last [[search]] walk —
@@ -1218,9 +1180,9 @@ object LifecycleIndex {
       if (inCrashWindow) return None
       // monotonicity requires NO pending tombstones: with an empty
       // delete delta the maintained graph is exactly base ∪ inserts
-      // (maintainedFrom's short-circuit), so appending edges can only
-      // ADD serving rows. One small job over the (usually 0-row)
-      // delta table.
+      // (the repair leaves an empty delete set's graph untouched), so
+      // appending edges can only ADD serving rows. One small job over
+      // the (usually 0-row) delta table.
       if (!tombstonesAt(spark, indexDir, vD, cut).forall(_.isEmpty))
         return None
       val (curFiles, prevServingFiles) =
@@ -1400,9 +1362,10 @@ object LifecycleIndex {
       // cut must be chosen from a measured breakdown): mat_guard =
       // the delta attempt incl. its early-return guards (on the
       // delta path this is the whole derivation), mat_derive = the
-      // full path's plan construction + repair-cache fills,
-      // mat_commit = the overwrite job + commit, mat_vacuum = the
-      // pinned sweep. Additive rows in the SCALE_STREAM stamp.
+      // full path's derivation incl. the repair's coordinator
+      // collects, mat_commit = the overwrite job + commit,
+      // mat_vacuum = the pinned sweep. Additive rows in the
+      // SCALE_STREAM stamp.
       var subT = System.nanoTime()
       def subLap(name: String): Unit = {
         val now = System.nanoTime()
@@ -1428,15 +1391,7 @@ object LifecycleIndex {
               SnapshotTable.dataFiles(edgesTab(indexDir), v))
             catch { case _: java.nio.file.NoSuchFileException => "" }
           }.getOrElse("")
-          // repair-rule persists are collected and dropped right
-          // after the overwrite consumes them (round 21): the
-          // harness-released default would leak tracked corpus-sized
-          // blocks in a long-lived serving process, which never
-          // calls PersistRegistry.release
-          val repairCaches =
-            scala.collection.mutable.Buffer.empty[DataFrame]
-          val m = maintainedAt(spark, d, indexDir, vB, vI, vD,
-            collectingCache(repairCaches))
+          val m = maintainedAt(spark, d, indexDir, vB, vI, vD)
           subLap("mat_derive")
           // sortWithinPartitions(vec_id) before the write (round 21 —
           // guide §6): the walk probes this table by beam-node keys
@@ -1446,13 +1401,10 @@ object LifecycleIndex {
           // filter prunes nothing. Sorted row groups make the
           // per-hop scan read only matching groups. Row SET
           // unchanged — order inside an unordered table is free.
-          val (fv, fvFiles) =
-            try SnapshotTable.overwriteReturning(spark,
-              m.unionByName(m.select(col("neighbor_id").as("vec_id"),
-                col("vec_id").as("neighbor_id"))).distinct()
-                .sortWithinPartitions("vec_id"), sTab,
-              Some(fullMeta))
-            finally repairCaches.foreach(_.unpersist(false))
+          val (fv, fvFiles) = SnapshotTable.overwriteReturning(spark,
+            m.unionByName(m.select(col("neighbor_id").as("vec_id"),
+              col("vec_id").as("neighbor_id"))).distinct()
+              .sortWithinPartitions("vec_id"), sTab, Some(fullMeta))
           subLap("mat_commit")
           heldManifests(fv) = fvFiles
           (fv, fvFiles)
@@ -1685,12 +1637,9 @@ object LifecycleIndex {
     // subtracted (maintainedAt) — under a half-folded base this is
     // exactly the un-folded remainder; under a healthy base the
     // subtraction is a content no-op
-    val foldCaches = scala.collection.mutable.Buffer.empty[DataFrame]
-    val maintained = maintainedAt(spark, d, indexDir, vBase, vIns, vDel,
-      collectingCache(foldCaches)).distinct()
-    try SnapshotTable.overwriteFrom(spark, maintained, bTab, vBase,
-      through)
-    finally foldCaches.foreach(_.unpersist(false))
+    val maintained =
+      maintainedAt(spark, d, indexDir, vBase, vIns, vDel).distinct()
+    SnapshotTable.overwriteFrom(spark, maintained, bTab, vBase, through)
     restartDeltas()
     compactRetired(spark, indexDir)
     ()

@@ -47,16 +47,18 @@ import graft.warehouse.SnapshotTable
   *
   * Scale: per-epoch cost is one LIMIT-bounded intake scan plus one
   * O(|batch|) append — flat in |E| by construction (measured flat in
-  * StreamMaintenanceScale). Readers pay the prune+repair derivation,
-  * bounded by the fold policy; the auto-fold below triggers the
-  * compaction from the delete stream's own serial foreachBatch path.
+  * StreamMaintenanceScale). Readers pay the prune+repair derivation:
+  * a distributed prune plus a coordinator repair over the tombstones'
+  * neighbourhoods (three bounded collects, see
+  * SimilarityQueries.deleteRepairCore), kept small by the fold
+  * policy; the auto-fold below triggers the compaction from the
+  * delete stream's own serial foreachBatch path.
   */
 object StreamingGraphDelete {
 
-  /** Per-epoch tombstone budget: deletes never materialize on the
-    * driver, but one epoch's arrivals should be a bounded intake
-    * unit (the same contract as the insert side); a misconfigured
-    * source fails loudly here. */
+  /** Per-epoch tombstone budget: one epoch's arrivals are a bounded
+    * intake unit (the same contract as the insert side); a
+    * misconfigured source fails loudly here. */
   val EpochCap = 4096
 
   /** Watch `delsDir` for parquet files of (vec_id) tombstones and

@@ -261,18 +261,23 @@ object CommitBackends {
   def controlPlaneReadsFor(dirPrefix: String): Long = {
     var total = 0L
     perDirReads.forEach { (d, c) =>
-      if (d == dirPrefix || d.startsWith(dirPrefix + "/")) total += c.get()
+      if (under(dirPrefix)(d)) total += c.get()
     }
     total
   }
 
-  /** Drop the per-dir read counters above for a dropped table tree.
-    * Callers that delete a table's directory (bench sweeps, index
-    * drops) release here; a live table re-counts on its next touch. */
+  /** Whether table dir `d` lies in the tree rooted at `dirPrefix`. */
+  private[warehouse] def under(dirPrefix: String)(d: String): Boolean =
+    d == dirPrefix || d.startsWith(dirPrefix + "/")
+
+  /** Drop the per-dir process state of a dropped table tree: the read
+    * counters above and SnapshotTable's cached TRIMFLOORs. Callers
+    * that delete a table's directory (bench sweeps, index drops)
+    * release here; a live table re-counts and re-resolves its floor
+    * on its next touch. */
   def releaseDir(dirPrefix: String): Unit = {
-    perDirReads.keySet.removeIf(d =>
-      d == dirPrefix || d.startsWith(dirPrefix + "/"))
-    ()
+    perDirReads.keySet.removeIf(under(dirPrefix))
+    SnapshotTable.forgetTrimFloors(dirPrefix)
   }
 
   /** Counting delegate for the read counters above. Write ops pass

@@ -1060,4 +1060,15 @@ object SnapshotTable {
     * crashed sweep in another process (the durable hint is the
     * recovery state; this just forces the re-resolve path). */
   private[graft] def forgetTrimFloors(): Unit = trimFloors.clear()
+
+  /** Drop the TRIMFLOOR cache entries of a released table tree
+    * (CommitBackends.releaseDir). */
+  private[warehouse] def forgetTrimFloors(dirPrefix: String): Unit = {
+    trimFloors.keySet.removeIf(CommitBackends.under(dirPrefix))
+    ()
+  }
+
+  /** The cached TRIMFLOOR of `dir`, if this process holds one. */
+  private[graft] def cachedTrimFloor(dir: String): Option[Int] =
+    Option(trimFloors.get(dir)).map(_.intValue)
 }

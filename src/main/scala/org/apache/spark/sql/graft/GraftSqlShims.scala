@@ -58,4 +58,10 @@ object GraftSqlShims {
       }
     }
   }
+
+  /** Spark's DIVIDE_BY_ZERO error, as an ANSI-mode division raises it
+    * (QueryExecutionErrors is private[sql]) — for driver-side code
+    * that reproduces a plan's arithmetic. */
+  def divideByZeroError(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
 }

@@ -6,24 +6,28 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps the engine's shared mechanisms single: one metrics listener
-  * (graft.Ledger), no settle sleeps in the measuring harnesses, one
-  * parquet reader (graft.sources.Parquet), one decode+parse step for
-  * the boatrace files (BoatracePipeline.decodeParse) and a fixed set of
-  * session keys. Reads `src/main`
-  * from the project directory the tests run in. */
+/** Keeps the engine's shared mechanisms single: one session factory
+  * (graft.Session), one metrics listener (graft.Ledger), no settle
+  * sleeps in the measuring harnesses, one parquet reader
+  * (graft.sources.Parquet), one decode+parse step for the boatrace
+  * files (BoatracePipeline.decodeParse) and a fixed set of session
+  * keys. Reads `src/main` and `src/test` from the project directory
+  * the tests run in. */
 class StructureSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
 
-  /** Path under `src/main/scala` -> source text. */
-  private lazy val sources: Map[String, String] = {
-    val s = Files.walk(root)
+  /** Path under `dir` -> source text of its Scala files. */
+  private def scalaFiles(dir: Path): Map[String, String] = {
+    val s = Files.walk(dir)
     try s.iterator.asScala.filter(_.toString.endsWith(".scala"))
-      .map((p: Path) => root.relativize(p).toString -> Files.readString(p))
+      .map((p: Path) => dir.relativize(p).toString -> Files.readString(p))
       .toMap
     finally s.close()
   }
+
+  /** Path under `src/main/scala` -> source text. */
+  private lazy val sources: Map[String, String] = scalaFiles(root)
 
   private def offenders(allowed: Set[String])(hit: String => Boolean) =
     sources.collect { case (p, s) if !allowed(p) && hit(s) => p }
@@ -41,6 +45,16 @@ class StructureSpec extends AnyFunSuite {
     val harnesses = Seq("Bench.scala", "ScaleCheck.scala", "Tool.scala",
       "streaming/StreamMaintenanceScale.scala").map("graft/" + _)
     assert(harnesses.filter(h => sources(h).contains("Thread.sleep")) === Nil)
+  }
+
+  test("only graft/Session.scala calls the SparkSession builder, " +
+      "across src/main and src/test") {
+    val builder = """SparkSession\s*\.builder""".r
+    val all = sources.map { case (p, s) => s"src/main/scala/$p" -> s } ++
+      scalaFiles(Paths.get("src/test/scala"))
+        .map { case (p, s) => s"src/test/scala/$p" -> s }
+    assert(all.collect { case (p, s) if builder.findFirstIn(s).nonEmpty => p }
+      .toSeq.sorted === Seq("src/main/scala/graft/Session.scala"))
   }
 
   test(".read.parquet( appears only in graft.sources.Parquet") {

@@ -68,6 +68,24 @@ class LhaSpec extends AnyFunSuite {
     }
   }
 
+  test("a corrupt original-size field fails with an IOException naming " +
+      "the entry before anything is allocated, for -lh0- and -lh5-") {
+    // level-0 header: method at offset 2, original size at offset 11
+    val one = Seq("K200827.TXT" -> "x\r\n".getBytes("ASCII"))
+    for (method <- Seq("-lh0-", "-lh5-");
+        size <- Seq(0x7ffffff0L, 256L << 20, 0xffffffffL, 0x80000000L)) {
+      val archive = LzhWriter.archive(0, one)
+      System.arraycopy(method.getBytes("ASCII"), 0, archive, 2, 5)
+      (0 until 4).foreach(i =>
+        archive(11 + i) = ((size >>> (8 * i)) & 0xff).toByte)
+      val t0 = System.nanoTime()
+      val e = intercept[java.io.IOException](Lha.extract(archive))
+      val ms = (System.nanoTime() - t0) / 1e6
+      assert(e.getMessage.startsWith("K200827.TXT: "), s"$method $size")
+      assert(ms < 200, s"$method $size took $ms ms")
+    }
+  }
+
   test("decoder rejects unknown methods instead of corrupting output") {
     val fake = new Array[Byte](64)
     fake(0) = 33

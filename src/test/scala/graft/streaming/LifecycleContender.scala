@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 /** Child-JVM driver for the CROSS-PROCESS lifecycle-index contention
   * spec (LifecycleCrossProcessSpec): a SECOND SparkSession in its own
   * process repeatedly folds one shared index while the parent process
@@ -19,13 +17,7 @@ import org.apache.spark.sql.SparkSession
 object LifecycleContender {
   def main(args: Array[String]): Unit = {
     val (d, idx, n) = (args(0), args(1), args(2).toInt)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-lifecycle-contender")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     var ok = 0
     var collisions = 0

@@ -54,16 +54,10 @@ object ServeVacuumContender {
 
   def main(args: Array[String]): Unit = {
     val (d, idx, n) = (args(0), args(1), args(2).toInt)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-serve-vacuum-contender")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // land each sweep immediately: the spec's whole point is the
-      // vacuum racing the parent's in-flight walk
-      .config("spark.graft.serving.vacuumGraceMs", "0")
-      .getOrCreate()
+    val spark = graft.Session.local(4)
+    // land each sweep immediately: the spec's whole point is the
+    // vacuum racing the parent's in-flight walk
+    spark.conf.set("spark.graft.serving.vacuumGraceMs", "0")
     spark.sparkContext.setLogLevel("ERROR")
     for (k <- 0 until n) {
       advance(spark, d, idx, k)

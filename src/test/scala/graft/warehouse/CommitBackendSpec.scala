@@ -282,20 +282,30 @@ class CommitBackendSpec extends AnyFunSuite {
       "many temp tables must not keep one counter per dir forever)") {
     import spark.implicits._
     val root = tmp("graft-release-dir-")
-    SnapshotTable.overwrite(spark, Seq(1L).toDF("x"), s"$root/t1")
-    SnapshotTable.overwrite(spark, Seq(2L).toDF("x"), s"$root/t2")
-    Seq("t1", "t2").foreach(t =>
-      assert(SnapshotTable.read(spark, s"$root/$t").count() === 1L))
+    for (t <- Seq("t1", "t2"); x <- 1L to 2L) {
+      SnapshotTable.overwrite(spark, Seq(x).toDF("x"), s"$root/$t")
+    }
+    Seq("t1", "t2").foreach { t =>
+      assert(SnapshotTable.read(spark, s"$root/$t").count() === 1L)
+      SnapshotTable.vacuum(s"$root/$t")
+      assert(SnapshotTable.cachedTrimFloor(s"$root/$t").nonEmpty,
+        s"a completed sweep must cache $t's floor")
+    }
     assert(CommitBackends.controlPlaneReadsFor(s"$root/t1") > 0)
     val t2Reads = CommitBackends.controlPlaneReadsFor(s"$root/t2")
     assert(t2Reads > 0)
     CommitBackends.releaseDir(s"$root/t1")
     assert(CommitBackends.controlPlaneReadsFor(s"$root/t1") === 0L,
       "releaseDir must drop the dropped tree's counters")
+    assert(SnapshotTable.cachedTrimFloor(s"$root/t1").isEmpty,
+      "releaseDir must drop the dropped tree's trim floor")
     assert(CommitBackends.controlPlaneReadsFor(s"$root/t2") === t2Reads,
       "releaseDir must leave a sibling tree's counters alone")
+    assert(SnapshotTable.cachedTrimFloor(s"$root/t2").nonEmpty,
+      "releaseDir must leave a sibling tree's trim floor alone")
     CommitBackends.releaseDir(root)
     assert(CommitBackends.controlPlaneReadsFor(root) === 0L)
+    assert(SnapshotTable.cachedTrimFloor(s"$root/t2").isEmpty)
   }
 
   // ---------------------------------------------------------------
