@@ -59,6 +59,18 @@ object VectorKernels {
     java.math.BigDecimal.valueOf(x.toDouble * 10000.0)
       .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
 
+  /** The quantized cosine every kernel and driver-side ranking uses:
+    * DotLong's wrapping Long dot over the shorter array, over
+    * sqrt(nnx · nny) in double. */
+  private[graft] def cosLong(x: Array[Long], nnx: Long, y: Array[Long],
+      nny: Long): Double = {
+    var dot = 0L
+    var i = 0
+    val n = math.min(x.length, y.length)
+    while (i < n) { dot += x(i) * y(i); i += 1 }
+    dot.toDouble / math.sqrt(nnx.toDouble * nny.toDouble)
+  }
+
   /** embeddings(vec_id, label, embedding: array<float>) →
     * (vec_id, label, r: quantized array<long>, nn: Σr² long) — the
     * map-only kernel form of DedupQueries.quantized (round 20 — guide
@@ -105,10 +117,7 @@ object VectorKernels {
       val queries = bc.value
       it.flatMap { case (idC, rc, nnC) =>
         queries.iterator.filter(_._1 != idC).map { case (idQ, rq, nnQ) =>
-          var dot = 0L
-          var j = 0
-          while (j < rq.length) { dot += rq(j) * rc(j); j += 1 }
-          (idQ, idC, dot.toDouble / math.sqrt(nnQ.toDouble * nnC.toDouble))
+          (idQ, idC, cosLong(rq, nnQ, rc, nnC))
         }
       }
     }.toDF("query_id", "neighbor_id", "cos_sim")
@@ -461,10 +470,7 @@ object VectorKernels {
         var i = 0
         while (i < as.length && as(i)._1 < idB) {
           val (idA, ra, nnA) = as(i)
-          var dot = 0L
-          var j = 0
-          while (j < ra.length) { dot += ra(j) * rb(j); j += 1 }
-          val cos = dot.toDouble / math.sqrt(nnA.toDouble * nnB.toDouble)
+          val cos = cosLong(ra, nnA, rb, nnB)
           if (cos >= minCos) out += ((idA, idB, cos))
           i += 1
         }

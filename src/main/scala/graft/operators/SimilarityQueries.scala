@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextKernels
+import graft.functions.VectorKernels.cosLong
 import graft.sources.{Parquet, Tables}
 import DedupQueries.{cosine, dotL, quantized, quantizedSql}
 import graft.plans.DotLong
@@ -2216,14 +2217,26 @@ object SimilarityQueries {
     deleteRepairCore(s, gd, del, quantized(s, d))
   }
 
-  /** Bounds of the coordinator-side delete repair, checked on
-    * `limit(bound + 1)` collects so no over-bound state reaches the
-    * driver. The delete-set cap sits 10× above the auto-fold policy
-    * (LifecycleIndex.DefaultFoldAt plus one StreamingGraphDelete
-    * epoch, 12,288 tombstones), because the fold repairs through the
-    * same rule; edges use the walk's per-node hub bound. */
-  private[graft] val RepairMaxDeletes = 1 << 17
+  /** The walk's per-node edge bound: a fetch or hop holding more than
+    * 512 edge rows per source node is a pathological hub, and the walk
+    * fails loudly rather than truncate. */
   private[graft] val HubEdgeBound = 512
+
+  /** Driver-row caps of the coordinator-side delete repair. They are
+    * absolute, so what the driver holds stays bounded (under 100 MB
+    * at any cap with 64-dimension vectors) whatever the state: the
+    * delete set, 8× the auto-fold policy (LifecycleIndex.DefaultFoldAt
+    * plus one StreamingGraphDelete epoch); the edges incident to it;
+    * the candidate pairs ranked, counted before any vector is fetched;
+    * and the survivors' vectors and edges. A state past any cap takes
+    * the distributed rule instead, which holds nothing on the driver,
+    * so no delete state is refused and a fold always goes through. */
+  private[graft] lazy val RepairMaxDeletes: Int = 8 *
+    (graft.streaming.LifecycleIndex.DefaultFoldAt.toInt +
+      graft.streaming.StreamingGraphDelete.EpochCap)
+  private[graft] val RepairMaxEdges = 1 << 19
+  private[graft] val RepairMaxPairs = 1 << 24
+  private[graft] val RepairMaxFetch = 1 << 17
 
   /** The prune + local-repair rule itself, decoupled from WHERE the
     * graph and the delete set come from: v23 passes the committed
@@ -2236,106 +2249,99 @@ object SimilarityQueries {
     * recomputed against the cumulative set, never unioned
     * per-wave).
     *
-    * The repair's inputs are bounded by the delete set D: O(|D|·deg)
-    * incident edges and O(|D|·deg²) candidate pairs, with |D| held
-    * down by the fold policy. So the repair runs on the coordinator,
-    * as the walk does, in three bounded collects: D itself, the
-    * edges incident to D, and one fused job with the survivors'
-    * vectors and out-edges. Each survivor ranks its candidates (the
-    * other surviving neighbours of a deleted node it neighboured) by
-    * quantized cosine in Spark's exact order — descending, NaN first,
-    * NULL last, −0.0 = 0.0, ties to the smaller id — keeps the top 3
-    * and drops those already in the graph. The result is the graph
-    * with every edge incident to D pruned (a null-safe NOT IN on both
-    * endpoints, so NULL ids survive as under an anti join) plus the
-    * repairs as a local relation. Nothing is persisted. A state past
-    * a bound fails naming it; folding the index empties D. Assumes
+    * The result is the graph with every edge incident to the delete
+    * set D pruned, plus each surviving neighbour's top-3 repairs (by
+    * quantized cosine, ties to the smaller id) among the other
+    * surviving neighbours of the deleted nodes it neighboured, less
+    * those already in the graph. The repair's inputs are bounded by
+    * D: O(|D|·deg) incident edges and O(|D|·deg²) candidate pairs,
+    * with |D| held down by the fold policy. So the repair runs on the
+    * coordinator ([[coordinatorRepair]]) whenever they fit the caps
+    * above, and as a distributed plan ([[distributedRepair]]) when
+    * they do not; both give the same rows (DeleteRepairSpec). Assumes
     * `vecs` is keyed by vec_id, as the quantized corpus is. */
   private[graft] def deleteRepairCore(
       s: org.apache.spark.sql.SparkSession,
       gd: org.apache.spark.sql.DataFrame,
       delIn: org.apache.spark.sql.DataFrame,
       vecs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+      : org.apache.spark.sql.DataFrame =
+    coordinatorRepair(s, gd, delIn, vecs)
+      .getOrElse(distributedRepair(gd, delIn, vecs))
+
+  /** The repair as coordinator work, as the walk runs: three bounded
+    * collects — D itself, the non-NULL edges incident to D, and one
+    * fused job with the survivors' vectors and their edges to other
+    * survivors (the only existing edges a repair can repeat). Each
+    * survivor ranks its candidates in Spark's exact order — cosine
+    * descending, NaN first, NULL last, −0.0 = 0.0, ties to the
+    * smaller id — and keeps the top 3 not already in the graph. The
+    * prune is a null-safe NOT IN on both endpoints, so NULL ids
+    * survive as under the anti join; the repairs are a local
+    * relation. Nothing is persisted. None when the state is past a
+    * cap, decided on `limit(cap + 1)` collects before the next
+    * collect runs. */
+  private[graft] def coordinatorRepair(
+      s: org.apache.spark.sql.SparkSession,
+      gd: org.apache.spark.sql.DataFrame,
+      delIn: org.apache.spark.sql.DataFrame,
+      vecs: org.apache.spark.sql.DataFrame)
+      : Option[org.apache.spark.sql.DataFrame] = {
     import s.implicits._
-    def bounded(n: Long, bound: Long, what: String): Unit =
-      if (n > bound) throw new IllegalStateException(
-        s"delete repair: $what exceeds its bound of $bound — fold the " +
-          "index (LifecycleIndex.foldTombstones) to empty the delete set")
+    import scala.collection.mutable.{HashMap, HashSet}
     val g = gd.select("vec_id", "neighbor_id")
     val delRows = delIn.select("del_id").limit(RepairMaxDeletes + 1)
       .as[Option[Long]].collect()
-    bounded(delRows.length, RepairMaxDeletes, "the delete set")
+    if (delRows.length > RepairMaxDeletes) return None
     val del = delRows.iterator.flatten.toSet
-    if (del.isEmpty) return g
-    val incBound = del.size * HubEdgeBound
-    val incRows = g.filter(col("vec_id").isInCollection(del) ||
-        col("neighbor_id").isInCollection(del))
-      .limit(incBound + 1).as[(Option[Long], Option[Long])].collect()
-    bounded(incRows.length, incBound,
-      s"the edges incident to ${del.size} deleted ids")
-    // each deleted node's SURVIVING neighbours, over both directions
-    val inc = scala.collection.mutable.HashMap
-      .empty[Long, scala.collection.mutable.Set[Long]]
-    def link(dl: Long, node: Long): Unit =
-      if (!del(node)) inc.getOrElseUpdate(dl,
-        scala.collection.mutable.HashSet.empty[Long]) += node
-    incRows.foreach {
-      case (Some(a), Some(b)) =>
-        if (del(a)) link(a, b)
-        if (del(b)) link(b, a)
-      case _ => // a NULL endpoint pairs with nothing
+    if (del.isEmpty) return Some(g)
+    // a NULL endpoint pairs with nothing
+    val incRows = g.filter(col("vec_id").isNotNull &&
+        col("neighbor_id").isNotNull && (col("vec_id").isInCollection(del) ||
+          col("neighbor_id").isInCollection(del)))
+      .limit(RepairMaxEdges + 1).as[(Long, Long)].collect()
+    if (incRows.length > RepairMaxEdges) return None
+    // each deleted node's SURVIVING neighbours over both directions,
+    // and each survivor's deleted neighbours
+    val surv = HashMap.empty[Long, HashSet[Long]]
+    val dels = HashMap.empty[Long, HashSet[Long]]
+    def link(dl: Long, node: Long): Unit = if (!del(node)) {
+      surv.getOrElseUpdate(dl, HashSet.empty[Long]) += node
+      dels.getOrElseUpdate(node, HashSet.empty[Long]) += dl
+    }
+    incRows.foreach { case (a, b) =>
+      if (del(a)) link(a, b)
+      if (del(b)) link(b, a)
     }
     val prune = (c: Column) => c.isNull || !c.isInCollection(del)
     val pruned = g.filter(prune(col("vec_id")) && prune(col("neighbor_id")))
-    val srcs = inc.valuesIterator.flatten.toSet
-    if (srcs.isEmpty) return pruned
-    // the survivors' vectors and out-edges in one job, the shape of
-    // the walk's fetchVecsAndEdges
-    val fetchBound = math.min(srcs.size.toLong * (1 + HubEdgeBound),
-      Int.MaxValue - 1L).toInt
-    val fetched = vecs.filter(col("vec_id").isInCollection(srcs))
-      .select(col("vec_id"), lit(false).as("edge"), col("r"), col("nn"),
-        lit(null).cast("bigint").as("nbr"))
-      .unionByName(g.filter(col("vec_id").isInCollection(srcs))
-        .select(col("vec_id"), lit(true).as("edge"),
-          lit(null).cast("array<bigint>").as("r"),
-          lit(null).cast("bigint").as("nn"), col("neighbor_id").as("nbr")))
-      .limit(fetchBound + 1)
-      .as[(Long, Boolean, Option[Array[Long]], Option[Long], Option[Long])]
-      .collect()
-    bounded(fetched.length, fetchBound,
-      s"the vectors and out-edges of ${srcs.size} repair sources")
-    val (edgeRows, vecRows) = fetched.partition(_._2)
-    val vecOf = vecRows.groupMap(_._1)(v => (v._3, v._4))
-    val noVec = Array.empty[(Option[Array[Long]], Option[Long])]
-    val outEdges = edgeRows.iterator.flatMap(e => e._5.map(e._1 -> _)).toSet
-    // cos_sim as the plan computes it: DotLong's wrapping sum over the
-    // shorter array, then dot / sqrt(nnu · nnw) with Spark's division
-    // (a zero divisor is NULL, or DIVIDE_BY_ZERO under ANSI)
+    val pairs = surv.valuesIterator.map(n => n.size.toLong * (n.size - 1))
+      .sum
+    if (pairs > RepairMaxPairs) return None
+    if (pairs == 0) return Some(pruned)
+    val srcs = dels.keySet.toSet
+    val (vecRows, edgeRows) = fetchVecsAndEdges(vecs,
+      g.filter(col("neighbor_id").isInCollection(srcs)), srcs, srcs,
+      Some(RepairMaxFetch + 1))
+    if (vecRows.length + edgeRows.length > RepairMaxFetch) return None
+    type V = (Option[Array[Long]], Option[Long])
+    val vecOf = vecRows.groupMap(_._1)(v => (v._2, v._3): V)
+    val noVec = Array.empty[V]
+    val existing = edgeRows.toSet
+    // cos_sim as the plan computes it: Spark's division makes a zero
+    // divisor NULL, or DIVIDE_BY_ZERO under ANSI
     val ansi = s.conf.get("spark.sql.ansi.enabled").toBoolean
-    def cos(ru: Option[Array[Long]], nnu: Option[Long],
-        rw: Option[Array[Long]], nnw: Option[Long]): Option[Double] =
-      (nnu, nnw) match {
-        case (Some(a), Some(b)) =>
-          val den = math.sqrt(a.toDouble * b.toDouble)
-          if (den == 0.0 && !ansi) None
-          else (ru, rw) match {
-            case (Some(x), Some(y)) =>
-              if (den == 0.0) throw org.apache.spark.sql.graft.GraftSqlShims
-                .divideByZeroError()
-              var dot = 0L
-              var i = 0
-              val n = math.min(x.length, y.length)
-              while (i < n) { dot += x(i) * y(i); i += 1 }
-              Some(dot.toDouble / den)
-            case _ => None
-          }
-        case _ => None
-      }
+    def cos(u: V, w: V): Option[Double] = (u, w) match {
+      case ((Some(ru), Some(nnu)), (Some(rw), Some(nnw))) =>
+        if (math.sqrt(nnu.toDouble * nnw.toDouble) != 0.0)
+          Some(cosLong(ru, nnu, rw, nnw))
+        else if (ansi)
+          throw org.apache.spark.sql.graft.GraftSqlShims.divideByZeroError()
+        else None
+      case _ => None
+    }
     // ORDER BY cos_sim DESC (NULLS LAST), w
-    def before(a: (Option[Double], Long), b: (Option[Double], Long))
-        : Boolean = {
+    val order: Ordering[(Option[Double], Long)] = (a, b) => {
       val c = (a._1, b._1) match {
         case (Some(x), Some(y)) =>
           -org.apache.spark.sql.catalyst.util.SQLOrderingUtil
@@ -2344,23 +2350,109 @@ object SimilarityQueries {
         case (None, _) => 1
         case _ => -1
       }
-      if (c != 0) c < 0 else a._2 < b._2
+      if (c != 0) c else java.lang.Long.compare(a._2, b._2)
     }
-    val cands = scala.collection.mutable.HashMap
-      .empty[Long, scala.collection.mutable.Set[Long]]
-    inc.valuesIterator.foreach(ns => ns.foreach(u =>
-      cands.getOrElseUpdate(u, scala.collection.mutable.HashSet.empty[Long])
-        ++= ns.iterator.filter(_ != u)))
-    val repairs = cands.iterator.flatMap { case (u, ws) =>
+    // one survivor at a time, so the candidate sets are never all held
+    val repairs = dels.iterator.flatMap { case (u, ds) =>
+      val ws = HashSet.empty[Long]
+      ds.foreach(dl => ws ++= surv(dl))
+      ws -= u
       val scored = for {
         w <- ws.toArray
-        (ru, nnu) <- vecOf.getOrElse(u, noVec)
-        (rw, nnw) <- vecOf.getOrElse(w, noVec)
-      } yield (cos(ru, nnu, rw, nnw), w)
-      scored.sortWith(before).iterator.take(3)
-        .map(c => (u, c._2)).filterNot(outEdges)
+        vu <- vecOf.getOrElse(u, noVec)
+        vw <- vecOf.getOrElse(w, noVec)
+      } yield (cos(vu, vw), w)
+      scored.sorted(order).iterator.take(3).map(c => (u, c._2))
+        .filterNot(existing)
     }.toSeq
-    pruned.unionByName(repairs.toDF("vec_id", "neighbor_id"))
+    Some(pruned.unionByName(repairs.toDF("vec_id", "neighbor_id")))
+  }
+
+  /** The repair as a distributed plan, for a state past the
+    * coordinator's caps: anti joins for the prune, a keyed self-join
+    * over the incident edges and a per-source window for the top-3,
+    * an anti join against the existing edges. Nothing reaches the
+    * driver and nothing is persisted. */
+  private[graft] def distributedRepair(
+      gd: org.apache.spark.sql.DataFrame,
+      delIn: org.apache.spark.sql.DataFrame,
+      vecs: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val gdc = gd.select("vec_id", "neighbor_id")
+    val del = delIn.select("del_id")
+    val pruned = gdc
+      .join(del.withColumnRenamed("del_id", "vec_id"), Seq("vec_id"),
+        "left_anti")
+      .join(del.withColumnRenamed("del_id", "neighbor_id"),
+        Seq("neighbor_id"), "left_anti")
+      .select("vec_id", "neighbor_id")
+    // each deleted node's SURVIVING neighbours, over both directions
+    val inc = gdc.join(del.withColumnRenamed("del_id", "vec_id"),
+        Seq("vec_id"))
+      .select(col("vec_id").as("del_id"), col("neighbor_id").as("node"))
+      .unionByName(
+        gdc.join(del.withColumnRenamed("del_id", "neighbor_id"),
+            Seq("neighbor_id"))
+          .select(col("neighbor_id").as("del_id"),
+            col("vec_id").as("node")))
+      .join(del.withColumnRenamed("del_id", "node"), Seq("node"),
+        "left_anti")
+      .distinct()
+    val srcs = inc.select(col("node").as("vec_id")).distinct()
+    val nodeVecs = vecs.join(srcs, Seq("vec_id"), "left_semi")
+      .select("vec_id", "r", "nn")
+    val a = nodeVecs.select(col("vec_id").as("u"), col("r").as("ru"),
+      col("nn").as("nnu"))
+    val b = nodeVecs.select(col("vec_id").as("w"), col("r").as("rw"),
+      col("nn").as("nnw"))
+    val wnd = Window.partitionBy("u")
+      .orderBy(col("cos_sim").desc, col("w"))
+    val repairs = inc.select(col("del_id"), col("node").as("u"))
+      .join(inc.select(col("del_id"), col("node").as("w")), Seq("del_id"))
+      .filter(col("u") =!= col("w"))
+      .select("u", "w").distinct()
+      .join(a, "u").join(b, "w")
+      .select(col("u"), col("w"),
+        cosine(DotLong.col(col("ru"), col("rw")), col("nnu"), col("nnw"))
+          .as("cos_sim"))
+      .withColumn("rn", row_number().over(wnd))
+      .filter(col("rn") <= 3)
+      .select(col("u").as("vec_id"), col("w").as("neighbor_id"))
+    // a top-3 repair that is already a live edge is dropped
+    val existing = gdc.join(srcs, Seq("vec_id"), "left_semi")
+    pruned.unionByName(repairs.join(existing,
+      Seq("vec_id", "neighbor_id"), "left_anti"))
+  }
+
+  /** One Spark job: the vectors (`r`, `nn`) of `vecIds` in `vecs` and
+    * the out-edges of `edgeSrcs` in `g`, key-pruned scans unioned — no
+    * join, no broadcast. Returns the vector rows and the edges with a
+    * non-NULL neighbour; `limit` caps the rows collected. No job when
+    * both key sets are empty. */
+  private[graft] def fetchVecsAndEdges(
+      vecs: org.apache.spark.sql.DataFrame,
+      g: org.apache.spark.sql.DataFrame,
+      vecIds: Set[Long], edgeSrcs: Set[Long], limit: Option[Int] = None)
+      : (Array[(Long, Option[Array[Long]], Option[Long])],
+        Array[(Long, Long)]) = {
+    import vecs.sparkSession.implicits._
+    val parts = Seq(
+      Option.when(vecIds.nonEmpty)(
+        vecs.filter(col("vec_id").isInCollection(vecIds))
+          .select(col("vec_id"), lit(false).as("edge"), col("r"),
+            col("nn"), lit(null).cast("bigint").as("nbr"))),
+      Option.when(edgeSrcs.nonEmpty)(
+        g.filter(col("vec_id").isInCollection(edgeSrcs))
+          .select(col("vec_id"), lit(true).as("edge"),
+            lit(null).cast("array<bigint>").as("r"),
+            lit(null).cast("bigint").as("nn"),
+            col("neighbor_id").as("nbr")))).flatten
+    if (parts.isEmpty) return (Array.empty, Array.empty)
+    val df = parts.reduce(_.unionByName(_))
+    val (e, v) = limit.fold(df)(df.limit)
+      .as[(Long, Boolean, Option[Array[Long]], Option[Long], Option[Long])]
+      .collect().partition(_._2)
+    (v.map(r => (r._1, r._3, r._4)), e.flatMap(r => r._5.map(r._1 -> _)))
   }
 
   // v23 search-walk knobs, recorded like v20/v22's.
@@ -2571,7 +2663,7 @@ object SimilarityQueries {
     * edge table replaces the fixture snapshot as the prune target);
     * None = the committed full-corpus graph. The prune is a
     * distributed filter; the repair runs on the coordinator within
-    * deleteRepairCore's bounds. */
+    * deleteRepairCore's caps, and as a distributed plan past them. */
   private[graft] def streamDeleteEdges(
       s: org.apache.spark.sql.SparkSession, d: String,
       del: org.apache.spark.sql.DataFrame,
@@ -2883,9 +2975,7 @@ object SimilarityQueries {
     val qvec = qrows.map(r => r._1 -> ((r._2, r._3))).toMap
     def cosTo(q: Long, rc: Array[Long], nnc: Long): Double = {
       val (rq, nnq) = qvec(q)
-      var i = 0; var dot = 0L
-      while (i < rq.length) { dot += rq(i) * rc(i); i += 1 }
-      dot.toDouble / math.sqrt(nnq.toDouble * nnc.toDouble)
+      cosLong(rq, nnq, rc, nnc)
     }
     // coarse probe — v03's rule verbatim (centroid = exact integer
     // component-wise sum; best cell by cosine, ties to the smaller
@@ -3009,53 +3099,24 @@ object SimilarityQueries {
     // skips the prefetch and the next hop's beam fetches exactly its
     // own edges (identical consume, one extra pruned-scan job)
     val prefetchCap = 2048
-    def fetchEdges(srcs: Set[Long]): Unit = if (srcs.nonEmpty) {
-      val pairs = g.filter(col("vec_id").isInCollection(srcs))
-        .select(col("vec_id"), col("neighbor_id"))
-        .as[(Long, Long)].collect()
-      // fail-loud row bound AT THE FETCH (round-20 advice): the
-      // consume-time hub guard below counts only corpus-surviving
-      // edges of beam nodes, so edges that were merely fetched (or
-      // prefetched) used to reach the driver unguarded — the same
-      // cap·512 budget here makes a pathological hub loud at the
-      // first collect that touches it instead of silently resident
-      require(pairs.length <= srcs.size * HubEdgeBound,
-        "graph hub exceeded the per-fetch edge bound")
-      val bySrc = pairs.groupBy(_._1)
-      srcs.foreach(sr =>
-        edgeCache(sr) = bySrc.get(sr).map(_.map(_._2)).getOrElse(Array.empty))
-    }
-    // one job per hop: vectors this hop must score (required) + the
-    // discovered nodes' edge lists (prefetch) — both sides key-pruned
-    // scans of already-materialized tables, no join, no broadcast
-    def fetchVecsAndEdges(vecIds: Set[Long], edgeSrcs: Set[Long]): Unit = {
-      if (vecIds.isEmpty) { fetchEdges(edgeSrcs); return }
-      val vPart = n.filter(col("vec_id").isInCollection(vecIds))
-        .select(col("vec_id"), col("r"), col("nn"),
-          lit(null).cast("bigint").as("nbr"))
-      val df = if (edgeSrcs.isEmpty) vPart
-        else vPart.unionByName(
-          g.filter(col("vec_id").isInCollection(edgeSrcs))
-            .select(col("vec_id"), lit(null).cast("array<bigint>").as("r"),
-              lit(null).cast("bigint").as("nn"),
-              col("neighbor_id").as("nbr")))
-      val rows =
-        df.as[(Long, Option[Array[Long]], Option[Long], Option[Long])]
-          .collect()
-      val (eRows, vRows) = rows.partition(_._4.isDefined)
-      // same fetch-time budget as fetchEdges (round-20 advice): the
-      // prefetch leg's sources are degree-unbounded until now — a hub
-      // among them was collected in full, silently, and the
-      // consume-time guard never saw it (prefetch-only edges feed a
-      // LATER hop's cache hit)
+    // one job per hop (fetchVecsAndEdges): vectors this hop must
+    // score (required) + the discovered nodes' edge lists (prefetch)
+    // — both sides key-pruned scans of already-materialized tables,
+    // no join, no broadcast. Fail-loud row bound AT THE FETCH
+    // (round-20 advice): the consume-time hub guard below counts only
+    // corpus-surviving edges of beam nodes, so edges that were merely
+    // fetched or prefetched would reach the driver unguarded — the
+    // same cap·512 budget here makes a pathological hub loud at the
+    // first collect that touches it instead of silently resident.
+    def fetch(vecIds: Set[Long], edgeSrcs: Set[Long]): Unit = {
+      val (vRows, eRows) = fetchVecsAndEdges(n, g, vecIds, edgeSrcs)
       require(eRows.length <= math.max(edgeSrcs.size, 1) * HubEdgeBound,
-        "graph hub exceeded the per-fetch edge bound (prefetch)")
+        "graph hub exceeded the per-fetch edge bound")
       vRows.foreach(r => vecCache(r._1) = (r._2.get, r._3.get))
       vecIds.foreach(i => if (!vecCache.contains(i)) vecAbsent += i)
       val bySrc = eRows.groupBy(_._1)
       edgeSrcs.foreach(sr =>
-        edgeCache(sr) =
-          bySrc.get(sr).map(_.map(_._4.get)).getOrElse(Array.empty))
+        edgeCache(sr) = bySrc.get(sr).map(_.map(_._2)).getOrElse(Array.empty))
     }
     for (_ <- 1 to vH) {
       val beams: Map[Long, Seq[Long]] = visited.map { case (q, m) =>
@@ -3067,7 +3128,7 @@ object SimilarityQueries {
       if (beamNodes.nonEmpty) {
         // beam edges: cache hit except hop 1 (seed edges) and any
         // node whose discovery hop skipped the gated prefetch
-        fetchEdges(beamNodes.filterNot(edgeCache.contains))
+        fetch(Set.empty, beamNodes.filterNot(edgeCache.contains))
         val nbrs = beamNodes.iterator.flatMap(edgeCache(_)).toSet
         val needVecs =
           nbrs.filterNot(i => vecCache.contains(i) || vecAbsent.contains(i))
@@ -3084,7 +3145,7 @@ object SimilarityQueries {
         val prefSrcs =
           if (prefSrcs0.size <= prefetchCap) prefSrcs0
           else Set.empty[Long]
-        fetchVecsAndEdges(needVecs, prefSrcs)
+        fetch(needVecs, prefSrcs)
         // the surviving edge rows are exactly the old join's output:
         // (src ∈ beams) × its g-neighbors whose vector exists in n
         val ed = beamNodes.iterator.flatMap { bn =>

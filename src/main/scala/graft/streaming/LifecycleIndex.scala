@@ -363,9 +363,10 @@ object LifecycleIndex {
 
   /** READ-TIME RESOLUTION: the maintained graph, derived from the
     * committed sets (see class doc). The prune is a distributed
-    * filter; the repair is bounded coordinator work over the
-    * tombstones' neighbourhoods (SimilarityQueries.deleteRepairCore),
-    * so the call collects O(|tombstones|·deg) rows before it returns. */
+    * filter; the repair is coordinator work over the tombstones'
+    * neighbourhoods (SimilarityQueries.deleteRepairCore), so the call
+    * collects O(|tombstones|·deg) rows, within fixed caps, before it
+    * returns; a state past the caps repairs as a distributed plan. */
   def maintainedEdges(spark: SparkSession, d: String,
       indexDir: String): DataFrame = {
     val (vB, vI, vD) = consistentCapture(indexDir)
@@ -1089,8 +1090,10 @@ object LifecycleIndex {
     // state the resolve target cannot know, and the verTag alone
     // pins the index state (a state's marker is deterministic, so
     // two different suffixes can never coexist under one verTag)
+    val acceptServing =
+      (m: String) => m == servingMeta || m.startsWith(servingMeta + "|")
     val svr = SnapshotTable.serveResolve(sTab, servingMeta, verTagOlder,
-      m => m == servingMeta || m.startsWith(servingMeta + "|"))
+      acceptServing)
     // count the early stop (round-19 advice 3): miss AND the
     // monotonicity predicate fired on CURRENT's meta — free to
     // detect here (both values are already in hand), and the stamp
@@ -1393,6 +1396,7 @@ object LifecycleIndex {
           }.getOrElse("")
           val m = maintainedAt(spark, d, indexDir, vB, vI, vD)
           subLap("mat_derive")
+          materializeTestHook.foreach(h => h())
           // sortWithinPartitions(vec_id) before the write (round 21 —
           // guide §6): the walk probes this table by beam-node keys
           // EVERY HOP of every search; the distinct's hash
@@ -1436,7 +1440,25 @@ object LifecycleIndex {
     svr.matched.foreach(_ => setServeMode(indexDir, "adopt"))
     val (sv, svFiles) = svr.matched match {
       case Some(m) => (m, svr.manifests(m))
-      case None => materialize()
+      case None =>
+        try materialize()
+        catch {
+          // another serving process that committed this SAME state can
+          // sweep this attempt's in-flight write before its commit (a
+          // zero fresh-file grace, as the cross-process race spec
+          // sets): its snapshot of the state holds the same rows, so
+          // adopt it; with no such commit the failure stands
+          case e: Throwable if scala.util.control.NonFatal(e) &&
+              !e.isInstanceOf[TornCaptureException] =>
+            val again = SnapshotTable.serveResolve(sTab, servingMeta,
+              verTagOlder, acceptServing)
+            again.matched match {
+              case Some(m) =>
+                setServeMode(indexDir, "adopt")
+                (m, again.manifests(m))
+              case None => throw e
+            }
+        }
     }
     // Retry ONLY the missing-version shapes (the matched version
     // raced a newer search's vacuum between resolve and read) — a
@@ -1488,6 +1510,12 @@ object LifecycleIndex {
     * (see [[search]]'s retry-once contract). Always None outside
     * tests. */
   @volatile private[graft] var midSearchTestHook: Option[() => Unit] =
+    None
+
+  /** Spec-only injection point before the full materialize's serving
+    * write (see the adopt fallback in searchAttempt). Always None
+    * outside tests. */
+  @volatile private[graft] var materializeTestHook: Option[() => Unit] =
     None
 
   /** Spec-only injection point between the version capture's base

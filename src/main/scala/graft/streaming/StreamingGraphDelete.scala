@@ -49,10 +49,11 @@ import graft.warehouse.SnapshotTable
   * O(|batch|) append — flat in |E| by construction (measured flat in
   * StreamMaintenanceScale). Readers pay the prune+repair derivation:
   * a distributed prune plus a coordinator repair over the tombstones'
-  * neighbourhoods (three bounded collects, see
-  * SimilarityQueries.deleteRepairCore), kept small by the fold
-  * policy; the auto-fold below triggers the compaction from the
-  * delete stream's own serial foreachBatch path.
+  * neighbourhoods (three capped collects, see
+  * SimilarityQueries.deleteRepairCore; a state past the caps repairs
+  * as a distributed plan), kept small by the fold policy; the
+  * auto-fold below triggers the compaction from the delete stream's
+  * own serial foreachBatch path.
   */
 object StreamingGraphDelete {
 

@@ -191,6 +191,38 @@ class LifecycleCrossProcessSpec extends AnyFunSuite {
       .map(t => SnapshotTable.currentVersionOf(t)
         .map(_.toString).getOrElse("-")).mkString("_")
 
+  test("a serve whose serving write fails after another serving " +
+      "process committed the same state adopts that snapshot") {
+    import graft.streaming.ServeVacuumContender
+    val (idx, rep) = (tmp("graft-xproc-adopt-"), tmp("graft-xproc-adrep-"))
+    Seq(idx, rep).foreach { i =>
+      LifecycleIndex.bootstrap(spark, i,
+        SimilarityQueries.insertFreeBaseGraph(spark, sf))
+      ServeVacuumContender.advance(spark, sf, i, 0)
+    }
+    val q = ServeVacuumContender.queries(spark, sf)
+    val expected = searchRows(LifecycleIndex.search(spark, sf, rep, q))
+    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // the other process serves the state first, then its sweep takes
+    // this attempt's write before the commit
+    LifecycleIndex.materializeTestHook = Some { () =>
+      if (fired.compareAndSet(false, true)) {
+        val other = new Thread(() =>
+          LifecycleIndex.search(spark, sf, idx, q).count(): Unit)
+        other.start()
+        other.join()
+        throw new java.io.IOException("serving write swept mid-commit")
+      }
+    }
+    val rows =
+      try searchRows(LifecycleIndex.search(spark, sf, idx, q))
+      finally LifecycleIndex.materializeTestHook = None
+    assert(fired.get())
+    assert(LifecycleIndex.lastServeModeFor(idx) === "adopt")
+    assert(rows === expected)
+    PersistRegistry.release()
+  }
+
   test("a SECOND PROCESS advancing the index state and VACUUMING the " +
       "serving table while this one loops search(): the mid-walk " +
       "vacuum race is absorbed by the retry-once, and every " +

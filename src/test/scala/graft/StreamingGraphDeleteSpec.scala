@@ -180,6 +180,36 @@ class StreamingGraphDeleteSpec extends AnyFunSuite {
       "the auto-folded maintained graph must equal the one-shot batch")
   }
 
+  test("a tombstone set past the coordinator repair's cap still " +
+      "folds, through the distributed repair, to the maintained graph " +
+      "of the ids that touch it") {
+    import spark.implicits._
+    import graft.operators.SimilarityQueries
+    val idx = tmp("graft-sgd-pastcap-")
+    val dels = spark.read.parquet(s"$sf/embeddings.parquet")
+      .filter(col("vec_id") % 97 === 0)
+      .select("vec_id").as[Long].collect().toSeq
+    StreamingGraphDelete.deleteEpoch(spark, dels.toDF("vec_id"), sf, idx,
+      0L, foldAt = Long.MaxValue)
+    // ids no graph holds, past the cap in one append: the tombstone
+    // table that intake epochs leave when folds do not run
+    SnapshotTable.append(spark,
+      spark.range(1L << 40, (1L << 40) + SimilarityQueries.RepairMaxDeletes)
+        .select(col("id").as("vec_id")).repartition(1),
+      LifecycleIndex.delTab(idx), Some("del:batch=1"))
+    val want = edgeSet(SimilarityQueries.deleteRepairedGraph(spark, sf))
+    assert(edgeSet(LifecycleIndex.maintainedEdges(spark, sf, idx)) === want,
+      "past the cap the maintained graph must be the one-shot batch's")
+    LifecycleIndex.foldTombstones(spark, sf, idx)
+    assert(SnapshotTable.read(spark,
+      LifecycleIndex.delTab(idx)).count() === 0L,
+      "the fold must restart the tombstone table empty")
+    val got = edgeSet(LifecycleIndex.maintainedEdges(spark, sf, idx))
+    PersistRegistry.release()
+    assert(got === want.distinct,
+      "the folded maintained graph must equal the one-shot batch")
+  }
+
   test("an oversized delete epoch fails the distributed pre-check " +
       "before any work") {
     val idx = tmp("graft-sgd-cap-")

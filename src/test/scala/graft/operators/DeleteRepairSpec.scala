@@ -9,11 +9,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** The coordinator delete repair (SimilarityQueries.deleteRepairCore)
-  * against the distributed rule it replaced (DeleteRepairReference):
-  * the same row multiset on seeded random graphs and on the edge
-  * cases the plan's join, window and division semantics decide, and
-  * a named failure, before the next collect, past each bound. */
+/** The coordinator delete repair (SimilarityQueries.coordinatorRepair)
+  * against the distributed rule (distributedRepair, the engine's rule
+  * before the repair moved to the coordinator and now its path past
+  * the caps): the same row multiset on seeded random graphs and on
+  * the edge cases the plan's join, window and division semantics
+  * decide. Past each cap the coordinator declines before its next
+  * collect, and deleteRepairCore still repairs. */
 class DeleteRepairSpec extends AnyFunSuite {
   import TestSpark.spark
 
@@ -45,8 +47,9 @@ class DeleteRepairSpec extends AnyFunSuite {
       vecs: Seq[Vec], s: SparkSession = spark, clue: String = "")
       : Seq[Edge] = {
     val (g, d, v) = frames(s, edges, del, vecs)
-    val want = Try(rows(DeleteRepairReference.repair(s, g, d, v)))
-    val got = Try(rows(SimilarityQueries.deleteRepairCore(s, g, d, v)))
+    val want = Try(rows(SimilarityQueries.distributedRepair(g, d, v)))
+    val got = Try(rows(SimilarityQueries.coordinatorRepair(s, g, d, v)
+      .getOrElse(fail(s"$clue: the coordinator declined"))))
     (want.toEither, got.toEither) match {
       case (Right(w), Right(o)) =>
         assert(o === w, clue); o
@@ -142,42 +145,81 @@ class DeleteRepairSpec extends AnyFunSuite {
     spark.range(1).select(cols.map { case (c, t) =>
       raise_error(lit(s"$c was read")).cast(t).as(c) }: _*)
 
-  private def boundError(f: => DataFrame): String =
-    intercept[IllegalStateException](f).getMessage
+  private val noVecs = Seq("vec_id" -> "bigint", "r" -> "array<bigint>",
+    "nn" -> "bigint")
 
-  test("a delete set past its bound fails naming it, before the edges " +
-      "are read") {
-    val del = spark.range(SimilarityQueries.RepairMaxDeletes + 1L)
+  test("a delete set past its cap is declined before the edges are " +
+      "read, and repairs as the in-cap ids alone do") {
+    import spark.implicits._
+    val cap = SimilarityQueries.RepairMaxDeletes
+    val big = spark.range(1L << 40, (1L << 40) + cap)
       .select(col("id").as("del_id"))
-    val msg = boundError(SimilarityQueries.deleteRepairCore(spark,
-      untouchable("vec_id" -> "bigint", "neighbor_id" -> "bigint"), del,
-      untouchable("vec_id" -> "bigint", "r" -> "array<bigint>",
-        "nn" -> "bigint")))
-    assert(msg.contains(s"bound of ${SimilarityQueries.RepairMaxDeletes}"))
-    assert(msg.contains("fold"))
+    assert(SimilarityQueries.coordinatorRepair(spark,
+      untouchable("vec_id" -> "bigint", "neighbor_id" -> "bigint"),
+      big.union(Seq(0L).toDF("del_id")), untouchable(noVecs: _*)).isEmpty)
+    // the ids past the graph change nothing: the fallback's rows are
+    // the coordinator's over the ids that touch the graph
+    val rnd = new Random(7)
+    val edges = (0L until 40L).flatMap(i =>
+      Seq.fill(3)((Some(i), Some(rnd.nextInt(40).toLong))))
+    val vecs = (0L until 40L).map(i =>
+      vec(i, rnd.nextInt(5) - 2L, rnd.nextInt(5) - 2L, 1L))
+    val del = Seq(Some(0L), Some(7L), Some(19L))
+    val (g, d, v) = frames(spark, edges, del, vecs)
+    val want = assertSame(edges, del, vecs)
+    assert(rows(SimilarityQueries.deleteRepairCore(spark, g,
+      big.union(d), v)) === want)
   }
 
-  test("a deleted hub past the per-node edge bound fails naming it, " +
-      "before the vectors are read") {
-    import spark.implicits._
-    val hub = SimilarityQueries.HubEdgeBound
-    val edges = (1L to hub + 1L).map(i => (i, 0L)).toDF("vec_id", "neighbor_id")
-    val msg = boundError(SimilarityQueries.deleteRepairCore(spark, edges,
-      Seq(0L).toDF("del_id"), untouchable("vec_id" -> "bigint",
-        "r" -> "array<bigint>", "nn" -> "bigint")))
-    assert(msg.contains(s"bound of $hub") && msg.contains("fold"))
+  test("a deleted hub past 512 incident edges repairs on the " +
+      "coordinator, as the distributed rule does") {
+    val hub = 600L
+    val edges = (1L to hub).map(i => (Some(i), Some(0L))) ++
+      (1L to hub).map(i => (Some(i), Some(i % hub + 1)))
+    val vecs = (1L to hub).map(i => vec(i, i % 7 - 3, i % 5 - 2, 1))
+    val got = assertSame(edges, Seq(Some(0L)), vecs)
+    assert(got.size > edges.size, "expected repair edges")
   }
 
-  test("repair sources past the fetch bound fail naming it") {
+  test("incident edges past their cap are declined before the vectors " +
+      "are read") {
+    val edges = spark.range(SimilarityQueries.RepairMaxEdges + 1L)
+      .select((col("id") + 1).as("vec_id"), lit(0L).as("neighbor_id"))
+    assert(SimilarityQueries.coordinatorRepair(spark, edges,
+      spark.range(1).select(lit(0L).as("del_id")),
+      untouchable(noVecs: _*)).isEmpty)
+  }
+
+  test("candidate pairs past their cap are declined before the vectors " +
+      "are read") {
+    // one deleted hub with s survivors ranks s·(s-1) pairs
+    val s = Iterator.from(2).find(n => n.toLong * (n - 1) >
+      SimilarityQueries.RepairMaxPairs).get
+    assert(s <= SimilarityQueries.RepairMaxEdges)
+    val edges = spark.range(s)
+      .select((col("id") + 1).as("vec_id"), lit(0L).as("neighbor_id"))
+    assert(SimilarityQueries.coordinatorRepair(spark, edges,
+      spark.range(1).select(lit(0L).as("del_id")),
+      untouchable(noVecs: _*)).isEmpty)
+  }
+
+  test("a survivor fetch past its cap is declined, and the distributed " +
+      "rule repairs it") {
     import spark.implicits._
-    val hub = SimilarityQueries.HubEdgeBound
-    // sources 1 and 2; 1 has more out-edges than both may fetch
-    val edges = (Seq(1L -> 0L, 2L -> 0L) ++
-      (1 to 2 * hub + 8).map(i => 1L -> (1000L + i))).toDF("vec_id",
-        "neighbor_id")
+    // sources 1 and 2, with more copies of the edge 1 -> 2 than the
+    // fetch may hold
+    val dup = spark.range(SimilarityQueries.RepairMaxFetch + 1L)
+      .select(lit(1L).as("vec_id"), lit(2L).as("neighbor_id"))
+    val edges = Seq(1L -> 0L, 2L -> 0L).toDF("vec_id", "neighbor_id")
+      .union(dup)
     val vecs = Seq(vec(1, 1, 0), vec(2, 0, 1)).toDF("vec_id", "r", "nn")
-    val msg = boundError(SimilarityQueries.deleteRepairCore(spark, edges,
-      Seq(0L).toDF("del_id"), vecs))
-    assert(msg.contains(s"bound of ${2 * (hub + 1)}") && msg.contains("fold"))
+    val del = Seq(0L).toDF("del_id")
+    assert(SimilarityQueries.coordinatorRepair(spark, edges, del, vecs)
+      .isEmpty)
+    // 2's repair to 1 is new; 1's repair to 2 is already an edge
+    val got = SimilarityQueries.deleteRepairCore(spark, edges, del, vecs)
+    assert(got.filter(col("vec_id") === 2L).as[(Long, Long)].collect()
+      .toSeq === Seq(2L -> 1L))
+    assert(got.count() === SimilarityQueries.RepairMaxFetch + 2L)
   }
 }
