@@ -67,11 +67,10 @@ object PersistRegistry {
   }
 
   /** Persist at MEMORY_AND_DISK unless the plan is already cached —
-    * the RE-PIN primitive of the long-lived corpus caches
-    * (LifecycleIndex.corpusCache, SimilarityQueries
-    * .streamCorpusCache). Deliberately does NOT track: those caches
-    * own their release discipline (state-boundary sweeps, LRU cap,
-    * dir-liveness eviction) and must survive per-query release().
+    * the RE-PIN primitive of the long-lived corpus caches (graft
+    * .Resident's corpus kinds). Deliberately does NOT track: those
+    * caches own their release discipline (state-boundary sweep, LRU
+    * bound, release) and must survive per-query release().
     * The storageLevel check consults the session CacheManager by
     * plan, so an identical plan cached by anyone is reused instead
     * of re-persisted (which would only log a CacheManager warn). */

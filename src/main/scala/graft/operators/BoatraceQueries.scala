@@ -28,11 +28,12 @@ object BoatraceQueries {
   /** Placeholder in oracle SQL replaced by Verify with its outDir. */
   val OutDirToken = "__VERIFY_OUT__"
 
-  // Parse once per session (the parsed dataset is persisted; four
+  // Parse once per application (the parsed dataset is persisted; four
   // queries share it instead of each re-reading the corpus).
-  private val parsedCache =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession,
-      org.apache.spark.sql.Dataset[BoatracePipeline.ParsedFile]]()
+  private[graft] val parsed = graft.Resident
+    .kind[org.apache.spark.sql.Dataset[BoatracePipeline.ParsedFile]](
+      "parsed boatrace corpus", graft.Resident.dataDir,
+      graft.Resident.unpersist(_))
 
   private def tables(s: SparkSession) = {
     // `spark.graft.boatraceBaseDir` points the audits at an already-
@@ -46,12 +47,12 @@ object BoatraceQueries {
       def rd(t: String) = Parquet.read(s, s"$overrideDir/$t")
       (rd("env"), rd("result"), rd("odds"), rd("schedule"))
     } else {
-      val parsed = parsedCache.computeIfAbsent(s,
-        sess => BoatracePipeline.parseDir(sess, txtDir))
-      (BoatracePipeline.envDf(s, parsed),
-        BoatracePipeline.resultDf(s, parsed),
-        BoatracePipeline.oddsDf(s, parsed),
-        BoatracePipeline.scheduleDf(s, parsed))
+      val files = parsed.getOrElseUpdate(graft.Resident.key(s, txtDir))(
+        BoatracePipeline.parseDir(s, txtDir))
+      (BoatracePipeline.envDf(s, files),
+        BoatracePipeline.resultDf(s, files),
+        BoatracePipeline.oddsDf(s, files),
+        BoatracePipeline.scheduleDf(s, files))
     }
   }
 

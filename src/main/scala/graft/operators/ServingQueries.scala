@@ -64,24 +64,18 @@ object ServingQueries {
           .select("vec_id", "embedding")
         LifecycleIndex.search(s, d, idx, queries)
       } finally {
-        // with the directory: the serving caches' entries for it
-        // (the corpus entry holds PERSISTED blocks — waiting for the
-        // next materialize's sweep would carry them into unrelated
-        // bench queries' measurements), and the resident STREAM
-        // corpus its insert epochs pinned (review finding: keyed by
-        // the dataset dir, which never vanishes, so dir-liveness
-        // eviction never fires in a bench — and later batch entries
-        // sharing the identical plan would silently serve from
-        // memory, breaking their full-computation contract)
-        LifecycleIndex.releaseIndexCaches(s, idx)
-        // NOTE (round-17 advice): releaseStreamCorpus is keyed by
-        // DATASET dir — correct for this bench's single-purpose
-        // process, but an application hosting a real long-lived
-        // insert stream on the same dataset would lose that stream's
-        // resident corpus here (next epoch re-fills). If benches ever
-        // share an app with a live maintainer, key the stream corpus
-        // by (app, dataset, stream-id) or make this release opt-in.
-        SimilarityQueries.releaseStreamCorpus(s, d)
+        // with the directory: everything the process holds for it
+        // (its persisted serving corpus would otherwise ride into
+        // unrelated bench queries' measurements until the next sweep),
+        // and the resident STREAM corpus its insert epochs pinned: keyed
+        // by the dataset dir, which stays, so no sweep drops it, and
+        // later batch entries sharing the identical plan would silently
+        // serve from memory, breaking their full-computation contract.
+        // Only that entry goes — releasing the dataset dir would also
+        // drop the stage snapshots later queries reuse. (An application
+        // also hosting a live insert stream on d refills it next epoch.)
+        graft.Resident.release(idx)
+        SimilarityQueries.streamCorpora.remove(graft.Resident.key(s, d))
         deleteRec(idx)
       }
       // the returned frame is driver-local (the walk collects its

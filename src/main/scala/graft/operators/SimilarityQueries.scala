@@ -2470,6 +2470,9 @@ object SimilarityQueries {
       s: org.apache.spark.sql.SparkSession, d: String,
       qrows: Array[(Long, Array[Long], Long)])
       : org.apache.spark.sql.DataFrame = {
+    // an insert epoch is a state-change boundary: drop what dead dirs
+    // and stopped applications left in the process registry
+    graft.Resident.sweep(s)
     // ORDER MATTERS on the first epoch: compute the once-per-app
     // coarse quantizer BEFORE streamCorpus persists the plan — the
     // centroid aggregation over the RAW plan is a codegen parquet
@@ -2497,35 +2500,14 @@ object SimilarityQueries {
       maxQ = 4096, centsIn = Some(cents))
   }
 
-  private val streamCentsCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[(Long, Array[Long])]]()
+  private[graft] val streamCentroids = graft.Resident
+    .kind[Array[(Long, Array[Long])]]("stream centroids",
+      graft.Resident.dataDir)
 
   private def streamCents(s: org.apache.spark.sql.SparkSession, d: String,
-      n: org.apache.spark.sql.DataFrame): Array[(Long, Array[Long])] = {
-    // drop entries whose corpus dir is gone (spec/bench throwaway
-    // fixtures) — the same unbounded-growth class as the serving
-    // path's centsCache (round-15 advice low 3); keys are
-    // `<appId>|<corpusDir>|insert-free`. Existence goes through the
-    // Hadoop FS of the corpus PATH, not java.nio (review-caught: the
-    // corpus is whatever spark.read.parquet resolves — an
-    // object-store-schemed dir is never a local directory, and a
-    // local stat would evict the live entry every epoch and recompute
-    // the corpus-sized quantizer the cache exists to hold).
-    streamCentsCache.keySet.removeIf { k =>
-      val dir = k.substring(k.indexOf('|') + 1, k.lastIndexOf('|'))
-      val p = new org.apache.hadoop.fs.Path(dir)
-      !p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-    }
-    streamCentsCache.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + d + "|insert-free",
-      _ => centroidTable(s, n))
-  }
-
-  /** Live stream-quantizer cache keys — for the eviction spec. */
-  private[graft] def streamCentsCacheKeys: Set[String] = {
-    import scala.jdk.CollectionConverters._
-    streamCentsCache.keySet.asScala.toSet
-  }
+      n: org.apache.spark.sql.DataFrame): Array[(Long, Array[Long])] =
+    streamCentroids.getOrElseUpdate(graft.Resident.key(s, d))(
+      centroidTable(s, n))
 
   // RESIDENT stream corpus (round 17, the maintenance-side analog of
   // the serving corpus cache): the insert walk's probe corpus is
@@ -2534,102 +2516,25 @@ object SimilarityQueries {
   // because the walk's tracked persist is released with the epoch's
   // intermediates. One persisted corpus per (application, corpus
   // dir), held across epochs like the process-held coarse quantizer
-  // above; dir-liveness eviction UNPERSISTS (these entries hold
-  // data-sized blocks, unlike the nlist-row quantizer); a foreign
-  // release() of the identical plan is re-pinned on the next epoch.
-  private val streamCorpusCache = new java.util.concurrent
-    .ConcurrentHashMap[String, (org.apache.spark.sql.DataFrame,
-      java.util.concurrent.atomic.AtomicLong)]()
-
-  /** Stream-corpus entries evicted by the round-20 bound below —
-    * observability for the eviction spec and any future SCALE
-    * stamp. */
-  private[graft] val streamCorpusEvictions =
-    new java.util.concurrent.atomic.AtomicLong(0)
+  // above, counted by the process's corpus bound; a foreign release()
+  // of the identical plan is re-pinned on the next epoch.
+  private[graft] val streamCorpora =
+    graft.Resident.corpusKind("stream corpus", graft.Resident.dataDir)
 
   // private[graft] so the residency/eviction spec can drive it
   // without paying a full epoch per assertion
   private[graft] def streamCorpus(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    val it = streamCorpusCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val dir = e.getKey.substring(e.getKey.indexOf('|') + 1)
-      val p = new org.apache.hadoop.fs.Path(dir)
-      if (!p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .exists(p)) {
-        e.getValue._1.unpersist(blocking = false)
-        it.remove()
-      }
+    val k = graft.Resident.key(s, d)
+    val entry = streamCorpora.update(k) {
+      case Some(old) =>
+        graft.PersistRegistry.ensurePinned(old.df)
+        old.touch()
+      case None => new graft.Resident.Corpus("", graft.PersistRegistry
+        .ensurePinned(quantized(s, d).filter(!v21BatchFilter)))
     }
-    val ck = s.sparkContext.applicationId + "|" + d
-    val entry = streamCorpusCache.compute(ck, (_, old) =>
-      if (old != null) {
-        graft.PersistRegistry.ensurePinned(old._1)
-        old._2.set(System.nanoTime())
-        old
-      } else (graft.PersistRegistry.ensurePinned(
-        quantized(s, d).filter(!v21BatchFilter)),
-        new java.util.concurrent.atomic.AtomicLong(System.nanoTime())))
-    // BOUND (round 20 — this cache had the other two of the repo's
-    // three-part rule for long-lived persists, eviction [dir
-    // liveness] and re-pin [ensurePinned], but no bound: a maintainer
-    // process over many corpus dirs accumulates one data-sized
-    // persisted corpus per dir). Same semantics as the serving
-    // cache's round-20 byte budget: least-recently-used first, never
-    // THIS call's own entry (one over-budget corpus stays resident —
-    // the knob bounds the fleet), only MATERIALIZED entries are byte
-    // victims (0-byte unfilled entries free nothing and skipping
-    // them guarantees termination); entries never share a plan
-    // (distinct source dirs), so a plain unpersist is safe. An
-    // evicted corpus just re-fills on its stream's next epoch.
-    // both tiers via graft.CacheBounds — ONE copy of the policy,
-    // shared with the serving cache (round-20 review)
-    type E = (org.apache.spark.sql.DataFrame,
-      java.util.concurrent.atomic.AtomicLong)
-    def evictEntry(k: String, v: E): Boolean = {
-      val removed = streamCorpusCache.remove(k, v)
-      if (removed) {
-        v._1.unpersist(blocking = false)
-        streamCorpusEvictions.incrementAndGet()
-      }
-      removed
-    }
-    val lru = (v: E) => v._2.get()
-    graft.CacheBounds.enforceEntryCap(streamCorpusCache, ck, lru,
-      math.max(1, graft.CacheBounds.confInt(s,
-        "spark.graft.stream.corpusCacheMax", 4)),
-      evictEntry)
-    graft.CacheBounds.enforceByteBudget(streamCorpusCache, ck, lru,
-      (v: E) => org.apache.spark.sql.graft.GraftSqlShims
-        .cachedResidentBytes(v._1)
-        .map { case (m, dk) => m + dk }.getOrElse(0L) / 1e6,
-      graft.CacheBounds.confDouble(s,
-        "spark.graft.stream.corpusCacheMaxMb", 4096.0),
-      evictEntry)
-    entry._1
-  }
-
-  /** Drop the resident stream corpus for `d` (remove + unpersist) —
-    * for bench/verify queries that drive REAL epochs (v28): the
-    * residency is a long-lived maintainer's shape, but a harness
-    * query must not leave a corpus-sized persisted plan that later
-    * BATCH entries (whose contract is full recomputation) would
-    * silently read from memory, nor tax every subsequent query's
-    * storage pool. */
-  private[graft] def releaseStreamCorpus(
-      s: org.apache.spark.sql.SparkSession, d: String): Unit =
-    Option(streamCorpusCache.remove(
-      s.sparkContext.applicationId + "|" + d))
-      .foreach(_._1.unpersist(blocking = false))
-
-  /** Live stream-corpus cache keys → storage level — for the
-    * residency/eviction spec. */
-  private[graft] def streamCorpusState: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    streamCorpusCache.asScala
-      .map { case (k, (df, _)) => k -> df.storageLevel.description }
-      .toMap
+    graft.Resident.bound(s, k)
+    entry.df
   }
 
   /** The committed INSERT-FREE base graph ("knn-graph-base") — the

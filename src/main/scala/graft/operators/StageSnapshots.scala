@@ -50,17 +50,18 @@ import graft.sources.Parquet
   * duplicate build work is not prevented; coordinate builders
   * externally if that cost matters.
   */
-private[operators] object StageSnapshots {
+private[graft] object StageSnapshots {
 
-  private val snapshots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // snapshot path per (application, data dir, stage)
+  private[graft] val snapshots =
+    graft.Resident.kind[String]("stage snapshots", graft.Resident.dataDir)
   // paths this JVM created under java.io.tmpdir — the only ones the
   // shutdown sweep may delete (never warehouse-committed data files)
   private val ownedTmp = java.util.concurrent.ConcurrentHashMap
     .newKeySet[String]()
 
-  private def snapKey(s: SparkSession, d: String, what: String): String =
-    s.sparkContext.applicationId + "|" + what + "|" + d
+  private def snapKey(s: SparkSession, d: String, what: String) =
+    graft.Resident.key(s, d, what)
 
   private def warehouseRoot(s: SparkSession): Option[String] =
     s.conf.getOption("spark.graft.snapshotWarehouse").filter(_.nonEmpty)
@@ -92,10 +93,14 @@ private[operators] object StageSnapshots {
       else Nil).mkString("\n"))
   }
 
-  // fingerprints are stable for a session's lifetime (the same
-  // assumption the session-scoped map already makes about d)
-  private val fpCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // input fingerprint per (application, data dir): stable for an
+  // application's lifetime (the assumption the snapshot pointers make
+  // about d too), and scoped to it like them, so a session restarted
+  // in the same JVM fingerprints the corpus afresh — a changed corpus
+  // must never adopt the old one's snapshot.
+  private[graft] val fingerprints =
+    graft.Resident.kind[String]("input fingerprints", graft.Resident.dataDir)
+
   /** None when the input walk fails (a transient store error, an
     * unregistered scheme): adoption is an OPTIMIZATION, so a
     * fingerprint that cannot be read must disable reuse for this
@@ -105,9 +110,9 @@ private[operators] object StageSnapshots {
     * walk returned an empty — and wrong — hash). Failures are not
     * cached (a null mapping result records nothing), so the next
     * call retries the walk. */
-  private def fingerprintOf(d: String): Option[String] =
-    Option(fpCache.computeIfAbsent(d, dd =>
-      try dataFingerprint(dd)
+  private def fingerprintOf(s: SparkSession, d: String): Option[String] =
+    Option(fingerprints.getOrElseUpdate(graft.Resident.key(s, d))(
+      try dataFingerprint(d)
       catch {
         // UncheckedIOException too: the nio branch's Files.walk
         // iteration wraps a concurrent-delete NoSuchFileException in
@@ -116,7 +121,7 @@ private[operators] object StageSnapshots {
         case e @ (_: java.io.IOException |
             _: java.io.UncheckedIOException) =>
           System.err.println(s"[stage-snapshots] input fingerprint " +
-            s"unavailable for $dd (${e.getMessage}) — snapshot " +
+            s"unavailable for $d (${e.getMessage}) — snapshot " +
             "adoption disabled for this call, rebuilding")
           null
       }))
@@ -126,7 +131,7 @@ private[operators] object StageSnapshots {
     * next snapshot() call resolves through the warehouse exactly as a
     * freshly started session would. */
   private[graft] def invalidateSessionCache(): Unit = {
-    snapshots.clear(); fpCache.clear()
+    snapshots.clear(); fingerprints.clear()
   }
 
   /** Recompute `build` and (over)write the `what` snapshot; returns
@@ -143,7 +148,7 @@ private[operators] object StageSnapshots {
       case Some(root) =>
         val tdir = tableDir(root, d, what)
         val v = graft.warehouse.SnapshotTable.overwrite(s, build, tdir,
-          fingerprintOf(d).map("fp=" + _))
+          fingerprintOf(s, d).map("fp=" + _))
         // all of one commit's files share a single uuid data dir —
         // readable as ordinary parquet, so the return contract holds
         val files = graft.warehouse.SnapshotTable.dataFiles(tdir, v)
@@ -171,8 +176,7 @@ private[operators] object StageSnapshots {
     // JVM-temp dirs this process created are swept — superseded
     // WAREHOUSE versions stay on disk serving old snapshots until an
     // explicit SnapshotTable.vacuum (the retention contract).
-    if (prev != null && prev != dir && ownedTmp.contains(prev))
-      deferDelete(prev)
+    prev.filter(p => p != dir && ownedTmp.contains(p)).foreach(deferDelete)
     dir
   }
 
@@ -209,28 +213,25 @@ private[operators] object StageSnapshots {
     * commits the fresh version over the stale one. */
   def snapshot(s: SparkSession, d: String, what: String)(
       build: => DataFrame): DataFrame = {
-    val existing = snapshots.get(snapKey(s, d, what))
-    val path =
-      if (existing != null) existing
-      else {
-        val committed = warehouseRoot(s).flatMap { root =>
-          val tdir = tableDir(root, d, what)
-          fingerprintOf(d).flatMap(fp =>
-              graft.warehouse.SnapshotTable.currentMeta(tdir)
-                .filter(_ == "fp=" + fp))
-            .flatMap { _ =>
-              // an empty-manifest commit (zero part files) cannot be
-              // adopted — fall through to a rebuild instead of
-              // throwing NoSuchElement from files.head
-              graft.warehouse.SnapshotTable.dataFiles(tdir).headOption
-                .map(f => java.nio.file.Paths.get(f).getParent.toString)
-            }
-        }
-        committed match {
-          case Some(p) => snapshots.put(snapKey(s, d, what), p); p
-          case None => materialize(s, d, what)(build)
-        }
+    val path = snapshots.get(snapKey(s, d, what)).getOrElse {
+      val committed = warehouseRoot(s).flatMap { root =>
+        val tdir = tableDir(root, d, what)
+        fingerprintOf(s, d).flatMap(fp =>
+            graft.warehouse.SnapshotTable.currentMeta(tdir)
+              .filter(_ == "fp=" + fp))
+          .flatMap { _ =>
+            // an empty-manifest commit (zero part files) cannot be
+            // adopted — fall through to a rebuild instead of
+            // throwing NoSuchElement from files.head
+            graft.warehouse.SnapshotTable.dataFiles(tdir).headOption
+              .map(f => java.nio.file.Paths.get(f).getParent.toString)
+          }
       }
+      committed match {
+        case Some(p) => snapshots.put(snapKey(s, d, what), p); p
+        case None => materialize(s, d, what)(build)
+      }
+    }
     Parquet.read(s, path)
   }
 }

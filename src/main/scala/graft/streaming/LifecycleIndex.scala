@@ -402,155 +402,45 @@ object LifecycleIndex {
   val searchKnobs =
     new java.util.concurrent.atomic.AtomicReference[(Int, Int)]((0, 0))
 
-  // centroid coordinator state, ONE entry per (application, index):
-  // nlist rows (require()-bounded in the walk), replaced only when
-  // the index's RETIRED-STATE advances — the table depends solely on
-  // the dataset and the retired set, so insert/fold advances reuse it
-  // (round-17 review: the verTag-keyed form re-aggregated the corpus
-  // after every insert epoch for nothing). A long-running serving
-  // process holds exactly one live centroid table per index it
-  // serves, not one per historical version (review-caught: the
-  // version-keyed form grew heap linearly with epoch count).
-  private val centsCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[(Long, Array[Long])])]()
+  /** An index dir lives while any of its four tables has a committed
+    * CURRENT, read through the SnapshotTable control plane — never a
+    * local stat (an object-store index dir is no local directory, so a
+    * stat would drop the live entry at every sweep and recompute the
+    * corpus-sized centroid aggregation the cache exists to amortize). */
+  private val indexLive: graft.Resident.Probe = (_, dir) =>
+    Seq(baseTab(dir), edgesTab(dir), delTab(dir), retiredTab(dir))
+      .exists(committed)
 
-  /** Drop cache entries whose index no longer exists — the bench's
-    * throwaway per-sweep indexes (v28's) otherwise leave
-    * one dead nlist-row entry each for the life of the application,
-    * the same unbounded-growth class the round-14 version-keyed fix
-    * removed (round-15 advice low 3). Keys are `<appId>|<indexDir>`;
-    * a few control-plane reads per live entry per MATERIALIZE — the
-    * sweep runs at the state-change boundary, never on the warm
-    * serving path (round-17 verdict 2), and the map holds one entry
-    * per index this process serves. Liveness goes
-    * through the SnapshotTable control plane, NOT Files.isDirectory
-    * (review-caught: an object-store-addressed index dir is never a
-    * local directory, so an FS stat would evict the LIVE entry every
-    * search and silently recompute the corpus-sized centroid
-    * aggregation the cache exists to amortize): an index is live iff
-    * ANY of its four tables has a committed CURRENT. */
-  private def evictDeadIndexEntries(): Unit = {
-    // memoized per sweep: the same index dir appears in several maps
-    // (cents, corpus, retries, phases, serve mode) — without the memo
-    // one sweep probed the same CURRENT pointer once per map
-    // (round-19 read-budget trim; each probe is a store GET)
-    val liveness = scala.collection.mutable.Map.empty[String, Boolean]
-    def deadDir(dir: String): Boolean = liveness.getOrElseUpdate(dir,
-      !Seq(baseTab(dir), edgesTab(dir), delTab(dir), retiredTab(dir))
-        .exists(committed))
-    def dead(k: String): Boolean =
-      deadDir(k.substring(k.indexOf('|') + 1))
-    centsCache.keySet.removeIf(k => dead(k))
-    // the corpus cache holds PERSISTED DataFrames — dropping the map
-    // entry without unpersisting would leak the executor-side blocks
-    // for the life of the application (the very growth class this
-    // sweep exists to bound)
-    val it = corpusCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (dead(e.getKey)) {
-        it.remove()
-        unpersistUnlessShared(e.getValue._2, e.getKey)
-      }
-    }
-    // per-index observability entries (a few words each) go with
-    // their index too
-    retriesPerIndex.keySet.removeIf(dir => deadDir(dir))
-    phasesPerIndex.keySet.removeIf(dir => deadDir(dir))
-    serveModePerIndex.keySet.removeIf(dir => deadDir(dir))
-    earlyStopsPerIndex.keySet.removeIf(dir => deadDir(dir))
-  }
-
-  /** Unpersist `df` UNLESS another live corpusCache entry serves the
-    * same plan (round-17 advice): ensurePinned deliberately enables
-    * shared-plan reuse — two indexes over the same dataset with no
-    * retired set hold literally the same cached plan — and Spark's
-    * CacheManager is keyed BY PLAN, so unpersisting one handle
-    * silently strips the twin's blocks; the survivor would serve
-    * unpinned until its next search re-pins. O(corpusCacheMax) plan
-    * compares per eviction — eviction-path cost, never per search. */
-  private def unpersistUnlessShared(df: DataFrame,
-      excludeKey: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val shared = corpusCache.entrySet().asScala.exists { e =>
-      e.getKey != excludeKey && {
-        val other = e.getValue._2
-        (other eq df) || other.queryExecution.analyzed
-          .sameResult(df.queryExecution.analyzed)
-      }
-    }
-    if (!shared) df.unpersist(blocking = false)
-  }
-
-  /** Live cache keys — observability for the eviction spec. */
-  private[graft] def centsCacheKeys: Set[String] = {
-    import scala.jdk.CollectionConverters._
-    centsCache.keySet.asScala.toSet
-  }
-
-  /** Live centroid-cache keys → retired-state tag — observability
-    * for the re-key and recreation-healing specs. */
-  private[graft] def centsCacheState: Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    centsCache.asScala.map { case (k, (tag, _)) => k -> tag }.toMap
-  }
+  // centroid coordinator table per served index: nlist rows
+  // (require()-bounded in the walk), tagged with the RETIRED-STATE it
+  // was computed at and replaced only when that advances — the table
+  // depends solely on the dataset and the retired set, so insert/fold
+  // advances reuse it (round-17 review: the verTag-keyed form
+  // re-aggregated the corpus after every insert epoch for nothing).
+  private[graft] val centroids = graft.Resident
+    .kind[(String, Array[(Long, Array[Long])])]("serving centroids",
+      indexLive)
 
   // the retired-filtered quantized corpus each served index walks,
   // PERSISTED once per retired-state and probed by every hop of every
-  // search on that state (see searchAttempt). One entry per
-  // (application, index), tag = the retired-table version the entry
-  // was filtered at; replaced (old blocks unpersisted) when a delete
-  // epoch advances it, swept with the centroid cache at the
-  // state-change boundary.
-  private val corpusCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, DataFrame,
-      java.util.concurrent.atomic.AtomicLong)]()
+  // search on that state (see searchAttempt); the tag is the
+  // retired-table version@digest the entry was filtered at, replaced
+  // (old blocks unpersisted) when a delete epoch advances it.
+  private[graft] val servingCorpus =
+    graft.Resident.corpusKind("serving corpus", indexLive)
 
-  /** Drop THIS index's serving-cache entries (centroid table +
-    * persisted corpus) — for harnesses that delete a throwaway
-    * index's directory mid-application (v28). The
-    * state-change sweep would reclaim both at the next materialize,
-    * but a bench must not carry a dead index's persisted corpus
-    * blocks into unrelated queries' measurements while waiting for
-    * one. */
-  def releaseIndexCaches(spark: SparkSession, indexDir: String): Unit = {
-    val k = spark.sparkContext.applicationId + "|" + indexDir
-    centsCache.remove(k)
-    Option(corpusCache.remove(k))
-      .foreach(e => unpersistUnlessShared(e._2, k))
-    // per-index observability + the backend's per-dir read counters
-    // go with the index
-    retriesPerIndex.remove(indexDir)
-    phasesPerIndex.remove(indexDir)
-    serveModePerIndex.remove(indexDir)
-    earlyStopsPerIndex.remove(indexDir)
-    graft.warehouse.CommitBackends.releaseDir(indexDir)
-  }
-
-  /** Live corpus-cache keys → (tag, storage level) — observability
-    * for the round-17 cache-discipline spec. */
-  private[graft] def corpusCacheState: Map[String, (String, String)] = {
-    import scala.jdk.CollectionConverters._
-    corpusCache.asScala.map { case (k, (tag, df, _)) =>
-      k -> (tag, df.storageLevel.description)
-    }.toMap
-  }
-
-  /** Resident bytes (memory + disk) PER live corpus-cache entry —
-    * the number the LRU bound (`corpusCacheMax`, an entry COUNT)
-    * should be sized from (round-18 verdict 5: entry count says
-    * nothing about executor memory; the SCALE_STREAM stamps carry
-    * this per factor so the bound is set from data). Entries whose
-    * buffers are not materialized report 0; nothing here forces a
+  /** Resident bytes (memory + disk) per served index's cached corpus,
+    * keyed `<appId>|<indexDir>` — the number the corpus bound should
+    * be sized from (round-18 verdict 5: an entry count says nothing
+    * about executor memory; the SCALE_STREAM stamps carry this per
+    * factor). Unmaterialized entries report 0; nothing here forces a
     * fill. */
-  def corpusCacheResidentBytes: Map[String, Long] = {
-    import scala.jdk.CollectionConverters._
-    corpusCache.asScala.map { case (k, (_, df, _)) =>
-      k -> org.apache.spark.sql.graft.GraftSqlShims
-        .cachedResidentBytes(df).map { case (m, dk) => m + dk }
+  def corpusCacheResidentBytes: Map[String, Long] =
+    servingCorpus.entries.map { case (k, c) =>
+      s"${k.app}|${k.dir}" -> org.apache.spark.sql.graft.GraftSqlShims
+        .cachedResidentBytes(c.df).map { case (m, dk) => m + dk }
         .getOrElse(0L)
-    }.toMap
-  }
+    }
 
   /** SERVE top-3 search over the LIVE index — the user-facing verb
     * the two maintenance streams exist for. The caller's query
@@ -612,9 +502,7 @@ object LifecycleIndex {
         // consistent by the same pinning argument, and a second
         // straddle means fold turnover outpaces the serve (page the
         // operator, exactly like the double vacuum race).
-        retriesPerIndex.computeIfAbsent(indexDir,
-          _ => new java.util.concurrent.atomic.AtomicLong(0))
-          .incrementAndGet()
+        statsOf(spark, indexDir).retries.incrementAndGet()
         System.err.println("[lifecycle-search] " +
           (if (e.isInstanceOf[TornCaptureException])
             "version capture straddled a fold"
@@ -625,48 +513,45 @@ object LifecycleIndex {
         searchAttempt(spark, d, indexDir, queries, maxQ)
     }
 
-  // PER-INDEX observability (round-17 verdict 3): a process serving
-  // many indexes — the deployment the corpus LRU cache exists for —
-  // cannot attribute retries, read budgets or latency budgets with
-  // process-global atomics. Keyed by indexDir; entries are a few
-  // machine words each, dropped by releaseIndexCaches and the
-  // dead-index sweep alongside the data-sized caches.
-  private val retriesPerIndex = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.atomic.AtomicLong]()
+  /** PER-INDEX observability (round-17 verdict 3): a process serving
+    * many indexes — the deployment the corpus cache exists for —
+    * cannot attribute retries or latency budgets with process-global
+    * atomics. A few machine words per index, swept and released with
+    * the index's caches. */
+  private[graft] final class ServeStats {
+    val retries = new java.util.concurrent.atomic.AtomicLong(0)
+    // serveResolve early stops (round-19 advice 3): the verTagOlder
+    // predicate stopped the resolve scan at CURRENT. One per
+    // state-change miss is the designed behavior; a count far above
+    // the index's state-change count means resolves are early-stopping
+    // REPEATEDLY for one target — the cross-process stale/fresh
+    // overwrite interleaving that skips a retained adoptable version
+    // (spurious full rematerializes, never wrong results)
+    val earlyStops = new java.util.concurrent.atomic.AtomicLong(0)
+    @volatile var phases: Seq[(String, Double)] = Seq.empty
+    @volatile var mode = ""
+  }
 
-  private val phasesPerIndex = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(String, Double)]]()
+  private[graft] val stats =
+    graft.Resident.kind[ServeStats]("serving stats", indexLive)
 
-  /** Corpus-cache entries evicted for BYTE pressure (the round-20
-    * `corpusCacheMaxMb` budget) — process-wide, stamped per factor
-    * by StreamMaintenanceScale so the SCALE evidence shows the bound
-    * engaging rather than merely existing. */
-  val corpusCacheByteEvictions =
-    new java.util.concurrent.atomic.AtomicLong(0)
+  private def statsOf(spark: SparkSession, indexDir: String): ServeStats =
+    stats.getOrElseUpdate(graft.Resident.key(spark, indexDir))(
+      new ServeStats)
 
-  // serveResolve early stops per index (round-19 advice 3): the
-  // verTagOlder predicate stopped the resolve scan at CURRENT. One
-  // per state-change miss is the designed behavior; a count far
-  // above the index's state-change count means resolves are
-  // early-stopping REPEATEDLY for one target — the cross-process
-  // stale/fresh overwrite interleaving that skips a retained
-  // adoptable version (spurious full rematerializes, never wrong
-  // results). Stamped by StreamMaintenanceScale; entries a machine
-  // word each, swept with the other per-index observability.
-  private val earlyStopsPerIndex = new java.util.concurrent
-    .ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
+  private def statsFor(indexDir: String): Option[ServeStats] =
+    graft.Resident.activeKey(indexDir).flatMap(stats.get)
 
   /** serveResolve early stops (verTagOlder fired at CURRENT) FOR
-    * this index — see the counter's field comment for how to read
-    * it. */
+    * this index — see [[ServeStats]] for how to read it. */
   def resolveEarlyStopsFor(indexDir: String): Long =
-    Option(earlyStopsPerIndex.get(indexDir)).map(_.get()).getOrElse(0L)
+    statsFor(indexDir).map(_.earlyStops.get()).getOrElse(0L)
 
   /** Serving-race retries [[search]] absorbed FOR this index — a
     * vacuum eating pinned files mid-walk OR a fold straddling the
     * version capture (round 19); the stderr mirror names which. */
   def searchRetriesFor(indexDir: String): Long =
-    Option(retriesPerIndex.get(indexDir)).map(_.get()).getOrElse(0L)
+    statsFor(indexDir).map(_.retries.get()).getOrElse(0L)
 
   /** Wall seconds per phase of this index's LAST [[search]] attempt
     * — the serving read-path latency budget (round-17 stretch 7),
@@ -681,7 +566,7 @@ object LifecycleIndex {
     * miss), `serving_read` (manifest + plan), then the walk's own
     * phases (SimilarityQueries.lastWalkPhases). */
   def lastSearchPhasesFor(indexDir: String): Seq[(String, Double)] =
-    Option(phasesPerIndex.get(indexDir)).getOrElse(Seq.empty)
+    statsFor(indexDir).map(_.phases).getOrElse(Seq.empty)
 
   /** Control-plane reads issued against this index's five table dirs
     * — the per-index read budget, in the unit an object store bills
@@ -731,21 +616,12 @@ object LifecycleIndex {
       }
   }
 
-  private val serveModePerIndex = new java.util.concurrent.ConcurrentHashMap[
-    String, String]()
-
   /** How the last [[search]] OF THIS INDEX obtained its serving
     * snapshot — "adopt" (warm: the committed state matched), "delta"
     * (state change applied incrementally onto the previous snapshot)
-    * or "full" (complete rewrite). Keyed like the per-index
-    * phase/read budgets and dropped with them. */
+    * or "full" (complete rewrite). */
   def lastServeModeFor(indexDir: String): String =
-    Option(serveModePerIndex.get(indexDir)).getOrElse("")
-
-  private def setServeMode(indexDir: String, mode: String): Unit = {
-    serveModePerIndex.put(indexDir, mode)
-    ()
-  }
+    statsFor(indexDir).map(_.mode).getOrElse("")
 
   /** 8-hex digest of a data-file list — the serving meta's edge-
     * prefix marker (`|e<count>@<digest>`): a serving commit records
@@ -938,7 +814,7 @@ object LifecycleIndex {
       .map(_.toString).getOrElse("-")
     def orphanedTag(heldTag: String): Boolean =
       tagAge(heldTag) > tagAge(liveRetiredTag)
-    val ckCorpus = spark.sparkContext.applicationId + "|" + indexDir
+    val ck = graft.Resident.key(spark, indexDir)
     // centroid coordinator BEFORE the corpus persist (the
     // agg-over-fill hazard, same as the stream side — see
     // streamInsertEdges): a state-change recompute over the
@@ -957,11 +833,12 @@ object LifecycleIndex {
         // compute privately like a stale-state search
         SimilarityQueries.centroidTable(spark, nRaw)
       else {
-        val centsEntry = centsCache.compute(ckCorpus, (_, old) =>
-          if (old != null && (old._1 == corpusTag ||
+        val centsEntry = centroids.update(ck) {
+          case Some(old) if old._1 == corpusTag ||
               (tagAge(old._1) > tagAge(corpusTag) &&
-                !orphanedTag(old._1)))) old
-          else (corpusTag, SimilarityQueries.centroidTable(spark, nRaw)))
+                !orphanedTag(old._1)) => old
+          case _ => (corpusTag, SimilarityQueries.centroidTable(spark, nRaw))
+        }
         if (centsEntry._1 == corpusTag) centsEntry._2
         // stale-state search: compute privately, never displace the
         // newer entry (rare — the caller pinned before a delete epoch)
@@ -973,97 +850,40 @@ object LifecycleIndex {
     // unreliable tag), dropped at the end of the attempt
     var corpusFromCache = false
     val n = if (!tagReliable) nRaw else {
-      val corpusEntry = corpusCache.compute(ckCorpus, (_, old) =>
-        if (old != null && old._1 == corpusTag) {
-          // re-pin a released entry: a batch harness's
+      var rotated: Option[graft.Resident.Corpus] = None
+      val corpusEntry = servingCorpus.update(ck) {
+        case Some(old) if old.tag == corpusTag ||
+            (tagAge(old.tag) > tagAge(corpusTag) && !orphanedTag(old.tag)) =>
+          // the current entry, or a NEWER one a stale-state search
+          // must keep (see tagAge). Re-pin: a batch harness's
           // PersistRegistry.release() can uncache a plan IDENTICAL to
           // this entry's (CacheManager is keyed by plan, not by
           // Dataset) — without this the entry would silently serve
-          // unpersisted for the rest of the state's lifetime
-          PersistRegistry.ensurePinned(old._2)
-          old._3.set(System.nanoTime())
-          old
-        } else if (old != null && tagAge(old._1) > tagAge(corpusTag) &&
-            !orphanedTag(old._1)) {
-          // stale-state search: keep the newer entry (see tagAge) —
-          // but still pin and touch it (second-pass review: skipping
-          // ensurePinned left a foreign-uncached entry unpinned until
-          // the next current-tag search, and an untouched timestamp
-          // made the live entry the first LRU victim)
-          PersistRegistry.ensurePinned(old._2)
-          old._3.set(System.nanoTime())
-          old
-        } else {
-          // rotation: skip the unpersist when another live entry
-          // serves the same plan (round-17 advice — CacheManager is
-          // plan-keyed, so a blind unpersist would strip the twin's
-          // blocks and leave it serving unpinned until its next
-          // search)
-          if (old != null) unpersistUnlessShared(old._2, ckCorpus)
-          // ensurePinned consults the CacheManager BY PLAN: another
-          // index over the same dataset with no retired set yet can
-          // already hold the identical plan — reuse it instead of
-          // re-persisting (which would only log a CacheManager warn)
-          (corpusTag, PersistRegistry.ensurePinned(nRaw),
-            new java.util.concurrent.atomic.AtomicLong(System.nanoTime()))
-        })
-      // a stale-state search walks its own pinned (uncached) corpus
-      corpusFromCache = corpusEntry._1 == corpusTag
-      if (corpusFromCache) corpusEntry._2 else nRaw
-    }
-    // LRU bound on LIVE entries (adversarial-review finding: the
-    // dead-index sweep bounds nothing for a process legitimately
-    // serving MANY indexes — each entry is a data-sized persisted
-    // corpus, so without a cap the resident set grows with every
-    // index served). Entries beyond the cap are unpersisted
-    // least-recently-searched first; an evicted index's next search
-    // just re-persists (one fill), correctness unaffected.
-    // both tiers via graft.CacheBounds — ONE copy of the policy,
-    // shared with the stream corpus cache (round-20 review). The
-    // evict callback keeps this site's shared-plan guard (round-17
-    // advice: evicting one index's entry must not strip an
-    // identical-plan twin's blocks).
-    val cacheMax = math.max(1, graft.CacheBounds.confInt(spark,
-      "spark.graft.serving.corpusCacheMax", 8))
-    def evictEntry(k: String,
-        v: (String, DataFrame, java.util.concurrent.atomic.AtomicLong),
-        counted: Boolean): Boolean = {
-      val removed = corpusCache.remove(k, v)
-      if (removed) {
-        unpersistUnlessShared(v._2, k)
-        if (counted) corpusCacheByteEvictions.incrementAndGet()
+          // unpersisted. Touch: an untouched live entry would be the
+          // first LRU victim.
+          PersistRegistry.ensurePinned(old.df)
+          old.touch()
+        case old =>
+          // rotation. ensurePinned consults the CacheManager BY PLAN:
+          // another index over the same dataset with no retired set
+          // yet can already hold the identical plan — reuse it
+          // instead of re-persisting (which would only log a warn)
+          rotated = old
+          new graft.Resident.Corpus(corpusTag,
+            PersistRegistry.ensurePinned(nRaw))
       }
-      removed
+      rotated.foreach(c => graft.Resident.unpersistUnlessHeld(c.df))
+      // a stale-state search walks its own pinned (uncached) corpus
+      corpusFromCache = corpusEntry.tag == corpusTag
+      if (corpusFromCache) corpusEntry.df else nRaw
     }
-    graft.CacheBounds.enforceEntryCap(corpusCache, ckCorpus,
-      (v: (String, DataFrame, java.util.concurrent.atomic.AtomicLong)) =>
-        v._3.get(),
-      cacheMax, evictEntry(_, _, counted = false))
-    // BYTE budget over the same LRU order (round-19 verdict 2: an
-    // entry COUNT admits unbounded executor memory — each entry is a
-    // corpus-sized persisted DataFrame, and round 19 measured it
-    // growing 1.1 → 215 MB/entry from 1× to 200× corpus scale, so
-    // the bound a deployment actually needs is in bytes). Resident
-    // bytes come from the CacheManager without forcing a fill
-    // (GraftSqlShims.cachedResidentBytes): an entry persisted but
-    // not yet materialized reports 0 and is never chosen as a byte
-    // victim — its bytes land only once a search scans it, and the
-    // next search's pass here sees them. This search's own entry
-    // counts toward the total (it is resident) but is never evicted;
-    // a single over-budget corpus therefore stays cached — the knob
-    // bounds the FLEET of entries, it cannot make one index
-    // serveable in less memory than its corpus. 0 disables the byte
-    // bound (the entry cap above still applies).
-    graft.CacheBounds.enforceByteBudget(corpusCache, ckCorpus,
-      (v: (String, DataFrame, java.util.concurrent.atomic.AtomicLong)) =>
-        v._3.get(),
-      (v: (String, DataFrame, java.util.concurrent.atomic.AtomicLong)) =>
-        org.apache.spark.sql.graft.GraftSqlShims
-          .cachedResidentBytes(v._2)
-          .map { case (m, dk) => m + dk }.getOrElse(0L) / 1e6,
-      graft.CacheBounds.confDouble(spark,
-        "spark.graft.serving.corpusCacheMaxMb", 4096.0),
-      evictEntry(_, _, counted = true))
+    // bound the persisted corpora of the whole process (an entry cap
+    // and a byte budget, LRU): the dead-index sweep bounds nothing for
+    // a process legitimately serving MANY indexes, each entry a
+    // data-sized persisted corpus (round 19 measured 1.1 → 215
+    // MB/entry from 1× to 200× corpus scale). This search's own entry
+    // is never evicted; an evicted index's next search re-persists.
+    graft.Resident.bound(spark, ck)
     val sTab = servingTab(indexDir)
     // PINNED serving read (round-14 advice): resolve the serving
     // version whose meta equals THIS search's verTag and read exactly
@@ -1101,9 +921,7 @@ object LifecycleIndex {
     // verTagOlder's doc accepts
     if (svr.matched.isEmpty &&
         svr.curMeta.exists(m => verTagOlder(m, servingMeta)))
-      earlyStopsPerIndex.computeIfAbsent(indexDir,
-        _ => new java.util.concurrent.atomic.AtomicLong(0))
-        .incrementAndGet()
+      statsOf(spark, indexDir).earlyStops.incrementAndGet()
     lap("version_resolve")
     // manifests this attempt holds in hand, keyed by version — grown
     // by the materialize paths, consumed by the pinned sweep and the
@@ -1352,7 +1170,7 @@ object LifecycleIndex {
       // serving hot path growing with every index the process ever
       // served. A WARM search now does a constant number of
       // control-plane reads (spec-pinned in Round17Spec).
-      evictDeadIndexEntries()
+      graft.Resident.sweep(spark)
       // the serving snapshot stores the SYMMETRIZED graph (round-17
       // serving budget): the walk needs reverse edges, and computing
       // union+distinct here — once per index state — removes a
@@ -1379,9 +1197,9 @@ object LifecycleIndex {
       subLap("mat_guard")
       val (v, vFiles) = deltaRes match {
         case Some((dv, dvFiles)) =>
-          setServeMode(indexDir, "delta"); (dv, dvFiles)
+          statsOf(spark, indexDir).mode = "delta"; (dv, dvFiles)
         case None =>
-          setServeMode(indexDir, "full")
+          statsOf(spark, indexDir).mode = "full"
           // record the edge-prefix marker (edgeSuffix) so the NEXT
           // state's delta serve derives its diff from one manifest
           // read — this one read funds the steady-state path's
@@ -1437,7 +1255,7 @@ object LifecycleIndex {
       phT = System.nanoTime() // materialize billed to its own phase
       (v, vFiles)
     }
-    svr.matched.foreach(_ => setServeMode(indexDir, "adopt"))
+    svr.matched.foreach(_ => statsOf(spark, indexDir).mode = "adopt")
     val (sv, svFiles) = svr.matched match {
       case Some(m) => (m, svr.manifests(m))
       case None =>
@@ -1454,7 +1272,7 @@ object LifecycleIndex {
               verTagOlder, acceptServing)
             again.matched match {
               case Some(m) =>
-                setServeMode(indexDir, "adopt")
+                statsOf(spark, indexDir).mode = "adopt"
                 (m, again.manifests(m))
               case None => throw e
             }
@@ -1500,9 +1318,9 @@ object LifecycleIndex {
     // (second-pass review: one leaked data-sized persist per backward
     // race under sustained delete turnover). Shared-plan-guarded: an
     // identical plan held by a live cache entry keeps its blocks.
-    if (!corpusFromCache) unpersistUnlessShared(nRaw, "")
+    if (!corpusFromCache) graft.Resident.unpersistUnlessHeld(nRaw)
     val allPhases = phases.toSeq ++ SimilarityQueries.lastWalkPhases.get()
-    phasesPerIndex.put(indexDir, allPhases)
+    statsOf(spark, indexDir).phases = allPhases
     res
   }
 
@@ -1607,8 +1425,9 @@ object LifecycleIndex {
     * table's version is captured BEFORE the derivation and each
     * commit is PINNED to it (SnapshotTable.overwriteFrom, optimistic
     * CAS) — an interleaved epoch commit makes the fold throw
-    * IllegalStateException with nothing clobbered; retry in a quiet
-    * window (the auto-fold paths retry at their next trigger).
+    * SnapshotTable.CommitConflictException with nothing clobbered;
+    * retry in a quiet window (the auto-fold paths retry at their next
+    * trigger).
     *
     * Crash/abort recovery is BY CONSTRUCTION via the fold cut (class
     * doc): a fold that died between its base commit and the delta
@@ -1733,7 +1552,7 @@ object LifecycleIndex {
           SnapshotTable.read(spark, rTab, v).distinct().repartition(1),
           rTab, Some(v), Some("retired-compaction"))
         catch {
-          case e: IllegalStateException =>
+          case e: SnapshotTable.CommitConflictException =>
             System.err.println(s"[lifecycle-fold] retired compaction " +
               s"deferred (concurrent commit): ${e.getMessage}")
         }

@@ -265,7 +265,7 @@ object StreamMaintenanceScale {
           Files.createTempDirectory(s"graft-smsc-idx2-x$f-").toString
         LifecycleIndex.bootstrap(spark, idx2, graft.operators
           .SimilarityQueries.insertFreeBaseGraph(spark, base))
-        val ev0 = LifecycleIndex.corpusCacheByteEvictions.get()
+        val ev0 = graft.Resident.byteEvictions.get()
         val bound = residentMb / 2
         // Double.toString, never an f-interpolation: the f"" formatter
         // is default-locale, and a comma-decimal locale would render a
@@ -277,8 +277,8 @@ object StreamMaintenanceScale {
         step("cache_evict_drill",
           // s-interpolation throughout: f"%d" localizes digits like
           // f"%f" localizes the decimal separator (round-20 review)
-          s""","byte_evictions":${LifecycleIndex
-              .corpusCacheByteEvictions.get() - ev0},""" +
+          s""","byte_evictions":${
+              graft.Resident.byteEvictions.get() - ev0},""" +
           s""""bound_mb":${math.round(bound * 10) / 10.0},""" +
           s""""resident_before_mb":${math.round(residentMb * 10) / 10.0}""") {
           LifecycleIndex.search(spark, base, idx2, queries)
@@ -286,7 +286,7 @@ object StreamMaintenanceScale {
         }
         spark.conf.set("spark.graft.serving.corpusCacheMaxMb", "4096")
         serve("search_refill", phases = false)
-        LifecycleIndex.releaseIndexCaches(spark, idx2)
+        graft.Resident.release(idx2)
       }
     }
     sys.env.get("SPARK_GRAFT_STREAM_SCALE_JSON").filter(_.nonEmpty)

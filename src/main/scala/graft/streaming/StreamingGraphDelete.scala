@@ -152,7 +152,7 @@ object StreamingGraphDelete {
     if (cum > foldAt) {
       try LifecycleIndex.foldTombstones(spark, d, indexDir)
       catch {
-        case e: IllegalStateException =>
+        case e: SnapshotTable.CommitConflictException =>
           System.err.println(s"[stream-delete] auto-fold deferred " +
             s"(concurrent commit on the index): ${e.getMessage}")
       }

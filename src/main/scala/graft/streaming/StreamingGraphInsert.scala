@@ -160,7 +160,7 @@ object StreamingGraphInsert {
     if (sinceFold >= foldEvery) {
       try LifecycleIndex.foldTombstones(spark, d, indexDir)
       catch {
-        case e: IllegalStateException =>
+        case e: SnapshotTable.CommitConflictException =>
           System.err.println(s"[stream-insert] auto-fold deferred " +
             s"(concurrent commit on the index): ${e.getMessage}")
       }

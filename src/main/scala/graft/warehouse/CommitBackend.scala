@@ -229,7 +229,7 @@ object CommitBackends {
   // `<tableDir>/_versions/<object>`, so the dir key falls out of the
   // path itself; entries are one AtomicLong per table dir ever read
   // and are dropped with the table's other per-dir bookkeeping
-  // (releaseDir, called from LifecycleIndex.releaseIndexCaches).
+  // (releaseDir, called from graft.Resident's release and sweep).
   private val perDirReads = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.atomic.AtomicLong]()
 
@@ -267,15 +267,15 @@ object CommitBackends {
   }
 
   /** Whether table dir `d` lies in the tree rooted at `dirPrefix`. */
-  private[warehouse] def under(dirPrefix: String)(d: String): Boolean =
+  private[graft] def under(dirPrefix: String)(d: String): Boolean =
     d == dirPrefix || d.startsWith(dirPrefix + "/")
 
   /** Drop the per-dir process state of a dropped table tree: the read
-    * counters above and SnapshotTable's cached TRIMFLOORs. Callers
-    * that delete a table's directory (bench sweeps, index drops)
-    * release here; a live table re-counts and re-resolves its floor
-    * on its next touch. */
-  def releaseDir(dirPrefix: String): Unit = {
+    * counters above and SnapshotTable's cached TRIMFLOORs. Reached
+    * through graft.Resident.release (and its sweep of dead dirs), so
+    * a dropped dir's state goes in one call; a live table re-counts
+    * and re-resolves its floor on its next touch. */
+  private[graft] def releaseDir(dirPrefix: String): Unit = {
     perDirReads.keySet.removeIf(under(dirPrefix))
     SnapshotTable.forgetTrimFloors(dirPrefix)
   }

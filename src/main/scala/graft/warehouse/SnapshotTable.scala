@@ -44,6 +44,15 @@ import CommitBackends.{str, utf8}
   */
 object SnapshotTable {
 
+  /** A commit that lost to another writer — its file list was derived
+    * from a version that is no longer CURRENT (pinned-stale), or
+    * another commit took its version (collision) — with nothing
+    * published. Re-deriving and retrying is the remedy, so this is the
+    * one failure the auto-fold paths defer; any other
+    * IllegalStateException (a ghost meta, a corrupt state) propagates. */
+  final class CommitConflictException(msg: String)
+      extends IllegalStateException(msg)
+
   private def be(dir: String): CommitBackend =
     CommitBackends.counted(CommitBackends.forDir(dir))
 
@@ -460,7 +469,7 @@ object SnapshotTable {
       // verdict 1: one control RTT per state-change serve).
       if (observedCurrent.isEmpty &&
           pinnedVersion.exists(_ <= currentVersion(dir).getOrElse(-1)))
-        throw new IllegalStateException(
+        throw new CommitConflictException(
           s"pinned commit to $dir at version $v is stale — the table " +
           s"has moved past it (CURRENT=${currentVersion(dir).get}); " +
           "re-derive from the current version and retry")
@@ -496,7 +505,7 @@ object SnapshotTable {
         if (currentVersion(dir).getOrElse(-1) >= v) {
           backend.deleteIfMatches(manifestPath(dir, v), utf8(manifestBody))
           if (!retryOnCollision)
-            throw new IllegalStateException(
+            throw new CommitConflictException(
               s"commit to $dir at version $v is stale — the version " +
               "was already published and its manifest expired by a " +
               "retention sweep; this commit's file list was derived " +
@@ -569,7 +578,7 @@ object SnapshotTable {
         // reclaim grace.
         val onDisk = backend.readIfExists(manifestPath(dir, v)).map(str)
         if (!onDisk.contains(manifestBody))
-          throw new IllegalStateException(
+          throw new CommitConflictException(
             s"commit to $dir at version $v lost its manifest to a " +
             "reclaiming collider while stalled — nothing was " +
             "published; retry the operation")
@@ -587,7 +596,7 @@ object SnapshotTable {
             backend.deleteIfMatches(metaPath(dir, v), utf8(m)); ()
           }
           backend.deleteIfMatches(manifestPath(dir, v), utf8(manifestBody))
-          throw new IllegalStateException(
+          throw new CommitConflictException(
             s"pinned commit to $dir at version $v went stale between " +
             s"claim and publish (CURRENT=${currentVersion(dir).get} " +
             "moved past it; the slot had been vacated by a retention " +
@@ -606,14 +615,14 @@ object SnapshotTable {
           reclaims += 1 // retry the same version immediately
         } else {
           if (!retryOnCollision)
-            throw new IllegalStateException(
+            throw new CommitConflictException(
               s"concurrent commit collision on $dir at version $v — " +
               "this commit's file list was derived from a version that " +
               "is no longer CURRENT (retrying would lose the winning " +
               "commit's rows); this table is single-writer, coordinate " +
               "writers externally")
           if (attempt >= maxRetries)
-            throw new IllegalStateException(
+            throw new CommitConflictException(
               s"concurrent commits to $dir exceeded $maxRetries version " +
               "collisions — this table is single-writer; coordinate " +
               "writers externally")
@@ -640,7 +649,7 @@ object SnapshotTable {
     // forward, no collision thrown. The table is single-writer by
     // contract, but a violated contract must fail loudly (the file's
     // own guarantee); the pin turns that window into the same loud
-    // IllegalStateException as every other base-dependent commit.
+    // CommitConflictException as every other base-dependent commit.
     val base = currentVersion(dir)
     val prev = base.map(manifestFiles(dir, _)).getOrElse(Seq.empty)
     commit(dir, prev ++ writeData(df, dir), meta,
@@ -662,7 +671,7 @@ object SnapshotTable {
     * exist yet), so the commit claims exactly version expected+1 and
     * NEVER retries — any interleaved commit (a streaming epoch's
     * append, another maintenance pass) that moved the table first
-    * makes this throw IllegalStateException instead of silently
+    * makes this throw CommitConflictException instead of silently
     * clobbering the interleaved rows. This is the multi-table fold's
     * in-flight guard (LifecycleIndex.foldTombstones, round-13
     * advice): a fold racing a live epoch fails loudly and is retried
@@ -685,7 +694,7 @@ object SnapshotTable {
     * (the serving table's incremental materialize: the delta is
     * correct only relative to the version it was diffed against).
     * The stale-parent contract is enforced by the pinned CAS itself:
-    * an interleaved commit throws IllegalStateException with nothing
+    * an interleaved commit throws CommitConflictException with nothing
     * clobbered (the claim of expected+1 fails loudly, and the
     * vacated-slot + pinned-stale checks cover an expired slot); the
     * caller re-derives (typically falling back to a full overwrite).

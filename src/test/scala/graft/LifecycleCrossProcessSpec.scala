@@ -65,17 +65,7 @@ class LifecycleCrossProcessSpec extends AnyFunSuite {
       .map(_.toSeq.toDF("vec_id")).toSeq
   }
 
-  // a forked Spark child needs the same JDK-17 module opens the test
-  // JVM itself runs with (build.sbt's javaOptions)
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+  private val addOpens = ChildJvm.addOpens
 
   test("a SECOND PROCESS folding the index while this one streams " +
       "epochs: collisions are loud on both sides, every epoch applies " +

@@ -56,7 +56,7 @@ class LifecycleJobBudgetSpec extends AnyFunSuite {
         s"delete-state materialize ran $materialize jobs")
       assert(fold.jobs <= FoldBudget, s"fold ran ${fold.jobs} jobs")
     } finally {
-      LifecycleIndex.releaseIndexCaches(spark, idx)
+      Resident.release(idx)
       PersistRegistry.release()
     }
   }

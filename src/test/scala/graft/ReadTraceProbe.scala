@@ -60,7 +60,7 @@ object ReadTraceProbe {
     traced("delta2") {
       LifecycleIndex.search(spark, sf, idx, searchQueries).count()
     }
-    LifecycleIndex.releaseIndexCaches(spark, idx)
+    Resident.release(idx)
     spark.stop()
   }
 }

@@ -273,7 +273,7 @@ class Round16Spec extends AnyFunSuite {
     val dead = (1 to 2).map { _ =>
       val idx = freshIndex()
       LifecycleIndex.search(spark, sf, idx, searchQueries).count()
-      assert(LifecycleIndex.centsCacheKeys.exists(_.endsWith(idx)),
+      assert(LifecycleIndex.centroids.entries.keySet.exists(_.dir == idx),
         "a served index must hold a centroid entry")
       deleteRec(idx)
       idx
@@ -281,7 +281,7 @@ class Round16Spec extends AnyFunSuite {
     // the next search on a LIVE index sweeps the dead entries
     val live = freshIndex()
     LifecycleIndex.search(spark, sf, live, searchQueries).count()
-    val keys = LifecycleIndex.centsCacheKeys
+    val keys = LifecycleIndex.centroids.entries.keySet.map(_.dir)
     assert(dead.forall(d => !keys.exists(_.endsWith(d))),
       s"dead index entries survived eviction: $keys")
     assert(keys.exists(_.endsWith(live)),
@@ -311,7 +311,7 @@ class Round16Spec extends AnyFunSuite {
       .filter(SimilarityQueries.v21BatchFilter)
       .select("vec_id", "embedding", "label")
     StreamingGraphInsert.insertEpoch(spark, batch, corp, idx, 0L)
-    assert(SimilarityQueries.streamCentsCacheKeys
+    assert(SimilarityQueries.streamCentroids.entries.keySet.map(_.dir)
       .exists(_.contains(corp)),
       "an insert epoch must hold its corpus's quantizer entry")
     deleteRec(corp)
@@ -320,7 +320,7 @@ class Round16Spec extends AnyFunSuite {
     LifecycleIndex.bootstrap(spark, idx2,
       SimilarityQueries.insertFreeBaseGraph(spark, sf))
     StreamingGraphInsert.insertEpoch(spark, insBatch, sf, idx2, 0L)
-    val keys = SimilarityQueries.streamCentsCacheKeys
+    val keys = SimilarityQueries.streamCentroids.entries.keySet.map(_.dir)
     assert(!keys.exists(_.contains(corp)),
       s"dead corpus entry survived eviction: $keys")
     assert(keys.exists(_.contains(sf)),

@@ -76,7 +76,7 @@ class Round17Spec extends AnyFunSuite {
     Seq(freshIndex(), freshIndex()).foreach { idx =>
       LifecycleIndex.search(spark, sf, idx, searchQueries).count()
     }
-    assert(LifecycleIndex.centsCacheKeys.size >= 3,
+    assert(LifecycleIndex.centroids.entries.size >= 3,
       "the cache must actually hold the three served indexes")
     val (warm2, warm2g) = reads {
       LifecycleIndex.search(spark, sf, a, searchQueries).count()

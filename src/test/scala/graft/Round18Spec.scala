@@ -176,7 +176,7 @@ class Round18Spec extends AnyFunSuite {
         s"retained manifests' (expired states unswept?): " +
         s"disk-extra=${onDisk -- retained}, " +
         s"missing=${retained -- onDisk}")
-      LifecycleIndex.releaseIndexCaches(spark, gfsIdx)
+      Resident.release(gfsIdx)
     } finally {
       CommitBackends.unregister("graftfs:" + localRoot)
       prevGrace match {
@@ -229,7 +229,7 @@ class Round18Spec extends AnyFunSuite {
       val curFiles = SnapshotTable.dataFiles(sTab, cur).toSet
       assert(prevFiles.subsetOf(curFiles),
         "the delta state must reuse the previous snapshot's files")
-      LifecycleIndex.releaseIndexCaches(spark, b)
+      Resident.release(b)
     }
     // a delete epoch breaks set-monotonicity — the guard must decline
     StreamingGraphDelete.deleteEpoch(spark,
@@ -237,7 +237,7 @@ class Round18Spec extends AnyFunSuite {
     LifecycleIndex.search(spark, sf, a, searchQueries).count()
     assert(LifecycleIndex.lastServeModeFor(a) === "full",
       "pending tombstones must force the full rewrite")
-    LifecycleIndex.releaseIndexCaches(spark, a)
+    Resident.release(a)
     PersistRegistry.release()
   }
 
@@ -306,10 +306,10 @@ class Round18Spec extends AnyFunSuite {
     assert(LifecycleIndex.searchRetriesFor(a) === 0L &&
       LifecycleIndex.searchRetriesFor(b) === 0L)
     // release drops the per-index bookkeeping (counters)
-    LifecycleIndex.releaseIndexCaches(spark, a)
+    Resident.release(a)
     assert(LifecycleIndex.controlPlaneReadsFor(a) === 0L)
     assert(LifecycleIndex.lastSearchPhasesFor(a).isEmpty)
-    LifecycleIndex.releaseIndexCaches(spark, b)
+    Resident.release(b)
     PersistRegistry.release()
   }
 
@@ -331,23 +331,24 @@ class Round18Spec extends AnyFunSuite {
       val b = freshIndex()
       val rowsA = searchRows(
         LifecycleIndex.search(spark, sf, a, searchQueries))
-      val keyB = spark.sparkContext.applicationId + "|" + b
+      val keyB = Resident.key(spark, b)
       val rowsB = searchRows(
         LifecycleIndex.search(spark, sf, b, searchQueries))
       // serving b evicted a's entry (cap 1) — before the guard, that
       // unpersist stripped the shared plan's blocks and b's entry
       // silently served unpinned
-      val st = LifecycleIndex.corpusCacheState
+      val st = LifecycleIndex.servingCorpus.entries
+      val level = st(keyB).df.storageLevel.description
       assert(st.keySet === Set(keyB), s"LRU must keep only b: $st")
-      assert(st(keyB)._2.toLowerCase.contains("memory"),
+      assert(level.toLowerCase.contains("memory"),
         s"evicting a's entry stripped b's shared-plan blocks: " +
-        s"level '${st(keyB)._2}'")
+        s"level '$level'")
       assert(searchRows(LifecycleIndex.search(spark, sf, a,
         searchQueries)) === rowsA)
       assert(searchRows(LifecycleIndex.search(spark, sf, b,
         searchQueries)) === rowsB)
-      LifecycleIndex.releaseIndexCaches(spark, a)
-      LifecycleIndex.releaseIndexCaches(spark, b)
+      Resident.release(a)
+      Resident.release(b)
     } finally {
       prev match {
         case Some(v) =>
@@ -406,19 +407,19 @@ class Round18Spec extends AnyFunSuite {
       assert(LifecycleIndex.searchRetriesFor(idx) === r0 + 1,
         "exactly one retry must be absorbed before propagating")
       hiding.armed = false
-      val key = spark.sparkContext.applicationId + "|" + idx
-      assert(!LifecycleIndex.corpusCacheState.contains(key),
+      val key = Resident.key(spark, idx)
+      assert(!LifecycleIndex.servingCorpus.entries.contains(key),
         "a failed pin must never poison the corpus cache")
-      assert(!LifecycleIndex.centsCacheState.contains(key),
+      assert(!LifecycleIndex.centroids.entries.contains(key),
         "a failed pin must never poison the centroid cache")
       // healed: the manifest is readable again — correct rows, cached
       assert(searchRows(LifecycleIndex.search(spark, sf, idx,
         searchQueries)) === want)
-      assert(LifecycleIndex.corpusCacheState.contains(key))
+      assert(LifecycleIndex.servingCorpus.entries.contains(key))
     } finally {
       CommitBackends.unregister(rTab)
-      LifecycleIndex.releaseIndexCaches(spark, idx)
-      LifecycleIndex.releaseIndexCaches(spark, twin)
+      Resident.release(idx)
+      Resident.release(twin)
       PersistRegistry.release()
     }
   }

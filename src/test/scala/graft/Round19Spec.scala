@@ -92,7 +92,7 @@ class Round19Spec extends AnyFunSuite {
     assert(full <= 24 && delta2 <= 20,
       s"gross budget regression: full=$full delta2=$delta2 " +
       s"(round-19 measured full=16, delta=15, warm=6)")
-    LifecycleIndex.releaseIndexCaches(spark, idx)
+    Resident.release(idx)
     PersistRegistry.release()
   }
 
@@ -113,9 +113,9 @@ class Round19Spec extends AnyFunSuite {
     assert(LifecycleIndex.lastServeModeFor(b) === "full")
     assert(LifecycleIndex.lastServeModeFor(a) === "adopt",
       "index b's materialize clobbered index a's serve mode")
-    LifecycleIndex.releaseIndexCaches(spark, a)
+    Resident.release(a)
     assert(LifecycleIndex.lastServeModeFor(a) === "")
-    LifecycleIndex.releaseIndexCaches(spark, b)
+    Resident.release(b)
     PersistRegistry.release()
   }
 
@@ -132,7 +132,7 @@ class Round19Spec extends AnyFunSuite {
         "an over-budget epoch must take the full rewrite")
       assert(rows.nonEmpty)
     } finally spark.conf.unset("spark.graft.serving.deltaMaxBytes")
-    LifecycleIndex.releaseIndexCaches(spark, a)
+    Resident.release(a)
     PersistRegistry.release()
   }
 
@@ -349,7 +349,7 @@ class Round19Spec extends AnyFunSuite {
         "the straddled serve's rows diverged from the clean serve")
     } finally {
       LifecycleIndex.midCaptureTestHook = None
-      LifecycleIndex.releaseIndexCaches(spark, a)
+      Resident.release(a)
       PersistRegistry.release()
     }
   }
@@ -381,7 +381,7 @@ class Round19Spec extends AnyFunSuite {
         "clean graph")
     } finally {
       LifecycleIndex.midCaptureTestHook = None
-      LifecycleIndex.releaseIndexCaches(spark, a)
+      Resident.release(a)
       PersistRegistry.release()
     }
   }
@@ -410,14 +410,6 @@ class Round19Spec extends AnyFunSuite {
       "check must consult ALL committed metas, not just the pointer")
   }
 
-  test("zorderLayout on an empty input returns it unchanged instead " +
-      "of NPEing on the null max row") {
-    import spark.implicits._
-    val empty = Seq.empty[(Long, Long)].toDF("a", "b")
-    assert(graft.warehouse.LayoutOps
-      .zorderLayout(empty, 2, "a", "b").count() === 0)
-  }
-
   test("the serving meta's edge-prefix marker survives a round trip: " +
       "a delta state's meta carries |e<count>@<digest> and the next " +
       "delta derives its diff from it (no previous-manifest read), " +
@@ -442,7 +434,7 @@ class Round19Spec extends AnyFunSuite {
     LifecycleIndex.search(spark, sf, a, searchQueries).count()
     assert(LifecycleIndex.lastServeModeFor(a) === "full",
       "a rewritten edges manifest must fail the prefix digest")
-    LifecycleIndex.releaseIndexCaches(spark, a)
+    Resident.release(a)
     PersistRegistry.release()
   }
 }

@@ -97,7 +97,7 @@ class Round20Spec extends AnyFunSuite {
     assert(postFold <= 17, s"post-fold full-serve read budget " +
       s"regressed: $postFold reads (r19 measured 17) —\n  " +
       pfPaths.mkString("\n  "))
-    LifecycleIndex.releaseIndexCaches(spark, idx)
+    Resident.release(idx)
     PersistRegistry.release()
   }
 
@@ -113,32 +113,35 @@ class Round20Spec extends AnyFunSuite {
     val a = freshIndex()
     val before = searchRows(
       LifecycleIndex.search(spark, sf, a, searchQueries))
-    assert(LifecycleIndex.corpusCacheState.contains(s"$appId|$a"),
+    assert(LifecycleIndex.servingCorpus.entries.contains(
+      Resident.key(spark, a)),
       "index A's serving corpus must be cached after its search")
     val aResident = LifecycleIndex.corpusCacheResidentBytes
       .getOrElse(s"$appId|$a", 0L)
     assert(aResident > 0L,
       "A's entry must have materialized resident bytes to size from")
     val b = freshIndex()
-    val ev0 = LifecycleIndex.corpusCacheByteEvictions.get()
+    val ev0 = Resident.byteEvictions.get()
     // bound well below A's resident bytes: serving B must evict A
     spark.conf.set("spark.graft.serving.corpusCacheMaxMb",
       (aResident / 1e6 / 2).toString)
     try {
       LifecycleIndex.search(spark, sf, b, searchQueries).count()
-      assert(LifecycleIndex.corpusCacheByteEvictions.get() > ev0,
+      assert(Resident.byteEvictions.get() > ev0,
         "the byte bound must have engaged (eviction counter)")
-      assert(!LifecycleIndex.corpusCacheState.contains(s"$appId|$a"),
+      assert(!LifecycleIndex.servingCorpus.entries.contains(
+        Resident.key(spark, a)),
         "A's entry (least recently searched) must be evicted")
-      assert(LifecycleIndex.corpusCacheState.contains(s"$appId|$b"),
+      assert(LifecycleIndex.servingCorpus.entries.contains(
+        Resident.key(spark, b)),
         "a search's OWN entry is never a byte victim")
       // correctness unaffected: A re-fills on its next search
       assert(searchRows(LifecycleIndex.search(
         spark, sf, a, searchQueries)) === before)
     } finally {
       spark.conf.set("spark.graft.serving.corpusCacheMaxMb", "4096")
-      LifecycleIndex.releaseIndexCaches(spark, a)
-      LifecycleIndex.releaseIndexCaches(spark, b)
+      Resident.release(a)
+      Resident.release(b)
       PersistRegistry.release()
     }
   }
@@ -159,32 +162,33 @@ class Round20Spec extends AnyFunSuite {
       Paths.get(s"$d2/embeddings.parquet"))
     try {
       SimilarityQueries.streamCorpus(spark, sf).count() // materialize
-      val kA = spark.sparkContext.applicationId + "|" + sf
-      val kB = spark.sparkContext.applicationId + "|" + d2
-      assert(SimilarityQueries.streamCorpusState.contains(kA))
-      val ev0 = SimilarityQueries.streamCorpusEvictions.get()
+      val kA = Resident.key(spark, sf)
+      val kB = Resident.key(spark, d2)
+      def held = SimilarityQueries.streamCorpora.entries
+      assert(held.contains(kA))
+      val ev0 = Resident.byteEvictions.get()
       // byte budget: far below A's resident bytes → serving B's
       // stream must evict A, never B itself
-      spark.conf.set("spark.graft.stream.corpusCacheMaxMb", "0.0001")
+      spark.conf.set("spark.graft.serving.corpusCacheMaxMb", "0.0001")
       SimilarityQueries.streamCorpus(spark, d2).count()
-      assert(SimilarityQueries.streamCorpusEvictions.get() > ev0,
+      assert(Resident.byteEvictions.get() > ev0,
         "the byte bound must engage")
-      assert(!SimilarityQueries.streamCorpusState.contains(kA),
+      assert(!held.contains(kA),
         "A (LRU, materialized) must be the victim")
-      assert(SimilarityQueries.streamCorpusState.contains(kB),
+      assert(held.contains(kB),
         "the caller's own entry is never a byte victim")
       // entry cap: cap 1 → a third fetch (A again) evicts B
-      spark.conf.set("spark.graft.stream.corpusCacheMaxMb", "4096")
-      spark.conf.set("spark.graft.stream.corpusCacheMax", "1")
+      spark.conf.set("spark.graft.serving.corpusCacheMaxMb", "4096")
+      spark.conf.set("spark.graft.serving.corpusCacheMax", "1")
       SimilarityQueries.streamCorpus(spark, sf).count()
-      assert(!SimilarityQueries.streamCorpusState.contains(kB),
+      assert(!held.contains(kB),
         "the entry cap must evict beyond the count")
-      assert(SimilarityQueries.streamCorpusState.contains(kA))
+      assert(held.contains(kA))
     } finally {
-      spark.conf.set("spark.graft.stream.corpusCacheMax", "4")
-      spark.conf.set("spark.graft.stream.corpusCacheMaxMb", "4096")
-      SimilarityQueries.releaseStreamCorpus(spark, sf)
-      SimilarityQueries.releaseStreamCorpus(spark, d2)
+      spark.conf.unset("spark.graft.serving.corpusCacheMax")
+      spark.conf.set("spark.graft.serving.corpusCacheMaxMb", "4096")
+      SimilarityQueries.streamCorpora.remove(Resident.key(spark, sf))
+      SimilarityQueries.streamCorpora.remove(Resident.key(spark, d2))
       PersistRegistry.release()
     }
   }
@@ -206,7 +210,7 @@ class Round20Spec extends AnyFunSuite {
     LifecycleIndex.search(spark, sf, idx, searchQueries).count()
     assert(LifecycleIndex.resolveEarlyStopsFor(idx) === 1L,
       "a warm adopt must not early-stop")
-    LifecycleIndex.releaseIndexCaches(spark, idx)
+    Resident.release(idx)
     PersistRegistry.release()
   }
 

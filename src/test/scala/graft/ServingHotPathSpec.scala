@@ -122,25 +122,26 @@ class ServingHotPathSpec extends AnyFunSuite {
       "unpersisted, not leaked)") {
     val idx = freshIndex()
     LifecycleIndex.search(spark, sf, idx, searchQueries).count()
-    val key = spark.sparkContext.applicationId + "|" + idx
-    val st0 = LifecycleIndex.corpusCacheState(key)
-    assert(st0._1 === "-", "no delete epoch yet: tag must be '-'")
-    assert(st0._2.toLowerCase.contains("memory"),
-      s"corpus entry must be persisted, got level '${st0._2}'")
+    val key = Resident.key(spark, idx)
+    val st0 = LifecycleIndex.servingCorpus.entries(key)
+    val level = st0.df.storageLevel.description
+    assert(st0.tag === "-", "no delete epoch yet: tag must be '-'")
+    assert(level.toLowerCase.contains("memory"),
+      s"corpus entry must be persisted, got level '$level'")
     // an INSERT epoch advances vI but not the retired set — the
     // cached corpus must survive (no unpersist/re-persist churn)
     StreamingGraphInsert.insertEpoch(spark,
       emb.filter(SimilarityQueries.v21BatchFilter)
         .select("vec_id", "embedding", "label"), sf, idx, 0L)
     LifecycleIndex.search(spark, sf, idx, searchQueries).count()
-    assert(LifecycleIndex.corpusCacheState(key)._1 === "-",
+    assert(LifecycleIndex.servingCorpus.entries(key).tag === "-",
       "insert epoch must not rotate the corpus cache entry")
     // DELETE epochs advance the retired set: tag rotates, old blocks
     // are unpersisted — the persisted-RDD census stays bounded across
     // repeated advances instead of growing one corpus per state
     StreamingGraphDelete.deleteEpoch(spark, delOne(3L), sf, idx, 0L)
     LifecycleIndex.search(spark, sf, idx, searchQueries).count()
-    val tag1 = LifecycleIndex.corpusCacheState(key)._1
+    val tag1 = LifecycleIndex.servingCorpus.entries(key).tag
     assert(tag1 !== "-", "delete epoch must rotate the corpus entry")
     PersistRegistry.release() // epoch/search TRACKED intermediates
     val census = spark.sparkContext.getPersistentRDDs.size
@@ -153,7 +154,7 @@ class ServingHotPathSpec extends AnyFunSuite {
     assert(census2 <= census,
       s"persisted-RDD census grew with state advances " +
       s"($census -> $census2): rotated corpus entries are leaking")
-    assert(LifecycleIndex.corpusCacheState(key)._1 !== tag1,
+    assert(LifecycleIndex.servingCorpus.entries(key).tag !== tag1,
       "the tag must track the latest retired version")
     PersistRegistry.release()
   }
@@ -163,14 +164,14 @@ class ServingHotPathSpec extends AnyFunSuite {
       "the next search on the same state") {
     val idx = freshIndex()
     LifecycleIndex.search(spark, sf, idx, searchQueries).count()
-    val key = spark.sparkContext.applicationId + "|" + idx
-    assert(LifecycleIndex.corpusCacheState(key)._2
-      .toLowerCase.contains("memory"))
+    val key = Resident.key(spark, idx)
+    assert(LifecycleIndex.servingCorpus.entries(key).df.storageLevel
+      .description.toLowerCase.contains("memory"))
     spark.catalog.clearCache() // what a foreign release() can do
     val rows1 = searchRows(
       LifecycleIndex.search(spark, sf, idx, searchQueries))
-    assert(LifecycleIndex.corpusCacheState(key)._2
-      .toLowerCase.contains("memory"),
+    assert(LifecycleIndex.servingCorpus.entries(key).df.storageLevel
+      .description.toLowerCase.contains("memory"),
       "the entry must be re-pinned after a foreign uncache")
     // and the unpersisted window never affected results
     val rows2 = searchRows(
@@ -190,11 +191,11 @@ class ServingHotPathSpec extends AnyFunSuite {
       val b = freshIndex()
       val rowsA = searchRows(
         LifecycleIndex.search(spark, sf, a, searchQueries))
-      val keyA = spark.sparkContext.applicationId + "|" + a
-      val keyB = spark.sparkContext.applicationId + "|" + b
-      assert(LifecycleIndex.corpusCacheState.contains(keyA))
+      val keyA = Resident.key(spark, a)
+      val keyB = Resident.key(spark, b)
+      assert(LifecycleIndex.servingCorpus.entries.contains(keyA))
       LifecycleIndex.search(spark, sf, b, searchQueries).count()
-      val st = LifecycleIndex.corpusCacheState
+      val st = LifecycleIndex.servingCorpus.entries
       assert(st.contains(keyB) && !st.contains(keyA),
         s"LRU bound must keep only the latest served index: $st")
       val again = searchRows(
@@ -217,18 +218,18 @@ class ServingHotPathSpec extends AnyFunSuite {
       "epoch rotates it") {
     val idx = freshIndex()
     LifecycleIndex.search(spark, sf, idx, searchQueries).count()
-    val key = spark.sparkContext.applicationId + "|" + idx
-    assert(LifecycleIndex.centsCacheState(key) === "-")
+    val key = Resident.key(spark, idx)
+    assert(LifecycleIndex.centroids.entries(key)._1 === "-")
     StreamingGraphInsert.insertEpoch(spark,
       emb.filter(SimilarityQueries.v21BatchFilter)
         .select("vec_id", "embedding", "label"), sf, idx, 0L)
     LifecycleIndex.search(spark, sf, idx, searchQueries).count()
-    assert(LifecycleIndex.centsCacheState(key) === "-",
+    assert(LifecycleIndex.centroids.entries(key)._1 === "-",
       "an insert epoch must not rotate the centroid entry (the " +
       "table depends only on the retired set)")
     StreamingGraphDelete.deleteEpoch(spark, delOne(3L), sf, idx, 0L)
     LifecycleIndex.search(spark, sf, idx, searchQueries).count()
-    assert(LifecycleIndex.centsCacheState(key) !== "-",
+    assert(LifecycleIndex.centroids.entries(key)._1 !== "-",
       "a delete epoch must rotate the centroid entry")
     PersistRegistry.release()
   }
@@ -246,10 +247,10 @@ class ServingHotPathSpec extends AnyFunSuite {
     // give the first incarnation a retired state (tag "0")
     StreamingGraphDelete.deleteEpoch(spark, delOne(3L), sf, idx, 0L)
     LifecycleIndex.search(spark, sf, idx, searchQueries).count()
-    val key = spark.sparkContext.applicationId + "|" + idx
-    val oldTag = LifecycleIndex.corpusCacheState(key)._1
+    val key = Resident.key(spark, idx)
+    val oldTag = LifecycleIndex.servingCorpus.entries(key).tag
     assert(oldTag !== "-")
-    // drop + recreate at the SAME path, with NO releaseIndexCaches
+    // drop + recreate at the SAME path, with NO Resident.release
     // and no intervening search (the eviction sweep never sees the
     // dead window) — the recreated index has no retired table, so
     // its tag '-' is OLDER than the residue's
@@ -258,9 +259,9 @@ class ServingHotPathSpec extends AnyFunSuite {
       SimilarityQueries.insertFreeBaseGraph(spark, sf))
     val rows = searchRows(
       LifecycleIndex.search(spark, sf, idx, searchQueries))
-    assert(LifecycleIndex.corpusCacheState(key)._1 === "-",
+    assert(LifecycleIndex.servingCorpus.entries(key).tag === "-",
       "the dead incarnation's corpus entry must rotate out")
-    assert(LifecycleIndex.centsCacheState(key) === "-",
+    assert(LifecycleIndex.centroids.entries(key)._1 === "-",
       "the dead incarnation's centroid entry must rotate out")
     val twin = freshIndex()
     val want = searchRows(
@@ -275,7 +276,7 @@ class ServingHotPathSpec extends AnyFunSuite {
     StreamingGraphDelete.deleteEpoch(spark, delOne(3L), sf, idx, 0L)
     val rows2 = searchRows(
       LifecycleIndex.search(spark, sf, idx, searchQueries))
-    val newTag = LifecycleIndex.corpusCacheState(key)._1
+    val newTag = LifecycleIndex.servingCorpus.entries(key).tag
     assert(newTag.startsWith("0@") && oldTag.startsWith("0@") &&
       newTag != oldTag,
       s"equal retired versions across incarnations must yield " +
@@ -295,17 +296,17 @@ class ServingHotPathSpec extends AnyFunSuite {
     StreamingGraphInsert.insertEpoch(spark,
       emb.filter(SimilarityQueries.v21BatchFilter)
         .select("vec_id", "embedding", "label"), sf, idx, 0L)
-    val key = spark.sparkContext.applicationId + "|" + sf
-    assert(SimilarityQueries.streamCorpusState(key)
-      .toLowerCase.contains("memory"),
+    val key = Resident.key(spark, sf)
+    assert(SimilarityQueries.streamCorpora.entries(key)
+      .df.storageLevel.description.toLowerCase.contains("memory"),
       "the first epoch must leave the stream corpus resident")
     PersistRegistry.release() // what a harness does between epochs
     // the entry survives the release (it is deliberately untracked);
     // even if an identical foreign plan was uncached, the next
     // epoch's streamCorpus call re-pins it
     SimilarityQueries.streamCorpus(spark, sf)
-    assert(SimilarityQueries.streamCorpusState(key)
-      .toLowerCase.contains("memory"),
+    assert(SimilarityQueries.streamCorpora.entries(key)
+      .df.storageLevel.description.toLowerCase.contains("memory"),
       "the stream corpus must stay resident across epoch boundaries")
     // eviction: a throwaway corpus COPY vanishes -> its entry (and
     // blocks) go with it, the real corpus's entry survives
@@ -320,12 +321,12 @@ class ServingHotPathSpec extends AnyFunSuite {
       }
     } else Files.copy(src, dst)
     SimilarityQueries.streamCorpus(spark, corp)
-    val copyKey = spark.sparkContext.applicationId + "|" + corp
-    assert(SimilarityQueries.streamCorpusState.contains(copyKey))
+    val copyKey = Resident.key(spark, corp)
+    assert(SimilarityQueries.streamCorpora.entries.contains(copyKey))
     Files.walk(Paths.get(corp)).iterator().asScala.toSeq.reverse
       .foreach(Files.deleteIfExists(_))
-    SimilarityQueries.streamCorpus(spark, sf) // next epoch sweeps
-    val st = SimilarityQueries.streamCorpusState
+    Resident.sweep(spark) // what the next insert epoch runs first
+    val st = SimilarityQueries.streamCorpora.entries
     assert(!st.contains(copyKey),
       s"vanished corpus's entry survived the sweep: $st")
     assert(st.contains(key), "the live corpus's entry must survive")
@@ -341,16 +342,16 @@ class ServingHotPathSpec extends AnyFunSuite {
     }
     val dead = freshIndex()
     LifecycleIndex.search(spark, sf, dead, searchQueries).count()
-    val deadKey = spark.sparkContext.applicationId + "|" + dead
-    assert(LifecycleIndex.corpusCacheState.contains(deadKey))
+    val deadKey = Resident.key(spark, dead)
+    assert(LifecycleIndex.servingCorpus.entries.contains(deadKey))
     deleteRec(dead)
     // the next MATERIALIZE (a cold search on a live index) sweeps
     val live = freshIndex()
     LifecycleIndex.search(spark, sf, live, searchQueries).count()
-    val state = LifecycleIndex.corpusCacheState
+    val state = LifecycleIndex.servingCorpus.entries
     assert(!state.contains(deadKey),
       s"dead index's corpus entry survived the sweep: $state")
-    assert(state.contains(spark.sparkContext.applicationId + "|" + live))
+    assert(state.contains(Resident.key(spark, live)))
     PersistRegistry.release()
   }
 }

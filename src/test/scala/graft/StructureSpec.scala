@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * (graft.Session), one metrics listener (graft.Ledger), no settle
   * sleeps in the measuring harnesses, one parquet reader
   * (graft.sources.Parquet), one decode+parse step for the boatrace
-  * files (BoatracePipeline.decodeParse) and a fixed set of session
-  * keys. Reads `src/main` and `src/test` from the project directory
+  * files (BoatracePipeline.decodeParse), one registry for per-dir
+  * process state (graft.Resident) and a fixed set of session keys.
+  * Reads `src/main` and `src/test` from the project directory
   * the tests run in. */
 class StructureSpec extends AnyFunSuite {
 
@@ -80,7 +81,7 @@ class StructureSpec extends AnyFunSuite {
       "org.apache.spark.sql.sources.DataSourceRegister")))
   }
 
-  test("src/main reads exactly nine spark.graft.* session keys, and " +
+  test("src/main reads exactly seven spark.graft.* session keys, and " +
       "commit backends are chosen only by registered dir prefix") {
     val key = "\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"".r
     val keys = sources.values
@@ -88,8 +89,38 @@ class StructureSpec extends AnyFunSuite {
     assert(keys === Set("snapshotWarehouse", "boatraceBaseDir",
       "serving.corpusCacheMax", "serving.corpusCacheMaxMb",
       "serving.vacuumGraceMs", "serving.deltaMaxBytes",
-      "stream.corpusCacheMax", "stream.corpusCacheMaxMb",
       "d18.saltPairThreshold").map("spark.graft." + _))
     assert(offenders(Set.empty)(_.contains("registerNamed")) === Nil)
+  }
+
+  test("object-level maps in src/main live only in graft.Resident and " +
+      "a named allowlist of process-wide state") {
+    // a member `val`/`var` of a top-level object or class whose value
+    // is a mutable map; a cache kept per dir belongs in a Resident kind
+    val field = ("(?m)^  (?:private(?:\\[\\w+\\])? |protected )?(?:lazy )?" +
+      "va[lr] (\\w+)\\b[^=\\n]*=\\s*(?:new\\s+)?(?:[\\w.]|\\s)*?" +
+      "(?:ConcurrentHashMap|mutable\\.(?:Map|HashMap|LinkedHashMap)|" +
+      "TrieMap|LinkedHashMap)").r
+    val allowed = Set(
+      // the backend registry, the counting-wrapper cache, the sim
+      // store, and the per-table-dir read counters (dropped through
+      // Resident.release)
+      "graft/warehouse/CommitBackend.scala" -> "overrides",
+      "graft/warehouse/CommitBackend.scala" -> "countedWrappers",
+      "graft/warehouse/CommitBackend.scala" -> "store",
+      "graft/warehouse/CommitBackend.scala" -> "perDirReads",
+      // the per-table-dir trim floors (dropped through Resident.release)
+      "graft/warehouse/SnapshotTable.scala" -> "trimFloors",
+      // the parquet schema LRU
+      "graft/sources/Parquet.scala" -> "schemas",
+      // temp dirs this JVM made, swept at exit
+      "graft/operators/StageSnapshots.scala" -> "ownedTmp",
+      "graft/operators/StageSnapshots.scala" -> "deferred")
+    val found = sources.toSeq.flatMap { case (p, s) =>
+      field.findAllMatchIn(s).map(m => p -> m.group(1))
+    }.filterNot { case (p, _) =>
+      p == "graft/Resident.scala" || p == "graft/Ledger.scala"
+    }
+    assert(found.filterNot(allowed).sorted === Nil)
   }
 }

@@ -68,6 +68,24 @@ class WarehouseSnapshotSpec extends AnyFunSuite {
     }
   }
 
+  test("a session restarted in the same JVM rebuilds a snapshot whose " +
+      "corpus changed after the first session committed it: the input " +
+      "fingerprint is scoped to its application, not held per dir " +
+      "across sessions") {
+    val wh = java.nio.file.Files.createTempDirectory("whsnap-restart").toString
+    val data = newDataDir()
+    val pb = new ProcessBuilder(graft.ChildJvm.command("1g",
+      "graft.operators.SnapshotRestartChild", wh, data): _*)
+    pb.redirectErrorStream(true)
+    val child = pb.start()
+    val out = new String(child.getInputStream.readAllBytes(), "UTF-8")
+    assert(child.waitFor(300, java.util.concurrent.TimeUnit.SECONDS),
+      s"child timed out:\n$out")
+    assert(child.exitValue() === 0, s"child failed:\n$out")
+    assert(out.linesIterator.contains("BUILDS 2"),
+      s"the second session adopted the old corpus's snapshot:\n$out")
+  }
+
   test("defining queries always recompute and commit a fresh version " +
       "even in warehouse mode (the honest-measurement contract)") {
     val wh = java.nio.file.Files.createTempDirectory("whsnap-root2").toString
