@@ -18,15 +18,9 @@ import graft.warehouse.SnapshotTable
   *
   *   - the file-stream CHECKPOINT remembers which archives were read
   *     (an archive is never parsed twice across restarts), and
-  *   - every table commit carries the epoch id in the SAME atomic
-  *     pointer swap as the data (SnapshotTable commit meta), so a
-  *     retried foreachBatch epoch skips tables it already committed —
-  *     exactly-once appends, not at-least-once. The skip reads the
-  *     durable per-version ledger newest-first
-  *     (SnapshotTable.newestLedgerId — one control read in the
-  *     steady state), so it holds even when an interleaved meta-less
-  *     commit (an operator's compact) moves the pointer meta off the
-  *     epoch id.
+  *   - every table commits its epoch through the one exactly-once
+  *     rule, SnapshotTable.commitEpoch, so a retried foreachBatch
+  *     epoch skips the tables it already committed.
   *
   * The race table cannot be built from a single batch: its join needs
   * the K file (env/result) AND the B file (schedule) of a date, and
@@ -51,16 +45,9 @@ object StreamingIngest {
     * query (processAllAvailable/stop). Restarting with the same
     * checkpoint resumes exactly where the last run left off.
     *
-    * `streamId` namespaces this stream's ledger lines
-    * (`<id>:batch=<n>` vs the default `batch=<n>`) — the same
-    * per-writer namespacing the composed graph index uses (`ins:` /
-    * `del:`), and the identity-rotation lever the exactly-once
-    * contract needs: epoch ids are PER CHECKPOINT, so a second
-    * stream writing this warehouse, or a stream restarted on a fresh
-    * checkpoint over existing tables, re-counts from 0 and would
-    * collide with the old ledger (its epochs silently skipped). Give
-    * each writer — and each checkpoint GENERATION — its own id, the
-    * `txnAppId` discipline of idempotent streaming sinks. */
+    * `streamId` names this writer's epoch ledger
+    * (SnapshotTable.ledger): give each writer, and each checkpoint
+    * generation, its own id (see SnapshotTable.EpochLedger). */
   def start(spark: SparkSession, lzhDir: String, warehouseDir: String,
       checkpointDir: String, glob: String = "*.lzh",
       streamId: String = ""): StreamingQuery = {
@@ -96,11 +83,7 @@ object StreamingIngest {
       warehouseDir: String, batchId: Long,
       streamId: String = ""): Unit = {
     import spark.implicits._
-    // per-writer ledger namespace (see start): ids are monotone only
-    // WITHIN a stream generation, so the prefix scopes the skip
-    val prefix =
-      if (streamId.isEmpty) "batch=" else s"$streamId:batch="
-    val ledger = Some(prefix + batchId)
+    val ledger = SnapshotTable.ledger(streamId)
     val parsed = batch.select("path", "content")
       .as[(String, Array[Byte])]
       .flatMap { case (path, bytes) =>
@@ -112,25 +95,12 @@ object StreamingIngest {
       // a few archives); it drives partition pruning below
       val dates = parsed.map(_.date).distinct().collect().sorted
       if (dates.nonEmpty) {
-        for ((t, df) <- BoatracePipeline.datedTables(spark, parsed)) {
-          val dir = s"$warehouseDir/$t"
-          // exactly-once against the per-version LEDGER, not just the
-          // CURRENT pointer (round 20, the rule every streaming sink
-          // follows): a pointer-equality check re-appends when an
-          // interleaved meta-less commit (an operator's compact)
-          // moves the pointer meta off the epoch id between a partial
-          // apply and its crash-retry. Epoch ids are monotone, so the
-          // newest `batch=` line decides at one control read.
-          // An EMPTY table is not appended at all (a K-only batch
-          // parses zero schedules): a first commit with zero data
-          // files would make the snapshot unreadable, and skipping a
-          // no-op loses nothing under retry.
-          if (!SnapshotTable.newestLedgerId(dir, prefix)
-              .exists(_ >= batchId) && !df.isEmpty)
-            SnapshotTable.append(spark, df, dir, ledger)
-        }
-        rebuildRaceDates(spark, warehouseDir, dates, ledger, batchId,
-          prefix)
+        // a table this batch has no rows for (a K-only batch parses
+        // zero schedules) commits nothing
+        for ((t, df) <- BoatracePipeline.datedTables(spark, parsed))
+          SnapshotTable.commitEpoch(spark, s"$warehouseDir/$t", ledger,
+            batchId, df)
+        rebuildRaceDates(spark, warehouseDir, dates, ledger, batchId)
       }
     } finally parsed.unpersist()
   }
@@ -139,44 +109,27 @@ object StreamingIngest {
     * base snapshots and upsert them — the incremental form of
     * BoatracePipeline.raceTable. */
   private def rebuildRaceDates(spark: SparkSession, warehouseDir: String,
-      dates: Seq[String], ledger: Option[String], batchId: Long,
-      prefix: String): Unit = {
-    val raceDir = s"$warehouseDir/race"
-    // same bounded-ledger skip as the base tables — re-running the
-    // keyed upsert would be harmless (idempotent by key) but is a
-    // full rebuild of the touched dates for nothing
-    if (SnapshotTable.newestLedgerId(raceDir, prefix)
-        .exists(_ >= batchId)) return
+      dates: Seq[String], ledger: SnapshotTable.EpochLedger,
+      batchId: Long): Unit = {
     // a join side that has never committed (e.g. no B file has arrived
     // yet, so no schedule table exists) means no race row can form for
     // ANY date — nothing to rebuild this epoch; the dates complete
-    // when that side's first archives land
+    // when that side's first archives land. The join can also be
+    // empty for the touched dates; either way the epoch commits no
+    // race rows.
     def part(t: String): Option[DataFrame] =
-      scala.util.Try(SnapshotTable.read(spark, s"$warehouseDir/$t")).toOption
+      SnapshotTable.readIfCommitted(spark, s"$warehouseDir/$t")
         .map(_.filter(col("date")
             .isInCollection(dates.map(java.sql.Date.valueOf)))
           .drop("date"))
-    val sides = for {
+    def race: DataFrame = (for {
       env <- part("env"); result <- part("result"); sched <- part("schedule")
-    } yield (env, result, sched)
-    sides.foreach { case (env, result, sched) =>
-      val race = BoatracePipeline.typedRace(
-        BoatracePipeline.raceTable(env, result, sched))
-      // All three sides committed, but the JOIN can still be empty for
-      // the touched dates (e.g. the schedule table exists from earlier
-      // dates yet has no rows for THIS batch's dates). Committing an
-      // empty frame as the table's FIRST version would write a
-      // zero-file manifest that SnapshotTable.read rejects for every
-      // reader until a later non-empty rebuild — mirror the base-table
-      // !isEmpty guard: skipping a no-op loses nothing under retry.
-      val hasState =
-        scala.util.Try(SnapshotTable.read(spark, raceDir)).isSuccess
-      if (!race.isEmpty) {
-        if (!hasState) SnapshotTable.overwrite(spark, race, raceDir, ledger)
-        else SnapshotTable.upsert(spark, race, raceDir,
-          Seq("レースID", "選手登番"), ledger)
-      }
-    }
+    } yield BoatracePipeline.typedRace(
+      BoatracePipeline.raceTable(env, result, sched)))
+      .getOrElse(spark.emptyDataFrame)
+    SnapshotTable.commitEpoch(spark, s"$warehouseDir/race", ledger, batchId,
+      race, Seq("レースID", "選手登番"))
+    ()
   }
 
   /** Read a warehouse table's CURRENT snapshot. */

@@ -55,10 +55,18 @@ private[graft] object StageSnapshots {
   // snapshot path per (application, data dir, stage)
   private[graft] val snapshots =
     graft.Resident.kind[String]("stage snapshots", graft.Resident.dataDir)
-  // paths this JVM created under java.io.tmpdir — the only ones the
-  // shutdown sweep may delete (never warehouse-committed data files)
+  // paths this JVM created under java.io.tmpdir, current and
+  // superseded alike — the only ones the exit hook deletes (never
+  // warehouse-committed data files)
   private val ownedTmp = java.util.concurrent.ConcurrentHashMap
     .newKeySet[String]()
+  Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    ownedTmp.forEach { d =>
+      scala.util.Try(java.nio.file.Files.walk(java.nio.file.Paths.get(d))
+        .sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.deleteIfExists(p)))
+      ()
+    }))
 
   private def snapKey(s: SparkSession, d: String, what: String) =
     graft.Resident.key(s, d, what)
@@ -165,33 +173,14 @@ private[graft] object StageSnapshots {
         build.write.mode("overwrite").parquet(tmp)
         tmp
     }
-    val prev = snapshots.put(snapKey(s, d, what), dir)
-    // DEFER reclaim of the superseded snapshot to JVM exit: deleting
-    // here would race a concurrent snapshot() caller that read the old
-    // path from the map a moment ago and still holds a lazy plan over
-    // it — its scan would hit FileNotFoundException, turning the
-    // "lost race costs one duplicate materialization" guarantee into
-    // wrongness. Orphans are bounded: one dir per (key, rerun) for the
-    // JVM's life, each a small result table, swept at exit. Only
-    // JVM-temp dirs this process created are swept — superseded
-    // WAREHOUSE versions stay on disk serving old snapshots until an
-    // explicit SnapshotTable.vacuum (the retention contract).
-    prev.filter(p => p != dir && ownedTmp.contains(p)).foreach(deferDelete)
+    // a superseded temp snapshot is reclaimed at JVM exit, not here:
+    // a concurrent snapshot() caller may have read the old path from
+    // the map a moment ago and still hold a lazy plan over it.
+    // Superseded WAREHOUSE versions stay on disk serving old snapshots
+    // until an explicit SnapshotTable.vacuum (the retention contract).
+    snapshots.put(snapKey(s, d, what), dir)
     dir
   }
-
-  private val deferred = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[String]()
-  Runtime.getRuntime.addShutdownHook(new Thread(() =>
-    deferred.forEach { d =>
-      val root = java.nio.file.Paths.get(d)
-      scala.util.Try(java.nio.file.Files.walk(root)
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p)))
-      ()
-    }))
-
-  private def deferDelete(dir: String): Unit = { deferred.add(dir); () }
 
   /** Read-back of a fresh materialization — for DEFINING queries. */
   def define(s: SparkSession, d: String, what: String)(

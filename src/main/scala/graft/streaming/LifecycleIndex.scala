@@ -23,11 +23,11 @@ import graft.warehouse.SnapshotTable
   *              `…@ins=<v>,del=<v>`: the exact delta-table versions
   *              whose content it folded (see foldCut)
   *   edges/     streamed INSERT edges, append-only, one append per
-  *              insert epoch (ledger meta `ins:batch=<id>`),
+  *              insert epoch (SnapshotTable.InsertLedger),
   *              restarted empty by the fold
   *   deleted/   tombstone ids SINCE THE LAST FOLD (the repair
   *              delta), append-only, one append per delete epoch
-  *              (ledger meta `del:batch=<id>`), restarted empty by
+  *              (SnapshotTable.DeleteLedger), restarted empty by
   *              the fold
   *   retired/   ALL ids ever deleted (the vector-level delete
   *              vector — see retiredTab), append-only, one append
@@ -153,7 +153,7 @@ object LifecycleIndex {
       .flatMap(v => foldCutAt(indexDir, Some(v))).exists {
         case (_, ci, _) => ci >= 0 && (0 to ci).exists(v =>
           SnapshotTable.metaOf(edgesTab(indexDir), v)
-            .exists(_.startsWith("ins:batch=")))
+            .exists(SnapshotTable.InsertLedger.owns))
       }
     require(!foldedIns,
       s"re-basing index $indexDir would drop insert epochs already " +
@@ -327,13 +327,6 @@ object LifecycleIndex {
     throw new TornCaptureException(
       s"base of $indexDir kept advancing across 3 capture attempts " +
       "(fold turnover outpaces this reader)")
-  }
-
-  /** The base edge table this index prunes/repairs (see class doc). */
-  def baseEdges(spark: SparkSession, d: String,
-      indexDir: String): DataFrame = {
-    val (vB, vI, _) = consistentCapture(indexDir)
-    baseEdgesAt(spark, d, indexDir, vB, vI)
   }
 
   /** Committed streamed-insert edges beyond the fold cut, or None
@@ -781,17 +774,10 @@ object LifecycleIndex {
     // numbers across incarnations can never produce equal tags. One
     // extra control-plane read per search, inside the pinned-read
     // budget Round17Spec counts.
-    val corpusDigest = retiredPin.map(_._1)
-    // the digest comes from the SAME read as the file list above, so
-    // a reachable-but-torn tag is no longer possible (the round-17
-    // degraded-tag hazard: digest read racing the corpus read). The
-    // reliability gate stays for defense in depth — a code path that
-    // ever reintroduces a separate digest read must degrade to
-    // private compute (never cache a '?' tag: two incarnations
-    // degrading at the same version would collide), not serve torn.
-    val tagReliable = vR.isEmpty || corpusDigest.isDefined
-    val corpusTag = vR.map(v => v + "@" + corpusDigest.getOrElse("?"))
-      .getOrElse("-")
+    // The digest comes from the SAME read as the file list above, so
+    // the tag can never be torn from the corpus it names.
+    val corpusTag = (for (v <- vR; (digest, _) <- retiredPin)
+      yield s"$v@$digest").getOrElse("-")
     // tag age for FORWARD-ONLY cache rotation (review finding): a
     // search still pinned to an older retired-state must never
     // rotate the shared per-index slot backwards — that would
@@ -827,29 +813,24 @@ object LifecycleIndex {
     // at vR — the old verTag key re-aggregated the whole corpus
     // after every insert/fold advance for nothing. (The version
     // capture above is billed into this phase — 4 control reads.)
-    val cents =
-      if (!tagReliable)
-        // unreliable tag: never insert into (or match) the cache —
-        // compute privately like a stale-state search
-        SimilarityQueries.centroidTable(spark, nRaw)
-      else {
-        val centsEntry = centroids.update(ck) {
-          case Some(old) if old._1 == corpusTag ||
-              (tagAge(old._1) > tagAge(corpusTag) &&
-                !orphanedTag(old._1)) => old
-          case _ => (corpusTag, SimilarityQueries.centroidTable(spark, nRaw))
-        }
-        if (centsEntry._1 == corpusTag) centsEntry._2
-        // stale-state search: compute privately, never displace the
-        // newer entry (rare — the caller pinned before a delete epoch)
-        else SimilarityQueries.centroidTable(spark, nRaw)
+    val cents = {
+      val centsEntry = centroids.update(ck) {
+        case Some(old) if old._1 == corpusTag ||
+            (tagAge(old._1) > tagAge(corpusTag) &&
+              !orphanedTag(old._1)) => old
+        case _ => (corpusTag, SimilarityQueries.centroidTable(spark, nRaw))
       }
+      if (centsEntry._1 == corpusTag) centsEntry._2
+      // stale-state search: compute privately, never displace the
+      // newer entry (rare — the caller pinned before a delete epoch)
+      else SimilarityQueries.centroidTable(spark, nRaw)
+    }
     lap("centroid_cache")
     // true when the walk below runs over the shared cached corpus;
-    // false = this search's private pinned corpus (stale state or
-    // unreliable tag), dropped at the end of the attempt
+    // false = this search's private pinned corpus (stale state),
+    // dropped at the end of the attempt
     var corpusFromCache = false
-    val n = if (!tagReliable) nRaw else {
+    val n = {
       var rotated: Option[graft.Resident.Corpus] = None
       val corpusEntry = servingCorpus.update(ck) {
         case Some(old) if old.tag == corpusTag ||
@@ -1365,7 +1346,8 @@ object LifecycleIndex {
       // bounded-ledger rule — the reversed committedMetas scan read
       // every meta back to version 0 on each fold)
       SnapshotTable.newestMetaMatching(tab, m =>
-        m.startsWith("del:batch=") || m.startsWith("ins:batch="))
+        SnapshotTable.DeleteLedger.owns(m) ||
+          SnapshotTable.InsertLedger.owns(m))
     val m = vDel.flatMap(_ => lastEpochMeta(dTab))
       .orElse(vIns.flatMap(_ => lastEpochMeta(eTab)))
     // BASE-PROVENANCE tag (round-14 advice): a fold on a

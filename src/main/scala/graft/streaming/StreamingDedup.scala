@@ -33,14 +33,9 @@ import graft.warehouse.SnapshotTable
   *     "the accepted corpus contains no confirmed near-dup pair"
   *     holds at every commit (pinned in the spec).
   *
-  * Exactly-once: both tables commit with the epoch id in the atomic
-  * CURRENT swap (SnapshotTable meta) — a retried foreachBatch epoch
-  * skips tables it already committed, so re-delivery cannot
-  * double-append (also pinned in the spec). The skip reads the
-  * durable per-version ledger newest-first
-  * (SnapshotTable.newestLedgerId — one control read in the steady
-  * state), so it holds even across a meta-less maintenance commit
-  * outside [[maintain]] (which carries the meta itself).
+  * Exactly-once: both tables commit through the one epoch rule,
+  * SnapshotTable.commitEpoch, so a retried foreachBatch epoch skips
+  * the tables it already committed (pinned in the spec).
   *
   * Scale: the batch side is a day's arrivals (small); the band join
   * against the corpus index shuffles on the short band key — per-epoch
@@ -54,13 +49,9 @@ object StreamingDedup {
 
   /** Watch `docsDir` for parquet files of (doc_id, text) and ingest.
     *
-    * `streamId` namespaces the ledger lines (`<id>:batch=<n>`) —
-    * epoch ids are PER CHECKPOINT, so a second gate writing this
-    * corpus, or a gate restarted on a fresh checkpoint over existing
-    * state, re-counts from 0 and would collide with the old ledger
-    * (its epochs silently skipped). Give each writer — and each
-    * checkpoint generation — its own id (the `txnAppId` discipline
-    * of idempotent streaming sinks). */
+    * `streamId` names this writer's epoch ledger
+    * (SnapshotTable.ledger): give each writer, and each checkpoint
+    * generation, its own id (see SnapshotTable.EpochLedger). */
   def start(spark: SparkSession, docsDir: String, corpusDir: String,
       checkpointDir: String, streamId: String = ""): StreamingQuery = {
     val schema = StructType(Seq(
@@ -93,11 +84,6 @@ object StreamingDedup {
     * batch backfill drive the exact streaming code path. */
   def ingestBatch(spark: SparkSession, batch: DataFrame,
       corpusDir: String, batchId: Long, streamId: String = ""): Unit = {
-    // per-writer ledger namespace (see start): ids are monotone only
-    // WITHIN a stream generation, so the prefix scopes the skip
-    val prefix =
-      if (streamId.isEmpty) "batch=" else s"$streamId:batch="
-    val ledger = Some(prefix + batchId)
     val corpusTab = s"$corpusDir/corpus"
     val sigsTab = s"$corpusDir/sigs"
     if (batch.isEmpty) return
@@ -123,9 +109,7 @@ object StreamingDedup {
       .filter(jaccard(col("sa"), col("sb")) >= 0.5)
       .select(col("doc_b").as("doc_id")).distinct()
     // vs corpus: confirmed dup of ANY accepted doc (via the index)
-    val corpusSigs =
-      scala.util.Try(SnapshotTable.read(spark, sigsTab)).toOption
-    val corpusDrop = corpusSigs match {
+    val corpusDrop = SnapshotTable.readIfCommitted(spark, sigsTab) match {
       case None => selfDrop.limit(0)
       case Some(cs) =>
         val cBands = bandsOf(cs)
@@ -143,21 +127,11 @@ object StreamingDedup {
     val dropIds = selfDrop.union(corpusDrop).distinct()
     val kept = batch.join(dropIds, Seq("doc_id"), "left_anti")
     val keptSigs = bs.join(dropIds, Seq("doc_id"), "left_anti")
-    // exactly-once per table (see class doc) against the durable
-    // per-version ledger, newest-first at one control read (round-20
-    // rule for every streaming sink: a pointer-equality check
-    // re-appends when a FOREIGN meta-less compact moves the pointer
-    // meta off the epoch id between a partial apply and its retry —
-    // maintain() carries the meta through its own compaction, but
-    // nothing forces an operator through maintain). Empty appends
-    // skipped — a zero-file first commit would make the snapshot
-    // unreadable.
-    def appendOnce(tab: String, df: DataFrame): Unit =
-      if (!SnapshotTable.newestLedgerId(tab, prefix)
-          .exists(_ >= batchId) && !df.isEmpty)
-        SnapshotTable.append(spark, df, tab, ledger)
-    appendOnce(corpusTab, kept.select("doc_id", "text"))
-    appendOnce(sigsTab, keptSigs.select("doc_id", "s", "sig"))
+    val ledger = SnapshotTable.ledger(streamId)
+    SnapshotTable.commitEpoch(spark, corpusTab, ledger, batchId,
+      kept.select("doc_id", "text"))
+    SnapshotTable.commitEpoch(spark, sigsTab, ledger, batchId,
+      keptSigs.select("doc_id", "s", "sig"))
     } finally bs.unpersist()
   }
 
@@ -178,7 +152,7 @@ object StreamingDedup {
       keepVersions: Int = 2): Unit =
     Seq("corpus", "sigs").foreach { t =>
       val dir = s"$corpusDir/$t"
-      if (scala.util.Try(SnapshotTable.read(spark, dir)).isSuccess) {
+      if (SnapshotTable.currentVersionOf(dir).isDefined) {
         SnapshotTable.compact(spark, dir,
           meta = SnapshotTable.currentMeta(dir))
         SnapshotTable.vacuum(dir, keepVersions)

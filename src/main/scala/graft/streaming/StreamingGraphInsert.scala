@@ -25,11 +25,10 @@ import graft.warehouse.SnapshotTable
   * of the arrivals. StreamingGraphInsertSpec pins stream ≡ batch
   * row-for-row against v21's oracle-checked output.
   *
-  * Exactly-once: each epoch's append commits through SnapshotTable
-  * with the epoch id in the commit meta (namespaced `ins:batch=<id>`
-  * — see insertEpoch); a retried foreachBatch epoch sees its id
-  * already committed and skips — re-delivery cannot double-append
-  * (same ledger contract as StreamingDedup).
+  * Exactly-once: each epoch commits under SnapshotTable.InsertLedger
+  * (see SnapshotTable.EpochLedger), checked once before the walk so a
+  * re-delivered epoch skips it. The walk's edges are non-empty by
+  * construction, so the append needs no emptiness check.
   *
   * Composition: `indexDir/edges` is the insert-edge table of
   * [[LifecycleIndex]] — a concurrent delete stream on the same
@@ -95,24 +94,9 @@ object StreamingGraphInsert {
       indexDir: String, batchId: Long,
       foldEvery: Int = FoldEveryEpochs): Unit = {
     import spark.implicits._
-    // exactly-once holds against the per-version LEDGER, not just
-    // CURRENT's meta — an interleaved commit on the same table (a
-    // compact, a fold) can move the pointer between this epoch's
-    // first delivery and a late retry, and a pointer-only check
-    // would then re-append (round-12 advice). Namespaced `ins:`
-    // (round-13 advice): Spark batch ids start at 0 PER QUERY, so a
-    // composed index's delete stream also counts from 0 —
-    // un-namespaced ledger lines would let one stream's epoch N
-    // shadow the other's.
     val tab = LifecycleIndex.edgesTab(indexDir)
-    val ledgerLine = s"ins:batch=$batchId"
-    // bounded exactly-once (round 20): the NEWEST `ins:batch=` line
-    // is the highest applied id (monotone epochs), read in ONE
-    // control GET in the steady state — subsumes the old
-    // currentMeta fast path and replaces the committedMetas scan
-    // that grew linearly with table age
-    if (SnapshotTable.newestLedgerId(tab, "ins:batch=")
-        .exists(_ >= batchId)) return
+    val ledger = SnapshotTable.InsertLedger
+    if (ledger.applied(tab, batchId)) return
     // round-14 advice: refuse to compose against a base a delete-only
     // auto-fold INFERRED from the full corpus — this walk targets the
     // insert-free graph, and baking its edges onto the wrong base
@@ -145,7 +129,8 @@ object StreamingGraphInsert {
     // write tasks — ~20 tiny data files per epoch append (round 21),
     // inflating every delta-materialize file diff/byte listing and
     // the serving read's file count. One bounded epoch = one file.
-    SnapshotTable.append(spark, edges.coalesce(1), tab, Some(ledgerLine))
+    SnapshotTable.append(spark, edges.coalesce(1), tab,
+      Some(ledger.line(batchId)))
     // AUTO-FOLD (round 14): symmetric with the delete stream's
     // tombstone-count trigger. Epochs since the last fold = ledger
     // entries after the last `folded-…` marker (the fold stamps one

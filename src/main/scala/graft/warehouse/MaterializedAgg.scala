@@ -26,64 +26,36 @@ import org.apache.spark.sql.functions._
   *
   * Streaming: `refresh` slots directly into `foreachBatch` (proven ≡
   * the batch aggregate in MaterializedAggSpec). refresh is ADDITIVE,
-  * so under foreachBatch's epoch-retry contract pass the batchId:
-  * the id commits INSIDE the same atomic pointer swap as the data
-  * (SnapshotTable commit metadata), so a retried epoch is detected
-  * and skipped with no crash window between "data committed" and
-  * "ledger updated" — the transactional-sink pattern production
-  * formats expose as txn/appId versioning.
+  * so under foreachBatch's epoch-retry contract pass the batchId: the
+  * commit is then exactly-once by the one epoch rule,
+  * SnapshotTable.commitEpoch.
   */
 object MaterializedAgg {
 
   /** Merge a new fact batch into the materialized per-key aggregate
     * at `dir`. `valueCol` is a <=2-decimal money column (quantized to
-    * integer cents internally). Returns the committed version.
+    * integer cents internally). Returns the CURRENT version after the
+    * refresh (-1 while no version is committed).
     *
-    * `batchId >= 0` makes the refresh EXACTLY-ONCE under retries: the
-    * id is committed atomically with the data, and a refresh whose id
-    * matches the last committed one is skipped (foreachBatch retries
-    * exactly the failed epoch, so one remembered id suffices). */
+    * `batchId >= 0` makes the refresh EXACTLY-ONCE under retries
+    * through [[SnapshotTable.commitEpoch]]: an epoch already in the
+    * ledger, or an empty batch, commits nothing. */
   def refresh(spark: SparkSession, dir: String, batch: DataFrame,
       keys: Seq[String], valueCol: String, batchId: Long = -1L): Int = {
-    val ledger = if (batchId >= 0) Some(s"batch=$batchId") else None
-    // exactly-once must hold against the LEDGER, not just the
-    // CURRENT pointer's meta (round-19 review): an interleaved
-    // meta-less commit (a maintenance compact without a preserved
-    // ledger) moves the pointer meta off the epoch id, and a
-    // then-retried epoch would double-apply its additive partials.
-    // BOUNDED ledger authority (round-19 advice 1): the prior
-    // committedMetas read was one control GET per version 0..CURRENT
-    // on EVERY normal batch — the pointer names batch N-1 while the
-    // new epoch is N, so the fast path always missed and per-batch
-    // reads grew linearly with table age. newestLedgerId walks
-    // newest-first and stops at the first `batch=` line — ONE
-    // control read in the steady state (the pointer's inline meta is
-    // that line); skip iff applied >= this epoch (>=, not ==: a
-    // checkpoint that re-delivers an epoch below the newest applied
-    // must skip too — its partials are already in the state, and
-    // ids are monotone by the streaming engine's contract).
-    if (ledger.isDefined && SnapshotTable
-        .newestLedgerId(dir, "batch=").exists(_ >= batchId))
-      return SnapshotTable.versions(dir).last // already applied
     val partial = batch
       .groupBy(keys.map(col): _*)
       .agg(sum(round(col(valueCol) * 100, 0).cast("bigint")).as("sum_cents"),
         count(lit(1)).as("n"))
-    val hasState = scala.util.Try(SnapshotTable.read(spark, dir)).isSuccess
-    val merged =
-      if (!hasState) partial
-      else {
-        // only the touched keys re-aggregate: current state for those
-        // keys + the batch partials, one exact integer merge
-        val touched = partial.select(keys.map(col): _*)
-        SnapshotTable.read(spark, dir)
-          .join(touched, keys, "left_semi")
-          .unionByName(partial)
-          .groupBy(keys.map(col): _*)
-          .agg(sum("sum_cents").as("sum_cents"), sum("n").as("n"))
-      }
-    if (!hasState) SnapshotTable.overwrite(spark, merged, dir, ledger)
-    else SnapshotTable.upsert(spark, merged, dir, keys, ledger)
+    // only the touched keys re-aggregate: current state for those
+    // keys + the batch partials, one exact integer merge
+    def merge(state: DataFrame, partial: DataFrame): DataFrame =
+      state.join(partial.select(keys.map(col): _*), keys, "left_semi")
+        .unionByName(partial)
+        .groupBy(keys.map(col): _*)
+        .agg(sum("sum_cents").as("sum_cents"), sum("n").as("n"))
+    SnapshotTable.commitEpoch(spark, dir, SnapshotTable.ledger(""), batchId,
+        partial, keys, merge)
+      .getOrElse(SnapshotTable.currentVersionOf(dir).getOrElse(-1))
   }
 
   /** The aggregate as of a committed version (-1 = CURRENT), with the

@@ -166,29 +166,52 @@ object SnapshotTable {
     newestMetas(dir).find(p)
 
   /** Highest applied ledger id under `prefix` (e.g. `ins:batch=`) —
-    * the NEWEST matching meta's numeric suffix. The streaming engine
-    * commits epoch ids in monotone order, so the newest line IS the
-    * max; an exactly-once check is therefore `newestLedgerId(dir,
-    * prefix).exists(_ >= thisEpoch)` at a cost of ONE control read
-    * in the steady state (the pointer's inline meta is the ledger
-    * line), instead of the full committedMetas scan that grew
-    * linearly with table age (round-19 advice 1, applied to every
-    * streaming sink in round 20). A prefix-matching line with an
-    * unparseable suffix is skipped and the scan continues. Caveat:
-    * epoch ids are monotone only WITHIN a checkpoint generation — a
-    * stream restarted on a FRESH checkpoint over existing state
-    * re-counts from 0 and this check skips those epochs as already
-    * applied (no batch-id scheme can distinguish them from
-    * re-deliveries). The contract: reset state tables and checkpoint
-    * together, or rotate the sink's `streamId` ledger namespace on a
-    * fresh checkpoint (StreamingIngest / StreamingDedup expose one —
-    * the `txnAppId` discipline; the graph streams' `ins:`/`del:`
-    * prefixes are the same mechanism, fixed per composed stream). */
+    * the NEWEST matching meta's numeric suffix, at ONE control read in
+    * the steady state (the pointer's inline meta is the ledger line)
+    * rather than a committedMetas scan that grows with table age. A
+    * prefix-matching line with an unparseable suffix is skipped and
+    * the scan continues. [[EpochLedger.applied]] is the one caller in
+    * the engine; see it for the exactly-once rule. */
   def newestLedgerId(dir: String, prefix: String): Option[Long] =
     newestMetas(dir).collectFirst(scala.Function.unlift { m =>
       if (!m.startsWith(prefix)) None
       else scala.util.Try(m.stripPrefix(prefix).trim.toLong).toOption
     })
+
+  /** The exactly-once epoch ledger of ONE writer — the only place a
+    * ledger line is spelled (`batch=<id>`, `<streamId>:batch=<id>`,
+    * `ins:batch=<id>`, `del:batch=<id>`) and an epoch is judged
+    * applied. A commit carries its epoch's line as meta, in the same
+    * atomic pointer swap as its data, and every version's meta is kept
+    * through compacts, folds and vacuum; so a re-delivered epoch is
+    * recognized even behind an interleaved meta-less commit.
+    *
+    * Epoch ids are monotone within a checkpoint generation, so the
+    * newest line of this writer is the highest applied id and an
+    * epoch is applied iff that id is >= it. A stream restarted on a
+    * FRESH checkpoint over existing state re-counts from 0 and its
+    * epochs would read as applied: reset state and checkpoint
+    * together, or give each writer and checkpoint generation its own
+    * `streamId` (the `txnAppId` discipline of idempotent sinks; the
+    * graph index's `ins`/`del` writers are the same mechanism). */
+  final class EpochLedger private[SnapshotTable] (prefix: String) {
+    /** The meta line recording `epoch` as applied. */
+    def line(epoch: Long): String = prefix + epoch
+    /** Whether `meta` is a line of this writer. */
+    def owns(meta: String): Boolean = meta.startsWith(prefix)
+    /** Whether `epoch` is already applied to the table at `dir`. */
+    def applied(dir: String, epoch: Long): Boolean =
+      newestLedgerId(dir, prefix).exists(_ >= epoch)
+  }
+
+  /** The ledger of stream `streamId` ("" = the default writer). */
+  def ledger(streamId: String): EpochLedger =
+    new EpochLedger(if (streamId.isEmpty) "batch=" else s"$streamId:batch=")
+
+  /** The insert and delete streams of one graph index (LifecycleIndex):
+    * both count epochs from 0, so each has its own ledger. */
+  val InsertLedger: EpochLedger = ledger("ins")
+  val DeleteLedger: EpochLedger = ledger("del")
 
   /** What [[serveResolve]] learned in one pass: the CURRENT version
     * and its meta, the matched version, and every manifest's file list
@@ -780,6 +803,39 @@ object SnapshotTable {
     if (files.isEmpty)
       throw new IllegalArgumentException(s"version $v of $dir has no files")
     Parquet.read(spark, files: _*)
+  }
+
+  /** CURRENT's rows, or None when the table has no committed version.
+    * Only a missing CURRENT means "no table": any other failure (a
+    * store error, a vanished manifest) propagates, so a caller can
+    * never mistake a failed read for an empty table. */
+  def readIfCommitted(spark: SparkSession, dir: String): Option[DataFrame] =
+    currentVersion(dir).map(read(spark, dir, _))
+
+  /** Commit one streaming epoch exactly once — the rule every sink
+    * follows. The epoch is skipped (None) when `ledger` already
+    * applied it or when `rows` is empty (a first commit with no files
+    * would leave the table unreadable, and a no-op loses nothing under
+    * retry). Otherwise `rows` commits with the epoch's ledger line:
+    * appended when `keys` is empty; else the first commit overwrites
+    * and later ones upsert by `keys` the rows `merge(state, rows)`
+    * gives (default: `rows`). `epoch < 0` commits with no ledger line
+    * and no skip. A failed read of the table fails the epoch with
+    * nothing committed. Returns the committed version. */
+  def commitEpoch(spark: SparkSession, dir: String, ledger: EpochLedger,
+      epoch: Long, rows: => DataFrame, keys: Seq[String] = Nil,
+      merge: (DataFrame, DataFrame) => DataFrame = (_, r) => r)
+      : Option[Int] = {
+    val meta = if (epoch >= 0) Some(ledger.line(epoch)) else None
+    if (meta.isDefined && ledger.applied(dir, epoch)) return None
+    val df = rows
+    if (df.isEmpty) return None
+    Some(
+      if (keys.isEmpty) append(spark, df, dir, meta)
+      else readIfCommitted(spark, dir) match {
+        case None => overwrite(spark, df, dir, meta)
+        case Some(state) => upsert(spark, merge(state, df), dir, keys, meta)
+      })
   }
 
   def versions(dir: String): Seq[Int] =

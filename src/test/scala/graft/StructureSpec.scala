@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * sleeps in the measuring harnesses, one parquet reader
   * (graft.sources.Parquet), one decode+parse step for the boatrace
   * files (BoatracePipeline.decodeParse), one registry for per-dir
-  * process state (graft.Resident) and a fixed set of session keys.
+  * process state (graft.Resident), one exactly-once epoch rule
+  * (SnapshotTable) and a fixed set of session keys.
   * Reads `src/main` and `src/test` from the project directory
   * the tests run in. */
 class StructureSpec extends AnyFunSuite {
@@ -114,13 +115,24 @@ class StructureSpec extends AnyFunSuite {
       // the parquet schema LRU
       "graft/sources/Parquet.scala" -> "schemas",
       // temp dirs this JVM made, swept at exit
-      "graft/operators/StageSnapshots.scala" -> "ownedTmp",
-      "graft/operators/StageSnapshots.scala" -> "deferred")
+      "graft/operators/StageSnapshots.scala" -> "ownedTmp")
     val found = sources.toSeq.flatMap { case (p, s) =>
       field.findAllMatchIn(s).map(m => p -> m.group(1))
     }.filterNot { case (p, _) =>
       p == "graft/Resident.scala" || p == "graft/Ledger.scala"
     }
     assert(found.filterNot(allowed).sorted === Nil)
+  }
+
+  test("epoch ledger lines are spelled and read only in " +
+      "warehouse/SnapshotTable.scala") {
+    assert(offenders(Set("graft/warehouse/SnapshotTable.scala"))(s =>
+      s.contains("newestLedgerId(") || s.contains("batch=")) === Nil)
+  }
+
+  test("no Try(SnapshotTable.read ...) probe for table existence: a " +
+      "failed read is not a missing table") {
+    val probe = """Try\((?:graft\.warehouse\.)?SnapshotTable\.read""".r
+    assert(offenders(Set.empty)(s => probe.findFirstIn(s).nonEmpty) === Nil)
   }
 }

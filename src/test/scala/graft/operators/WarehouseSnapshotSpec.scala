@@ -86,6 +86,24 @@ class WarehouseSnapshotSpec extends AnyFunSuite {
       s"the second session adopted the old corpus's snapshot:\n$out")
   }
 
+  test("without a warehouse, a JVM leaves none of its temp snapshots " +
+      "behind at exit, the current one included") {
+    val pb = new ProcessBuilder(graft.ChildJvm.command("1g",
+      "graft.operators.SnapshotTempChild", newDataDir()): _*)
+    pb.redirectErrorStream(true)
+    val child = pb.start()
+    val out = new String(child.getInputStream.readAllBytes(), "UTF-8")
+    assert(child.waitFor(300, java.util.concurrent.TimeUnit.SECONDS),
+      s"child timed out:\n$out")
+    assert(child.exitValue() === 0, s"child failed:\n$out")
+    val made = out.linesIterator.filter(_.startsWith("SNAPSHOT ")).toSeq
+    assert(made.size === 2 && made.forall(_.endsWith(" true")),
+      s"the child must report two written snapshots:\n$out")
+    val left = made.map(_.split(" ")(1))
+      .filter(d => java.nio.file.Files.exists(java.nio.file.Paths.get(d)))
+    assert(left === Nil, "temp snapshots outlived their JVM")
+  }
+
   test("defining queries always recompute and commit a fresh version " +
       "even in warehouse mode (the honest-measurement contract)") {
     val wh = java.nio.file.Files.createTempDirectory("whsnap-root2").toString
