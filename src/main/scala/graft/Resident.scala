@@ -9,9 +9,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** The engine's process state held per directory: every cache and
   * counter that outlives a query lives in one [[Kind]] here — the
-  * serving index's centroid table, persisted corpus and counters
-  * (LifecycleIndex), the insert stream's quantizer and persisted
-  * corpus (SimilarityQueries), the parsed boatrace corpus
+  * serving index's centroid table, walk graph, persisted corpus and
+  * counters (LifecycleIndex), the insert stream's quantizer, walk graph
+  * and persisted corpus (SimilarityQueries), the parsed boatrace corpus
   * (BoatraceQueries), and the stage-snapshot pointers and input
   * fingerprints (StageSnapshots).
   *
@@ -29,13 +29,14 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *     search. [[release]] drops everything under a dir tree at once,
   *     for callers that delete a dir themselves.
   *
-  * Persisted corpora (kinds made by [[corpusKind]]) share one bound,
+  * Persisted corpora (kinds made by [[corpusKind]]) and driver-held
+  * walk graphs (kinds made by [[heldKind]]) share one bound,
   * [[bound]]: at most `spark.graft.serving.corpusCacheMax` entries
   * and `spark.graft.serving.corpusCacheMaxMb` resident MB over all of
-  * them, least recently used first. Dropping one unpersists its plan
-  * unless another held corpus serves the same plan (Spark's
-  * CacheManager is keyed by plan, so a blind unpersist would strip the
-  * twin's blocks).
+  * them, least recently used first. Dropping a persisted corpus
+  * unpersists its plan unless another held corpus serves the same plan
+  * (Spark's CacheManager is keyed by plan, so a blind unpersist would
+  * strip the twin's blocks).
   */
 object Resident {
 
@@ -69,6 +70,7 @@ object Resident {
 
   private val kinds = new CopyOnWriteArrayList[Kind[_ <: AnyRef]]()
   private val corpusKinds = new CopyOnWriteArrayList[Kind[Corpus]]()
+  private val boundedKinds = new CopyOnWriteArrayList[Kind[_ <: Bounded]]()
 
   /** One cache: its entries, the probe deciding that their dir still
     * exists, and what dropping an entry must also do. */
@@ -89,6 +91,9 @@ object Resident {
       held.computeIfAbsent(k, _ => v)
 
     def put(k: Key, v: V): Option[V] = Option(held.put(k, v))
+
+    /** Set `k`'s entry to `v` if it still holds `old`. */
+    def replace(k: Key, old: V, v: V): Boolean = held.replace(k, old, v)
 
     /** Drop `k`'s entry if it still holds `v` (a concurrent
       * replacement keeps its fresh entry); true when it did. */
@@ -113,11 +118,25 @@ object Resident {
       onDrop: V => Unit = (_: V) => ()): Kind[V] =
     new Kind(name, probe, onDrop)
 
-  /** A persisted corpus, the state it was built at, and its last use
-    * (the bound's LRU order). */
-  final class Corpus(val tag: String, val df: DataFrame) {
+  /** An entry [[bound]] counts: the state it was built at, its last
+    * use (the bound's LRU order) and the bytes it holds. */
+  sealed abstract class Bounded(val tag: String) {
     private[Resident] val used = new AtomicLong(System.nanoTime())
-    def touch(): Corpus = { used.set(System.nanoTime()); this }
+    def touch(): this.type = { used.set(System.nanoTime()); this }
+    /** Bytes held now; 0 while there is nothing to free. */
+    def residentBytes: Long
+  }
+
+  /** A persisted corpus; its bytes are its cached blocks. */
+  final class Corpus(tag: String, val df: DataFrame) extends Bounded(tag) {
+    def residentBytes: Long = org.apache.spark.sql.graft.GraftSqlShims
+      .cachedResidentBytes(df).map { case (m, dk) => m + dk }.getOrElse(0L)
+  }
+
+  /** A value held on the driver, and its size in bytes. */
+  final class Held[V](tag: String, val value: V, val bytes: Long)
+      extends Bounded(tag) {
+    def residentBytes: Long = bytes
   }
 
   /** A kind of persisted corpora: counted by [[bound]], and dropping
@@ -126,6 +145,15 @@ object Resident {
   def corpusKind(name: String, probe: Probe): Kind[Corpus] = {
     val k = kind[Corpus](name, probe, c => unpersistUnlessHeld(c.df))
     corpusKinds.add(k)
+    boundedKinds.add(k)
+    k
+  }
+
+  /** A kind of driver-held values, counted by [[bound]] with the
+    * persisted corpora. */
+  def heldKind[V](name: String, probe: Probe): Kind[Held[V]] = {
+    val k = kind[Held[V]](name, probe)
+    boundedKinds.add(k)
     k
   }
 
@@ -146,29 +174,31 @@ object Resident {
   private[graft] def unpersist(ds: Dataset[_]): Unit =
     if (!ds.sparkSession.sparkContext.isStopped) ds.unpersist(blocking = false)
 
-  /** Keep the persisted corpora within the session's entry cap
+  /** Keep the bounded entries — persisted corpora and driver-held
+    * walk graphs together — within the session's entry cap
     * (`spark.graft.serving.corpusCacheMax`, default 8) and byte budget
     * (`spark.graft.serving.corpusCacheMaxMb`, default 4096; 0
     * disables it), least recently used first, never evicting `own`:
-    * one over-budget corpus stays cached, the knobs bound the fleet.
-    * Only materialized entries are byte victims — an unfilled entry
-    * frees nothing, its bytes count once a scan fills it — and a
-    * single held corpus skips the residency lookups. An evicted
-    * corpus refills on its next use. */
+    * one over-budget entry stays, the knobs bound the fleet. Only
+    * entries holding bytes are byte victims — an unfilled persisted
+    * corpus frees nothing, its bytes count once a scan fills it — and
+    * a single held entry skips the residency lookups. An evicted entry
+    * refills on its next use. */
   def bound(s: SparkSession, own: Key): Unit = {
     val maxEntries = math.max(1,
       conf(s, "spark.graft.serving.corpusCacheMax", 8.0).toInt)
     val maxMb = conf(s, "spark.graft.serving.corpusCacheMaxMb", 4096.0)
-    val held = corpusKinds.asScala.toSeq.flatMap(k =>
-      k.entries.toSeq.map { case (key, c) => (k, key, c) })
+    val held: Seq[(Kind[Bounded], Key, Bounded)] =
+      boundedKinds.asScala.toSeq.flatMap { k =>
+        val kb = k.asInstanceOf[Kind[Bounded]]
+        kb.entries.toSeq.map { case (key, c) => (kb, key, c) }
+      }
     val (overCap, rest) = held.filter(_._2 != own)
       .map(e => (e, e._3.used.get)).sortBy(_._2).map(_._1)
       .splitAt(held.size - maxEntries)
     overCap.foreach { case (k, key, c) => k.remove(key, c) }
     if (maxMb > 0 && held.size - overCap.size > 1) {
-      def mb(c: Corpus): Double = org.apache.spark.sql.graft.GraftSqlShims
-        .cachedResidentBytes(c.df).map { case (m, dk) => m + dk }
-        .getOrElse(0L) / 1e6
+      def mb(c: Bounded): Double = c.residentBytes / 1e6
       val sized = rest.map(e => (e, mb(e._3)))
       var total = sized.map(_._2).sum +
         held.filter(_._2 == own).map(e => mb(e._3)).sum

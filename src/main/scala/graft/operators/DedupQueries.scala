@@ -78,6 +78,16 @@ object DedupQueries {
   private[graft] def quantized(s: SparkSession, d: String): DataFrame =
     graft.functions.VectorKernels.quantize(s, Tables.embeddings(s, d))
 
+  /** The quantized rows passing `idPred`, a predicate on `vec_id`: the
+    * predicate filters the embeddings BEFORE the quantize kernel, so it
+    * reaches the parquet scan (a filter above the kernel's
+    * `mapPartitions` cannot be pushed, and every row would be
+    * quantized to keep a few). */
+  private[graft] def quantizedWhere(s: SparkSession,
+      d: String): Column => DataFrame = idPred =>
+    graft.functions.VectorKernels.quantize(s,
+      Tables.embeddings(s, d).filter(idPred))
+
   private[operators] val quantizedSql =
     """SELECT vec_id, label, r,
       |       CAST(list_sum(list_transform(r, x -> x*x)) AS BIGINT) AS nn

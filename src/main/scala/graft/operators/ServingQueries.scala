@@ -67,15 +67,18 @@ object ServingQueries {
         // with the directory: everything the process holds for it
         // (its persisted serving corpus would otherwise ride into
         // unrelated bench queries' measurements until the next sweep),
-        // and the resident STREAM corpus its insert epochs pinned: keyed
-        // by the dataset dir, which stays, so no sweep drops it, and
-        // later batch entries sharing the identical plan would silently
-        // serve from memory, breaking their full-computation contract.
-        // Only that entry goes — releasing the dataset dir would also
-        // drop the stage snapshots later queries reuse. (An application
-        // also hosting a live insert stream on d refills it next epoch.)
+        // and the resident STREAM corpus or walk graph its insert
+        // epochs held: keyed by the dataset dir, which stays, so no
+        // sweep drops them, and a later run would silently serve from
+        // memory (an identical persisted plan, or the held graph),
+        // breaking the full-computation contract. Only those entries
+        // go — releasing the dataset dir would also drop the stage
+        // snapshots later queries reuse. (An application also hosting
+        // a live insert stream on d refills them next epoch.)
         graft.Resident.release(idx)
-        SimilarityQueries.streamCorpora.remove(graft.Resident.key(s, d))
+        val dk = graft.Resident.key(s, d)
+        SimilarityQueries.streamCorpora.remove(dk)
+        SimilarityQueries.streamWalks.remove(dk)
         deleteRec(idx)
       }
       // the returned frame is driver-local (the walk collects its

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.TextKernels
 import graft.functions.VectorKernels.cosLong
 import graft.sources.{Parquet, Tables}
-import DedupQueries.{cosine, dotL, quantized, quantizedSql}
+import DedupQueries.{cosine, dotL, quantized, quantizedSql, quantizedWhere}
 import graft.plans.DotLong
 
 /** Similarity search over the `embeddings` table (64-dim float
@@ -2214,7 +2214,7 @@ object SimilarityQueries {
       .select(col("vec_id"), col("neighbor_id"))
     val del = quantized(s, d).filter(v23DeleteFilter)
       .select(col("vec_id").as("del_id"))
-    deleteRepairCore(s, gd, del, quantized(s, d))
+    deleteRepairCore(s, gd, del, quantizedWhere(s, d))
   }
 
   /** The walk's per-node edge bound: a fetch or hop holding more than
@@ -2258,16 +2258,20 @@ object SimilarityQueries {
     * with |D| held down by the fold policy. So the repair runs on the
     * coordinator ([[coordinatorRepair]]) whenever they fit the caps
     * above, and as a distributed plan ([[distributedRepair]]) when
-    * they do not; both give the same rows (DeleteRepairSpec). Assumes
-    * `vecs` is keyed by vec_id, as the quantized corpus is. */
+    * they do not; both give the same rows (DeleteRepairSpec). `vecs`
+    * gives the quantized vectors of the rows passing a `vec_id`
+    * predicate (DedupQueries.quantizedWhere filters the embeddings
+    * before the quantize kernel, so the survivor fetch quantizes only
+    * the survivors); it assumes the corpus is keyed by vec_id, as the
+    * quantized corpus is. */
   private[graft] def deleteRepairCore(
       s: org.apache.spark.sql.SparkSession,
       gd: org.apache.spark.sql.DataFrame,
       delIn: org.apache.spark.sql.DataFrame,
-      vecs: org.apache.spark.sql.DataFrame)
+      vecs: Column => org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
     coordinatorRepair(s, gd, delIn, vecs)
-      .getOrElse(distributedRepair(gd, delIn, vecs))
+      .getOrElse(distributedRepair(gd, delIn, vecs(lit(true))))
 
   /** The repair as coordinator work, as the walk runs: three bounded
     * collects — D itself, the non-NULL edges incident to D, and one
@@ -2285,7 +2289,7 @@ object SimilarityQueries {
       s: org.apache.spark.sql.SparkSession,
       gd: org.apache.spark.sql.DataFrame,
       delIn: org.apache.spark.sql.DataFrame,
-      vecs: org.apache.spark.sql.DataFrame)
+      vecs: Column => org.apache.spark.sql.DataFrame)
       : Option[org.apache.spark.sql.DataFrame] = {
     import s.implicits._
     import scala.collection.mutable.{HashMap, HashSet}
@@ -2424,21 +2428,21 @@ object SimilarityQueries {
       Seq("vec_id", "neighbor_id"), "left_anti"))
   }
 
-  /** One Spark job: the vectors (`r`, `nn`) of `vecIds` in `vecs` and
-    * the out-edges of `edgeSrcs` in `g`, key-pruned scans unioned — no
-    * join, no broadcast. Returns the vector rows and the edges with a
-    * non-NULL neighbour; `limit` caps the rows collected. No job when
-    * both key sets are empty. */
+  /** One Spark job: the vectors (`r`, `nn`) of `vecIds` from `vecs`
+    * (given the id predicate) and the out-edges of `edgeSrcs` in `g`,
+    * key-pruned scans unioned — no join, no broadcast. Returns the
+    * vector rows and the edges with a non-NULL neighbour; `limit` caps
+    * the rows collected. No job when both key sets are empty. */
   private[graft] def fetchVecsAndEdges(
-      vecs: org.apache.spark.sql.DataFrame,
+      vecs: Column => org.apache.spark.sql.DataFrame,
       g: org.apache.spark.sql.DataFrame,
       vecIds: Set[Long], edgeSrcs: Set[Long], limit: Option[Int] = None)
       : (Array[(Long, Option[Array[Long]], Option[Long])],
         Array[(Long, Long)]) = {
-    import vecs.sparkSession.implicits._
+    import g.sparkSession.implicits._
     val parts = Seq(
       Option.when(vecIds.nonEmpty)(
-        vecs.filter(col("vec_id").isInCollection(vecIds))
+        vecs(col("vec_id").isInCollection(vecIds))
           .select(col("vec_id"), lit(false).as("edge"), col("r"),
             col("nn"), lit(null).cast("bigint").as("nbr"))),
       Option.when(edgeSrcs.nonEmpty)(
@@ -2465,59 +2469,100 @@ object SimilarityQueries {
     * base graph — exactly v21's machinery, queries supplied by the
     * arriving micro-batch instead of a corpus predicate. The 4096
     * bound is the per-epoch coordinator budget; an intake sizes
-    * maxFilesPerTrigger to respect it. */
+    * maxFilesPerTrigger to respect it.
+    *
+    * The insert-free base corpus and graph are immutable for the
+    * stream's life (v21's rule: inserts never join the walk's base),
+    * so the process holds them once per (application, corpus dir): as
+    * a driver-side [[WalkGraph]] under its caps — an epoch's walk then
+    * runs no Spark job — and past them as a persisted corpus probed
+    * per hop. The coarse quantizer is held the same way. Held or
+    * recomputed, the walk is the same, so stream ≡ batch holds
+    * (StreamingGraphInsertSpec). */
   private[graft] def streamInsertEdges(
       s: org.apache.spark.sql.SparkSession, d: String,
-      qrows: Array[(Long, Array[Long], Long)])
+      qrows: Array[(Long, Array[Long], Long)],
+      caps: WalkGraph.Caps = WalkGraph.DefaultCaps)
       : org.apache.spark.sql.DataFrame = {
     // an insert epoch is a state-change boundary: drop what dead dirs
     // and stopped applications left in the process registry
     graft.Resident.sweep(s)
-    // ORDER MATTERS on the first epoch: compute the once-per-app
-    // coarse quantizer BEFORE streamCorpus persists the plan — the
-    // centroid aggregation over the RAW plan is a codegen parquet
-    // scan, while the same aggregation run on top of the cache FILL
-    // materializes every row twice (measured 11 s → 26-31 s for the
-    // cold epoch at 200× when the persist came first). Once cents is
-    // held, later epochs never re-aggregate, and the walk's first
-    // seed job pays the one fill at plain scan cost.
-    val cents = streamCents(s, d,
-      quantized(s, d).filter(!v21BatchFilter))
-    val n = streamCorpus(s, d)
-    // PROCESS-HELD coarse quantizer (round 15): the walk's centroid
-    // table is an aggregation over the ENTIRE base corpus — paying it
-    // on every micro-batch is a data-sized compute per epoch at scale,
-    // the compute-side analog of the delete side's old O(|E|) write
-    // per epoch. The base corpus is immutable for the life of the
-    // stream (v21's rule: inserts never join the walk's base), so the
-    // nlist-row table is computed once per (application, corpus) and
-    // held — exactly what a resident maintenance process does with its
-    // IVF quantizer. Deterministic either way: cached vs recomputed
-    // centroids are identical, so stream ≡ batch is unaffected
-    // (StreamingGraphInsertSpec). Batch entries keep recomputing by
-    // the bench's full-computation contract.
-    beamWalkCore(s, n, qrows, insertFreeBaseGraph(s, d), v21Knobs,
-      maxQ = 4096, centsIn = Some(cents))
+    val base = quantized(s, d).filter(!v21BatchFilter)
+    val gd = insertFreeBaseGraph(s, d)
+    streamWalkGraph(s, d, base, gd, caps) match {
+      case Some(wg) =>
+        val cents = streamCents(s, d, base, wg.corpus.centroids)
+        beamWalkCore(s, base, qrows, gd, v21Knobs, maxQ = 4096,
+          centsIn = Some(cents), graph = Some(wg))
+      case None =>
+        // ORDER MATTERS on the first epoch: compute the coarse
+        // quantizer BEFORE streamCorpus persists the plan — the
+        // centroid aggregation over the RAW plan is a codegen parquet
+        // scan, while the same aggregation run on top of the cache
+        // FILL materializes every row twice (measured 11 s → 26-31 s
+        // for the cold epoch at 200× when the persist came first).
+        // Later epochs never re-aggregate, and the walk's first seed
+        // job pays the one fill at plain scan cost.
+        val cents = streamCents(s, d, base, None)
+        // one copy: past the caps the persisted corpus serves the walk
+        streamWalks.remove(graft.Resident.key(s, d))
+        beamWalkCore(s, streamCorpus(s, d), qrows, gd, v21Knobs,
+          maxQ = 4096, centsIn = Some(cents))
+    }
+  }
+
+  // the insert walk's base corpus and graph on the driver, one per
+  // (application, corpus dir), tagged with the graph snapshot's files
+  private[graft] val streamWalks = graft.Resident
+    .heldKind[WalkGraph]("stream walk graph", graft.Resident.dataDir)
+
+  private def streamWalkGraph(s: org.apache.spark.sql.SparkSession,
+      d: String, base: org.apache.spark.sql.DataFrame,
+      gd: org.apache.spark.sql.DataFrame,
+      caps: WalkGraph.Caps): Option[WalkGraph] = {
+    val k = graft.Resident.key(s, d)
+    val tag = graft.warehouse.SnapshotTable
+      .digestOfFiles(gd.inputFiles.toSeq.sorted)
+    val held = streamWalks.get(k).filter(e => e.tag == tag &&
+        e.value.corpus.size <= caps.vectors &&
+        e.value.adj.edgeCount <= caps.edges)
+      .map(_.touch().value)
+    val wg = held.orElse {
+      // the symmetrized graph has at most twice the snapshot's rows
+      val filled = WalkGraph.fill(base, WalkGraph.corpusBound(s, d),
+        symmetrized(gd), 2 * WalkGraph.footerRows(gd), caps)
+      filled.foreach { g =>
+        streamWalks.put(k, new graft.Resident.Held(tag, g, g.bytes))
+        // one copy: the persisted corpus serves only the past-cap path
+        streamCorpora.remove(k)
+      }
+      filled
+    }
+    if (wg.isDefined) graft.Resident.bound(s, k)
+    wg
   }
 
   private[graft] val streamCentroids = graft.Resident
     .kind[Array[(Long, Array[Long])]]("stream centroids",
       graft.Resident.dataDir)
 
+  // the coarse quantizer, computed once per (application, corpus): from
+  // the held corpus when there is one, else by a Spark aggregation
   private def streamCents(s: org.apache.spark.sql.SparkSession, d: String,
-      n: org.apache.spark.sql.DataFrame): Array[(Long, Array[Long])] =
+      n: org.apache.spark.sql.DataFrame,
+      held: Option[Array[(Long, Array[Long])]]): Array[(Long, Array[Long])] =
     streamCentroids.getOrElseUpdate(graft.Resident.key(s, d))(
-      centroidTable(s, n))
+      held.getOrElse(centroidTable(s, n)))
 
-  // RESIDENT stream corpus (round 17, the maintenance-side analog of
-  // the serving corpus cache): the insert walk's probe corpus is
-  // immutable for the stream's life (v21's rule — inserts never join
-  // the walk's base), yet every epoch re-persisted and re-filled it
-  // because the walk's tracked persist is released with the epoch's
-  // intermediates. One persisted corpus per (application, corpus
-  // dir), held across epochs like the process-held coarse quantizer
-  // above, counted by the process's corpus bound; a foreign release()
-  // of the identical plan is re-pinned on the next epoch.
+  // RESIDENT stream corpus for a corpus past the WalkGraph caps (round
+  // 17, the maintenance-side analog of the serving corpus cache): the
+  // insert walk's probe corpus is immutable for the stream's life, yet
+  // every epoch re-persisted and re-filled it because the walk's
+  // tracked persist is released with the epoch's intermediates. One
+  // persisted corpus per (application, corpus dir), held across epochs
+  // like the coarse quantizer above, counted by the process's corpus
+  // bound; a foreign release() of the identical plan is re-pinned on
+  // the next epoch.
   private[graft] val streamCorpora =
     graft.Resident.corpusKind("stream corpus", graft.Resident.dataDir)
 
@@ -2576,7 +2621,7 @@ object SimilarityQueries {
       : org.apache.spark.sql.DataFrame = {
     val gd = baseGd.getOrElse(fullCorpusGraph(s, d))
       .select(col("vec_id"), col("neighbor_id"))
-    deleteRepairCore(s, gd, del, quantized(s, d))
+    deleteRepairCore(s, gd, del, quantizedWhere(s, d))
   }
 
   // v26 (filtered graph search) knobs: depth from the standard
@@ -2704,7 +2749,7 @@ object SimilarityQueries {
     val aug = StageSnapshots.snapshot(s, d, "knn-graph-plus")(
       insertAugmentedGraph(s, d))
       .select(col("vec_id"), col("neighbor_id"))
-    deleteRepairCore(s, aug, del, quantized(s, d))
+    deleteRepairCore(s, aug, del, quantizedWhere(s, d))
   }
 
   /** Coordinator-side closed-set beam walk, shared by v20 (search:
@@ -2716,11 +2761,13 @@ object SimilarityQueries {
     * every bound require()d. A first cut ran the walk as H rounds of
     * distributed jobs; its data volume was identical but it paid
     * ~150 tiny stages of scheduling/codegen overhead per run (15+ s
-    * at sf0.1 for 3 KB of state). Every CORPUS access below stays a
-    * distributed pushed-filter scan — the graph snapshot is probed
-    * by beam-node keys each hop, never collected.
+    * at sf0.1 for 3 KB of state). Each call collects the base corpus
+    * and the symmetrized graph once into a [[WalkGraph]] when their
+    * footer row counts fit the caps, and walks with no further job;
+    * past a cap every corpus access stays a distributed pushed-filter
+    * scan — the graph snapshot probed by beam-node keys each hop.
     */
-  private def graphBeamWalk(s: org.apache.spark.sql.SparkSession,
+  private[graft] def graphBeamWalk(s: org.apache.spark.sql.SparkSession,
       d: String, queryFilter: Column, baseFilter: Column,
       snapName: String,
       knobsRef: java.util.concurrent.atomic.AtomicReference[(Int, Int)],
@@ -2744,7 +2791,8 @@ object SimilarityQueries {
       // "nodel" (survivors: v23, v27). First consumer materializes,
       // the rest read nlist rows; the aggregate is deterministic so
       // adopt ≡ recompute row-for-row.
-      centsTag: String = "full")
+      centsTag: String = "full",
+      caps: WalkGraph.Caps = WalkGraph.DefaultCaps)
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
     val nAll = quantized(s, d)
@@ -2759,9 +2807,20 @@ object SimilarityQueries {
     val cents = StageSnapshots
       .snapshot(s, d, s"walk-cents-$centsTag")(centroidAggDf(n))
       .select("label", "c").as[(Long, Array[Long])].collect()
+    // the symmetrized graph has at most twice the snapshot's rows
+    val graph = WalkGraph.fill(n, WalkGraph.corpusBound(s, d),
+      symmetrized(gd), 2 * WalkGraph.footerRows(gd), caps)
     beamWalkCore(s, n, qrows, gd, knobsRef, maxQ, resultKeep, sizeKnobs,
-      centsIn = Some(cents))
+      centsIn = Some(cents), graph = graph)
   }
+
+  /** The walk's graph: every edge in both directions, once. A directed
+    * 3-out graph strands greedy walks, so the walk expands reverse
+    * edges too. */
+  private[graft] def symmetrized(gd: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    gd.unionByName(gd.select(col("neighbor_id").as("vec_id"),
+      col("vec_id").as("neighbor_id"))).distinct()
 
   /** The centroid table of a (possibly tombstone-filtered) quantized
     * corpus — v03's exact-integer rule, collected to nlist
@@ -2815,7 +2874,8 @@ object SimilarityQueries {
   private[graft] def beamWalkCore(s: org.apache.spark.sql.SparkSession,
       nIn: org.apache.spark.sql.DataFrame,
       qrows: Array[(Long, Array[Long], Long)],
-      gdIn: org.apache.spark.sql.DataFrame,
+      // by name: a held walk (`graph` below) never reads it
+      gdIn: => org.apache.spark.sql.DataFrame,
       knobsRef: java.util.concurrent.atomic.AtomicReference[(Int, Int)],
       maxQ: Int,
       // v26 (filtered search): the walk's FRONTIER stays unfiltered
@@ -2838,7 +2898,12 @@ object SimilarityQueries {
       // paid once per state change instead of once per hop per
       // search. false (every batch op) keeps the in-walk symmetrize,
       // so no batch oracle or plan changes.
-      preSymmetrized: Boolean = false)
+      preSymmetrized: Boolean = false,
+      // the corpus and graph held on the driver (WalkGraph): the seeds,
+      // every hop's fetch and the centroid table then read the held
+      // arrays and run no Spark job. None (a corpus or graph past the
+      // WalkGraph caps) fetches per hop from `nIn` and `gdIn`.
+      graph: Option[WalkGraph] = None)
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
     require(qrows.length <= maxQ, s"query set exceeds the $maxQ bound")
@@ -2849,7 +2914,10 @@ object SimilarityQueries {
       return Seq.empty[(Long, Long, Double, Int)]
         .toDF("query_id", "neighbor_id", "cos_sim", "rank")
     }
-    // the corpus side every hop probes, PERSISTED for the walk's
+    // A HELD walk (`graph`, the WalkGraph the caller filled under its
+    // caps) reads everything below from driver arrays and persists
+    // nothing; the rest of this note is the per-hop walk past the caps.
+    // The corpus side every hop probes, PERSISTED for the walk's
     // duration (round 17): each hop's join re-ran the quantize
     // transform over the whole corpus — the HOF transform/aggregate
     // expressions are non-codegen, so H hops paid H corpus-sized
@@ -2873,10 +2941,11 @@ object SimilarityQueries {
     // at plain-scan cost and the seed pass pays the one fill.
     val phT0 = System.nanoTime()
     def since(t: Long): Double = (System.nanoTime() - t) / 1e9
-    val cents = centsIn.getOrElse(centroidTable(s, nIn))
+    val cents = centsIn.orElse(graph.flatMap(_.corpus.centroids))
+      .getOrElse(centroidTable(s, nIn))
     val phCents = since(phT0)
-    val n = graft.PersistRegistry.cached(nIn, eager = false)
-    val gd = gdIn
+    // a held walk reads neither frame, so neither is persisted
+    lazy val n = graft.PersistRegistry.cached(nIn, eager = false)
     val qvec = qrows.map(r => r._1 -> ((r._2, r._3))).toMap
     def cosTo(q: Long, rc: Array[Long], nnc: Long): Double = {
       val (rq, nnq) = qvec(q)
@@ -2923,14 +2992,15 @@ object SimilarityQueries {
     // floor covers the empty-corpus case exactly as before.
     val wEnt = Window.partitionBy("label").orderBy("vec_id")
     val wCell = Window.partitionBy("label")
-    val seedRows = n.filter(col("label").cast("long")
+    val seedRows = graph.fold(n.filter(col("label").cast("long")
         .isInCollection(probedLabels))
       .withColumn("rn", row_number().over(wEnt))
       .withColumn("cell_n", count(lit(1)).over(wCell))
       .filter(col("rn") <= 4)
       .select(col("label").cast("long"), col("vec_id"), col("r"),
         col("nn"), col("cell_n"))
-      .as[(Long, Long, Array[Long], Long, Long)].collect()
+      .as[(Long, Long, Array[Long], Long, Long)].collect())(
+      _.corpus.seeds(probedLabels))
     val maxCell = seedRows.iterator.map(_._5)
       .maxOption.getOrElse(2L)
     val (vH, vB) = sizeKnobs(maxCell)
@@ -2955,10 +3025,8 @@ object SimilarityQueries {
     // other intermediates; a preSymmetrized (serving) caller already
     // reads its materialized snapshot and is untouched. eager=false:
     // the first hop's probe fills it.
-    val g = if (preSymmetrized) gd
-      else graft.PersistRegistry.cached(
-        gd.unionByName(gd.select(col("neighbor_id").as("vec_id"),
-          col("vec_id").as("neighbor_id"))).distinct(), eager = false)
+    lazy val g = if (preSymmetrized) gdIn
+      else graft.PersistRegistry.cached(symmetrized(gdIn), eager = false)
     // visited state: query -> node -> cosine. The walk is
     // BEST-FIRST WITH A CLOSED SET (round 11): each hop expands the
     // top-B visited nodes NOT yet expanded. Beaming over all
@@ -2993,6 +3061,9 @@ object SimilarityQueries {
     // (beams, closed set, cosines, hub guard) is byte-identical to
     // the joined form, so the knob-generated oracle chain and every
     // caller's declared result are unchanged.
+    // A HELD walk (WalkGraph) answers the same fetch from its driver
+    // arrays with no job: exactly the rows the pruned scans return, so
+    // the caches, both hub guards and every beam below are unchanged.
     val edgeCache = scala.collection.mutable.HashMap.empty[Long, Array[Long]]
     val vecCache =
       scala.collection.mutable.HashMap.empty[Long, (Array[Long], Long)]
@@ -3014,7 +3085,9 @@ object SimilarityQueries {
     // same cap·512 budget here makes a pathological hub loud at the
     // first collect that touches it instead of silently resident.
     def fetch(vecIds: Set[Long], edgeSrcs: Set[Long]): Unit = {
-      val (vRows, eRows) = fetchVecsAndEdges(n, g, vecIds, edgeSrcs)
+      val (vRows, eRows) = graph.fold(
+        fetchVecsAndEdges(n.filter(_), g, vecIds, edgeSrcs))(wg =>
+        (wg.corpus.vectors(vecIds), wg.adj.edges(edgeSrcs)))
       require(eRows.length <= math.max(edgeSrcs.size, 1) * HubEdgeBound,
         "graph hub exceeded the per-fetch edge bound")
       vRows.foreach(r => vecCache(r._1) = (r._2.get, r._3.get))
@@ -3082,8 +3155,9 @@ object SimilarityQueries {
         .sortBy { case (node, c) => (-c, node) }.take(3)
         .zipWithIndex.map { case ((node, c), i) => (q, node, c, i + 1) }
     }
-    val res = out.toDF("query_id", "neighbor_id", "cos_sim", "rank")
-      .orderBy("query_id", "rank")
+    // ordered on the driver: a local relation, read with no Spark job
+    val res = out.sortBy(r => (r._1, r._4))
+      .toDF("query_id", "neighbor_id", "cos_sim", "rank")
     lastWalkPhases.set(Seq(
       "walk_centroids" -> phCents,
       "walk_sizing_seeds" -> phSeeds,

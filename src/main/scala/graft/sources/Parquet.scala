@@ -49,6 +49,19 @@ object Parquet {
     }
   }
 
+  /** The summed footer row counts of parquet `files`, read through the
+    * Hadoop FileSystem on the driver: no Spark job, one footer read a
+    * file. A missing file raises FileNotFoundException. */
+  def footerRows(spark: SparkSession, files: Seq[String]): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    files.iterator.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile
+          .fromPath(new Path(f), conf))
+      try r.getRecordCount finally r.close()
+    }.sum
+  }
+
   /** "relative path|length|mtime" of every file under `path` (the
     * file itself when `path` is one), sorted. */
   private[graft] def fileStats(conf: Configuration, path: String): Seq[String] = {

@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.boatrace.BoatracePipeline
-import graft.operators.{BoatraceQueries, SimilarityQueries, StageSnapshots}
+import graft.operators.{BoatraceQueries, SimilarityQueries, StageSnapshots,
+  WalkGraph}
 import graft.streaming.LifecycleIndex
 import graft.warehouse.{CommitBackends, SnapshotTable}
 
@@ -31,6 +32,15 @@ class ResidentSpec extends AnyFunSuite {
     d
   }
 
+  // a one-vector walk graph, the value of the two walk kinds
+  private lazy val walk: WalkGraph = {
+    import spark.implicits._
+    WalkGraph.fill(
+      Seq((1L, 0, Array.fill(64)(1L), 64L)).toDF("vec_id", "label", "r", "nn"),
+      1, Seq((1L, 1L)).toDF("vec_id", "neighbor_id"), 1,
+      WalkGraph.DefaultCaps).get
+  }
+
   /** One entry of every kind for `dir`; the names of the kinds filled. */
   private def fill(dir: String): Set[String] = {
     import spark.implicits._
@@ -38,6 +48,11 @@ class ResidentSpec extends AnyFunSuite {
     val df = spark.range(1).toDF()
     LifecycleIndex.centroids.put(k, ("-", Array.empty))
     LifecycleIndex.servingCorpus.put(k, new Resident.Corpus("-", df))
+    LifecycleIndex.servingWalks.put(k, new Resident.Held("-",
+      LifecycleIndex.ServingWalk(walk.corpus, Some("digest" -> walk.adj)),
+      walk.bytes))
+    SimilarityQueries.streamWalks.put(k, new Resident.Held("", walk,
+      walk.bytes))
     LifecycleIndex.stats.put(k, new LifecycleIndex.ServeStats)
     SimilarityQueries.streamCentroids.put(k, Array.empty)
     SimilarityQueries.streamCorpora.put(k, new Resident.Corpus("", df))
@@ -46,8 +61,9 @@ class ResidentSpec extends AnyFunSuite {
     StageSnapshots.snapshots.put(Resident.key(spark, dir, "stage"), "path")
     StageSnapshots.fingerprints.put(k, "fp")
     Set(LifecycleIndex.centroids, LifecycleIndex.servingCorpus,
-      LifecycleIndex.stats, SimilarityQueries.streamCentroids,
-      SimilarityQueries.streamCorpora, BoatraceQueries.parsed,
+      LifecycleIndex.servingWalks, LifecycleIndex.stats,
+      SimilarityQueries.streamCentroids, SimilarityQueries.streamCorpora,
+      SimilarityQueries.streamWalks, BoatraceQueries.parsed,
       StageSnapshots.snapshots, StageSnapshots.fingerprints).map(_.name)
   }
 
@@ -93,6 +109,36 @@ class ResidentSpec extends AnyFunSuite {
     assert(warehouseHolds(a) === (false, false))
     assert(kindsHolding(b) === kinds && warehouseHolds(b) === (true, true))
     assert(!LifecycleIndex.stats.entries.contains(stopped))
+    Resident.release(b)
+  }
+
+  test("driver-held walk graphs count against the corpus entry cap and " +
+      "byte budget with the persisted corpora") {
+    val (a, b) = (liveDir("graft-resident-a-"), liveDir("graft-resident-b-"))
+    val (ka, kb) = (Resident.key(spark, a), Resident.key(spark, b))
+    def held(mb: Int) = new Resident.Held("-",
+      LifecycleIndex.ServingWalk(walk.corpus, None), mb * 1000000L)
+    def withConf(k: String, v: String)(body: => Unit): Unit = {
+      val prev = spark.conf.getOption(k)
+      spark.conf.set(k, v)
+      try body finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+    withConf("spark.graft.serving.corpusCacheMaxMb", "3") {
+      LifecycleIndex.servingWalks.put(ka, held(2))
+      LifecycleIndex.servingWalks.put(kb, held(2))
+      val before = Resident.byteEvictions.get
+      Resident.bound(spark, kb)
+      assert(!LifecycleIndex.servingWalks.entries.contains(ka) &&
+        LifecycleIndex.servingWalks.entries.contains(kb))
+      assert(Resident.byteEvictions.get > before)
+    }
+    withConf("spark.graft.serving.corpusCacheMax", "1") {
+      SimilarityQueries.streamWalks.put(ka, new Resident.Held("", walk, 1L))
+      Resident.bound(spark, ka)
+      assert(SimilarityQueries.streamWalks.entries.contains(ka) &&
+        !LifecycleIndex.servingWalks.entries.contains(kb))
+    }
+    Resident.release(a)
     Resident.release(b)
   }
 }

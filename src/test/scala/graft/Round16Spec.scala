@@ -105,13 +105,16 @@ class Round16Spec extends AnyFunSuite {
     val idx = smallIndex()
     val first = searchRows(
       LifecycleIndex.search(spark, sf, idx, searchQueries))
+    // the race must land on a state this process has not filled: a
+    // held walk graph reads no serving file, so no vacuum can fail it
+    Resident.release(idx)
     val sTab = LifecycleIndex.servingTab(idx)
     val junk = Seq((0L, 0L), (1L, 0L)).toDF("vec_id", "neighbor_id")
     val fired = new AtomicBoolean(false)
     // the race, landed deterministically through the seam: the NEXT
     // attempt pins and reads its serving version, then two newer
     // states commit and the vacuum deletes the pinned files before
-    // the walk's first job scans them
+    // the graph fill reads them
     LifecycleIndex.midSearchTestHook = Some { () =>
       if (fired.compareAndSet(false, true)) {
         SnapshotTable.overwrite(spark, junk, sTab, Some("newer-state-1"))
@@ -127,7 +130,40 @@ class Round16Spec extends AnyFunSuite {
       assert(again === first,
         "the retried search must rematerialize the SAME index state " +
         "and return identical rows")
+      assert(LifecycleIndex.searchRetriesFor(idx) === 1L,
+        "the vacuumed fill must fail the attempt into the retry-once")
     } finally LifecycleIndex.midSearchTestHook = None
+    PersistRegistry.release()
+  }
+
+  test("a vacuum that deletes the pinned serving files of a state this " +
+      "process already HOLDS cannot fail the search: the walk reads no " +
+      "file, no retry, identical rows") {
+    import spark.implicits._
+    val idx = smallIndex()
+    val first = searchRows(
+      LifecycleIndex.search(spark, sf, idx, searchQueries))
+    val sTab = LifecycleIndex.servingTab(idx)
+    val junk = Seq((0L, 0L), (1L, 0L)).toDF("vec_id", "neighbor_id")
+    val fired = new AtomicBoolean(false)
+    LifecycleIndex.midSearchTestHook = Some { () =>
+      if (fired.compareAndSet(false, true)) {
+        SnapshotTable.overwrite(spark, junk, sTab, Some("newer-state-1"))
+        SnapshotTable.overwrite(spark, junk, sTab, Some("newer-state-2"))
+        SnapshotTable.vacuum(sTab, keepVersions = 2)
+        ()
+      }
+    }
+    try {
+      val retries = LifecycleIndex.searchRetriesFor(idx)
+      val again = searchRows(
+        LifecycleIndex.search(spark, sf, idx, searchQueries))
+      assert(fired.get(), "the race never fired — the seam moved")
+      assert(again === first)
+      assert(LifecycleIndex.searchRetriesFor(idx) === retries,
+        "a held state must not need the retry")
+    } finally LifecycleIndex.midSearchTestHook = None
+    Resident.release(idx)
     PersistRegistry.release()
   }
 

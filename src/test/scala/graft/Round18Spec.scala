@@ -321,6 +321,10 @@ class Round18Spec extends AnyFunSuite {
       "identical-plan twin's cached blocks (CacheManager is " +
       "plan-keyed): the survivor stays persisted and serves " +
       "identical rows") {
+    // the persisted corpus is the past-the-walk-caps holder: search
+    // per hop
+    def searchPerHop(idx: String) = LifecycleIndex.searchWith(spark, sf,
+      idx, searchQueries, 4096, graft.operators.WalkGraph.PerHop)
     val prev = spark.conf.getOption("spark.graft.serving.corpusCacheMax")
     spark.conf.set("spark.graft.serving.corpusCacheMax", "1")
     try {
@@ -330,10 +334,10 @@ class Round18Spec extends AnyFunSuite {
       val a = freshIndex()
       val b = freshIndex()
       val rowsA = searchRows(
-        LifecycleIndex.search(spark, sf, a, searchQueries))
+        searchPerHop(a))
       val keyB = Resident.key(spark, b)
       val rowsB = searchRows(
-        LifecycleIndex.search(spark, sf, b, searchQueries))
+        searchPerHop(b))
       // serving b evicted a's entry (cap 1) — before the guard, that
       // unpersist stripped the shared plan's blocks and b's entry
       // silently served unpinned
@@ -343,10 +347,8 @@ class Round18Spec extends AnyFunSuite {
       assert(level.toLowerCase.contains("memory"),
         s"evicting a's entry stripped b's shared-plan blocks: " +
         s"level '$level'")
-      assert(searchRows(LifecycleIndex.search(spark, sf, a,
-        searchQueries)) === rowsA)
-      assert(searchRows(LifecycleIndex.search(spark, sf, b,
-        searchQueries)) === rowsB)
+      assert(searchRows(searchPerHop(a)) === rowsA)
+      assert(searchRows(searchPerHop(b)) === rowsB)
       Resident.release(a)
       Resident.release(b)
     } finally {
@@ -408,14 +410,14 @@ class Round18Spec extends AnyFunSuite {
         "exactly one retry must be absorbed before propagating")
       hiding.armed = false
       val key = Resident.key(spark, idx)
-      assert(!LifecycleIndex.servingCorpus.entries.contains(key),
+      assert(!LifecycleIndex.servingWalks.entries.contains(key),
         "a failed pin must never poison the corpus cache")
       assert(!LifecycleIndex.centroids.entries.contains(key),
         "a failed pin must never poison the centroid cache")
       // healed: the manifest is readable again — correct rows, cached
       assert(searchRows(LifecycleIndex.search(spark, sf, idx,
         searchQueries)) === want)
-      assert(LifecycleIndex.servingCorpus.entries.contains(key))
+      assert(LifecycleIndex.servingWalks.entries.contains(key))
     } finally {
       CommitBackends.unregister(rTab)
       Resident.release(idx)

@@ -109,11 +109,13 @@ class Round20Spec extends AnyFunSuite {
       "below the resident set, serving a second index evicts the " +
       "least-recently-searched entry; the evicted index's next " +
       "search re-fills and returns identical rows") {
+    // under the walk caps the corpus entry is the driver-held walk
+    // graph; the byte bound counts its driver bytes
     val appId = spark.sparkContext.applicationId
     val a = freshIndex()
     val before = searchRows(
       LifecycleIndex.search(spark, sf, a, searchQueries))
-    assert(LifecycleIndex.servingCorpus.entries.contains(
+    assert(LifecycleIndex.servingWalks.entries.contains(
       Resident.key(spark, a)),
       "index A's serving corpus must be cached after its search")
     val aResident = LifecycleIndex.corpusCacheResidentBytes
@@ -129,10 +131,10 @@ class Round20Spec extends AnyFunSuite {
       LifecycleIndex.search(spark, sf, b, searchQueries).count()
       assert(Resident.byteEvictions.get() > ev0,
         "the byte bound must have engaged (eviction counter)")
-      assert(!LifecycleIndex.servingCorpus.entries.contains(
+      assert(!LifecycleIndex.servingWalks.entries.contains(
         Resident.key(spark, a)),
         "A's entry (least recently searched) must be evicted")
-      assert(LifecycleIndex.servingCorpus.entries.contains(
+      assert(LifecycleIndex.servingWalks.entries.contains(
         Resident.key(spark, b)),
         "a search's OWN entry is never a byte victim")
       // correctness unaffected: A re-fills on its next search

@@ -17,13 +17,16 @@ import graft.warehouse.SnapshotTable
   *     per search), format-marked in its meta so a mixed-version
   *     deployment can never adopt a snapshot in the other format;
   *   - the retired-filtered quantized corpus every hop probes is
-  *     PERSISTED once per retired-state: one cache entry per
-  *     (application, index), keyed by the retired-table version —
-  *     surviving insert/fold advances, replaced (old blocks
-  *     unpersisted) only when a delete epoch moves the retired set,
-  *     swept with the centroid cache at the state-change boundary,
-  *     and re-pinned if a batch harness's PersistRegistry.release()
-  *     uncached an identical plan.
+  *     held once per retired-state: one entry per (application,
+  *     index), keyed by the retired-table version — surviving
+  *     insert/fold advances, replaced only when a delete epoch moves
+  *     the retired set, swept with the centroid cache at the
+  *     state-change boundary. Under the walk caps the entry is the
+  *     driver-held walk graph (`servingWalks`, the corpus plus the
+  *     adjacency of the last serving version), which a foreign
+  *     uncache cannot touch; past them it is a PERSISTED corpus
+  *     (`servingCorpus`), re-pinned if a batch harness's
+  *     PersistRegistry.release() uncached an identical plan.
   *
   * Correctness never depends on either: results are pinned by the
   * version capture, and the existing vacuum-race / cross-process
@@ -40,6 +43,11 @@ class ServingHotPathSpec extends AnyFunSuite {
   private def searchQueries = emb
     .filter(col("vec_id") < 20 && pmod(col("vec_id"), lit(97)) =!= 0)
     .select("vec_id", "embedding")
+
+  // the search past the walk caps: persisted corpus, per-hop walk
+  private def searchPerHop(idx: String) =
+    LifecycleIndex.searchWith(spark, sf, idx, searchQueries, 4096,
+      graft.operators.WalkGraph.PerHop)
 
   private def searchRows(df: org.apache.spark.sql.DataFrame) =
     df.select("query_id", "neighbor_id", "rank")
@@ -123,25 +131,30 @@ class ServingHotPathSpec extends AnyFunSuite {
     val idx = freshIndex()
     LifecycleIndex.search(spark, sf, idx, searchQueries).count()
     val key = Resident.key(spark, idx)
-    val st0 = LifecycleIndex.servingCorpus.entries(key)
-    val level = st0.df.storageLevel.description
+    val st0 = LifecycleIndex.servingWalks.entries(key)
     assert(st0.tag === "-", "no delete epoch yet: tag must be '-'")
-    assert(level.toLowerCase.contains("memory"),
-      s"corpus entry must be persisted, got level '$level'")
+    // under the caps the ONE entry is the driver-held walk corpus: no
+    // persisted twin
+    assert(st0.bytes > 0 && st0.value.corpus.size > 0,
+      s"corpus entry must be held, got ${st0.bytes} bytes")
+    assert(!LifecycleIndex.servingCorpus.entries.contains(key),
+      "a held corpus must not be persisted as well")
     // an INSERT epoch advances vI but not the retired set — the
-    // cached corpus must survive (no unpersist/re-persist churn)
+    // held corpus must survive (no refill churn)
     StreamingGraphInsert.insertEpoch(spark,
       emb.filter(SimilarityQueries.v21BatchFilter)
         .select("vec_id", "embedding", "label"), sf, idx, 0L)
     LifecycleIndex.search(spark, sf, idx, searchQueries).count()
-    assert(LifecycleIndex.servingCorpus.entries(key).tag === "-",
+    assert(LifecycleIndex.servingWalks.entries(key).tag === "-",
       "insert epoch must not rotate the corpus cache entry")
-    // DELETE epochs advance the retired set: tag rotates, old blocks
-    // are unpersisted — the persisted-RDD census stays bounded across
-    // repeated advances instead of growing one corpus per state
+    assert(LifecycleIndex.servingWalks.entries(key).value.corpus eq
+      st0.value.corpus, "insert epoch must keep the held corpus")
+    // DELETE epochs advance the retired set: tag rotates — the
+    // persisted-RDD census stays bounded across repeated advances
+    // instead of growing one corpus per state
     StreamingGraphDelete.deleteEpoch(spark, delOne(3L), sf, idx, 0L)
     LifecycleIndex.search(spark, sf, idx, searchQueries).count()
-    val tag1 = LifecycleIndex.servingCorpus.entries(key).tag
+    val tag1 = LifecycleIndex.servingWalks.entries(key).tag
     assert(tag1 !== "-", "delete epoch must rotate the corpus entry")
     PersistRegistry.release() // epoch/search TRACKED intermediates
     val census = spark.sparkContext.getPersistentRDDs.size
@@ -154,8 +167,45 @@ class ServingHotPathSpec extends AnyFunSuite {
     assert(census2 <= census,
       s"persisted-RDD census grew with state advances " +
       s"($census -> $census2): rotated corpus entries are leaking")
-    assert(LifecycleIndex.servingCorpus.entries(key).tag !== tag1,
+    assert(LifecycleIndex.servingWalks.entries(key).tag !== tag1,
       "the tag must track the latest retired version")
+    assert(LifecycleIndex.servingWalks.entries.count(_._1 == key) === 1)
+    PersistRegistry.release()
+  }
+
+  test("past the walk caps the ONE corpus entry is persisted: it " +
+      "survives an insert epoch, is replaced on a delete epoch, and " +
+      "rotated blocks are unpersisted") {
+    val idx = freshIndex()
+    searchPerHop(idx).count()
+    val key = Resident.key(spark, idx)
+    val st0 = LifecycleIndex.servingCorpus.entries(key)
+    val level = st0.df.storageLevel.description
+    assert(st0.tag === "-", "no delete epoch yet: tag must be '-'")
+    assert(level.toLowerCase.contains("memory"),
+      s"corpus entry must be persisted, got level '$level'")
+    assert(!LifecycleIndex.servingWalks.entries.contains(key),
+      "a persisted corpus must not be held on the driver as well")
+    StreamingGraphInsert.insertEpoch(spark,
+      emb.filter(SimilarityQueries.v21BatchFilter)
+        .select("vec_id", "embedding", "label"), sf, idx, 0L)
+    searchPerHop(idx).count()
+    assert(LifecycleIndex.servingCorpus.entries(key).tag === "-",
+      "insert epoch must not rotate the corpus cache entry")
+    StreamingGraphDelete.deleteEpoch(spark, delOne(3L), sf, idx, 0L)
+    searchPerHop(idx).count()
+    val tag1 = LifecycleIndex.servingCorpus.entries(key).tag
+    assert(tag1 !== "-", "delete epoch must rotate the corpus entry")
+    PersistRegistry.release()
+    val census = spark.sparkContext.getPersistentRDDs.size
+    for ((id, ep) <- Seq((5L, 1L), (7L, 2L))) {
+      StreamingGraphDelete.deleteEpoch(spark, delOne(id), sf, idx, ep)
+      searchPerHop(idx).count()
+      PersistRegistry.release()
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size <= census,
+      "rotated persisted corpora are leaking")
+    Resident.release(idx)
     PersistRegistry.release()
   }
 
@@ -165,18 +215,29 @@ class ServingHotPathSpec extends AnyFunSuite {
     val idx = freshIndex()
     LifecycleIndex.search(spark, sf, idx, searchQueries).count()
     val key = Resident.key(spark, idx)
-    assert(LifecycleIndex.servingCorpus.entries(key).df.storageLevel
-      .description.toLowerCase.contains("memory"))
+    val held = LifecycleIndex.servingWalks.entries(key)
+    assert(held.value.adj.isDefined)
     spark.catalog.clearCache() // what a foreign release() can do
     val rows1 = searchRows(
       LifecycleIndex.search(spark, sf, idx, searchQueries))
+    // a driver-held entry is out of the uncache's reach: the next
+    // search walks the very same arrays
+    assert(LifecycleIndex.servingWalks.entries(key) eq held,
+      "the held entry must survive a foreign uncache")
+    // past the caps the persisted entry is re-pinned
+    searchPerHop(idx).count()
+    assert(LifecycleIndex.servingCorpus.entries(key).df.storageLevel
+      .description.toLowerCase.contains("memory"))
+    spark.catalog.clearCache()
+    val rowsPerHop = searchRows(searchPerHop(idx))
     assert(LifecycleIndex.servingCorpus.entries(key).df.storageLevel
       .description.toLowerCase.contains("memory"),
       "the entry must be re-pinned after a foreign uncache")
     // and the unpersisted window never affected results
     val rows2 = searchRows(
       LifecycleIndex.search(spark, sf, idx, searchQueries))
-    assert(rows1 === rows2)
+    assert(rows1 === rows2 && rowsPerHop === rows1)
+    Resident.release(idx)
     PersistRegistry.release()
   }
 
@@ -184,6 +245,8 @@ class ServingHotPathSpec extends AnyFunSuite {
       "corpusCacheMax=1, serving a second index evicts the first's " +
       "persisted corpus, and a later search on the first simply " +
       "re-persists — identical rows") {
+    // the held walk graph is the corpus entry under the caps; the
+    // bound counts it with the persisted corpora
     val prev = spark.conf.getOption("spark.graft.serving.corpusCacheMax")
     spark.conf.set("spark.graft.serving.corpusCacheMax", "1")
     try {
@@ -193,9 +256,9 @@ class ServingHotPathSpec extends AnyFunSuite {
         LifecycleIndex.search(spark, sf, a, searchQueries))
       val keyA = Resident.key(spark, a)
       val keyB = Resident.key(spark, b)
-      assert(LifecycleIndex.servingCorpus.entries.contains(keyA))
+      assert(LifecycleIndex.servingWalks.entries.contains(keyA))
       LifecycleIndex.search(spark, sf, b, searchQueries).count()
-      val st = LifecycleIndex.servingCorpus.entries
+      val st = LifecycleIndex.servingWalks.entries
       assert(st.contains(keyB) && !st.contains(keyA),
         s"LRU bound must keep only the latest served index: $st")
       val again = searchRows(
@@ -248,7 +311,7 @@ class ServingHotPathSpec extends AnyFunSuite {
     StreamingGraphDelete.deleteEpoch(spark, delOne(3L), sf, idx, 0L)
     LifecycleIndex.search(spark, sf, idx, searchQueries).count()
     val key = Resident.key(spark, idx)
-    val oldTag = LifecycleIndex.servingCorpus.entries(key).tag
+    val oldTag = LifecycleIndex.servingWalks.entries(key).tag
     assert(oldTag !== "-")
     // drop + recreate at the SAME path, with NO Resident.release
     // and no intervening search (the eviction sweep never sees the
@@ -259,8 +322,13 @@ class ServingHotPathSpec extends AnyFunSuite {
       SimilarityQueries.insertFreeBaseGraph(spark, sf))
     val rows = searchRows(
       LifecycleIndex.search(spark, sf, idx, searchQueries))
-    assert(LifecycleIndex.servingCorpus.entries(key).tag === "-",
+    assert(LifecycleIndex.servingWalks.entries(key).tag === "-",
       "the dead incarnation's corpus entry must rotate out")
+    assert(LifecycleIndex.servingWalks.entries(key).value.adj
+      .exists(_._1 == SnapshotTable.digestOfFiles(SnapshotTable.dataFiles(
+        LifecycleIndex.servingTab(idx), SnapshotTable.currentVersionOf(
+          LifecycleIndex.servingTab(idx)).get))),
+      "the held graph must be the new incarnation's serving files'")
     assert(LifecycleIndex.centroids.entries(key)._1 === "-",
       "the dead incarnation's centroid entry must rotate out")
     val twin = freshIndex()
@@ -276,7 +344,7 @@ class ServingHotPathSpec extends AnyFunSuite {
     StreamingGraphDelete.deleteEpoch(spark, delOne(3L), sf, idx, 0L)
     val rows2 = searchRows(
       LifecycleIndex.search(spark, sf, idx, searchQueries))
-    val newTag = LifecycleIndex.servingCorpus.entries(key).tag
+    val newTag = LifecycleIndex.servingWalks.entries(key).tag
     assert(newTag.startsWith("0@") && oldTag.startsWith("0@") &&
       newTag != oldTag,
       s"equal retired versions across incarnations must yield " +
@@ -292,23 +360,38 @@ class ServingHotPathSpec extends AnyFunSuite {
   test("the streaming insert hook's corpus is RESIDENT across " +
       "epochs: a harness release() between epochs does not strip " +
       "it, and a vanished corpus dir evicts + unpersists the entry") {
+    import spark.implicits._
     val idx = freshIndex()
     StreamingGraphInsert.insertEpoch(spark,
       emb.filter(SimilarityQueries.v21BatchFilter)
         .select("vec_id", "embedding", "label"), sf, idx, 0L)
     val key = Resident.key(spark, sf)
-    assert(SimilarityQueries.streamCorpora.entries(key)
-      .df.storageLevel.description.toLowerCase.contains("memory"),
+    val held = SimilarityQueries.streamWalks.entries(key)
+    assert(held.bytes > 0 && held.value.corpus.size > 0,
       "the first epoch must leave the stream corpus resident")
+    assert(!SimilarityQueries.streamCorpora.entries.contains(key),
+      "a held stream corpus must not be persisted as well")
     PersistRegistry.release() // what a harness does between epochs
-    // the entry survives the release (it is deliberately untracked);
-    // even if an identical foreign plan was uncached, the next
-    // epoch's streamCorpus call re-pins it
+    // the entry survives the release (it is driver-held); the next
+    // epoch's walk reads the very same arrays
+    val one = emb.filter(col("vec_id") === 89L)
+      .select(col("vec_id"), transform(col("embedding"),
+        x => round(x.cast("double") * 10000).cast("long")).as("r"))
+      .withColumn("nn", aggregate(transform(col("r"), x => x * x),
+        lit(0L), (acc, v) => acc + v))
+      .select("vec_id", "r", "nn").as[(Long, Array[Long], Long)].collect()
+    SimilarityQueries.streamInsertEdges(spark, sf, one)
+    assert(SimilarityQueries.streamWalks.entries(key) eq held,
+      "the stream corpus must stay resident across epoch boundaries")
+    // past the caps the corpus is persisted instead, and a release()
+    // does not strip it either
+    SimilarityQueries.streamCorpus(spark, sf)
+    PersistRegistry.release()
     SimilarityQueries.streamCorpus(spark, sf)
     assert(SimilarityQueries.streamCorpora.entries(key)
       .df.storageLevel.description.toLowerCase.contains("memory"),
-      "the stream corpus must stay resident across epoch boundaries")
-    // eviction: a throwaway corpus COPY vanishes -> its entry (and
+      "the persisted stream corpus must stay resident too")
+    // eviction: a throwaway corpus COPY vanishes -> its entries (and
     // blocks) go with it, the real corpus's entry survives
     val corp = tmp("graft-srvhot-corp-")
     val src = java.nio.file.Paths.get(s"$sf/embeddings.parquet")
@@ -320,15 +403,18 @@ class ServingHotPathSpec extends AnyFunSuite {
         Files.copy(p, dst.resolve(p.getFileName.toString))
       }
     } else Files.copy(src, dst)
+    SimilarityQueries.streamInsertEdges(spark, corp, one)
     SimilarityQueries.streamCorpus(spark, corp)
     val copyKey = Resident.key(spark, corp)
+    assert(SimilarityQueries.streamWalks.entries.contains(copyKey))
     assert(SimilarityQueries.streamCorpora.entries.contains(copyKey))
     Files.walk(Paths.get(corp)).iterator().asScala.toSeq.reverse
       .foreach(Files.deleteIfExists(_))
     Resident.sweep(spark) // what the next insert epoch runs first
-    val st = SimilarityQueries.streamCorpora.entries
+    val st = SimilarityQueries.streamWalks.entries
     assert(!st.contains(copyKey),
       s"vanished corpus's entry survived the sweep: $st")
+    assert(!SimilarityQueries.streamCorpora.entries.contains(copyKey))
     assert(st.contains(key), "the live corpus's entry must survive")
     PersistRegistry.release()
   }
@@ -343,12 +429,20 @@ class ServingHotPathSpec extends AnyFunSuite {
     val dead = freshIndex()
     LifecycleIndex.search(spark, sf, dead, searchQueries).count()
     val deadKey = Resident.key(spark, dead)
-    assert(LifecycleIndex.servingCorpus.entries.contains(deadKey))
+    assert(LifecycleIndex.servingWalks.entries.contains(deadKey))
+    // and a dead index past the caps, whose entry is persisted
+    val deadPerHop = freshIndex()
+    searchPerHop(deadPerHop).count()
+    val deadPerHopKey = Resident.key(spark, deadPerHop)
+    assert(LifecycleIndex.servingCorpus.entries.contains(deadPerHopKey))
     deleteRec(dead)
+    deleteRec(deadPerHop)
     // the next MATERIALIZE (a cold search on a live index) sweeps
     val live = freshIndex()
     LifecycleIndex.search(spark, sf, live, searchQueries).count()
-    val state = LifecycleIndex.servingCorpus.entries
+    assert(!LifecycleIndex.servingCorpus.entries.contains(deadPerHopKey),
+      "dead index's persisted corpus survived the sweep")
+    val state = LifecycleIndex.servingWalks.entries
     assert(!state.contains(deadKey),
       s"dead index's corpus entry survived the sweep: $state")
     assert(state.contains(Resident.key(spark, live)))

@@ -48,8 +48,8 @@ class DeleteRepairSpec extends AnyFunSuite {
       : Seq[Edge] = {
     val (g, d, v) = frames(s, edges, del, vecs)
     val want = Try(rows(SimilarityQueries.distributedRepair(g, d, v)))
-    val got = Try(rows(SimilarityQueries.coordinatorRepair(s, g, d, v)
-      .getOrElse(fail(s"$clue: the coordinator declined"))))
+    val got = Try(rows(SimilarityQueries.coordinatorRepair(s, g, d,
+        v.filter(_)).getOrElse(fail(s"$clue: the coordinator declined"))))
     (want.toEither, got.toEither) match {
       case (Right(w), Right(o)) =>
         assert(o === w, clue); o
@@ -156,7 +156,8 @@ class DeleteRepairSpec extends AnyFunSuite {
       .select(col("id").as("del_id"))
     assert(SimilarityQueries.coordinatorRepair(spark,
       untouchable("vec_id" -> "bigint", "neighbor_id" -> "bigint"),
-      big.union(Seq(0L).toDF("del_id")), untouchable(noVecs: _*)).isEmpty)
+      big.union(Seq(0L).toDF("del_id")), untouchable(noVecs: _*).filter(_))
+      .isEmpty)
     // the ids past the graph change nothing: the fallback's rows are
     // the coordinator's over the ids that touch the graph
     val rnd = new Random(7)
@@ -168,7 +169,7 @@ class DeleteRepairSpec extends AnyFunSuite {
     val (g, d, v) = frames(spark, edges, del, vecs)
     val want = assertSame(edges, del, vecs)
     assert(rows(SimilarityQueries.deleteRepairCore(spark, g,
-      big.union(d), v)) === want)
+      big.union(d), v.filter(_))) === want)
   }
 
   test("a deleted hub past 512 incident edges repairs on the " +
@@ -187,7 +188,7 @@ class DeleteRepairSpec extends AnyFunSuite {
       .select((col("id") + 1).as("vec_id"), lit(0L).as("neighbor_id"))
     assert(SimilarityQueries.coordinatorRepair(spark, edges,
       spark.range(1).select(lit(0L).as("del_id")),
-      untouchable(noVecs: _*)).isEmpty)
+      untouchable(noVecs: _*).filter(_)).isEmpty)
   }
 
   test("candidate pairs past their cap are declined before the vectors " +
@@ -200,7 +201,7 @@ class DeleteRepairSpec extends AnyFunSuite {
       .select((col("id") + 1).as("vec_id"), lit(0L).as("neighbor_id"))
     assert(SimilarityQueries.coordinatorRepair(spark, edges,
       spark.range(1).select(lit(0L).as("del_id")),
-      untouchable(noVecs: _*)).isEmpty)
+      untouchable(noVecs: _*).filter(_)).isEmpty)
   }
 
   test("a survivor fetch past its cap is declined, and the distributed " +
@@ -214,10 +215,11 @@ class DeleteRepairSpec extends AnyFunSuite {
       .union(dup)
     val vecs = Seq(vec(1, 1, 0), vec(2, 0, 1)).toDF("vec_id", "r", "nn")
     val del = Seq(0L).toDF("del_id")
-    assert(SimilarityQueries.coordinatorRepair(spark, edges, del, vecs)
-      .isEmpty)
+    assert(SimilarityQueries.coordinatorRepair(spark, edges, del,
+      vecs.filter(_)).isEmpty)
     // 2's repair to 1 is new; 1's repair to 2 is already an edge
-    val got = SimilarityQueries.deleteRepairCore(spark, edges, del, vecs)
+    val got = SimilarityQueries.deleteRepairCore(spark, edges, del,
+      vecs.filter(_))
     assert(got.filter(col("vec_id") === 2L).as[(Long, Long)].collect()
       .toSeq === Seq(2L -> 1L))
     assert(got.count() === SimilarityQueries.RepairMaxFetch + 2L)

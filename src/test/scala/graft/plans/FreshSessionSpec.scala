@@ -66,7 +66,7 @@ class FreshSessionSpec extends AnyFunSuite {
           col("b.vec_id").as("neighbor_id"))
       val del = vecs.filter(pmod(col("vec_id"), lit(7)) === 0)
         .select(col("vec_id").as("del_id"))
-      SimilarityQueries.deleteRepairCore(s, gd, del, vecs)
+      SimilarityQueries.deleteRepairCore(s, gd, del, vecs.filter(_))
         .orderBy("vec_id", "neighbor_id")
     }
     val (want, _) = rowsAndPlan(repaired(spark))
